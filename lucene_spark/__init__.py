@@ -22,6 +22,13 @@ capabilities of the reference Lucene fork at /root/reference:
 
 __version__ = "0.1.0"
 
+# Python workers import this package when they unpickle the engine's first
+# UDF; from then on their per-task import-cache invalidation keeps unchanged
+# zip directories instead of re-reading them (see zipcache.py).
+from .zipcache import install as _install_zipcache  # noqa: E402
+
+_install_zipcache()
+
 from .build import (  # noqa: E402,F401
     Index,
     IndexConfig,

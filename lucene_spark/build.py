@@ -9,13 +9,15 @@ Lucene90PostingsWriter block encode — see SURVEY.md §3.1):
            norm, then DWPT-local segment encode: sort terms, 128-posting
            blocks, delta/FOR/PFOR encode, impacts — segments flush as
            doc_id // seg_size boundaries pass)-->
-         postings blocks + per-segment doc-stat sentinel rows
-         (+ cheap aggs for terms stats; docs decode from the sentinels)
+         postings blocks + per-batch doc-stat rows
+         (terms stats aggregate from the blocks; the docs table explodes
+         from the doc-stat rows in the JVM — no second Python pass)
 
 Scale design notes (100 TB / 1000 executors):
-- doc_id assignment is the only global coordination: a two-pass
-  range-partition + per-partition offset scheme (no single-partition window,
-  no monotonically_increasing_id nondeterminism).
+- doc_id assignment is the only global coordination: a range partition
+  pinned by persist, a narrow per-partition row count and a driver-side
+  prefix sum (no single-partition window; row positions are only read
+  from the pinned partitions, so they are deterministic).
 - invert and segment encode run fused inside one Arrow pass (the
   DocumentsWriterPerThread analog): NOTHING shuffles between tokenization
   and block encode — only encoded block rows (~30x smaller than tf rows)
@@ -27,7 +29,8 @@ Scale design notes (100 TB / 1000 executors):
   one segment-grouping shuffle whose key (segment_id) is uniform by
   construction — segments are fixed-size doc_id ranges.
 - term statistics use partial aggregation (groupBy(term).agg) — Catalyst
-  map-side combines; no skew because values are tiny counters.
+  map-side combines; no skew because values are tiny counters. On the
+  term-major postings of an eager build the grouping needs no exchange.
 - postings are written sorted by term so Parquet row-group min/max prune
   term lookups at query time (the role of Lucene's term-dictionary seek).
 """
@@ -111,40 +114,31 @@ def assign_doc_ids(
     storage instead of memory/disk cache; same pinning effect.)
 
     doc_id = per-partition offset (tiny driver-side prefix sum over partition
-    counts) + running row number inside the partition, computed by a narrow
-    mapInPandas — no window function, no second shuffle.
+    counts) + running row number inside the partition, a narrow JVM
+    projection — no window function, no second shuffle, no Python pass.
     """
     parted, offsets, _n = _range_partition_with_offsets(df, order_cols, num_partitions)
-
-    out_schema = StructType(
-        list(df.schema.fields) + [StructField("doc_id", LongType())]
-    )
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # one call per partition; batches arrive in partition (sorted) order
-        seen = 0
-        base = None
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if base is None:
-                base = offsets[int(pdf["_pid"].iloc[0])]
-            pdf = pdf.drop(columns=["_pid"])
-            pdf["doc_id"] = np.arange(base + seen, base + seen + len(pdf), dtype=np.int64)
-            seen += len(pdf)
-            yield pdf
-
-    out = parted.withColumn("_pid", F.spark_partition_id()).mapInPandas(
-        assign, schema=out_schema
-    )
+    out = parted.withColumn("doc_id", _doc_id_col(offsets))
     out._doc_id_parted = parted  # cache handle; released by build_index(eager=True)
     return out
+
+
+def _count_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """One (partition id, row count) row per non-empty partition."""
+    pid, n = None, 0
+    for pdf in batches:
+        if len(pdf):
+            pid = int(pdf["_pid"].iloc[0])
+            n += len(pdf)
+    if pid is not None:
+        yield pd.DataFrame({"_pid": [pid], "n": [n]})
 
 
 def _range_partition_with_offsets(df: DataFrame, order_cols: List[str], num_partitions: int):
     """Range-partition + locally sort the corpus by order_cols, persist it to
     pin the sampled boundaries, and return (parted, {partition_id: doc_id
-    offset}, total_rows). One full shuffle + a tiny counts job."""
+    offset}, total_rows). One full shuffle + one narrow counts pass over the
+    pinned partitions (no second shuffle)."""
     from pyspark import StorageLevel
 
     cols = [F.col(c) for c in order_cols]
@@ -153,12 +147,11 @@ def _range_partition_with_offsets(df: DataFrame, order_cols: List[str], num_part
         .sortWithinPartitions(*cols)
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    counts = {
-        r["_pid"]: r["cnt"]
-        for r in parted.groupBy(F.spark_partition_id().alias("_pid"))
-        .agg(F.count("*").alias("cnt"))
+    counts = dict(
+        parted.select(F.spark_partition_id().alias("_pid"))
+        .mapInPandas(_count_partition, schema="_pid int, n long")
         .collect()
-    }
+    )
     offsets, acc = {}, 0
     for p in sorted(counts):
         offsets[p] = acc
@@ -166,9 +159,30 @@ def _range_partition_with_offsets(df: DataFrame, order_cols: List[str], num_part
     return parted, offsets, acc
 
 
-def _invert_core(config: IndexConfig, pairs):
-    """Invert a stream of (doc_id int64 array, content Series) pairs into
-    per-(doc, term) tf DataFrames.
+def _doc_id_col(offsets: dict):
+    """doc_id of each row of the pinned partitioning, in the JVM: the
+    partition's offset plus the row's position in the partition, which
+    ``monotonically_increasing_id`` carries in its low 33 bits."""
+    base = F.create_map(
+        *[F.lit(x).cast("long") for p, o in sorted(offsets.items()) or [(0, 0)]
+          for x in (p, o)]
+    )
+    pos = F.monotonically_increasing_id().bitwiseAND((1 << 33) - 1)
+    return (base[F.spark_partition_id().cast("long")] + pos).cast("long")
+
+
+def _slices(values: np.ndarray, bounds: np.ndarray) -> List[np.ndarray]:
+    """``values[bounds[i]:bounds[i + 1]]`` views for every i (np.split
+    without its per-piece overhead)."""
+    b = bounds.tolist()
+    return [values[a:z] for a, z in zip(b[:-1], b[1:])]
+
+
+def _invert_batches(config: IndexConfig, pairs):
+    """Invert a stream of (doc_id int64 array, content Series) pairs. Yields
+    per batch (doc_ids, lengths, discounted lengths, tf DataFrame or None
+    when the batch has no tokens); lengths cover every doc of the batch,
+    zero-token docs included.
 
     This is PerField.invert (IndexingChain.java:1121-1260) re-expressed
     batch-at-a-time: token stream -> positions -> per-doc term freqs + norm
@@ -191,6 +205,7 @@ def _invert_core(config: IndexConfig, pairs):
             flat, counts = flat_tokenize(content, chain=chain)
             total = int(counts.sum())
             if total == 0:
+                yield batch_docs, counts, counts, None
                 continue
             row_idx = np.repeat(np.arange(len(batch_docs)), counts)
             starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
@@ -207,6 +222,7 @@ def _invert_core(config: IndexConfig, pairs):
                 counts = np.bincount(row_idx, minlength=len(batch_docs)).astype(np.int64)
                 total = len(flat)
                 if total == 0:
+                    yield batch_docs, counts, counts, None
                     continue
             base_counts = counts
             if config.hunspell is not None:
@@ -357,12 +373,19 @@ def _invert_core(config: IndexConfig, pairs):
                 "norm": norms,
                 "dlen": dlens,
                 "positions": (
-                    [a.astype(np.int32) for a in np.split(pos_sorted, bounds[1:-1])]
+                    _slices(pos_sorted.astype(np.int32), bounds)
                     if with_pos
                     else [None] * len(first)
                 ),
             }
-            yield pd.DataFrame(out)
+            yield batch_docs, counts, base_counts, pd.DataFrame(out)
+
+
+def _invert_core(config: IndexConfig, pairs) -> Iterator[pd.DataFrame]:
+    """The tf DataFrames of :func:`_invert_batches`."""
+    for _docs, _lengths, _dlens, tf in _invert_batches(config, pairs):
+        if tf is not None:
+            yield tf
 
 
 def _invert_fn(config: IndexConfig, content_col: str):
@@ -379,25 +402,28 @@ def _invert_fn(config: IndexConfig, content_col: str):
     return invert
 
 
+def _assigned(batches: Iterator[pd.DataFrame], content_col: str, offsets: dict):
+    """(doc_ids, content) pairs of one pinned range partition (batches carry
+    a _pid column): ids run on from the partition's offset."""
+    seen = 0
+    base = None
+    for pdf in batches:
+        if len(pdf) == 0:
+            continue
+        if base is None:
+            base = offsets[int(pdf["_pid"].iloc[0])]
+        ids = np.arange(base + seen, base + seen + len(pdf), dtype=np.int64)
+        seen += len(pdf)
+        yield ids, pdf[content_col]
+
+
 def _assign_invert_fn(config: IndexConfig, content_col: str, offsets: dict):
     """Fused doc_id assignment + invert: one mapInPandas over the pinned
     range-partitioned corpus (with a _pid column), so the corpus crosses the
     JVM<->Arrow boundary once instead of twice."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def pairs():
-            seen = 0
-            base = None
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                if base is None:
-                    base = offsets[int(pdf["_pid"].iloc[0])]
-                ids = np.arange(base + seen, base + seen + len(pdf), dtype=np.int64)
-                seen += len(pdf)
-                yield ids, pdf[content_col]
-
-        yield from _invert_core(config, pairs())
+        yield from _invert_core(config, _assigned(batches, content_col, offsets))
 
     return fn
 
@@ -443,13 +469,9 @@ def _segment_writer_fn(config: IndexConfig):
             f1 = freqs_s[i1].astype(np.int64)
             n1 = norms_s[i1]
             if with_pos:
-                pos_enc1 = [
-                    codec.vbyte_encode(
-                        np.diff(np.asarray(p, dtype=np.int64), prepend=0)
-                        .astype(np.uint64)
-                    )
-                    for p in pos_s[i1]
-                ]
+                # every singleton's position list (freq positions each) in
+                # one vectorized encode
+                pos_enc1 = codec.encode_position_lists(np.concatenate(pos_s[i1]), f1)
             else:
                 pos_enc1 = None
             frames.append(pd.DataFrame({
@@ -481,10 +503,7 @@ def _segment_writer_fn(config: IndexConfig):
                 base = int(docs_s[b0 - 1]) if b0 > b0g else -1
                 imp_f, imp_n = codec.pareto_impacts(f, n)
                 if with_pos:
-                    pcat = np.concatenate(
-                        [np.asarray(p, dtype=np.int64) for p in pos_s[b0:b1]]
-                    )
-                    pos_enc = codec.encode_positions(pcat, f)
+                    pos_enc = codec.encode_positions(np.concatenate(pos_s[b0:b1]), f)
                 else:
                     pos_enc = None
                 rows.append(
@@ -515,16 +534,22 @@ def _segment_writer_fn(config: IndexConfig):
     return write_segment
 
 
-DOCLEN_TERM = "\x00doclen"  # sentinel rows carrying per-doc length/norm stats
+DOCLEN_TERM = "\x00doclen"  # term of the fused pass's doc-stat rows
 
-_DOC_STATS_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("length", LongType()),
-        StructField("_tf_norm", IntegerType()),
-        StructField("_tf_dlen", IntegerType()),
+# The fused pass's output: postings blocks plus, per input batch, one
+# doc-stat row (term=DOCLEN_TERM, block_id=-1). A doc-stat row holds the
+# batch's first doc_id in base_doc, its doc count in count and its token
+# total in sum_freq; the arrays hold each doc's length, norm byte and
+# overlap count in doc_id order. Block rows leave the arrays null.
+_RAW_SCHEMA = StructType(
+    POSTINGS_SCHEMA.fields
+    + [
+        StructField("doc_lengths", ArrayType(IntegerType())),
+        StructField("doc_norms", ArrayType(IntegerType())),
+        StructField("doc_overlaps", ArrayType(IntegerType())),
     ]
 )
+_DOC_ARRAYS = ("doc_lengths", "doc_norms", "doc_overlaps")
 
 
 def _fused_invert_encode_fn(config: IndexConfig, content_col: str, offsets: dict):
@@ -546,40 +571,37 @@ def _fused_invert_encode_fn(config: IndexConfig, content_col: str, offsets: dict
     checkpoint build documents (checkpoint.py module docstring): every
     decoder treats block rows independently.
 
-    Per-doc stats (length / norm / discounted length) ride along as ONE
-    sentinel row per flushed segment (term=DOCLEN_TERM, block_id=-1,
-    vbyte-packed columns), so the docs table derives from the same single
-    pass with no second scan of anything."""
-    invert = _assign_invert_fn(config, content_col, offsets)
+    Per-doc stats (length / norm / overlap count) of every doc, zero-token
+    docs included, ride along as one doc-stat row per input batch (see
+    _RAW_SCHEMA), so the docs table is a JVM explode of this same pass's
+    output (:func:`_docs_from_stats`)."""
     write_segment = _segment_writer_fn(config)
-    cols = [f.name for f in POSTINGS_SCHEMA.fields]
+    no_docs = dict.fromkeys(_DOC_ARRAYS)
 
-    def _flush(seg: int, frames: List[pd.DataFrame]) -> pd.DataFrame:
+    def doc_stats(docs: np.ndarray, lengths: np.ndarray, dlens: np.ndarray) -> pd.DataFrame:
+        return pd.DataFrame({
+            "term": [DOCLEN_TERM], "segment_id": [-1], "block_id": [-1],
+            "base_doc": [int(docs[0])], "count": [len(docs)],
+            "sum_freq": [int(lengths.sum())], "last_doc": [int(docs[-1])],
+            "docs_enc": [None], "freqs_enc": [None], "norms_enc": [None],
+            "imp_freqs": [None], "imp_norms": [None], "pos_enc": [None],
+            "doc_lengths": [lengths.astype(np.int32)],
+            "doc_norms": [int_to_byte4(dlens).astype(np.int32)],
+            "doc_overlaps": [(lengths - dlens).astype(np.int32)],
+        })
+
+    def flush(frames: List[pd.DataFrame]) -> pd.DataFrame:
         pdf = frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
-        out = write_segment(pdf)
-        d = pdf["doc_id"].to_numpy(dtype=np.int64)
-        starts = np.concatenate(([0], np.nonzero(np.diff(d))[0] + 1))
-        doc_ids = d[starts]
-        lengths = np.add.reduceat(pdf["freq"].to_numpy(np.int64), starts)
-        norms = pdf["norm"].to_numpy(np.int64)[starts]
-        dlens = pdf["dlen"].to_numpy(np.int64)[starts]
-        sent = pd.DataFrame(
-            [(
-                DOCLEN_TERM, seg, -1, -1, len(doc_ids), 0, int(doc_ids[-1]),
-                codec.vbyte_encode(np.diff(doc_ids, prepend=0).astype(np.uint64)),
-                codec.vbyte_encode(lengths.astype(np.uint64)),
-                norms.astype(np.uint8).tobytes(),
-                None, None,
-                codec.vbyte_encode(dlens.astype(np.uint64)),
-            )],
-            columns=cols,
-        )
-        return pd.concat([out, sent], ignore_index=True)
+        return write_segment(pdf).assign(**no_docs)
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cur = None
         frames: List[pd.DataFrame] = []
-        for tfb in invert(batches):
+        pairs = _assigned(batches, content_col, offsets)
+        for docs, lengths, dlens, tfb in _invert_batches(config, pairs):
+            yield doc_stats(docs, lengths, dlens)
+            if tfb is None:
+                continue
             segs = tfb["segment_id"].to_numpy()
             b = np.concatenate(
                 ([0], np.nonzero(np.diff(segs))[0] + 1, [len(segs)])
@@ -590,30 +612,26 @@ def _fused_invert_encode_fn(config: IndexConfig, content_col: str, offsets: dict
                 if cur is None:
                     cur = seg
                 elif seg != cur:
-                    yield _flush(cur, frames)
+                    yield flush(frames)
                     frames, cur = [], seg
                 frames.append(part)
         if frames:
-            yield _flush(cur, frames)
+            yield flush(frames)
 
     return fn
 
 
-def _decode_doc_stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Sentinel doc-stat rows -> (doc_id, length, _tf_norm, _tf_dlen)."""
-    for pdf in batches:
-        outs = []
-        for row in pdf.itertuples(index=False):
-            n = int(row.count)
-            doc_ids = np.cumsum(codec.vbyte_decode(row.docs_enc, n).astype(np.int64))
-            outs.append(pd.DataFrame({
-                "doc_id": doc_ids,
-                "length": codec.vbyte_decode(row.freqs_enc, n).astype(np.int64),
-                "_tf_norm": np.frombuffer(row.norms_enc, dtype=np.uint8).astype(np.int32),
-                "_tf_dlen": codec.vbyte_decode(row.pos_enc, n).astype(np.int32),
-            }))
-        if outs:
-            yield pd.concat(outs, ignore_index=True)
+def _docs_from_stats(doc_rows: DataFrame) -> DataFrame:
+    """(doc_id, length, norm, num_overlap) for every doc, exploded in the JVM
+    from the fused pass's doc-stat rows (doc_ids run on from base_doc)."""
+    return doc_rows.select(
+        "base_doc", F.posexplode(F.arrays_zip(*_DOC_ARRAYS)).alias("pos", "s")
+    ).select(
+        (F.col("base_doc") + F.col("pos")).alias("doc_id"),
+        F.col("s.doc_lengths").cast("long").alias("length"),
+        F.col("s.doc_norms").cast("int").alias("norm"),
+        F.col("s.doc_overlaps").cast("long").alias("num_overlap"),
+    )
 
 
 def term_vectors(
@@ -835,29 +853,30 @@ def build_index(
 
     from pyspark import StorageLevel
 
-    raw = None
+    raw = tf = None
     if parted is not None:
         # fused doc_id assignment + invert + LOCAL segment encode (the DWPT
         # analog — see _fused_invert_encode_fn): the corpus crosses Arrow
         # once and nothing shuffles between invert and block encode; only
         # the ~30x-smaller encoded block rows are cached. Per-doc stats
-        # ride along as sentinel rows (block_id = -1).
-        raw = (
-            parted.withColumn("_pid", F.spark_partition_id())
-            .mapInPandas(
-                _fused_invert_encode_fn(config, content_col, offsets),
-                schema=POSTINGS_SCHEMA,
-            )
-            .persist(StorageLevel.MEMORY_AND_DISK)
+        # ride along as doc-stat rows (block_id = -1).
+        raw = parted.withColumn("_pid", F.spark_partition_id()).mapInPandas(
+            _fused_invert_encode_fn(config, content_col, offsets),
+            schema=_RAW_SCHEMA,
         )
-        tf = None
-        postings = raw.filter(F.col("block_id") >= 0)
-        lengths = raw.filter(F.col("block_id") == -1).mapInPandas(
-            _decode_doc_stats, schema=_DOC_STATS_SCHEMA
-        )
+        # an eager build pins the fused output on local disk, as it does its
+        # shuffle output: the term exchange, the docs explode and the token
+        # totals all read that one copy, and unlike a cache a checkpoint adds
+        # no materialization job of its own to the plans that read it. A
+        # lazy build keeps it as a cache that Index.unpersist releases.
         if eager:
-            raw.count()
-            _mark("invert_segment_write")
+            raw = raw.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+        else:
+            raw = raw.persist(StorageLevel.MEMORY_AND_DISK)
+        postings = raw.filter(F.col("block_id") >= 0).drop(*_DOC_ARRAYS)
+        doc_rows = raw.filter(F.col("block_id") == -1)
+        # Σ per-batch token totals == Σ doc length == Σ tf freq
+        totals = doc_rows.select(F.col("sum_freq").alias("v"))
     else:
         # arbitrary pre-assigned doc_ids: partitions are not doc-contiguous,
         # so segments group across partitions via ONE wide shuffle. The tf
@@ -879,11 +898,7 @@ def build_index(
             .groupBy("segment_id")
             .applyInPandas(_segment_writer_fn(config), schema=POSTINGS_SCHEMA)
         )
-        lengths = tf.groupBy("doc_id").agg(
-            F.sum("freq").alias("length"),
-            F.max("norm").alias("_tf_norm"),
-            F.max("dlen").alias("_tf_dlen"),
-        )
+        totals = tf.agg(F.sum("freq").alias("v"))
         if eager:
             # materialize the segment writer's output before the range
             # exchange samples it, or the sampling job re-executes the whole
@@ -896,20 +911,20 @@ def build_index(
         # term-major layout for the query path: range-partitioned + sorted by
         # term, so per-batch min/max stats prune term lookups against the
         # in-memory cache (the role of the term dictionary's block index;
-        # write_index gets the same effect from Parquet row-group stats).
+        # write_index writes this order as is and Parquet row-group stats
+        # give the same effect).
         postings = (
             postings.repartitionByRange(num_partitions, "term")
             .sortWithinPartitions("term", "segment_id", "block_id")
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        postings.count()
-        _mark("term_major_exchange")
 
     # term stats derived from the (much smaller) postings blocks — no second
     # pass over tf. doc_freq = Σ block counts; total_term_freq = Σ block
     # sum_freq. singleton_* columns (pulsing fast path) are only consulted
     # when doc_freq == 1, where the term has exactly one block row whose
-    # impacts hold the exact (freq, norm) pair.
+    # impacts hold the exact (freq, norm) pair. On term-major postings the
+    # grouping reuses their range partitioning (no exchange).
     terms = postings.groupBy("term").agg(
         F.sum("count").cast("long").alias("doc_freq"),
         F.sum("sum_freq").alias("total_term_freq"),
@@ -918,89 +933,42 @@ def build_index(
         F.max(F.array_max("imp_norms")).cast("int").alias("singleton_norm"),
     )
 
-    # docs / norms: `lengths` was derived per-branch above (decoded sentinel
-    # rows on the fused path; a tf aggregate on the pre-assigned-id path).
-    # Docs with zero tokens keep norm 0 via the left join. doc_ids are dense
-    # 0..n-1, so with no stored columns the doc table needs NO pass over the
-    # corpus at all. length = Σ freq (FieldInvertState.length semantics:
+    # docs / norms. length = Σ freq (FieldInvertState.length semantics:
     # overlaps count); the norm byte was computed at invert from the
     # DISCOUNTED length (length - numOverlap).
-    if parted is not None and not config.store_cols:
-        id_side = spark.range(0, n).withColumnRenamed("id", "doc_id")
-    elif parted is not None:
-        # re-derive (doc_id, store_cols) from the pinned partitioning; a
-        # narrow projection drops content before the Arrow hop
-        store = list(config.store_cols)
-        sschema = StructType(
-            [StructField("doc_id", LongType())]
-            + [corpus.schema[c] for c in store]
-        )
-
-        def assign_store(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            seen = 0
-            base = None
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                if base is None:
-                    base = offsets[int(pdf["_pid"].iloc[0])]
-                out = pd.DataFrame(
-                    {"doc_id": np.arange(base + seen, base + seen + len(pdf), dtype=np.int64)}
-                )
-                for c in store:
-                    out[c] = pdf[c].to_numpy()
-                seen += len(pdf)
-                yield out
-
-        id_side = (
-            parted.select(*store)
-            .withColumn("_pid", F.spark_partition_id())
-            .mapInPandas(assign_store, schema=sschema)
-        )
+    if parted is not None:
+        # every doc (zero-token docs included) from the fused pass's
+        # doc-stat rows; stored columns join on from the pinned
+        # partitioning, where doc_id is a JVM projection
+        docs = _docs_from_stats(doc_rows)
+        if config.store_cols:
+            store = parted.select(_doc_id_col(offsets).alias("doc_id"), *config.store_cols)
+            docs = store.join(docs, "doc_id")
     else:
-        id_side = df.select("doc_id", *config.store_cols)
-    docs = id_side.join(lengths, "doc_id", "left").fillna({"length": 0})
-    docs = (
-        docs.withColumn("norm", F.coalesce(F.col("_tf_norm"), F.lit(0)).cast("int"))
-        .withColumn(
-            "num_overlap",
-            (F.col("length") - F.coalesce(F.col("_tf_dlen"), F.lit(0))).cast("long"),
+        # a tf aggregate; docs with zero tokens keep norm 0 via the left join
+        lengths = tf.groupBy("doc_id").agg(
+            F.sum("freq").alias("length"),
+            F.max("norm").alias("_tf_norm"),
+            F.max("dlen").alias("_tf_dlen"),
         )
-        .drop("_tf_norm", "_tf_dlen")
-    )
+        docs = df.select("doc_id", *config.store_cols).join(lengths, "doc_id", "left")
+        docs = (
+            docs.fillna({"length": 0})
+            .withColumn("norm", F.coalesce(F.col("_tf_norm"), F.lit(0)).cast("int"))
+            .withColumn(
+                "num_overlap",
+                (F.col("length") - F.coalesce(F.col("_tf_dlen"), F.lit(0))).cast("long"),
+            )
+            .drop("_tf_norm", "_tf_dlen")
+        )
 
     if eager:
-        # terms <- persisted postings and docs <- persisted tf are
-        # INDEPENDENT lineages: materialize them concurrently (two driver
-        # threads; local-mode task slots interleave both jobs), then derive
-        # sttf from the small persisted terms table instead of a second
-        # full pass over tf — both trims to the build's serial fraction
-        from concurrent.futures import ThreadPoolExecutor
-
         terms = terms.persist(StorageLevel.MEMORY_AND_DISK)
         docs = docs.persist(StorageLevel.MEMORY_AND_DISK)
-        # the sttf aggregate reads every terms partition, so it doubles as
-        # the cache-materializing action — one job instead of count + agg
-        with ThreadPoolExecutor(max_workers=2) as ex:
-            ft = ex.submit(
-                lambda: terms.agg(
-                    F.sum("total_term_freq").alias("sttf")
-                ).collect()[0]["sttf"]
-            )
-            fd = ex.submit(docs.count)
-            sttf = int(ft.result() or 0)
-            fd.result()
-        _mark("terms_docs_materialize")
-    elif parted is not None:
-        # Σ block sum_freq over the cached raw blocks == Σ tf freq
-        sttf = int(
-            postings.agg(F.sum("sum_freq").alias("sttf")).collect()[0]["sttf"]
-            or 0
-        )
+        sttf = _fill_caches(totals, terms, docs)
+        _mark("term_major_terms_docs")
     else:
-        sttf = int(
-            tf.agg(F.sum("freq").alias("sttf")).collect()[0]["sttf"] or 0
-        )
+        sttf = int(totals.agg(F.sum("v")).collect()[0][0] or 0)
     stats = CollectionStats(doc_count=int(n), sum_total_term_freq=sttf)
     cached = raw if parted is not None else tf
     if parted is not None and cached is not None:
@@ -1019,6 +987,21 @@ def build_index(
     if _timing:
         print(json.dumps({"build_phases": dict(_marks)}), flush=True)
     return idx
+
+
+def _fill_caches(totals: DataFrame, *cached: DataFrame) -> int:
+    """Fill the caches of the persisted frames ``cached`` and return the sum
+    of ``totals``' one column, all in ONE action: adaptive execution
+    materializes each cached relation the plan scans as its own stage
+    (concurrently where they are independent), and the frames' arms of the
+    union return no rows."""
+    none = F.spark_partition_id() < 0  # never true, and not constant-folded
+    probe = totals.select(F.col(totals.columns[0]).cast("long").alias("v"))
+    for df in cached:
+        probe = probe.unionByName(
+            df.filter(none).select(F.lit(None).cast("long").alias("v"))
+        )
+    return int(sum(r["v"] or 0 for r in probe.collect()))
 
 
 def config_to_dict(config: IndexConfig) -> dict:
@@ -1066,12 +1049,13 @@ def write_index(index: Index, path: str) -> dict:
     """Persist index tables as Parquet + manifest (commit point: the analog of
     SegmentInfos/segments_N — SURVEY.md §2.1). Returns manifest dict.
 
-    Postings are sorted by (term) within segment partitions so Parquet
-    row-group stats prune term seeks."""
+    Postings are written sorted by (term, segment_id, block_id) within their
+    partitions so Parquet row-group stats prune term seeks. There is no
+    exchange: the term-major postings of an eager build already have that
+    order, so the sort plans away and they are written as they are cached."""
     t0 = time.time()
     (
-        index.postings.repartition("segment_id")
-        .sortWithinPartitions("term", "block_id")
+        index.postings.sortWithinPartitions("term", "segment_id", "block_id")
         .write.mode("overwrite")
         .parquet(os.path.join(path, "postings"))
     )

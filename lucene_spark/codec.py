@@ -22,7 +22,7 @@ Layout (little-endian):
 
 from __future__ import annotations
 
-from typing import Tuple
+from typing import List, Tuple
 
 import numpy as np
 
@@ -129,24 +129,41 @@ def delta_decode_docs(data: bytes, count: int, base_doc: int) -> np.ndarray:
     return base_doc + np.cumsum(deltas)
 
 
-def vbyte_encode(values: np.ndarray) -> bytes:
-    """Vectorized vbyte (7-bit groups, high bit = continuation)."""
-    v = np.asarray(values, dtype=np.uint64)
-    if len(v) == 0:
-        return b""
-    n_bytes = np.maximum((np.frompyfunc(int.bit_length, 1, 1)(v.astype(object)).astype(np.int64) + 6) // 7, 1)
-    total = int(n_bytes.sum())
-    out = np.empty(total, dtype=np.uint8)
-    pos = np.concatenate(([0], np.cumsum(n_bytes)[:-1]))
-    # max 10 groups for u64; loop over group index (<=10 iters), vectorized inside
+_VBYTE_STEPS = np.uint64(1) << (7 * np.arange(1, 10, dtype=np.uint64))  # 2^7 .. 2^63
+
+
+def _vbyte_pack(v: np.ndarray) -> Tuple[np.ndarray, np.ndarray]:
+    """(vbyte stream as uint8, bytes per value) for uint64 values. A value
+    takes one byte plus one per 7-bit step it reaches (1..10 bytes)."""
+    n_bytes = np.ones(len(v), dtype=np.int64)
+    for step in _VBYTE_STEPS:
+        n_bytes += v >= step
+    ends = np.cumsum(n_bytes)
+    out = np.empty(int(ends[-1]) if len(v) else 0, dtype=np.uint8)
+    pos = ends - n_bytes
+    # loop over group index (<= 10 iters), vectorized inside
     remaining = v.copy()
-    for g in range(int(n_bytes.max())):
+    for g in range(int(n_bytes.max()) if len(v) else 0):
         active = n_bytes > g
         byte = (remaining[active] & 0x7F).astype(np.uint8)
         cont = (g + 1) < n_bytes[active]
         out[pos[active] + g] = byte | (cont.astype(np.uint8) << 7)
         remaining[active] >>= np.uint64(7)
-    return out.tobytes()
+    return out, n_bytes
+
+
+def vbyte_encode(values: np.ndarray) -> bytes:
+    """Vectorized vbyte (7-bit groups, high bit = continuation)."""
+    return _vbyte_pack(np.asarray(values, dtype=np.uint64))[0].tobytes()
+
+
+def vbyte_encode_lists(values: np.ndarray, lengths: np.ndarray) -> List[bytes]:
+    """``[vbyte_encode(x) for x in lists]`` for the lists laid end to end in
+    ``values`` (list i has ``lengths[i]`` values), encoded in one pass."""
+    out, n_bytes = _vbyte_pack(np.asarray(values, dtype=np.uint64))
+    ends = np.concatenate(([0], np.cumsum(n_bytes)))[np.cumsum(lengths)]
+    buf = out.tobytes()
+    return [buf[a:b] for a, b in zip(np.concatenate(([0], ends[:-1])).tolist(), ends.tolist())]
 
 
 def vbyte_decode(data: bytes, count: int) -> np.ndarray:
@@ -165,16 +182,28 @@ def vbyte_decode(data: bytes, count: int) -> np.ndarray:
     return out
 
 
+def _position_deltas(positions_concat: np.ndarray, lengths) -> np.ndarray:
+    """Delta-within-list values of position lists laid end to end (list i
+    has ``lengths[i]`` positions); each list's first position is absolute."""
+    pos = np.asarray(positions_concat, dtype=np.int64)
+    lengths = np.asarray(lengths, dtype=np.int64)
+    deltas = np.diff(pos, prepend=0)
+    starts = (np.cumsum(lengths) - lengths)[lengths > 0]
+    deltas[starts] = pos[starts]
+    return deltas.astype(np.uint64)
+
+
 def encode_positions(positions_concat: np.ndarray, freqs: np.ndarray) -> bytes:
     """Per-doc position lists (concatenated, doc boundaries at cumsum(freqs))
     -> delta-within-doc vbyte stream."""
-    pos = np.asarray(positions_concat, dtype=np.int64)
-    if len(pos) == 0:
-        return b""
-    deltas = np.diff(pos, prepend=0)
-    starts = np.concatenate(([0], np.cumsum(freqs)[:-1])).astype(np.int64)
-    deltas[starts] = pos[starts]  # first position of each doc is absolute
-    return vbyte_encode(deltas.astype(np.uint64))
+    return vbyte_encode(_position_deltas(positions_concat, freqs))
+
+
+def encode_position_lists(positions_concat: np.ndarray, lengths: np.ndarray) -> List[bytes]:
+    """One :func:`encode_positions` stream per single-doc position list
+    (lists laid end to end, list i has ``lengths[i]`` positions), encoded
+    in one vectorized pass."""
+    return vbyte_encode_lists(_position_deltas(positions_concat, lengths), lengths)
 
 
 def decode_positions(data: bytes, freqs: np.ndarray) -> np.ndarray:

@@ -11,6 +11,7 @@ from lucene_spark.codec import (
     decode_positions,
     delta_decode_docs,
     delta_encode_docs,
+    encode_position_lists,
     encode_positions,
     for_decode,
     for_encode,
@@ -19,6 +20,7 @@ from lucene_spark.codec import (
     pfor_encode,
     vbyte_decode,
     vbyte_encode,
+    vbyte_encode_lists,
 )
 
 RNG = np.random.default_rng(42)
@@ -81,6 +83,41 @@ def test_delta_docs_rejects_non_increasing():
 def test_vbyte_round_trip(n):
     vals = RNG.integers(0, 2**40, size=n).astype(np.uint64)
     assert np.array_equal(vbyte_decode(vbyte_encode(vals), n), vals)
+
+
+VBYTE_EDGES = np.array([0, 127, 128, 2**32, 2**63], dtype=np.uint64)
+
+
+def test_vbyte_edge_values():
+    # one byte below 2^7, two from 2^7; 2^32 needs 5 groups, 2^63 ten
+    assert vbyte_encode(VBYTE_EDGES[:3]) == bytes([0, 127, 0x80, 1])
+    assert len(vbyte_encode(VBYTE_EDGES[3:4])) == 5
+    assert len(vbyte_encode(VBYTE_EDGES[4:])) == 10
+    assert np.array_equal(vbyte_decode(vbyte_encode(VBYTE_EDGES), 5), VBYTE_EDGES)
+
+
+@pytest.mark.parametrize("seed", range(5))
+def test_vbyte_encode_lists_matches_per_list(seed):
+    """The batch encoder yields exactly the bytes of one vbyte_encode per
+    list, on random widths, the edge values and empty lists."""
+    rng = np.random.default_rng(seed)
+    lengths = rng.integers(0, 7, size=40)
+    lists = []
+    for n in lengths:
+        width = int(rng.integers(1, 64))
+        vals = rng.integers(0, 2**width, size=n, dtype=np.uint64)
+        vals[rng.random(n) < 0.3] = rng.choice(VBYTE_EDGES)
+        lists.append(vals)
+    got = vbyte_encode_lists(np.concatenate(lists), lengths)
+    assert got == [vbyte_encode(v) for v in lists]
+    assert vbyte_encode_lists(np.zeros(0, np.uint64), np.zeros(0, np.int64)) == []
+
+
+def test_encode_position_lists_matches_per_doc():
+    lengths = np.array([1, 3, 2, 1, 4])
+    lists = [np.sort(RNG.choice(5000, size=n, replace=False)) for n in lengths]
+    got = encode_position_lists(np.concatenate(lists), lengths)
+    assert got == [encode_positions(p, np.array([len(p)])) for p in lists]
 
 
 def test_positions_round_trip():

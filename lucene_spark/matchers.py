@@ -13,15 +13,13 @@ equivalence checks):
 - exact phrase: ExactPhraseMatcher (search/ExactPhraseMatcher.java) — freq =
   number of start positions where every slot term occurs at start+slot;
   computed as one offset-intersection over the batch, no per-doc loop.
-- sloppy phrase: SloppyPhraseMatcher (search/SloppyPhraseMatcher.java, the
-  no-repeats case) — freq = Σ 1/(1+matchLength) over the priority-queue
-  walk's matches (PhraseScorer sloppyWeight). Two-term phrases use a closed
-  form (cross-side run boundaries of the merged adjusted-position sequence,
-  equivalent to the PQ walk — property-tested); n>=3 runs the literal heap
-  walk per doc (the reference is equally sequential per doc). Phrases with
-  REPEATED terms and slop>0 raise NotImplementedError: the reference's
-  repeat handling (hasRpts / advanceRpts) is out of scope, documented in
-  SURVEY.md §8.
+- sloppy phrase: SloppyPhraseMatcher (search/SloppyPhraseMatcher.java) —
+  freq = Σ 1/(1+matchLength) over the priority-queue walk's matches
+  (PhraseScorer sloppyWeight). Without repeated terms the walk's emissions
+  are the same-slot runs of the merged adjusted-position sequence
+  (sloppy_freqs_batch); phrases with repeated terms take the doc-lockstep
+  hasRpts/advanceRpts walk (sloppy_phrase_freqs_rpts_global). Both run only
+  on the docs the match-window prefilter keeps (_sloppy_candidates).
 - ordered span near: NearSpansOrdered (search/spans/NearSpansOrdered.java) —
   for each position p0 of clause 0, the greedy monotone chain q_i =
   min{pos(clause_i) > q_{i-1}} (stretchToOrder with forward-only iterators);
@@ -32,12 +30,14 @@ equivalence checks):
   the per-clause iterators); each visited state with
   (maxEnd - minStart) - n <= slop contributes 1/(1 + (maxEnd - minStart)).
   Two clauses: closed form (each position x pairs with min{other > x});
-  n>=3: literal heap walk per doc.
+  n>=3: one check per retirement of the merged order
+  (span_unordered_freqs_batch).
 """
 
 from __future__ import annotations
 
 import heapq
+from collections import Counter
 from typing import Dict, List, Sequence
 
 import numpy as np
@@ -81,14 +81,50 @@ def gather_slices(flat: np.ndarray, starts, lens) -> np.ndarray:
     return flat[base + within]
 
 
+def intersect_sorted(a: np.ndarray, b: np.ndarray):
+    """``np.intersect1d(a, b, assume_unique=True, return_indices=True)`` for
+    sorted unique arrays without concatenating and sorting them: the shorter
+    side is binary-searched in the longer. Returns (common, ia, ib)."""
+    if len(a) > len(b):
+        common, ib, ia = intersect_sorted(b, a)
+        return common, ia, ib
+    if len(a) == 0:
+        none = np.empty(0, dtype=np.intp)
+        return a[:0], none, none
+    j = np.searchsorted(b, a)
+    ia = np.flatnonzero(b[np.minimum(j, len(b) - 1)] == a)
+    return a[ia], ia, j[ia]
+
+
+def merge_sorted_runs(runs: Sequence[np.ndarray]):
+    """Merge sorted unique runs (hot-cache doc-id arrays) without a
+    quicksort. A stable argsort of their concatenation is a timsort over
+    presorted runs — linear — and keeps equal values in run order, so
+    ``inv`` equals ``np.unique(np.concatenate(runs), return_inverse=True)``'s
+    and ``np.bincount(inv, weights=...)`` sums in the same order. Returns
+    (u, inv, order, starts): ``order`` sorts the concatenation and
+    ``starts`` opens each distinct value's segment in it (for reduceat)."""
+    cat = np.concatenate(runs)
+    order = np.argsort(cat, kind="stable")
+    merged = cat[order]
+    first = np.ones(len(merged), dtype=bool)
+    first[1:] = merged[1:] != merged[:-1]
+    inv = np.empty(len(merged), dtype=np.intp)
+    inv[order] = np.cumsum(first) - 1
+    starts = np.flatnonzero(first)
+    return merged[starts], inv, order, starts
+
+
+def _globals(pos_by_term: Dict[str, List], terms: Sequence[str]):
+    return {t: _concat_global(pos_by_term[t]) for t in dict.fromkeys(terms)}
+
+
 def exact_phrase_freqs(
     pos_by_term: Dict[str, List], terms: Sequence[str], n_docs: int
 ) -> np.ndarray:
     """freq[i] = exact-phrase occurrences in doc i. pos_by_term[t][i] is the
     sorted positions array of term t in doc i (None = absent)."""
-    return exact_phrase_freqs_global(
-        {t: _concat_global(v) for t, v in pos_by_term.items()}, terms, n_docs
-    )
+    return exact_phrase_freqs_global(_globals(pos_by_term, terms), terms, n_docs)
 
 
 def exact_phrase_freqs_global(
@@ -105,7 +141,7 @@ def exact_phrase_freqs_global(
         g = g_by_term[t]
         for off in offs:
             s = g - off
-            cand = s if cand is None else np.intersect1d(cand, s, assume_unique=True)
+            cand = s if cand is None else intersect_sorted(cand, s)[0]
             if len(cand) == 0:
                 return np.zeros(n_docs, dtype=np.int64)
     # drop starts where pos < slot (the subtraction wrapped into the previous
@@ -117,41 +153,28 @@ def exact_phrase_freqs_global(
 
 
 # ---------------------------------------------------------------------------
-# Sloppy phrase (SloppyPhraseMatcher parity, no repeats)
+# Sloppy phrase (SloppyPhraseMatcher parity, with and without repeats)
 # ---------------------------------------------------------------------------
 
 
 def sloppy_phrase_freqs(
     pos_by_term: Dict[str, List], terms: Sequence[str], slop: int, n_docs: int
 ) -> np.ndarray:
-    """Per-doc PQ walk (the reference is equally sequential per doc; sloppy
-    matching is not in the benched hot path — slop=0 takes the vectorized
-    exact kernel above). For 2-term phrases the walk is equivalent to an
-    alternating crossing chain (t_{k+1} = min{opposite side > t_k}, match
-    gap t_k - pred_opposite(t_k)) — that form is what the SQL oracle
-    encodes; ties (exact alignments) pop slot 0 first per PhraseQueue.
+    """SloppyPhraseMatcher freqs over per-doc position lists
+    (pos_by_term[t][i], None = absent): one _concat_global per term, then
+    sloppy_phrase_freqs_global."""
+    return sloppy_phrase_freqs_global(
+        _globals(pos_by_term, terms), terms, slop, n_docs
+    )
 
-    Phrases with REPEATED terms take the repeat-group walk
-    (SloppyPhraseMatcher hasRpts — initComplex/advanceRpts parity for
-    single-term postings; see sloppy_phrase_freqs_rpts).
 
-    The no-repeats path is batch-vectorized (sloppy_freqs_batch): one
-    merged sort + n searchsorted passes over the whole doc batch, with the
-    hand-first tie adjustment reproducing the cached-`next` tie behavior
-    exactly. Adjusted positions are biased by +n so offset subtraction can
-    never wrap a position into the previous doc's global range."""
-    if len(set(terms)) != len(terms):
-        return sloppy_phrase_freqs_rpts(pos_by_term, terms, slop, n_docs)
-    n = len(terms)
-    adj = [
-        [
-            None if p is None else np.asarray(p, dtype=np.int64) - off + n
-            for p in pos_by_term[t]
-        ]
-        for off, t in enumerate(terms)
-    ]
-    g = [_concat_global(a) for a in adj]
-    return sloppy_freqs_batch(g, slop, n_docs)
+def sloppy_phrase_freqs_rpts(
+    pos_by_term: Dict[str, List], terms: Sequence[str], slop: int, n_docs: int
+) -> np.ndarray:
+    """List-layout entry to sloppy_phrase_freqs_rpts_global."""
+    return sloppy_phrase_freqs_rpts_global(
+        _globals(pos_by_term, terms), terms, slop, n_docs
+    )
 
 
 def _sloppy_walk(adj_lists: List[np.ndarray], slop: int) -> float:
@@ -189,70 +212,116 @@ def _sloppy_walk(adj_lists: List[np.ndarray], slop: int) -> float:
                 match_length = ml2
 
 
+def _sloppy_candidates(
+    g_by_term: Dict[str, np.ndarray], terms: Sequence[str], slop: int, n_docs: int
+) -> np.ndarray:
+    """Match-window prefilter: a boolean mask of the docs a sloppy phrase
+    can match at all (SloppyPhraseMatcher's two-phase approximation, made
+    tighter).
+
+    Soundness. The walk emits only from a state whose adjusted positions
+    (actual - offset) span at most ``slop``. Offsets are 0..n-1, so the
+    PPs' ACTUAL positions then lie in one window [lo, hi] with
+    hi - lo <= W = slop + n - 1. PPs sharing a term sit on distinct
+    occurrences of it (repeat collisions are resolved before every
+    emission), so the window holds at least mult(t) occurrences of each
+    distinct term t, mult(t) being t's slot count. Take an anchor term A
+    with m = mult(A). If A's PPs occupy occurrences j_1 < ... < j_m, then
+    first = g_A[j_1] and last = g_A[j_1 + m - 1] <= g_A[j_m] give
+    last - first <= W, and [lo, hi] lies inside [last - W, first + W]. So a
+    doc can match only if some occurrence j of A has
+    g_A[j + m - 1] - g_A[j] <= W and every other term t has at least
+    mult(t) occurrences in [g_A[j + m - 1] - W, g_A[j] + W] (clipped to the
+    doc), i.e. its mult(t)-th occurrence from the window's start lies
+    inside. A rejected doc's freq is 0, and the batch kernels treat docs
+    independently, so every kept doc's freq is unchanged.
+
+    The anchor is the most repeated term, then the rarest: its runs are the
+    fewest windows to test."""
+    mult = Counter(terms)
+    w = min(int(slop) + len(terms) - 1, _LOW_MASK)  # no int64 overflow
+    anchor = max(mult, key=lambda t: (mult[t], -len(g_by_term[t])))
+    m = mult[anchor]
+    ga = np.asarray(g_by_term[anchor], dtype=np.int64)
+    k = max(len(ga) - m + 1, 0)
+    first, last = ga[:k], ga[m - 1 : m - 1 + k]
+    ok = last - first <= w
+    first, last = first[ok], last[ok]
+    base = (first >> _DOC_SHIFT) << _DOC_SHIFT
+    lo = np.maximum(last - w, base)
+    hi = np.minimum(first + w, base + _LOW_MASK)
+    for t, c in mult.items():
+        if t != anchor:
+            g = np.append(g_by_term[t], _BIG)
+            j = np.minimum(np.searchsorted(g, lo) + (c - 1), len(g) - 1)
+            ok = g[j] <= hi
+            first, lo, hi = first[ok], lo[ok], hi[ok]
+    keep = np.zeros(n_docs, dtype=bool)
+    keep[first >> _DOC_SHIFT] = True
+    return keep
+
+
 def sloppy_phrase_freqs_global(
     g_by_term: Dict[str, np.ndarray], terms: Sequence[str], slop: int, n_docs: int
 ) -> np.ndarray:
-    """Sloppy phrase (no repeats) straight from doc-offset GLOBAL position
-    arrays (the hot driver cache's native layout — no per-doc list
-    round-trip): bias-adjust per slot and run the merged-order batch
-    kernel."""
+    """Sloppy phrase straight from doc-offset GLOBAL position arrays (the hot
+    driver cache's native layout). Phrases with repeated terms take
+    sloppy_phrase_freqs_rpts_global. The rest run the merged-order batch
+    kernel (sloppy_freqs_batch) over the docs _sloppy_candidates keeps: one
+    merged sort + n linear passes over the batch, with the
+    hand-first tie rotation reproducing the cached-`next` tie behavior
+    exactly. For 2-term phrases the walk is equivalent to an alternating
+    crossing chain (t_{k+1} = min{opposite side > t_k}, match gap
+    t_k - pred_opposite(t_k)) — the form the SQL oracle encodes. Adjusted
+    positions are biased by +n so offset subtraction can never wrap a
+    position into the previous doc's global range."""
+    if len(set(terms)) != len(terms):
+        return sloppy_phrase_freqs_rpts_global(g_by_term, terms, slop, n_docs)
     n = len(terms)
-    g = [
-        np.asarray(g_by_term[t], dtype=np.int64) - off + n
-        for off, t in enumerate(terms)
-    ]
+    keep = _sloppy_candidates(g_by_term, terms, slop, n_docs)
+    g = []
+    for off, t in enumerate(terms):
+        gt = np.asarray(g_by_term[t], dtype=np.int64)
+        g.append(gt[keep[gt >> _DOC_SHIFT]] - off + n)
     return sloppy_freqs_batch(g, slop, n_docs)
 
 
-def sloppy_phrase_freqs_rpts(
-    pos_by_term: Dict[str, List], terms: Sequence[str], slop: int, n_docs: int
+def sloppy_phrase_freqs_rpts_global(
+    g_by_term: Dict[str, np.ndarray], terms: Sequence[str], slop: int, n_docs: int
 ) -> np.ndarray:
     """Sloppy phrase with REPEATED terms — SloppyPhraseMatcher's hasRpts
     path (search/SloppyPhraseMatcher.java:286-467) for single-term postings
     (plain PhraseQuery; multi-term repeats, i.e. MultiPhraseQuery with
-    shared alternatives, still raise in search.py).
+    shared alternatives, take sloppy_multi_phrase_freqs), straight from
+    doc-offset global arrays.
 
     Repeat groups are query-determined here: PPs sharing a term, sorted by
     query offset (sortRptGroups) — positions-based group discovery in the
-    reference reduces to term identity when each PP has one term. Per doc:
-    initComplex places every PP at its first position then advances the
-    j-th group member j times (advanceRepeatGroups, single-term case);
-    the nextMatch walk resolves collisions by advancing the (position,
-    offset)-lesser of the colliding pair (advanceRpts/lesser/collide) —
-    collision <=> equal index into the shared positions array.
+    reference reduces to term identity when each PP has one term, which is
+    _multi_phrase_shape over singleton slots. Per doc: initComplex places
+    every PP at its first position then advances the j-th group member j
+    times (advanceRepeatGroups, single-term case); the nextMatch walk
+    resolves collisions by advancing the (position, offset)-lesser of the
+    colliding pair (advanceRpts/lesser/collide) — collision <=> equal index
+    into the shared positions array.
 
-    Executes on the doc-lockstep batch walk (_sloppy_rpts_walk_batch);
-    the literal per-doc transcription survives as
-    _sloppy_phrase_freqs_rpts_literal for the property suite."""
-    uniq = list(dict.fromkeys(terms))
-    term_ord = {t: j for j, t in enumerate(uniq)}
+    Executes on the doc-lockstep batch walk (_sloppy_rpts_walk_batch) over
+    the docs _sloppy_candidates keeps; the literal per-doc transcription
+    survives as _sloppy_phrase_freqs_rpts_literal for the property suite."""
     n = len(terms)
-    tid = [term_ord[t] for t in terms]
-    groups: Dict[int, List[int]] = {}
-    for i in range(n):
-        groups.setdefault(tid[i], []).append(i)
-    groups = {t: g for t, g in groups.items() if len(g) > 1}
-    rank = [0] * n
-    for g in groups.values():
-        for j, i in enumerate(g):  # PP order == offset order
-            rank[i] = j
-    group_members = [
-        tuple(groups[tid[i]]) if tid[i] in groups else None for i in range(n)
-    ]
-    g_t = [_concat_global(pos_by_term[t]) for t in uniq]
-    bounds = [_per_doc_bounds(g, n_docs) for g in g_t]
-    cand = np.ones(n_docs, dtype=bool)
-    for _st, ln in bounds:
-        cand &= ln > 0
-    rows = np.flatnonzero(cand)
+    _s, _m, _g, group_members, rank = _multi_phrase_shape([(t,) for t in terms])
+    rows = np.flatnonzero(_sloppy_candidates(g_by_term, terms, slop, n_docs))
     if len(rows) == 0:
         return np.zeros(n_docs, dtype=np.float64)
-    G = [g_t[tid[i]] for i in range(n)]
-    B = np.stack([bounds[tid[i]][0][rows] for i in range(n)], axis=1)
-    L = np.stack([bounds[tid[i]][1][rows] for i in range(n)], axis=1)
+    G = [np.asarray(g_by_term[t], dtype=np.int64) for t in terms]
+    B = np.stack([np.searchsorted(g, rows << _DOC_SHIFT) for g in G], axis=1)
+    L = np.stack(
+        [np.searchsorted(g, (rows + 1) << _DOC_SHIFT) for g in G], axis=1
+    ) - B
+    flat, B = _pp_flat(G, B)
     idx0 = np.tile(np.asarray(rank, np.int64), (len(rows), 1))
     return _sloppy_rpts_walk_batch(
-        G, B, L, list(range(n)), idx0, group_members, slop, rows, n_docs
+        flat, B, L, list(range(n)), idx0, group_members, slop, rows, n_docs
     )
 
 
@@ -260,34 +329,11 @@ def _sloppy_phrase_freqs_rpts_literal(
     pos_by_term: Dict[str, List], terms: Sequence[str], slop: int, n_docs: int
 ) -> np.ndarray:
     """Per-doc literal driver over _sloppy_walk_rpts — the property-test
-    reference for the batch walk above."""
-    uniq = list(dict.fromkeys(terms))
-    term_ord = {t: j for j, t in enumerate(uniq)}
-    tlists = [pos_by_term[t] for t in uniq]
-    n = len(terms)
-    offsets = list(range(n))
-    tid = [term_ord[t] for t in terms]
-    groups: Dict[int, List[int]] = {}
-    for i in range(n):
-        groups.setdefault(tid[i], []).append(i)
-    groups = {t: g for t, g in groups.items() if len(g) > 1}
-    rank = [0] * n
-    for g in groups.values():
-        for j, i in enumerate(g):  # PP order == offset order
-            rank[i] = j
-    group_of = [groups.get(tid[i]) for i in range(n)]
-    out = np.zeros(n_docs, dtype=np.float64)
-    for d in range(n_docs):
-        arrs = [
-            None if tl[d] is None else np.asarray(tl[d], dtype=np.int64)
-            for tl in tlists
-        ]
-        if any(a is None or len(a) == 0 for a in arrs):
-            continue
-        out[d] = _sloppy_walk_rpts(
-            [arrs[tid[i]] for i in range(n)], offsets, list(rank), group_of, slop
-        )
-    return out
+    reference for the batch walk above: a plain phrase is a multi-phrase of
+    singleton slots."""
+    return _sloppy_multi_phrase_freqs_literal(
+        pos_by_term, [(t,) for t in terms], slop, n_docs
+    )
 
 
 def sloppy_multi_phrase_freqs(
@@ -339,23 +385,21 @@ def sloppy_multi_phrase_freqs(
     B = np.stack([bounds[i][0][rows] for i in range(n)], axis=1)
     L = np.stack([bounds[i][1][rows] for i in range(n)], axis=1)
     offsets = list(range(n))
+    flat, B = _pp_flat(G, B)
     if multi:
         # collide-chase init over the union streams (idx starts at 0)
         idx0 = np.zeros((len(rows), n), np.int64)
         base = rows.astype(np.int64) << _DOC_SHIFT
-        V = np.empty((len(rows), n), np.int64)
-        for i in range(n):
-            V[:, i] = G[i][np.minimum(B[:, i] + idx0[:, i], len(G[i]) - 1)]
-        V -= base[:, None]
+        V = flat[B] - base[:, None]
         alive = np.ones(len(rows), dtype=bool)
         alive = _advance_rpt_groups_multi_batch(
-            G, B, L, offsets, idx0, V, groups, alive, base
+            flat, B, L, offsets, idx0, V, groups, alive, base
         )
         rows, B, L, idx0 = rows[alive], B[alive], L[alive], idx0[alive]
     else:
         idx0 = np.tile(np.asarray(rank, np.int64), (len(rows), 1))
     return _sloppy_rpts_walk_batch(
-        G, B, L, offsets, idx0, group_members, slop, rows, n_docs
+        flat, B, L, offsets, idx0, group_members, slop, rows, n_docs
     )
 
 
@@ -589,33 +633,35 @@ def _per_doc_bounds(g: np.ndarray, n_docs: int):
     return edges[:-1].astype(np.int64), np.diff(edges).astype(np.int64)
 
 
-def _gather_vals(G, B, idx, rows, pps, base, extra=0):
-    """LOCAL position values at (row, pp) pairs — loops over the (few)
-    distinct PPs, one vectorized gather each. ``extra`` shifts the lookup
-    (used for window-end values). Out-of-range indices are clamped (callers
-    only read rows they keep alive)."""
-    res = np.empty(len(rows), np.int64)
-    for i in range(len(G)):
-        m = pps == i
-        if m.any():
-            gi = G[i]
-            at = B[rows[m], i] + idx[rows[m], i] + extra
-            res[m] = gi[np.minimum(at, len(gi) - 1)]
-    return res - base[rows]
+def _pp_flat(G, B):
+    """Concatenate the PPs' doc-offset global arrays into one and shift the
+    (R, n) per-row slice bases B to index into it, so a batch of (row, PP)
+    lookups is one gather."""
+    at = np.cumsum([0] + [len(g) for g in G[:-1]])
+    return np.concatenate(G), B + at[None, :]
+
+
+def _gather_vals(flat, B, idx, rows, pps, base):
+    """LOCAL position values at (row, pp) pairs: one gather from the PPs'
+    concatenated arrays (_pp_flat). Out-of-range indices are clamped
+    (callers only read rows they keep alive)."""
+    at = np.minimum(B[rows, pps] + idx[rows, pps], len(flat) - 1)
+    return flat[at] - base[rows]
 
 
 def _sloppy_rpts_walk_batch(
-    G, B, L, offsets, idx0, group_members, slop, doc_ids, n_docs
+    flat, B, L, offsets, idx0, group_members, slop, doc_ids, n_docs
 ) -> np.ndarray:
     """Doc-lockstep transcription of _sloppy_walk_rpts
     (SloppyPhraseMatcher.java nextMatch with repeats): per tick, every live
     row advances its hand PP once, chases repeat-group collisions, then
     either keeps minimizing or emits + re-pops — exactly the literal walk's
-    step, vectorized across rows. ``G[i]`` is PP i's doc-offset global
-    array; ``B``/``L``/``idx0`` are (R, n) per-row slice bases / lengths /
-    post-init indices; ``group_members[i]`` is PP i's repeat group (tuple)
-    or None. Equivalence vs the literal walk is property-tested."""
-    n = len(G)
+    step, vectorized across rows. ``flat``/``B`` are the PPs' concatenated
+    doc-offset global arrays and (R, n) per-row slice bases into it
+    (_pp_flat); ``L``/``idx0`` are (R, n) per-row lengths / post-init
+    indices; ``group_members[i]`` is PP i's repeat group (tuple) or None.
+    Equivalence vs the literal walk is property-tested."""
+    n = B.shape[1]
     R = len(doc_ids)
     out = np.zeros(n_docs, dtype=np.float64)
     if R == 0:
@@ -625,10 +671,7 @@ def _sloppy_rpts_walk_batch(
     idx = idx0.astype(np.int64).copy()
     alive = (idx < L).all(axis=1)
     rr = np.arange(R, dtype=np.int64)
-    V = np.empty((R, n), np.int64)
-    for i in range(n):
-        V[:, i] = G[i][np.minimum(B[:, i] + idx[:, i], len(G[i]) - 1)]
-    V -= base[:, None]
+    V = flat[np.minimum(B + idx, len(flat) - 1)] - base[:, None]
     ADJ = V - offs[None, :]
     end = ADJ.max(axis=1)
     keys = ADJ * n + offs[None, :]  # offsets are distinct 0..n-1: no ties
@@ -637,7 +680,13 @@ def _sloppy_rpts_walk_batch(
     tmp = ADJ.copy()
     tmp[rr, hand] = _BIG
     nxt = tmp.min(axis=1)
-    has_group = np.array([gm is not None for gm in group_members], dtype=bool)
+    # partners[i, j]: PP j shares PP i's repeat group
+    partners = np.zeros((n, n), dtype=bool)
+    for i, gm in enumerate(group_members):
+        if gm is not None:
+            partners[i, list(gm)] = True
+            partners[i, i] = False
+    has_group = partners.any(axis=1)
 
     def emit(rows):
         if len(rows):
@@ -658,7 +707,7 @@ def _sloppy_rpts_walk_batch(
             a, h = a[~ex], h[~ex]
         if not len(a):
             break
-        v = _gather_vals(G, B, idx, a, h, base)
+        v = _gather_vals(flat, B, idx, a, h, base)
         V[a, h] = v
         adj = v - offs[h]
         ADJ[a, h] = adj
@@ -667,24 +716,13 @@ def _sloppy_rpts_walk_batch(
         chm = has_group[h]
         sub, csub = a[chm], h[chm]
         while len(sub):
-            vc = V[sub, csub]
-            partner = np.full(len(sub), -1, np.int64)
-            for i in range(n):
-                gm = group_members[i]
-                if gm is None:
-                    continue
-                mi = (csub == i) & (partner < 0)
-                if not mi.any():
-                    continue
-                for j in gm:
-                    if j == i:
-                        continue
-                    hit = mi & (partner < 0) & (V[sub, j] == vc)
-                    partner[hit] = j
-            found = partner >= 0
-            sub, csub, partner = sub[found], csub[found], partner[found]
+            # the first (lowest-PP) group member on the same position
+            hit = (V[sub] == V[sub, csub][:, None]) & partners[csub]
+            found = hit.any(axis=1)
+            sub, csub = sub[found], csub[found]
             if not len(sub):
                 break
+            partner = hit[found].argmax(axis=1)
             kc = ADJ[sub, csub] * n + offs[csub]
             kk = ADJ[sub, partner] * n + offs[partner]
             lsr = np.where(kc < kk, csub, partner)
@@ -696,7 +734,7 @@ def _sloppy_rpts_walk_batch(
                 sub, lsr = sub[~ex2], lsr[~ex2]
             if not len(sub):
                 break
-            v2 = _gather_vals(G, B, idx, sub, lsr, base)
+            v2 = _gather_vals(flat, B, idx, sub, lsr, base)
             V[sub, lsr] = v2
             adj2 = v2 - offs[lsr]
             ADJ[sub, lsr] = adj2
@@ -726,7 +764,7 @@ def _sloppy_rpts_walk_batch(
 
 
 def _advance_rpt_groups_multi_batch(
-    G, B, L, offsets, idx, V, groups, alive, base
+    flat, B, L, offsets, idx, V, groups, alive, base
 ):
     """advanceRepeatGroups, hasMultiTermRpts branch, for every row in
     lockstep (SloppyPhraseMatcher.java:437-455). The literal's ``incr``
@@ -735,7 +773,6 @@ def _advance_rpt_groups_multi_batch(
     unchanged whether or not it breaks with incr=0, so the batch state is
     just (group idx, member idx) per row. Updates idx/V in place; returns
     the surviving alive mask (False = a PP exhausted: doc cannot match)."""
-    n = len(G)
     if not groups:
         return alive
     offs = np.asarray(offsets, np.int64)
@@ -781,7 +818,7 @@ def _advance_rpt_groups_multi_batch(
                 prog[fr[ex]] = False
                 fr, pp2 = fr[~ex], pp2[~ex]
             if len(fr):
-                V[fr, pp2] = _gather_vals(G, B, idx, fr, pp2, base)
+                V[fr, pp2] = _gather_vals(flat, B, idx, fr, pp2, base)
         act = np.flatnonzero(prog)
     return alive
 
@@ -804,77 +841,92 @@ def _advance_rpt_groups_multi_batch(
 def _merged_arrays(g_by_clause: List[np.ndarray], hand_first_ties: bool = False):
     """Merge global per-clause sorted arrays by (value, clause). Returns
     (P, C, doc, mx, ok, lastflag): per merged index t — the value, clause,
-    doc, max over clauses of their current value at time t, whether every
-    clause's current stays in t's doc, and whether P[t] is its clause's
-    doc-last element.
+    doc, max over clauses of their current value at time t (meaningful
+    where ok), whether every clause's current stays in t's doc, and whether
+    P[t] is its clause's doc-last element.
 
-    ``hand_first_ties`` reproduces SloppyPhraseMatcher's tie behavior: the
-    minimization loop compares only POSITIONS against the cached `next`, so
-    when the hand's next element ties the queue top, the hand retires it
-    first regardless of offset order. Within each equal-value group the
-    member whose slot retired the immediately preceding element is rotated
-    to the front (runs that reach a tie always continue through it — if
-    another slot still held an earlier element, the run would have ended
-    before the tie). Only tied groups are touched, left to right, so
-    chained adjustments see the already-adjusted predecessor."""
+    The concatenation is in clause order, so a stable argsort (a timsort
+    over n presorted runs) yields the (value, clause) order. A clause's
+    current at time t is its first element at merged index >= t: each of
+    its elements repeated over the gap since the clause's previous one.
+
+    ``hand_first_ties`` applies _rotate_hand_first (SloppyPhraseMatcher's
+    tie behavior)."""
     n = len(g_by_clause)
     lens = [len(g) for g in g_by_clause]
     vals = np.concatenate(g_by_clause)
     cls = np.repeat(np.arange(n, dtype=np.int64), lens)
-    order = np.lexsort((cls, vals))
+    order = np.argsort(vals, kind="stable")
     P, C = vals[order], cls[order]
     L = len(P)
     if hand_first_ties and L > 1:
-        cont = P[1:] == P[:-1]
-        if cont.any():
-            is_start = np.empty(L - 1, dtype=bool)
-            is_start[0] = cont[0]
-            np.logical_and(cont[1:], ~cont[:-1], out=is_start[1:])
-            starts_g = np.flatnonzero(is_start)
-            stop_mask = np.empty(L, dtype=bool)
-            np.logical_not(cont, out=stop_mask[:-1])
-            stop_mask[-1] = True
-            stops = np.flatnonzero(stop_mask)
-            ends_g = stops[np.searchsorted(stops, starts_g)]
-            # predecessor in another doc => fresh doc, no incoming hand
-            # (same doc is implied within a group: equal global values)
-            prev_ok = (starts_g > 0) & (
-                (P[np.maximum(starts_g - 1, 0)] >> _DOC_SHIFT)
-                == (P[starts_g] >> _DOC_SHIFT)
-            )
-            Cl = C.tolist()  # small-group scans in plain python
-            for gs, ge, okp in zip(
-                starts_g.tolist(), ends_g.tolist(), prev_ok.tolist()
-            ):
-                if not okp:
-                    continue
-                h = Cl[gs - 1]
-                grp = Cl[gs : ge + 1]
-                if h in grp:
-                    jj = grp.index(h)
-                    if jj:
-                        C[gs : ge + 1] = [h] + grp[:jj] + grp[jj + 1 :]
-                        Cl[gs : ge + 1] = [h] + grp[:jj] + grp[jj + 1 :]
-    ts = np.arange(L, dtype=np.int64)
+        _rotate_hand_first(P, C)
     doc = P >> _DOC_SHIFT
-    mx = np.full(L, np.int64(-(2**62)), dtype=np.int64)
+    doc_end = (doc + 1) << _DOC_SHIFT
+    mx = np.full(L, -_BIG, dtype=np.int64)
     ok = np.ones(L, dtype=bool)
     lastflag = np.zeros(L, dtype=bool)
     for c in range(n):
-        mi = ts[C == c]
+        mi = np.flatnonzero(C == c)
         if len(mi) == 0:
             ok[:] = False
             continue
         gv = P[mi]
-        j = np.searchsorted(mi, ts, side="left")
-        has = j < len(mi)
-        nxv = gv[np.minimum(j, len(mi) - 1)]
-        ok &= has & ((nxv >> _DOC_SHIFT) == doc)
-        mx = np.maximum(mx, np.where(has, nxv, np.int64(-(2**62))))
+        nxv = np.full(L, _BIG, dtype=np.int64)  # no current: past every doc
+        nxv[: mi[-1] + 1] = np.repeat(gv, np.diff(mi, prepend=-1))
+        ok &= nxv < doc_end  # nxv >= P[t]: below t's doc end = same doc
+        mx = np.maximum(mx, nxv)
         lf = np.ones(len(mi), dtype=bool)
         lf[:-1] = (gv[1:] >> _DOC_SHIFT) != (gv[:-1] >> _DOC_SHIFT)
         lastflag[mi[lf]] = True
     return P, C, doc, mx, ok, lastflag
+
+
+def _rotate_hand_first(P: np.ndarray, C: np.ndarray) -> None:
+    """SloppyPhraseMatcher's tie behavior, in place on the merged clause
+    order C. The minimization loop compares only POSITIONS against the
+    cached `next`, so when the hand's next element ties the queue top, the
+    hand retires it first regardless of offset order. Within each group of
+    equal values the member whose clause retired the immediately preceding
+    element (same doc) is rotated to the front (runs that reach a tie always
+    continue through it — if another slot still held an earlier element,
+    the run would have ended before the tie). Each clause holds a value at
+    most once, so the hand occurs at most once per group.
+
+    A group abutting the previous group reads that group's rotated last
+    element, so groups run in waves by chain depth: wave d rotates every
+    group whose chain of abutting predecessors is d long, all at once."""
+    tie = P[1:] == P[:-1]
+    if not tie.any():
+        return
+    gs = np.flatnonzero(tie & np.concatenate(([True], ~tie[:-1])))
+    ge = np.flatnonzero(tie & np.concatenate((~tie[1:], [True]))) + 1
+    # a predecessor in another doc (or none) => fresh doc, no incoming hand
+    okp = gs > 0
+    gs, ge = gs[okp], ge[okp]
+    okp = (P[gs - 1] >> _DOC_SHIFT) == (P[gs] >> _DOC_SHIFT)
+    gs, ge = gs[okp], ge[okp]
+    if len(gs) == 0:
+        return
+    ar = np.arange(len(gs))
+    chain_start = np.ones(len(gs), dtype=bool)
+    chain_start[1:] = ge[:-1] + 1 != gs[1:]
+    depth = ar - np.maximum.accumulate(np.where(chain_start, ar, 0))
+    for d in range(int(depth.max()) + 1):
+        s, e = gs[depth == d], ge[depth == d]
+        hand = C[s - 1]
+        size = e - s + 1
+        grp = np.repeat(np.arange(len(s)), size)
+        pos = np.arange(len(grp)) - np.repeat(np.cumsum(size) - size, size)
+        t = s[grp] + pos
+        hit = C[t] == hand[grp]
+        jj = np.zeros(len(s), dtype=np.int64)
+        jj[grp[hit]] = pos[hit]
+        jj = jj[grp]
+        shift = (pos >= 1) & (pos <= jj)
+        front = (pos == 0) & (jj > 0)
+        C[t[shift]] = C[t[shift] - 1]
+        C[t[front]] = hand[grp[front]]
 
 
 def _doc_T_and_segments(P: np.ndarray, doc: np.ndarray, lastflag: np.ndarray):

@@ -30,7 +30,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from . import codec
+from . import codec, matchers
 from .bm25 import BM25Scorer
 from .build import Index
 from .query import (
@@ -726,11 +726,22 @@ class Searcher:
         return self.spark.createDataFrame(rows, MATCH_SCHEMA)
 
     def _rank_rows(self, u: np.ndarray, tot: np.ndarray, k: int) -> List[Tuple[int, float]]:
-        if self._deleted is not None and len(u):
-            keep = ~np.isin(u, self._deleted)
+        """Top-k of (doc u, score tot) by score desc, doc asc — like
+        TopScoreDocCollector, only k-sized work beyond one linear pass:
+        partition to the k-th score, keep every hit scoring at least that
+        much (boundary ties included) and sort only those. Deleted docs
+        are dropped first by binary search in the sorted snapshot."""
+        if self._deleted is not None and len(self._deleted) and len(u):
+            dl = self._deleted
+            j = np.minimum(np.searchsorted(dl, u), len(dl) - 1)
+            keep = dl[j] != u
             u, tot = u[keep], tot[keep]
+        if 0 < k < len(tot):
+            kth = np.partition(tot, len(tot) - k)[len(tot) - k]
+            top = np.flatnonzero(tot >= kth)
+            u, tot = u[top], tot[top]
         order = np.lexsort((u, -tot))[:k]
-        return [(int(u[i]), float(tot[i])) for i in order]
+        return list(zip(u[order].tolist(), tot[order].tolist()))
 
     def _hot_topk_rows(self, q: Query, k: int) -> Optional[List[Tuple[int, float]]]:
         """Fully driver-side top-k for flat term/AND/OR shapes — plus phrase,
@@ -774,30 +785,22 @@ class Searcher:
                 .astype(np.float64)
             )
             per_term.append((docs, sc))
-        if mode == "or" or len(per_term) == 1:
-            cat_docs = np.concatenate([a[0] for a in per_term])
-            cat_sc = np.concatenate([a[1] for a in per_term])
-            if len(cat_docs) == 0:
-                return []
-            u, inv = np.unique(cat_docs, return_inverse=True)
-            tot = np.bincount(inv, weights=cat_sc)
+        if len(per_term) == 1:
+            u, tot = per_term[0]
+        elif mode == "or":
+            u, inv, _o, _s = matchers.merge_sorted_runs([a[0] for a in per_term])
+            tot = np.bincount(inv, weights=np.concatenate([a[1] for a in per_term]))
         else:
-            cur_docs, cur_sc = per_term[0][0], per_term[0][1].copy()
+            cur_docs, cur_sc = per_term[0]
             for docs_i, sc_i in per_term[1:]:
-                cur_docs, ia, ib = np.intersect1d(
-                    cur_docs, docs_i, assume_unique=True, return_indices=True
-                )
+                cur_docs, ia, ib = matchers.intersect_sorted(cur_docs, docs_i)
                 cur_sc = cur_sc[ia] + sc_i[ib]
             u, tot = cur_docs, cur_sc
-            if len(u) == 0:
-                return []
         return self._rank_rows(u, tot, k)
 
     def _hot_phrase_rows(self, q: PhraseQuery, k: int) -> Optional[List[Tuple[int, float]]]:
         """Driver-side PhraseQuery: identical semantics to _eval_phrase —
         vectorized batch matching via matchers.py (no per-doc Python loop)."""
-        from . import matchers
-
         terms = list(q.terms)
         stats = self.term_stats(terms)
         if any(t not in stats for t in terms):
@@ -812,9 +815,7 @@ class Searcher:
         cur = self._positions_cache[uniq[0]][0]
         idxs = {uniq[0]: np.arange(len(cur))}
         for t in uniq[1:]:
-            docs_t = self._positions_cache[t][0]
-            cur, ia, ib = np.intersect1d(cur, docs_t, assume_unique=True,
-                                         return_indices=True)
+            cur, ia, ib = matchers.intersect_sorted(cur, self._positions_cache[t][0])
             idxs = {tt: v[ia] for tt, v in idxs.items()}
             idxs[t] = ib
         if len(cur) == 0:
@@ -824,13 +825,11 @@ class Searcher:
         # candidate docs' positions arrive as one contiguous array per term
         # with candidate-order doc offsets already applied
         g_by_term = {}
-        lens_by_term = {}
         for t in uniq:
             _d, tfreqs, _n, flat, starts = self._positions_cache[t]
             sel = idxs[t]
             lens = tfreqs[sel]
             local = matchers.gather_slices(flat, starts[sel], lens)
-            lens_by_term[t] = lens
             g_by_term[t] = local + np.repeat(
                 np.arange(n_docs, dtype=np.int64) << 32, lens
             )
@@ -838,21 +837,12 @@ class Searcher:
             freqs = matchers.exact_phrase_freqs_global(
                 g_by_term, terms, n_docs
             ).astype(np.float64)
-        elif len(set(terms)) == len(terms):
-            # no per-doc list round-trip: the cache layout IS the batch
-            # kernel's input (doc-offset global arrays)
+        else:
+            # the cache layout IS the batch kernels' input (doc-offset
+            # global arrays): no per-doc list round-trip
             freqs = matchers.sloppy_phrase_freqs_global(
                 g_by_term, terms, slop, n_docs
             )
-        else:
-            pos_by_term = {
-                t: np.split(
-                    g_by_term[t] & ((1 << 32) - 1),
-                    np.cumsum(lens_by_term[t])[:-1],
-                )
-                for t in uniq
-            }
-            freqs = matchers.sloppy_phrase_freqs(pos_by_term, terms, slop, n_docs)
         keep = freqs > 0
         if not keep.any():
             return []
@@ -871,12 +861,11 @@ class Searcher:
         df_blend = max(s.doc_freq for s in stats.values())
         ttf_blend = max(s.total_term_freq for s in stats.values())
         scorer = self.scorer_for(q.boost, TermStats(df_blend, ttf_blend, -1, 0, 0))
-        docs = np.concatenate([self._postings_cache[t][0] for t in stats])
+        u, inv, _o, _s = matchers.merge_sorted_runs(
+            [self._postings_cache[t][0] for t in stats]
+        )
         freqs = np.concatenate([self._postings_cache[t][1] for t in stats])
         norms = np.concatenate([self._postings_cache[t][2] for t in stats])
-        if len(docs) == 0:
-            return []
-        u, inv = np.unique(docs, return_inverse=True)
         tf = np.bincount(inv, weights=freqs.astype(np.float64))
         nrm = np.zeros(len(u), dtype=np.int64)
         nrm[inv] = norms  # norm is per-doc, identical across terms
@@ -902,14 +891,10 @@ class Searcher:
                 .score(freqs, norms)
                 .astype(np.float64)
             )
-        cat_docs = np.concatenate(docs_all)
+        u, inv, order, starts = matchers.merge_sorted_runs(docs_all)
         cat_sc = np.concatenate(sc_all)
-        if len(cat_docs) == 0:
-            return []
-        u, inv = np.unique(cat_docs, return_inverse=True)
         tot = np.bincount(inv, weights=cat_sc)
-        mx = np.full(len(u), -np.inf)
-        np.maximum.at(mx, inv, cat_sc)
+        mx = np.maximum.reduceat(cat_sc[order], starts)
         score = mx + float(q.tie_breaker) * (tot - mx)
         if q.boost != 1.0:
             score = score * float(q.boost)
@@ -942,17 +927,13 @@ class Searcher:
             )
             docs_all.append(docs)
             sc_all.append(sc.score(freqs, norms).astype(np.float64))
-        cat_docs = np.concatenate(docs_all)
+        u, inv, order, starts = matchers.merge_sorted_runs(docs_all)
         cat_sc = np.concatenate(sc_all)
-        if len(cat_docs) == 0:
-            return []
-        u, inv = np.unique(cat_docs, return_inverse=True)
         tot = np.bincount(inv, weights=cat_sc)
         if q.rewrite == "boolean":
             score = tot
         else:
-            mx = np.full(len(u), -np.inf)
-            np.maximum.at(mx, inv, cat_sc)
+            mx = np.maximum.reduceat(cat_sc[order], starts)
             score = mx + float(q.tie_breaker) * (tot - mx)
         if q.boost != 1.0:
             score = score * float(q.boost)

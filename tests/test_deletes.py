@@ -5,7 +5,14 @@ import numpy as np
 import pytest
 
 from lucene_spark.build import IndexConfig, build_index
-from lucene_spark.query import PhraseQuery, TermQuery, bool_query
+from lucene_spark.query import (
+    BlendedTermQuery,
+    DisjunctionMaxQuery,
+    PhraseQuery,
+    SynonymQuery,
+    TermQuery,
+    bool_query,
+)
 from lucene_spark.search import Searcher
 
 import sys, os
@@ -238,3 +245,41 @@ def test_tombstone_snapshot_capacity_gated(spark, built, monkeypatch):
     assert _ids(s2.search(TermQuery(term="spark"), 4)) == _ids(
         s.search(TermQuery(term="spark"), 4)
     )
+
+
+def test_hot_top_docs_with_tombstones_equal_spark_tier(spark, built, monkeypatch):
+    """Every hot shape filters the sorted tombstone snapshot in _rank_rows:
+    with the top hits of each shape deleted, driver-side top_docs must equal
+    the Spark tier's search().collect()."""
+    t = lambda w: TermQuery(term=w)
+    queries = [
+        t("spark"),
+        bool_query(should=[t("spark"), t("merge"), t("red")]),
+        bool_query(must=[t("spark"), t("merge")]),
+        SynonymQuery(terms=("red", "blue")),
+        DisjunctionMaxQuery(disjuncts=(t("spark"), t("blue")), tie_breaker=0.1),
+        BlendedTermQuery(terms=("merge", "red"), boosts=(1.0, 2.0), tie_breaker=0.1),
+        PhraseQuery(terms=("the", "spark")),
+        PhraseQuery(terms=("the", "spark", "merge"), slop=3),
+        PhraseQuery(terms=("the", "spark", "the"), slop=4),
+    ]
+    base = Searcher(built, dtype=np.float32)
+    victims = sorted({
+        int(r["doc_id"])
+        for q in queries
+        for r in base.search(q, 2, prune=False).collect()
+    })
+    deleted = built.delete_docs(victims)
+    monkeypatch.setenv("LUCENE_SPARK_HOT_CACHE_POSTINGS", "1000000")
+    s = Searcher(deleted, dtype=np.float32)
+    assert s._deleted.tolist() == victims
+    for q in queries:
+        hot = s._hot_topk_rows(q, 10)
+        assert hot is not None, q
+        want = [
+            (int(r["doc_id"]), float(r["score"]))
+            for r in s.search(q, 10, prune=False).collect()
+        ]
+        assert [d for d, _ in hot] == [d for d, _ in want], q
+        assert [np.float32(v) for _, v in hot] == [np.float32(v) for _, v in want], q
+        assert not set(victims) & {d for d, _ in hot}

@@ -829,3 +829,201 @@ def test_within_extension_clips_at_doc_start():
         "within", [a], True, -1, [r], True, -1, 1, b_ext=5
     )[0]
     assert got == pytest.approx(1.0)
+
+
+# ---------------------------------------------------------------------------
+# Global sloppy kernels, the match-window prefilter and the vectorized tie
+# rotation, on tie-heavy multi-doc batches
+# ---------------------------------------------------------------------------
+
+_term_positions = st.one_of(
+    st.none(),
+    st.lists(st.integers(0, 12), max_size=6, unique=True).map(sorted),
+)
+
+
+@st.composite
+def _sloppy_batch(draw, repeats: bool):
+    """(terms, pos_by_term, n_docs): 2-4 slots; with ``repeats`` some term
+    fills 2-3 of them. Positions come from a narrow range, so distinct terms
+    share positions and adjusted positions tie often. Docs may lack a term,
+    hold empty arrays, or be empty altogether."""
+    if repeats:
+        terms = draw(
+            st.lists(st.sampled_from("abc"), min_size=2, max_size=4).filter(
+                lambda ts: 2 <= max(ts.count(t) for t in ts) <= 3
+            )
+        )
+    else:
+        terms = draw(
+            st.lists(st.sampled_from("abcd"), min_size=2, max_size=4, unique=True)
+        )
+    uniq = list(dict.fromkeys(terms))
+    docs = draw(
+        st.lists(
+            st.lists(_term_positions, min_size=len(uniq), max_size=len(uniq)),
+            min_size=1,
+            max_size=5,
+        )
+    )
+    pbt = {
+        t: [None if d[j] is None else np.asarray(d[j], dtype=np.int64) for d in docs]
+        for j, t in enumerate(uniq)
+    }
+    return tuple(terms), pbt, len(docs)
+
+
+def _walk_freqs(pbt, terms, slop, n_docs):
+    """Per-doc literal no-repeats walk (_sloppy_walk) over adjusted lists."""
+    out = np.zeros(n_docs, dtype=np.float64)
+    for d in range(n_docs):
+        arrs = [pbt[t][d] for t in terms]
+        if all(a is not None and len(a) for a in arrs):
+            out[d] = matchers._sloppy_walk(
+                [a - off for off, a in enumerate(arrs)], slop
+            )
+    return out
+
+
+@settings(max_examples=400, deadline=None)
+@given(_sloppy_batch(repeats=False), st.integers(0, 6))
+def test_sloppy_global_bit_identical_to_walk_tie_heavy(batch, slop):
+    terms, pbt, n_docs = batch
+    g = matchers._globals(pbt, terms)
+    want = _walk_freqs(pbt, terms, slop, n_docs)
+    got = matchers.sloppy_phrase_freqs_global(g, terms, slop, n_docs)
+    np.testing.assert_array_equal(got, want)
+    np.testing.assert_array_equal(
+        matchers.sloppy_phrase_freqs(pbt, terms, slop, n_docs), want
+    )
+    keep = matchers._sloppy_candidates(g, terms, slop, n_docs)
+    assert keep[want > 0].all()
+
+
+@settings(max_examples=400, deadline=None)
+@given(_sloppy_batch(repeats=True), st.integers(0, 6))
+def test_sloppy_rpts_global_bit_identical_to_literal_tie_heavy(batch, slop):
+    terms, pbt, n_docs = batch
+    g = matchers._globals(pbt, terms)
+    want = matchers._sloppy_phrase_freqs_rpts_literal(pbt, terms, slop, n_docs)
+    got = matchers.sloppy_phrase_freqs_rpts_global(g, terms, slop, n_docs)
+    np.testing.assert_array_equal(got, want)
+    np.testing.assert_array_equal(
+        matchers.sloppy_phrase_freqs_global(g, terms, slop, n_docs), want
+    )
+    np.testing.assert_array_equal(
+        matchers.sloppy_phrase_freqs_rpts(pbt, terms, slop, n_docs), want
+    )
+    keep = matchers._sloppy_candidates(g, terms, slop, n_docs)
+    assert keep[want > 0].all()
+
+
+def test_sloppy_prefilter_drops_docs_that_cannot_match():
+    # "x y"~1: doc 0 has the pair 2 apart (W = 2), doc 1 only 5 apart,
+    # doc 2 lacks y; "x x"~0 needs two x within W = 1
+    pbt = {
+        "x": [np.array([0]), np.array([0]), np.array([3])],
+        "y": [np.array([2]), np.array([5]), None],
+    }
+    keep = matchers._sloppy_candidates(
+        matchers._globals(pbt, ("x", "y")), ("x", "y"), 1, 3
+    )
+    assert keep.tolist() == [True, False, False]
+    pbt = {"x": [np.array([0, 2]), np.array([4, 5]), np.array([1])]}
+    keep = matchers._sloppy_candidates(
+        matchers._globals(pbt, ("x", "x")), ("x", "x"), 0, 3
+    )
+    assert keep.tolist() == [False, True, False]
+    # a slop beyond any doc keeps every doc holding the terms, with no
+    # int64 overflow in the window bounds
+    pbt["y"] = [np.array([1]), np.array([9]), np.array([0])]
+    keep = matchers._sloppy_candidates(
+        matchers._globals(pbt, ("x", "y", "x")), ("x", "y", "x"), 2**63 - 4, 3
+    )
+    assert keep.tolist() == [True, True, False]
+
+
+def _rotate_hand_first_loop(P, C):
+    """The plain-Python left-to-right tie rotation _rotate_hand_first
+    replaced, kept as its reference."""
+    L = len(P)
+    cont = P[1:] == P[:-1]
+    if not cont.any():
+        return
+    is_start = np.empty(L - 1, dtype=bool)
+    is_start[0] = cont[0]
+    np.logical_and(cont[1:], ~cont[:-1], out=is_start[1:])
+    starts_g = np.flatnonzero(is_start)
+    stop_mask = np.empty(L, dtype=bool)
+    np.logical_not(cont, out=stop_mask[:-1])
+    stop_mask[-1] = True
+    stops = np.flatnonzero(stop_mask)
+    ends_g = stops[np.searchsorted(stops, starts_g)]
+    prev_ok = (starts_g > 0) & (
+        (P[np.maximum(starts_g - 1, 0)] >> 32) == (P[starts_g] >> 32)
+    )
+    Cl = C.tolist()
+    for gs, ge, okp in zip(starts_g.tolist(), ends_g.tolist(), prev_ok.tolist()):
+        if not okp:
+            continue
+        h = Cl[gs - 1]
+        grp = Cl[gs : ge + 1]
+        if h in grp:
+            jj = grp.index(h)
+            if jj:
+                C[gs : ge + 1] = [h] + grp[:jj] + grp[jj + 1 :]
+                Cl[gs : ge + 1] = [h] + grp[:jj] + grp[jj + 1 :]
+
+
+def _merged(clauses):
+    """(P, C) in _merged_arrays' (value, clause) order; clauses[c][d] is
+    clause c's sorted positions in doc d."""
+    g = [
+        np.asarray([(d << 32) + p for d, ps in enumerate(per) for p in ps], np.int64)
+        for per in clauses
+    ]
+    vals = np.concatenate(g)
+    cls = np.repeat(np.arange(len(g), dtype=np.int64), [len(x) for x in g])
+    order = np.lexsort((cls, vals))
+    return vals[order], cls[order]
+
+
+def _check_rotation(clauses):
+    P, C = _merged(clauses)
+    want = C.copy()
+    _rotate_hand_first_loop(P, want)
+    got = C.copy()
+    matchers._rotate_hand_first(P, got)
+    np.testing.assert_array_equal(got, want)
+    return C, got
+
+
+@settings(max_examples=400, deadline=None)
+@given(
+    st.integers(2, 4).flatmap(
+        lambda n: st.lists(
+            st.lists(
+                st.lists(st.integers(0, 7), max_size=6, unique=True).map(sorted),
+                min_size=3,
+                max_size=3,
+            ),
+            min_size=n,
+            max_size=n,
+        )
+    )
+)
+def test_rotate_hand_first_equals_loop(clauses):
+    _check_rotation(clauses)
+
+
+def test_rotate_hand_first_chained_and_predecessor_free_groups():
+    # one doc, values 0,0,1,1,2,2 (+ a lone 3): three abutting tie groups,
+    # the first without a predecessor — each later group reads the rotated
+    # end of the one before
+    before, after = _check_rotation([[[0, 1, 2, 3]], [[0, 1, 2]], [[1]]])
+    assert before.tolist() != after.tolist()
+    # every tie group opens its doc: no group has an in-doc predecessor
+    before, after = _check_rotation([[[0], [0, 5]], [[0], [0]]])
+    assert before.tolist() == after.tolist()
+    # no ties at all
+    _check_rotation([[[0, 2]], [[1, 3]]])

@@ -25,9 +25,10 @@ Scale design notes (100 TB / 1000 executors):
   side (benign duplicate block keys, same as sharded checkpoint builds).
   Hot terms still salt naturally: a term with docFreq 10^9 lands in
   ~10^9/seg_size independently-encoded block groups.
-- pre-assigned doc_id ingest (partitions not doc-contiguous) falls back to
-  one segment-grouping shuffle whose key (segment_id) is uniform by
-  construction — segments are fixed-size doc_id ranges.
+- pre-assigned doc_ids take the same fused pass: a range partition on
+  doc_id // seg_size keeps every segment inside one partition, sorted by
+  doc_id, so the pass flushes whole segments. Checkpoint shards run it too,
+  with their ids offset by the shard's doc_id base.
 - term statistics use partial aggregation (groupBy(term).agg) — Catalyst
   map-side combines; no skew because values are tiny counters. On the
   term-major postings of an eager build the grouping needs no exchange.
@@ -45,6 +46,7 @@ from typing import Iterator, List, Optional, Tuple
 
 import numpy as np
 import pandas as pd
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -69,10 +71,6 @@ TF_SCHEMA = StructType(
         StructField("term", StringType()),
         StructField("freq", IntegerType()),
         StructField("norm", IntegerType()),
-        # discounted field length (length - numOverlap): what the norm byte
-        # quantizes; equals the token count unless index-time synonyms
-        # injected posIncr=0 overlaps
-        StructField("dlen", IntegerType()),
         StructField("positions", ArrayType(IntegerType())),
     ]
 )
@@ -139,8 +137,6 @@ def _range_partition_with_offsets(df: DataFrame, order_cols: List[str], num_part
     pin the sampled boundaries, and return (parted, {partition_id: doc_id
     offset}, total_rows). One full shuffle + one narrow counts pass over the
     pinned partitions (no second shuffle)."""
-    from pyspark import StorageLevel
-
     cols = [F.col(c) for c in order_cols]
     parted = (
         df.repartitionByRange(num_partitions, *cols)
@@ -363,7 +359,6 @@ def _invert_batches(config: IndexConfig, pairs):
             g_rows = row_idx[order][bounds[:-1]]
             doc_ids = batch_docs[g_rows]
             norms = int_to_byte4(base_counts).astype(np.int32)[g_rows]
-            dlens = base_counts.astype(np.int32)[g_rows]
             pos_sorted = pos[order]
             out = {
                 "doc_id": doc_ids,
@@ -371,7 +366,6 @@ def _invert_batches(config: IndexConfig, pairs):
                 "term": flat[first],
                 "freq": freqs,
                 "norm": norms,
-                "dlen": dlens,
                 "positions": (
                     _slices(pos_sorted.astype(np.int32), bounds)
                     if with_pos
@@ -381,51 +375,49 @@ def _invert_batches(config: IndexConfig, pairs):
             yield batch_docs, counts, base_counts, pd.DataFrame(out)
 
 
-def _invert_core(config: IndexConfig, pairs) -> Iterator[pd.DataFrame]:
-    """The tf DataFrames of :func:`_invert_batches`."""
-    for _docs, _lengths, _dlens, tf in _invert_batches(config, pairs):
-        if tf is not None:
-            yield tf
-
-
 def _invert_fn(config: IndexConfig, content_col: str):
-    """mapInPandas fn over (doc_id, <content_col>) batches -> tf rows."""
+    """mapInPandas fn over (doc_id, <content_col>) batches -> tf rows (the
+    thin invert behind :func:`term_vectors`)."""
 
     def invert(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def pairs():
-            for pdf in batches:
-                if len(pdf):
-                    yield pdf["doc_id"].to_numpy(dtype=np.int64), pdf[content_col]
-
-        yield from _invert_core(config, pairs())
+        pairs = (
+            (pdf["doc_id"].to_numpy(dtype=np.int64), pdf[content_col])
+            for pdf in batches
+            if len(pdf)
+        )
+        for _docs, _lengths, _dlens, tf in _invert_batches(config, pairs):
+            if tf is not None:
+                yield tf
 
     return invert
 
 
-def _assigned(batches: Iterator[pd.DataFrame], content_col: str, offsets: dict):
-    """(doc_ids, content) pairs of one pinned range partition (batches carry
-    a _pid column): ids run on from the partition's offset."""
+def _assigned(
+    batches: Iterator[pd.DataFrame], content_col: str, offsets: Optional[dict]
+):
+    """(doc_ids, content) pairs of one partition of the fused pass. With
+    ``offsets`` the partition is one of the pinned range partitioning
+    (batches carry a _pid column) and ids run on from its offset. Without,
+    ids are the batches' doc_id column, sorted within the partition; a range
+    partition puts equal ids in one partition, so an id that does not
+    strictly increase is a repeated one."""
     seen = 0
-    base = None
+    base = last = None
     for pdf in batches:
         if len(pdf) == 0:
             continue
-        if base is None:
-            base = offsets[int(pdf["_pid"].iloc[0])]
-        ids = np.arange(base + seen, base + seen + len(pdf), dtype=np.int64)
-        seen += len(pdf)
+        if offsets is None:
+            ids = pdf["doc_id"].to_numpy(dtype=np.int64)
+            steps = np.diff(ids, prepend=ids[0] - 1 if last is None else last)
+            if (steps <= 0).any():
+                raise ValueError(f"duplicate doc_id {int(ids[np.argmax(steps <= 0)])}")
+            last = ids[-1]
+        else:
+            if base is None:
+                base = offsets[int(pdf["_pid"].iloc[0])]
+            ids = np.arange(base + seen, base + seen + len(pdf), dtype=np.int64)
+            seen += len(pdf)
         yield ids, pdf[content_col]
-
-
-def _assign_invert_fn(config: IndexConfig, content_col: str, offsets: dict):
-    """Fused doc_id assignment + invert: one mapInPandas over the pinned
-    range-partitioned corpus (with a _pid column), so the corpus crosses the
-    JVM<->Arrow boundary once instead of twice."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        yield from _invert_core(config, _assigned(batches, content_col, offsets))
-
-    return fn
 
 
 def _segment_writer_fn(config: IndexConfig):
@@ -536,11 +528,13 @@ def _segment_writer_fn(config: IndexConfig):
 
 DOCLEN_TERM = "\x00doclen"  # term of the fused pass's doc-stat rows
 
-# The fused pass's output: postings blocks plus, per input batch, one
-# doc-stat row (term=DOCLEN_TERM, block_id=-1). A doc-stat row holds the
-# batch's first doc_id in base_doc, its doc count in count and its token
-# total in sum_freq; the arrays hold each doc's length, norm byte and
-# overlap count in doc_id order. Block rows leave the arrays null.
+# The fused pass's output: postings blocks plus, per run of consecutive
+# doc_ids in an input batch, one doc-stat row (term=DOCLEN_TERM,
+# block_id=-1); assigned ids have no gaps, so that is one row per batch. A
+# doc-stat row holds the run's first doc_id in base_doc, its doc count in
+# count and its token total in sum_freq; the arrays hold each doc's length,
+# norm byte and overlap count in doc_id order. Block rows leave the arrays
+# null.
 _RAW_SCHEMA = StructType(
     POSTINGS_SCHEMA.fields
     + [
@@ -552,19 +546,22 @@ _RAW_SCHEMA = StructType(
 _DOC_ARRAYS = ("doc_lengths", "doc_norms", "doc_overlaps")
 
 
-def _fused_invert_encode_fn(config: IndexConfig, content_col: str, offsets: dict):
+def _fused_invert_encode_fn(
+    config: IndexConfig, content_col: str, offsets: Optional[dict]
+):
     """Fused doc_id assignment + invert + LOCAL segment encode: the whole
-    indexing chain runs inside one mapInPandas pass over the pinned
-    range-partitioned corpus — the DocumentsWriterPerThread analog
+    indexing chain runs inside one mapInPandas pass over the range-
+    partitioned, doc-ordered corpus (ids from ``offsets`` or the doc_id
+    column, see :func:`_assigned`) — the DocumentsWriterPerThread analog
     (index/DocumentsWriterPerThread.java:209-260: each writer thread builds
     whole segments locally; no cross-thread exchange).
 
     Doc_ids ascend within a partition, so segment_ids (doc_id // seg_size)
     cross boundaries monotonically: tf batches buffer per segment and flush
     through the segment writer as each boundary passes — bounded memory of
-    one segment's tf. This removes BOTH the per-(doc,term) tf cache and the
-    segment-grouping shuffle of the unfused path; the only rows that cross
-    back over Arrow are the encoded block rows (~30x fewer, pre-compressed).
+    one segment's tf. No per-(doc,term) tf rows are cached or shuffled; the
+    only rows that cross back over Arrow are the encoded block rows (~30x
+    fewer, pre-compressed).
     A segment that straddles a partition boundary is encoded independently
     on each side, producing distinct block rows for the same (term,
     segment_id, block_id) key — the same benign collision the sharded
@@ -572,22 +569,25 @@ def _fused_invert_encode_fn(config: IndexConfig, content_col: str, offsets: dict
     decoder treats block rows independently.
 
     Per-doc stats (length / norm / overlap count) of every doc, zero-token
-    docs included, ride along as one doc-stat row per input batch (see
-    _RAW_SCHEMA), so the docs table is a JVM explode of this same pass's
-    output (:func:`_docs_from_stats`)."""
+    docs included, ride along as doc-stat rows (see _RAW_SCHEMA), so the
+    docs table is a JVM explode of this same pass's output
+    (:func:`_docs_from_stats`)."""
     write_segment = _segment_writer_fn(config)
     no_docs = dict.fromkeys(_DOC_ARRAYS)
 
     def doc_stats(docs: np.ndarray, lengths: np.ndarray, dlens: np.ndarray) -> pd.DataFrame:
+        # one row per run of consecutive ids: _docs_from_stats numbers a
+        # row's docs on from its base_doc
+        b = np.concatenate(([0], np.nonzero(np.diff(docs) != 1)[0] + 1, [len(docs)]))
         return pd.DataFrame({
-            "term": [DOCLEN_TERM], "segment_id": [-1], "block_id": [-1],
-            "base_doc": [int(docs[0])], "count": [len(docs)],
-            "sum_freq": [int(lengths.sum())], "last_doc": [int(docs[-1])],
-            "docs_enc": [None], "freqs_enc": [None], "norms_enc": [None],
-            "imp_freqs": [None], "imp_norms": [None], "pos_enc": [None],
-            "doc_lengths": [lengths.astype(np.int32)],
-            "doc_norms": [int_to_byte4(dlens).astype(np.int32)],
-            "doc_overlaps": [(lengths - dlens).astype(np.int32)],
+            "term": DOCLEN_TERM, "segment_id": -1, "block_id": -1,
+            "base_doc": docs[b[:-1]], "count": np.diff(b),
+            "sum_freq": np.add.reduceat(lengths, b[:-1]), "last_doc": docs[b[1:] - 1],
+            "docs_enc": None, "freqs_enc": None, "norms_enc": None,
+            "imp_freqs": None, "imp_norms": None, "pos_enc": None,
+            "doc_lengths": _slices(lengths.astype(np.int32), b),
+            "doc_norms": _slices(int_to_byte4(dlens).astype(np.int32), b),
+            "doc_overlaps": _slices((lengths - dlens).astype(np.int32), b),
         })
 
     def flush(frames: List[pd.DataFrame]) -> pd.DataFrame:
@@ -634,6 +634,49 @@ def _docs_from_stats(doc_rows: DataFrame) -> DataFrame:
     )
 
 
+def _fused_tables(
+    parted: DataFrame,
+    config: IndexConfig,
+    content_col: str,
+    offsets: Optional[dict],
+    eager: bool,
+    stored_from: Optional[DataFrame] = None,
+) -> Tuple[DataFrame, DataFrame, DataFrame]:
+    """Run the fused pass over ``parted`` — range-partitioned and sorted in
+    doc order, its ids given by ``offsets`` over the pinned partitions or by
+    its doc_id column (see :func:`_assigned`) — and return (raw output,
+    postings blocks, docs table).
+
+    An eager build pins the raw output on local disk, as it does its shuffle
+    output: the term exchange, the docs explode and the token totals all
+    read that one copy, and unlike a cache a checkpoint adds no
+    materialization job of its own to the plans that read it. Otherwise it
+    is a cache; the caller releases it either way. Stored columns join on by
+    doc_id from ``stored_from`` (a frame with a doc_id column), by default
+    from ``parted`` with the ids projected from ``offsets`` in the JVM."""
+    if offsets is None:
+        src = parted.select("doc_id", content_col)
+    else:
+        src = parted.select(F.spark_partition_id().alias("_pid"), content_col)
+    raw = src.mapInPandas(
+        _fused_invert_encode_fn(config, content_col, offsets), schema=_RAW_SCHEMA
+    )
+    if eager:
+        raw = raw.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+    else:
+        raw = raw.persist(StorageLevel.MEMORY_AND_DISK)
+    postings = raw.filter(F.col("block_id") >= 0).drop(*_DOC_ARRAYS)
+    # every doc (zero-token docs included) from the doc-stat rows. length =
+    # Σ freq (FieldInvertState.length semantics: overlaps count); the norm
+    # byte was computed at invert from the DISCOUNTED length.
+    docs = _docs_from_stats(raw.filter(F.col("block_id") == -1))
+    if config.store_cols:
+        if stored_from is None:
+            stored_from = parted.withColumn("doc_id", _doc_id_col(offsets))
+        docs = stored_from.select("doc_id", *config.store_cols).join(docs, "doc_id")
+    return raw, postings, docs
+
+
 def term_vectors(
     corpus: DataFrame,
     config: IndexConfig = IndexConfig(),
@@ -660,7 +703,7 @@ class Index:
     postings: DataFrame  # POSTINGS_SCHEMA
     stats: CollectionStats
     config: IndexConfig
-    tf: Optional[DataFrame] = None  # persisted invert output (released on unpersist)
+    tf: Optional[DataFrame] = None  # lazy build: cached fused output (released on unpersist)
     # live-docs complement (Lucene90LiveDocsFormat / PendingDeletes analog):
     # a tiny (doc_id) tombstone table. Lucene semantics: deleted docs stop
     # MATCHING immediately but keep contributing to docFreq/totalTermFreq/
@@ -805,32 +848,20 @@ def build_index(
 ) -> Index:
     """Build the full index from a corpus DataFrame.
 
-    Either ``doc_id_col`` names an existing dense unique long column, or
+    Either ``doc_id_col`` names an existing unique long column, or
     ``order_cols`` defines the canonical ingest order for doc_id assignment.
+    A repeated ``doc_id_col`` value raises ``ValueError``.
 
     With ``eager=True`` the postings/terms/docs tables are materialized +
-    persisted before returning, and the intermediate tf cache is released —
-    use when the index will be queried repeatedly (the common case).
+    persisted before returning — use when the index will be queried
+    repeatedly (the common case).
     """
     spark = corpus.sparkSession
     content_col = content_col or config.field
     if num_partitions is None:
         num_partitions = max(spark.sparkContext.defaultParallelism, 4)
 
-    # phase-timing hook for scaling diagnostics (Amdahl audit: which build
-    # phase stops scaling with cores); no-op unless the env flag is set
-    _timing = os.environ.get("SPARK_GRAFT_BUILD_TIMING") == "1"
-    _marks: List[Tuple[str, float]] = []
-    _t_prev = time.time()
-
-    def _mark(label: str) -> None:
-        nonlocal _t_prev
-        if _timing:
-            now = time.time()
-            _marks.append((label, round(now - _t_prev, 3)))
-            _t_prev = now
-
-    parted = None
+    df = offsets = None
     if doc_id_col is not None:
         df = corpus.withColumn("doc_id", F.col(doc_id_col).cast("long"))
         n = corpus.count()
@@ -839,8 +870,6 @@ def build_index(
         parted, offsets, n = _range_partition_with_offsets(
             corpus, order_cols, num_partitions
         )
-        df = None  # only materialized if store_cols need it (below)
-    _mark("doc_id_assign")
 
     if auto_seg_size:
         # enough segments to keep every core busy in the segment writer
@@ -851,62 +880,18 @@ def build_index(
 
             config = dataclasses.replace(config, seg_size=eff)
 
-    from pyspark import StorageLevel
-
-    raw = tf = None
-    if parted is not None:
-        # fused doc_id assignment + invert + LOCAL segment encode (the DWPT
-        # analog — see _fused_invert_encode_fn): the corpus crosses Arrow
-        # once and nothing shuffles between invert and block encode; only
-        # the ~30x-smaller encoded block rows are cached. Per-doc stats
-        # ride along as doc-stat rows (block_id = -1).
-        raw = parted.withColumn("_pid", F.spark_partition_id()).mapInPandas(
-            _fused_invert_encode_fn(config, content_col, offsets),
-            schema=_RAW_SCHEMA,
-        )
-        # an eager build pins the fused output on local disk, as it does its
-        # shuffle output: the term exchange, the docs explode and the token
-        # totals all read that one copy, and unlike a cache a checkpoint adds
-        # no materialization job of its own to the plans that read it. A
-        # lazy build keeps it as a cache that Index.unpersist releases.
-        if eager:
-            raw = raw.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
-        else:
-            raw = raw.persist(StorageLevel.MEMORY_AND_DISK)
-        postings = raw.filter(F.col("block_id") >= 0).drop(*_DOC_ARRAYS)
-        doc_rows = raw.filter(F.col("block_id") == -1)
-        # Σ per-batch token totals == Σ doc length == Σ tf freq
-        totals = doc_rows.select(F.col("sum_freq").alias("v"))
-    else:
-        # arbitrary pre-assigned doc_ids: partitions are not doc-contiguous,
-        # so segments group across partitions via ONE wide shuffle. The tf
-        # cache is the analog of Lucene's in-memory DWPT postings buffer
-        # before flush (DocumentsWriterPerThread.java:209-260): invert runs
-        # exactly once, feeding both the segment writer and the doc lengths.
-        tf = df.select("doc_id", content_col).mapInPandas(
-            _invert_fn(config, content_col), schema=TF_SCHEMA
-        )
-        tf = tf.persist(StorageLevel.MEMORY_AND_DISK)
-        # Range-partition the exchange instead of the default hash
-        # clustering: range placement balances partitions by ROWS (whole
-        # segments, contiguous ids), where hash placement throws segment ids
-        # into buckets balls-in-bins style and the straggler bucket sets the
-        # stage's wall time. RangePartitioning satisfies the groupBy's
-        # clustering requirement, so no second exchange appears.
-        postings = (
-            tf.repartitionByRange(num_partitions, "segment_id")
-            .groupBy("segment_id")
-            .applyInPandas(_segment_writer_fn(config), schema=POSTINGS_SCHEMA)
-        )
-        totals = tf.agg(F.sum("freq").alias("v"))
-        if eager:
-            # materialize the segment writer's output before the range
-            # exchange samples it, or the sampling job re-executes the whole
-            # block-encode pass (measured 2x the build's dominant phase)
-            raw = postings.persist(StorageLevel.MEMORY_AND_DISK)
-            raw.count()
-            postings = raw
-            _mark("invert_segment_write")
+    if df is not None:
+        # pre-assigned ids: a range partition on the segment id keeps every
+        # segment inside one partition, so the fused pass flushes whole
+        # segments; the ids come from the data, so nothing needs pinning
+        parted = df.repartitionByRange(
+            num_partitions, F.expr(f"doc_id div {config.seg_size}")
+        ).sortWithinPartitions("doc_id")
+    raw, postings, docs = _fused_tables(
+        parted, config, content_col, offsets, eager, stored_from=df
+    )
+    # Σ per-batch token totals == Σ doc length == Σ tf freq
+    totals = raw.filter(F.col("block_id") == -1).select(F.col("sum_freq").alias("v"))
     if eager:
         # term-major layout for the query path: range-partitioned + sorted by
         # term, so per-batch min/max stats prune term lookups against the
@@ -933,60 +918,26 @@ def build_index(
         F.max(F.array_max("imp_norms")).cast("int").alias("singleton_norm"),
     )
 
-    # docs / norms. length = Σ freq (FieldInvertState.length semantics:
-    # overlaps count); the norm byte was computed at invert from the
-    # DISCOUNTED length (length - numOverlap).
-    if parted is not None:
-        # every doc (zero-token docs included) from the fused pass's
-        # doc-stat rows; stored columns join on from the pinned
-        # partitioning, where doc_id is a JVM projection
-        docs = _docs_from_stats(doc_rows)
-        if config.store_cols:
-            store = parted.select(_doc_id_col(offsets).alias("doc_id"), *config.store_cols)
-            docs = store.join(docs, "doc_id")
-    else:
-        # a tf aggregate; docs with zero tokens keep norm 0 via the left join
-        lengths = tf.groupBy("doc_id").agg(
-            F.sum("freq").alias("length"),
-            F.max("norm").alias("_tf_norm"),
-            F.max("dlen").alias("_tf_dlen"),
-        )
-        docs = df.select("doc_id", *config.store_cols).join(lengths, "doc_id", "left")
-        docs = (
-            docs.fillna({"length": 0})
-            .withColumn("norm", F.coalesce(F.col("_tf_norm"), F.lit(0)).cast("int"))
-            .withColumn(
-                "num_overlap",
-                (F.col("length") - F.coalesce(F.col("_tf_dlen"), F.lit(0))).cast("long"),
-            )
-            .drop("_tf_norm", "_tf_dlen")
-        )
-
     if eager:
         terms = terms.persist(StorageLevel.MEMORY_AND_DISK)
         docs = docs.persist(StorageLevel.MEMORY_AND_DISK)
         sttf = _fill_caches(totals, terms, docs)
-        _mark("term_major_terms_docs")
     else:
         sttf = int(totals.agg(F.sum("v")).collect()[0][0] or 0)
     stats = CollectionStats(doc_count=int(n), sum_total_term_freq=sttf)
-    cached = raw if parted is not None else tf
-    if parted is not None and cached is not None:
-        cached._doc_id_parted = parted  # released via Index.unpersist / eager
-    idx = Index(
+    # the persisted range partitioning of an order_cols build
+    pinned = parted if offsets is not None else None
+    if eager:
+        raw.unpersist()
+        if pinned is not None:
+            pinned.unpersist()
+    else:
+        raw._doc_id_parted = pinned  # released via Index.unpersist
+    return Index(
         docs=docs, terms=terms, postings=postings, stats=stats, config=config,
-        tf=None if eager else cached,
+        tf=None if eager else raw,
         index_sort=tuple(order_cols) if order_cols else None,
     )
-    if eager:
-        for handle in (raw, tf):  # fused: raw; pre-assigned ids: tf + blocks
-            if handle is not None:
-                handle.unpersist()
-        if parted is not None:
-            parted.unpersist()
-    if _timing:
-        print(json.dumps({"build_phases": dict(_marks)}), flush=True)
-    return idx
 
 
 def _fill_caches(totals: DataFrame, *cached: DataFrame) -> int:
@@ -1015,6 +966,7 @@ def config_to_dict(config: IndexConfig) -> dict:
         "k1": config.k1,
         "b": config.b,
         "store_cols": list(config.store_cols),
+        "field": config.field,
         "stopwords": sorted(config.stopwords),
         "synonyms": [[b, list(e)] for b, e in config.synonyms],
         "decompound": (

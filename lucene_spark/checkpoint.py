@@ -21,12 +21,16 @@ a crash loses at most the in-flight shard.
 
 Global doc_ids: shard i's docs occupy [doc_base_i, doc_base_i + rows_i),
 with doc order = key order inside the shard — identical ids to the
-single-shot build. Segments remain doc_id // seg_size, so a segment may
-straddle a shard boundary; the two shard outputs then hold distinct block
-rows for the same (term, segment_id, block_id) key. That collision is
-benign everywhere (decoders treat block rows independently) and is exactly
-the hot-term salting story: one hot term's postings live in many
-independently-encoded, independently-committed files.
+single-shot build. A shard runs the single-shot build's fused
+invert-and-encode pass (``build._fused_tables``) with its partition offsets
+shifted by doc_base, so its postings, docs (stored columns included) and
+token total come out of one Arrow pass; MANIFEST.json carries the full
+IndexConfig (``build.config_to_dict``). Segments remain doc_id // seg_size,
+so a segment may straddle a shard boundary; the two shard outputs then hold
+distinct block rows for the same (term, segment_id, block_id) key. That
+collision is benign everywhere (decoders treat block rows independently)
+and is exactly the hot-term salting story: one hot term's postings live in
+many independently-encoded, independently-committed files.
 """
 
 from __future__ import annotations
@@ -36,20 +40,17 @@ import os
 import time
 from typing import List, Optional
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .bm25 import CollectionStats
 from .build import (
-    POSTINGS_SCHEMA,
-    TF_SCHEMA,
     Index,
-    _assign_invert_fn,
+    _fused_tables,
     _range_partition_with_offsets,
-    _segment_writer_fn,
+    config_from_dict,
+    config_to_dict,
 )
 from .config import IndexConfig
-from .smallfloat import int_to_byte4
 
 
 def _key(order_cols: List[str]):
@@ -195,22 +196,14 @@ def build_checkpointed(
             shard_df, list(order_cols), inner_partitions
         )
         offs = {p: o + sh["doc_base"] for p, o in offs.items()}
-        tf = parted.withColumn("_pid", F.spark_partition_id()).mapInPandas(
-            _assign_invert_fn(config, content_col, offs), schema=TF_SCHEMA
+        # the one-shot build's fused pass, with ids offset by the doc_base
+        raw, postings, docs = _fused_tables(
+            parted, config, content_col, offs, eager=False
         )
-        from pyspark import StorageLevel
-
-        tf = tf.persist(StorageLevel.MEMORY_AND_DISK)
-        # materialize the block encode before repartitionByRange: the range
-        # exchange's sampling job would otherwise re-execute the whole
-        # segment write (see build_index eager path)
-        postings = (
-            tf.repartitionByRange(inner_partitions, "segment_id")
-            .groupBy("segment_id")
-            .applyInPandas(_segment_writer_fn(config), schema=POSTINGS_SCHEMA)
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        postings.count()
+        agg = raw.agg(
+            F.sum(F.when(F.col("block_id") == -1, F.col("sum_freq"))).alias("sttf"),
+            F.sum(F.when(F.col("block_id") >= 0, F.col("count"))).alias("tf_rows"),
+        ).collect()[0]
         tmp = sdir + ".tmp"
         (
             postings.repartitionByRange(max(inner_partitions // 2, 1), "term")
@@ -218,30 +211,8 @@ def build_checkpointed(
             .write.mode("overwrite")
             .parquet(os.path.join(tmp, "postings"))
         )
-        lengths = tf.groupBy("doc_id").agg(
-            F.sum("freq").alias("length"),
-            F.max("norm").alias("_tf_norm"),
-            F.max("dlen").alias("_tf_dlen"),
-        )
-        rng = spark.range(sh["doc_base"], sh["doc_base"] + sh["rows"]).withColumnRenamed(
-            "id", "doc_id"
-        )
-        docs = (
-            rng.join(lengths, "doc_id", "left")
-            .fillna({"length": 0})
-            .withColumn("norm", F.coalesce(F.col("_tf_norm"), F.lit(0)).cast("int"))
-            .withColumn(
-                "num_overlap",
-                (F.col("length") - F.coalesce(F.col("_tf_dlen"), F.lit(0))).cast("long"),
-            )
-            .drop("_tf_norm", "_tf_dlen")
-        )
         docs.write.mode("overwrite").parquet(os.path.join(tmp, "docs"))
-        agg = tf.agg(
-            F.sum("freq").alias("sttf"), F.count("*").alias("tf_rows")
-        ).collect()[0]
-        postings.unpersist()
-        tf.unpersist()
+        raw.unpersist()
         parted.unpersist()
         metrics = {
             **sh,
@@ -265,14 +236,7 @@ def build_checkpointed(
         "doc_count": plan["n_docs"],
         "sum_total_term_freq": sum(m["sum_total_term_freq"] for m in shard_metrics),
         "shards": shard_metrics,
-        "config": {
-            "chain": config.chain,
-            "seg_size": config.seg_size,
-            "block_size": config.block_size,
-            "with_positions": config.with_positions,
-            "k1": config.k1,
-            "b": config.b,
-        },
+        "config": config_to_dict(config),
         "resumed_shards_this_run": done,
     }
     tmp = os.path.join(path, "MANIFEST.json.tmp")
@@ -287,7 +251,7 @@ def read_checkpointed(spark: SparkSession, path: str) -> Index:
     term stats from the postings block sums (one aggregation)."""
     with open(os.path.join(path, "MANIFEST.json")) as fh:
         manifest = json.load(fh)
-    cfg = IndexConfig(**manifest["config"])
+    cfg = config_from_dict(manifest["config"])
     n = len(manifest["shards"])
     postings = spark.read.parquet(
         *[os.path.join(path, f"shard_{i}", "postings") for i in range(n)]

@@ -20,7 +20,7 @@ overlaps that count into tf/sttf but are discounted from the length norm):
   (``hyphenate`` at :276-365, ``searchPatterns`` at :176-236) +
   ``PatternParser.java`` (FOP XML grammar files).
 
-Integration: ``IndexConfig(decompound=<decompounder>)`` — ``build._invert_core``
+Integration: ``IndexConfig(decompound=<decompounder>)`` — ``build._invert_batches``
 decomposes each DISTINCT token once per batch (memoized across batches on the
 decompounder instance) and injects the subwords exactly like the synonym
 path. At 100-TB scale this is a per-executor pure-Python function over

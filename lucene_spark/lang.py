@@ -37,7 +37,7 @@ import re
 from typing import List
 
 #: stopped-token marker: survives to the invert stage, where it is the one
-#: entry of the implied stopset for language chains (build._invert_core)
+#: entry of the implied stopset for language chains (build._invert_batches)
 STOP_HOLE = "\x00"
 
 # Latin-1 letter ranges (excludes the x/division signs at 0xD7/0xF7);

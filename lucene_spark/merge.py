@@ -13,7 +13,7 @@ history (SURVEY.md §7.4 hot-term requirement).
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 from typing import Iterator, List
 
 import numpy as np
@@ -22,7 +22,6 @@ from pyspark.sql import DataFrame, functions as F
 
 from . import codec
 from .build import POSTINGS_SCHEMA, Index, _segment_writer_fn
-from .config import IndexConfig
 
 
 @dataclass(frozen=True)
@@ -173,17 +172,7 @@ def merge_segments(
     SegmentMerger live-docs filter)."""
     cfg = index.config
     new_seg = target_seg_size or cfg.seg_size * 8
-    new_cfg = IndexConfig(
-        chain=cfg.chain,
-        seg_size=new_seg,
-        block_size=cfg.block_size,
-        with_positions=cfg.with_positions,
-        k1=cfg.k1,
-        b=cfg.b,
-        store_cols=cfg.store_cols,
-        field=cfg.field,
-        stopwords=cfg.stopwords,
-    )
+    new_cfg = replace(cfg, seg_size=new_seg)
     tf = _decode_to_tf(index, new_seg)
     if drop_deletes and index.deletes is not None:
         tf = tf.join(F.broadcast(index.deletes), "doc_id", "left_anti")

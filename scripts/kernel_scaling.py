@@ -2,7 +2,7 @@
 
 Runs the EXACT invert hot path (flat_tokenize over the same deterministic
 synthetic corpus content + per-doc tf aggregation, the body of
-build._invert_core) in N raw multiprocessing workers with zero Spark,
+build._invert_batches) in N raw multiprocessing workers with zero Spark,
 zero Arrow, zero shuffle. If aggregate docs/sec stops scaling with N the
 same way the full Spark build does, the decay is the machine's (shared
 DRAM bandwidth on one VM), not the engine's orchestration — on a real

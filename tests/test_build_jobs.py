@@ -5,12 +5,15 @@ import time
 
 import pytest
 
-from lucene_spark.build import IndexConfig, build_index, write_index
+from lucene_spark.build import IndexConfig, assign_doc_ids, build_index, write_index
 from lucene_spark.corpus import generate_corpus
 
-# range sample + exchange + cache + per-partition count (4); term-major
-# sample + exchange (with the fused pass) + postings cache (3); terms and
-# docs caches + the token-totals collect (3); three Parquet writes (3)
+# order_cols: range sample + exchange + cache + per-partition count (4);
+# doc_id_col: corpus count + its aggregate exchange, segment-range sample +
+# exchange (4). Then, for both (13 jobs measured on either path):
+# term-major sample + exchange (with the fused pass) + postings cache (3);
+# terms and docs caches + the token-totals collect (3); three Parquet
+# writes (3)
 BUILD_WRITE_JOB_CAP = 14
 
 
@@ -31,23 +34,32 @@ def _settled_jobs(sc, group, wait_s=5.0):
 def corpus(spark):
     c = generate_corpus(spark, 300, seed=3, num_partitions=4).persist()
     c.count()
-    yield c
+    ids = assign_doc_ids(c, ["repo", "path"], 4).persist()
+    ids.count()
+    yield c, ids
+    ids.unpersist()
+    ids._doc_id_parted.unpersist()
     c.unpersist()
 
 
+@pytest.mark.parametrize("ids_from", ["order_cols", "doc_id_col"])
 @pytest.mark.parametrize("positions", [False, True])
-def test_warm_build_write_job_count(spark, corpus, tmp_path, positions):
+def test_warm_build_write_job_count(spark, corpus, tmp_path, positions, ids_from):
     sc = spark.sparkContext
     cfg = IndexConfig(chain="code", with_positions=positions)
+    raw, with_ids = corpus
 
     def build_write(name):
-        idx = build_index(corpus, cfg, order_cols=["repo", "path"], eager=True)
+        if ids_from == "order_cols":
+            idx = build_index(raw, cfg, order_cols=["repo", "path"], eager=True)
+        else:
+            idx = build_index(with_ids, cfg, doc_id_col="doc_id", eager=True)
         write_index(idx, str(tmp_path / name))
         return idx
 
     build_write("warm").unpersist()
     ungrouped = _settled_jobs(sc, None)
-    group = f"build-jobs-{positions}"
+    group = f"build-jobs-{ids_from}-{positions}"
     sc.setJobGroup(group, "warm build + write")
     try:
         idx = build_write("probe")

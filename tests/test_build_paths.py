@@ -1,0 +1,96 @@
+"""Every build goes through the one fused invert-and-encode pass: a build
+over pre-assigned doc_ids equals the order_cols build of the same corpus,
+non-dense ids keep exact per-doc stats, and repeated ids are rejected."""
+
+import numpy as np
+import pytest
+
+from lucene_spark import codec
+from lucene_spark.build import IndexConfig, assign_doc_ids, build_index
+from lucene_spark.corpus import generate_corpus
+from lucene_spark.smallfloat import int_to_byte4
+
+
+def _postings(idx):
+    """Every posting as (term, doc, freq, norm, positions), block layout
+    aside."""
+    out = []
+    for row in idx.postings.toPandas().itertuples(index=False):
+        docs, freqs, norms = codec.decode_block_row(row)
+        if row.pos_enc is not None:
+            pos = codec.decode_positions(bytes(row.pos_enc), freqs.astype(np.int32))
+            lists = np.split(pos, np.cumsum(freqs)[:-1])
+        else:
+            lists = [None] * len(docs)
+        for d, f, n, p in zip(docs, freqs, norms, lists):
+            out.append((row.term, int(d), int(f), int(n),
+                        None if p is None else tuple(p.tolist())))
+    return sorted(out)
+
+
+def _rows(df, cols):
+    return sorted(tuple(r) for r in df.select(*cols).collect())
+
+
+@pytest.mark.parametrize("positions", [False, True])
+def test_doc_id_col_build_equals_order_cols_build(spark, positions):
+    corpus = generate_corpus(spark, 400, seed=5, num_partitions=4).persist()
+    ids = assign_doc_ids(corpus, ["repo", "path"], 4).persist()
+    cfg = IndexConfig(chain="code", seg_size=64, with_positions=positions,
+                      store_cols=("repo",))
+    by_order = build_index(corpus, cfg, order_cols=["repo", "path"],
+                           num_partitions=3, auto_seg_size=False, eager=True)
+    by_id = build_index(ids, cfg, doc_id_col="doc_id", num_partitions=3,
+                        auto_seg_size=False, eager=True)
+    assert by_id.stats == by_order.stats
+    assert by_id.docs.columns == by_order.docs.columns
+    # singleton_* columns depend on the block layout unless doc_freq == 1
+    stat_cols = ["term", "doc_freq", "total_term_freq"]
+    assert _rows(by_id.terms, stat_cols) == _rows(by_order.terms, stat_cols)
+    single = by_order.terms.columns
+    assert _rows(by_id.terms.filter("doc_freq = 1"), single) == _rows(
+        by_order.terms.filter("doc_freq = 1"), single)
+    assert _rows(by_id.docs, by_order.docs.columns) == _rows(
+        by_order.docs, by_order.docs.columns)
+    assert _postings(by_id) == _postings(by_order)
+    for idx in (by_order, by_id):
+        idx.unpersist()
+    ids.unpersist()
+    ids._doc_id_parted.unpersist()
+    corpus.unpersist()
+
+
+@pytest.mark.parametrize("eager", [False, True])
+def test_gapped_ids_with_zero_token_docs_exact_docs_table(spark, eager):
+    texts, want = [], []
+    for i in range(120):
+        words = [] if i % 7 == 0 else [f"w{(i + j) % 9}" for j in range(i % 5 + 1)]
+        # "!!" tokenizes to nothing; w1 gets an index-time synonym overlap
+        texts.append(" ".join(words) if words else ("!!" if i % 2 else ""))
+        base = len(words)
+        overlaps = words.count("w1")
+        doc_id = i * 3 + (500 if i % 4 == 0 else 0)
+        want.append((doc_id, base + overlaps,
+                     int(int_to_byte4(np.array([base]))[0]), overlaps))
+    df = spark.createDataFrame(list(zip([w[0] for w in want], texts)),
+                               "id long, text string")
+    cfg = IndexConfig(seg_size=16, synonyms=(("w1", ("one",)),))
+    idx = build_index(df, cfg, content_col="text", doc_id_col="id",
+                      num_partitions=3, auto_seg_size=False, eager=eager)
+    got = _rows(idx.docs, ["doc_id", "length", "norm", "num_overlap"])
+    assert got == sorted(want)
+    assert idx.stats.doc_count == 120
+    assert idx.stats.sum_total_term_freq == sum(w[1] for w in want)
+    idx.unpersist()
+
+
+@pytest.mark.parametrize("eager", [False, True])
+def test_duplicate_doc_id_rejected(spark, eager):
+    df = spark.createDataFrame(
+        [(i, f"tok{i}") for i in range(40)] + [(17, "again")],
+        "doc_id long, text string",
+    )
+    with pytest.raises(Exception, match="duplicate doc_id 17"):
+        build_index(df, IndexConfig(seg_size=8), content_col="text",
+                    doc_id_col="doc_id", num_partitions=3,
+                    auto_seg_size=False, eager=eager)

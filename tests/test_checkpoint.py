@@ -77,6 +77,41 @@ def test_crash_resume_equals_oneshot(spark, code_corpus, tmp_path):
     one.unpersist()
 
 
+def test_manifest_keeps_config_and_stored_cols(spark, code_corpus, tmp_path):
+    """The sharded index reopens with its whole IndexConfig (stopwords,
+    stored columns, ...) and its docs carry the stored columns; a manifest
+    from before the full config still opens with the defaults."""
+    from lucene_spark.build import build_index
+    from lucene_spark.checkpoint import build_checkpointed, read_checkpointed
+    from lucene_spark.config import IndexConfig
+
+    cfg = IndexConfig(chain="code", seg_size=256, with_positions=False,
+                      stopwords=frozenset({"def", "return"}),
+                      store_cols=("lang",))
+    path = str(tmp_path / "idx_cfg")
+    build_checkpointed(code_corpus, cfg, path, ["repo", "path"], n_shards=3)
+    ck = read_checkpointed(spark, path)
+    assert ck.config == cfg
+    one = build_index(code_corpus, cfg, order_cols=["repo", "path"],
+                      auto_seg_size=False, eager=True)
+    cols = ["doc_id", "lang", "length", "norm", "num_overlap"]
+    assert sorted(map(tuple, ck.docs.select(*cols).collect())) == sorted(
+        map(tuple, one.docs.select(*cols).collect()))
+    assert ck.stats == one.stats
+    assert ck.terms.filter("term in ('def', 'return')").count() == 0
+    one.unpersist()
+
+    mpath = os.path.join(path, "MANIFEST.json")
+    with open(mpath) as fh:
+        manifest = json.load(fh)
+    manifest["config"] = {k: manifest["config"][k] for k in (
+        "chain", "seg_size", "block_size", "with_positions", "k1", "b")}
+    with open(mpath, "w") as fh:
+        json.dump(manifest, fh)
+    assert read_checkpointed(spark, path).config == IndexConfig(
+        chain="code", seg_size=256, with_positions=False)
+
+
 def test_lineage_mismatch_rejected(spark, code_corpus, tmp_path):
     from lucene_spark.checkpoint import build_checkpointed, plan_shards
 

@@ -68,6 +68,31 @@ def test_merge_preserves_results(spark, built, corpus):
     merged.postings.unpersist()
 
 
+def test_merge_keeps_analysis_config(spark):
+    """merge_segments keeps every analysis option, so docs appended after a
+    merge are analyzed like the base ones (synonyms included)."""
+    import dataclasses
+
+    from lucene_spark.merge import append_documents
+
+    cfg = IndexConfig(seg_size=4, with_positions=False,
+                      stopwords=frozenset({"the"}),
+                      synonyms=(("fast", ("quick",)),))
+    df = spark.createDataFrame(
+        [(i, f"the fast tok{i}") for i in range(12)], "doc_id long, text string"
+    )
+    idx = build_index(df, cfg, content_col="text", doc_id_col="doc_id",
+                      auto_seg_size=False, eager=True)
+    merged = merge_segments(idx, target_seg_size=16)
+    assert merged.config == dataclasses.replace(cfg, seg_size=16)
+    new = spark.createDataFrame([(0, "fast car")], "doc_id long, text string")
+    appended = append_documents(merged, new, content_col="text",
+                                doc_id_col="doc_id")
+    df_of = {r["term"]: r["doc_freq"] for r in appended.terms.collect()}
+    assert df_of["quick"] == 13 and "the" not in df_of
+    idx.unpersist()
+
+
 def test_hot_term_skew_salted_by_segments(spark):
     """North-rule skew story: a term occurring in EVERY doc never concentrates
     on one reducer — the segment grouping is the salt. Its postings land in

@@ -23,6 +23,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
+import pandas as pd
 
 from .smallfloat import LENGTH_TABLE
 
@@ -112,3 +113,21 @@ def term_scorer(
     return make_scorer(
         boost, float(idf(doc_freq, stats.doc_count, dtype=dtype)), stats, k1, b, dtype
     )
+
+
+def score_postings(terms, decoded, scorers) -> np.ndarray:
+    """float64 score of every posting of a :func:`codec.decode_blocks`
+    batch whose block rows have the terms ``terms``: one elementwise
+    ``scorers[term].score`` call per distinct term, so bit-identical to a
+    per-row call. A term with no scorer scores 1.0 (constant score)."""
+    codes, uniq = pd.factorize(terms)
+    by_posting = codes[decoded.row]
+    order = np.argsort(by_posting, kind="stable")
+    bounds = np.searchsorted(by_posting[order], np.arange(len(uniq) + 1))
+    out = np.ones(len(by_posting), dtype=np.float64)
+    for c, term in enumerate(uniq):
+        sc = scorers.get(term)
+        if sc is not None:
+            at = order[bounds[c]: bounds[c + 1]]
+            out[at] = sc.score(decoded.freqs[at], decoded.norms[at])
+    return out

@@ -117,7 +117,7 @@ def assign_doc_ids(
     """
     parted, offsets, _n = _range_partition_with_offsets(df, order_cols, num_partitions)
     out = parted.withColumn("doc_id", _doc_id_col(offsets))
-    out._doc_id_parted = parted  # cache handle; released by build_index(eager=True)
+    out._doc_id_parted = parted  # cache handle; the caller releases it
     return out
 
 
@@ -703,7 +703,11 @@ class Index:
     postings: DataFrame  # POSTINGS_SCHEMA
     stats: CollectionStats
     config: IndexConfig
-    tf: Optional[DataFrame] = None  # lazy build: cached fused output (released on unpersist)
+    # frames the build pinned besides the three tables, released by
+    # unpersist(): the fused output (a local checkpoint when eager, so an
+    # eager index cannot be read after unpersist()) and a lazy order_cols
+    # build's range partitioning
+    pinned: Tuple[DataFrame, ...] = ()
     # live-docs complement (Lucene90LiveDocsFormat / PendingDeletes analog):
     # a tiny (doc_id) tombstone table. Lucene semantics: deleted docs stop
     # MATCHING immediately but keep contributing to docFreq/totalTermFreq/
@@ -829,11 +833,18 @@ class Index:
         return self
 
     def unpersist(self) -> "Index":
-        extra = getattr(self.tf, "_doc_id_parted", None)
-        for df in (self.docs, self.terms, self.postings, self.tf, extra):
-            if df is not None:
-                df.unpersist()
+        for df in (self.docs, self.terms, self.postings, *self.pinned):
+            _release(df)
         return self
+
+
+def _release(df: DataFrame) -> None:
+    """Unpersist ``df``. DataFrame.unpersist does nothing for a local
+    checkpoint, so one is released through the RDD its plan reads."""
+    df.unpersist()
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
 
 
 def build_index(
@@ -925,17 +936,15 @@ def build_index(
     else:
         sttf = int(totals.agg(F.sum("v")).collect()[0][0] or 0)
     stats = CollectionStats(doc_count=int(n), sum_total_term_freq=sttf)
-    # the persisted range partitioning of an order_cols build
-    pinned = parted if offsets is not None else None
-    if eager:
-        raw.unpersist()
-        if pinned is not None:
-            pinned.unpersist()
-    else:
-        raw._doc_id_parted = pinned  # released via Index.unpersist
+    pinned = (raw,)
+    if offsets is not None:  # the persisted range partitioning
+        if eager:
+            parted.unpersist()
+        else:
+            pinned += (parted,)
     return Index(
         docs=docs, terms=terms, postings=postings, stats=stats, config=config,
-        tf=None if eager else raw,
+        pinned=pinned,
         index_sort=tuple(order_cols) if order_cols else None,
     )
 

@@ -22,7 +22,7 @@ Layout (little-endian):
 
 from __future__ import annotations
 
-from typing import List, Tuple
+from typing import List, NamedTuple, Optional, Tuple
 
 import numpy as np
 
@@ -264,9 +264,42 @@ def decode_block_row(row):
     )
 
 
-def decode_block_docs(row) -> np.ndarray:
-    """doc_ids only for one postings-block row (docs-only / FILTER path)."""
-    n = int(row.count)
-    if n == 1:
-        return np.array([row.last_doc], dtype=np.int64)
-    return delta_decode_docs(bytes(row.docs_enc), n, int(row.base_doc))
+class Decoded(NamedTuple):
+    """Postings of a batch of block rows, laid end to end in block-row order
+    then posting order (see :func:`decode_blocks`)."""
+
+    row: np.ndarray  # block row of each posting
+    docs: np.ndarray
+    freqs: np.ndarray
+    norms: np.ndarray
+    positions: Optional[np.ndarray] = None  # every posting's positions, flat
+    pos_starts: Optional[np.ndarray] = None  # where each posting's start
+
+
+def decode_blocks(pdf, positions: bool = False) -> Decoded:
+    """Decode a pandas batch of postings block rows into flat int64 arrays:
+    the batch-at-a-time form of :func:`decode_block_row`.
+
+    Singleton rows (count == 1, the bulk of a code corpus's rows) are
+    decoded as array ops on their plain columns; only rows with more
+    postings pay a per-row byte decode. With ``positions`` every row's
+    vbyte stream is decoded in one pass: the streams hold sum(freqs) values
+    each, so laid end to end they are one stream over all postings."""
+    counts = pdf["count"].to_numpy(dtype=np.int64)
+    ends = np.cumsum(counts)
+    total = int(ends[-1]) if len(counts) else 0
+    docs, freqs, norms = np.empty((3, total), dtype=np.int64)
+    one = counts == 1
+    at = ends[one] - 1
+    docs[at] = pdf["last_doc"].to_numpy(dtype=np.int64)[one]
+    freqs[at] = [f[0] for f in pdf["imp_freqs"].to_numpy()[one]]
+    norms[at] = [n[0] for n in pdf["imp_norms"].to_numpy()[one]]
+    multi = np.nonzero(~one)[0]
+    for i, r in zip(multi.tolist(), pdf.iloc[multi].itertuples(index=False)):
+        at = slice(int(ends[i] - counts[i]), int(ends[i]))
+        docs[at], freqs[at], norms[at] = decode_block_row(r)
+    row = np.repeat(np.arange(len(counts)), counts)
+    if not positions:
+        return Decoded(row, docs, freqs, norms)
+    pos = decode_positions(b"".join(pdf["pos_enc"].tolist()), freqs)
+    return Decoded(row, docs, freqs, norms, pos, np.cumsum(freqs) - freqs)

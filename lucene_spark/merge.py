@@ -3,25 +3,25 @@
 The reference merges segments by docID-remapped append (SegmentMerger.java,
 DocIDMerger.java) under a TieredMergePolicy size heuristic
 (TieredMergePolicy.java:85-92). In our engine docIDs are global from the
-start, so merging is pure re-segmentation: union the tf-equivalent decoded
-postings of the source segments and re-run the block writer with a coarser
-seg_size. Blocks are always rebuilt from scratch after a merge — never
-concatenated — so block boundaries stay deterministic regardless of merge
-history (SURVEY.md §7.4 hot-term requirement).
+start, so merging is pure re-segmentation: every block row is decoded by the
+Spark tier's batch decoder (search.decoded_postings over
+codec.decode_blocks) into (term, doc_id, freq, norm[, positions]) rows, the
+new segment id is doc_id div the new seg_size, and the block writer re-runs
+per new segment. Blocks are always rebuilt from scratch after a merge —
+never concatenated — so block boundaries stay deterministic regardless of
+merge history (SURVEY.md §7.4 hot-term requirement).
 """
 
 from __future__ import annotations
 
 import math
 from dataclasses import dataclass, replace
-from typing import Iterator, List
+from typing import List
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import functions as F
 
-from . import codec
 from .build import POSTINGS_SCHEMA, Index, _segment_writer_fn
+from .search import decoded_postings
 
 
 @dataclass(frozen=True)
@@ -141,8 +141,6 @@ def merge_metrics(before: Index, after: Index, wall_sec: float) -> dict:
     counts before and after, compaction ratio, wall time. Triggers one count
     job per side if the postings aren't materialized yet."""
     def side(ix: Index) -> dict:
-        from pyspark.sql import functions as F
-
         r = ix.postings.agg(
             F.count("*").alias("blocks"),
             F.countDistinct("segment_id").alias("segments"),
@@ -167,13 +165,16 @@ def merge_segments(
     index: Index, target_seg_size: int | None = None, drop_deletes: bool = False
 ) -> Index:
     """Full compaction: re-segment every posting at ``target_seg_size``
-    (default: 8x the build seg_size). One shuffle (groupBy new segment).
+    (default: 8x the build seg_size). The decoded postings rows go through
+    one shuffle (groupBy new segment) into the block writer.
     ``drop_deletes`` excludes tombstoned docs while re-blocking (the
     SegmentMerger live-docs filter)."""
     cfg = index.config
     new_seg = target_seg_size or cfg.seg_size * 8
     new_cfg = replace(cfg, seg_size=new_seg)
-    tf = _decode_to_tf(index, new_seg)
+    tf = decoded_postings(index.postings, cfg.with_positions).withColumn(
+        "segment_id", F.expr(f"CAST(doc_id div {new_seg} AS INT)")
+    )
     if drop_deletes and index.deletes is not None:
         tf = tf.join(F.broadcast(index.deletes), "doc_id", "left_anti")
     postings = tf.groupBy("segment_id").applyInPandas(
@@ -192,45 +193,11 @@ def merge_segments(
     )
 
 
-def _decode_to_tf(index: Index, new_seg_size: int) -> DataFrame:
-    """Decode postings blocks back to tf rows tagged with NEW segment ids —
-    the DocIDMerger analog (global ids => remap is pure arithmetic)."""
-    with_pos = index.config.with_positions
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for row in pdf.itertuples(index=False):
-                n = int(row.count)
-                docs, freqs, norms = codec.decode_block_row(row)
-                freqs = freqs.astype(np.int32)
-                d = {
-                    "doc_id": docs,
-                    "segment_id": (docs // new_seg_size).astype(np.int32),
-                    "term": np.repeat(row.term, n),
-                    "freq": freqs,
-                    "norm": norms.astype(np.int32),
-                }
-                if with_pos and row.pos_enc is not None:
-                    pos = codec.decode_positions(bytes(row.pos_enc), freqs)
-                    bounds = np.cumsum(freqs)[:-1]
-                    d["positions"] = [a.astype(np.int32) for a in np.split(pos, bounds)]
-                else:
-                    d["positions"] = [None] * n
-                outs.append(pd.DataFrame(d))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    schema = (
-        "doc_id long, segment_id int, term string, freq int, norm int, "
-        "positions array<int>"
-    )
-    return index.postings.mapInPandas(run, schema=schema)
-
-
 def add_indexes(base: Index, other: Index) -> Index:
     """IndexWriter.addIndexes analog: union postings of two compatible
-    indexes whose doc_id ranges are disjoint, then re-aggregate stats."""
+    indexes whose doc_id ranges are disjoint, then re-aggregate stats. The
+    union pins ``other``'s tables and frames (its unpersist() releases
+    them); ``base`` keeps its own."""
     if base.config.seg_size != other.config.seg_size:
         raise ValueError("seg_size mismatch; merge_segments first")
     from .bm25 import CollectionStats
@@ -256,6 +223,7 @@ def add_indexes(base: Index, other: Index) -> Index:
             + other.stats.sum_total_term_freq,
         ),
         config=base.config,
+        pinned=(other.docs, other.terms, other.postings, *other.pinned),
     )
 
 
@@ -272,37 +240,28 @@ def append_documents(
     :func:`add_indexes`. New docs use the base config; global stats/term
     stats re-aggregate. Segments stay doc_id // seg_size, so the appended
     docs land in fresh segments past the base ones."""
-    from .build import build_index
+    from .build import assign_doc_ids, build_index
 
+    if doc_id_col is None and not order_cols:
+        raise ValueError("need doc_id_col or order_cols")
     # shift past the LARGEST existing doc_id, not doc_count: after
     # expunge_deletes (or any non-dense base) doc_count < max(doc_id)+1 and a
     # doc_count shift would silently merge new docs into existing ids
     mx = base.docs.agg(F.max("doc_id").alias("mx")).collect()[0]["mx"]
     base_n = int(mx) + 1 if mx is not None else 0
-    cfg = base.config
-    if doc_id_col is not None:
-        shifted = new_docs.withColumn(
-            "doc_id", (F.col(doc_id_col).cast("long") + F.lit(base_n))
-        )
-        delta = build_index(
-            shifted, cfg, content_col=content_col, doc_id_col="doc_id",
-            num_partitions=num_partitions, auto_seg_size=False, eager=True,
-        )
-    else:
-        if not order_cols:
-            raise ValueError("need doc_id_col or order_cols")
-        from .build import assign_doc_ids
-
-        spark = new_docs.sparkSession
+    parted = None
+    if doc_id_col is None:
         if num_partitions is None:
-            num_partitions = max(spark.sparkContext.defaultParallelism, 4)
-        assigned = assign_doc_ids(new_docs, list(order_cols), num_partitions)
-        shifted = assigned.withColumn("doc_id", F.col("doc_id") + F.lit(base_n))
-        delta = build_index(
-            shifted, cfg, content_col=content_col, doc_id_col="doc_id",
-            num_partitions=num_partitions, auto_seg_size=False, eager=True,
-        )
-        parted = getattr(assigned, "_doc_id_parted", None)
-        if parted is not None:
-            parted.unpersist()
+            num_partitions = max(new_docs.sparkSession.sparkContext.defaultParallelism, 4)
+        new_docs = assign_doc_ids(new_docs, list(order_cols), num_partitions)
+        parted, doc_id_col = new_docs._doc_id_parted, "doc_id"
+    shifted = new_docs.withColumn(
+        "doc_id", F.col(doc_id_col).cast("long") + F.lit(base_n)
+    )
+    delta = build_index(
+        shifted, base.config, content_col=content_col, doc_id_col="doc_id",
+        num_partitions=num_partitions, auto_seg_size=False, eager=True,
+    )
+    if parted is not None:
+        parted.unpersist()
     return add_indexes(base, delta)

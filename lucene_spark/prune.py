@@ -28,9 +28,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from . import codec
 from .bm25 import BM25Scorer
 from .query import BooleanQuery, Occur, Query, TermQuery
+from .search import scored_postings
 
 
 def _flat_term_clauses(q: Query) -> Optional[Tuple[str, List[TermQuery], int]]:
@@ -215,7 +215,10 @@ def _topk_distributed_wand(
             theta = 0.0
 
     rest = {t: sum_gmax - gmax[t] for t in gmax}
-    scored = _decode_scored_wand(searcher, scorers, rest, float(theta))
+    scored = scored_postings(
+        searcher._postings_for(list(scorers)), scorers,
+        keep=_wand_block_test(scorers, rest, float(theta)),
+    )
     rows = _topk_collect(searcher, scored, mode, terms, k)
     if len(rows) >= k:
         # exact k-th score carries over to a repeated identical query
@@ -226,43 +229,19 @@ def _topk_distributed_wand(
     return [(int(r["doc_id"]), float(r["score"])) for r in rows]
 
 
-def _decode_scored_wand(
-    searcher, scorers: Dict[str, BM25Scorer], rest: Dict[str, float],
-    theta: float,
-) -> DataFrame:
-    """Decode + score postings with the WAND block test applied INLINE at
-    the scanner: ub(t, b) comes from the block's own impact columns (same
-    dtype as doc scoring, so monotonicity makes it a true bound with no
-    epsilon), and a block is skipped BEFORE any posting decode when
-    ub + Σ_{t'≠t} gmax(t') < θ."""
-    scorer_map = scorers
-    rest_map = dict(rest)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for row in pdf.itertuples(index=False):
-                sc_t = scorer_map[row.term]
-                ub = sc_t.max_score(
-                    np.asarray(row.imp_freqs, dtype=np.int64),
-                    np.asarray(row.imp_norms, dtype=np.int64),
-                )
-                if ub + rest_map[row.term] < theta:
-                    continue
-                n = int(row.count)
-                docs, freqs, norms = codec.decode_block_row(row)
-                sc = sc_t.score(freqs, norms).astype(np.float64)
-                outs.append(
-                    pd.DataFrame(
-                        {"term": np.repeat(row.term, n), "doc_id": docs, "score": sc}
-                    )
-                )
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    return searcher._postings_for(list(scorer_map)).mapInPandas(
-        run, schema="term string, doc_id long, score double"
-    )
+def _wand_block_test(
+    scorers: Dict[str, BM25Scorer], rest: Dict[str, float], theta: float
+):
+    """The WAND block test, applied at the scanner before any posting
+    decode: a block row is kept unless ub + Σ_{t'≠t} gmax(t') < θ. ub(t, b)
+    comes from the block's own impact columns (same dtype as doc scoring, so
+    monotonicity makes it a true bound with no epsilon)."""
+    return lambda pdf: np.array([
+        not scorers[t].max_score(
+            np.asarray(f, dtype=np.int64), np.asarray(n, dtype=np.int64)
+        ) + rest[t] < theta
+        for t, f, n in zip(pdf["term"], pdf["imp_freqs"], pdf["imp_norms"])
+    ], dtype=bool)
 
 
 def _topk_collect(searcher, scored: DataFrame, mode: str, terms: List[str], k: int) -> list:
@@ -457,12 +436,12 @@ def _agg_block_keys(
             F.col("term").isin(sorted(set(keys["term"])))
             & composite.isin(key_vals)
         )
-        scored = _decode_scored_rows(searcher, blocks, scorers)
     else:
         keys_df = searcher.spark.createDataFrame(
             keys[["term", "segment_id", "block_id"]]
         )
-        scored = _decode_blocks_scored(searcher, keys_df, scorers)
+        blocks = _blocks_for_keys(searcher, keys_df, scorers)
+    scored = scored_postings(blocks, scorers)
     return _topk_collect(searcher, scored, mode, terms, k)
 
 
@@ -543,33 +522,13 @@ def _block_bounds(
     )
 
 
-def _decode_scored_rows(
-    searcher, blocks: DataFrame, scorers: Dict[str, BM25Scorer]
-) -> DataFrame:
-    """Decode + score an already-selected postings block frame."""
-    scorer_map = scorers
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for row in pdf.itertuples(index=False):
-                n = int(row.count)
-                docs, freqs, norms = codec.decode_block_row(row)
-                sc = scorer_map[row.term].score(freqs, norms).astype(np.float64)
-                outs.append(pd.DataFrame({"term": np.repeat(row.term, n), "doc_id": docs, "score": sc}))
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    return blocks.mapInPandas(run, schema="term string, doc_id long, score double")
-
-
-def _decode_blocks_scored(
+def _blocks_for_keys(
     searcher, block_keys: DataFrame, scorers: Dict[str, BM25Scorer]
 ) -> DataFrame:
-    """Join surviving block keys back to postings and decode+score them."""
-    blocks = searcher.index.postings.filter(F.col("term").isin(list(scorers))).join(
+    """The postings block rows named by a (term, segment_id, block_id) key
+    frame: a semi join against the broadcast keys."""
+    return searcher.index.postings.filter(F.col("term").isin(list(scorers))).join(
         F.broadcast(block_keys.select("term", "segment_id", "block_id")),
         ["term", "segment_id", "block_id"],
         "left_semi",
     )
-    return _decode_scored_rows(searcher, blocks, scorers)

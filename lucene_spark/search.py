@@ -31,7 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from . import codec, matchers
-from .bm25 import BM25Scorer
+from .bm25 import BM25Scorer, score_postings
 from .build import Index
 from .query import (
     BooleanClause,
@@ -82,6 +82,57 @@ from .query import (
 
 MATCH_SCHEMA = "doc_id long, score double"
 MAX_CLAUSE_COUNT = 1024  # BooleanQuery.maxClauseCount default
+
+
+def _map_blocks(blocks: DataFrame, schema: str, frame, positions=False, keep=None):
+    """The Spark tier's one block decode loop: ``frame(pdf, decoded)`` over
+    every batch of the postings block rows in ``blocks``, decoded by
+    codec.decode_blocks (block-row order, then posting order). ``keep``
+    maps a batch to a row mask applied before the decode."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if keep is not None:
+                pdf = pdf[keep(pdf)]
+            if len(pdf):
+                yield frame(pdf, codec.decode_blocks(pdf, positions))
+
+    return blocks.mapInPandas(run, schema=schema)
+
+
+def scored_postings(blocks: DataFrame, scorers, keep=None) -> DataFrame:
+    """(doc_id, score) of every posting of the block rows in ``blocks``."""
+    return _map_blocks(blocks, MATCH_SCHEMA, lambda pdf, d: pd.DataFrame(
+        {"doc_id": d.docs, "score": score_postings(pdf["term"], d, scorers)}
+    ), keep=keep)
+
+
+def decoded_postings(blocks: DataFrame, with_positions: bool = False) -> DataFrame:
+    """(term, doc_id, freq, norm[, positions]) of every posting of the block
+    rows in ``blocks``."""
+
+    def frame(pdf: pd.DataFrame, d: codec.Decoded) -> pd.DataFrame:
+        out = {
+            "term": pdf["term"].to_numpy()[d.row],
+            "doc_id": d.docs,
+            "freq": d.freqs.astype(np.int32),
+            "norm": d.norms.astype(np.int32),
+        }
+        if with_positions:
+            out["positions"] = np.split(d.positions.astype(np.int32), d.pos_starts[1:])
+        return pd.DataFrame(out)
+
+    schema = "term string, doc_id long, freq int, norm int"
+    if with_positions:
+        schema += ", positions array<int>"
+    return _map_blocks(blocks, schema, frame, with_positions)
+
+
+def matching_docs(blocks: DataFrame) -> DataFrame:
+    """Distinct doc_ids of the block rows in ``blocks``."""
+    return _map_blocks(
+        blocks, "doc_id long", lambda pdf, d: pd.DataFrame({"doc_id": d.docs})
+    ).distinct()
 
 
 def _slot_position_lists(plist: pd.Series, slots_t, all_terms):
@@ -1079,29 +1130,6 @@ class Searcher:
             df = df.filter(self._block_pred)
         return df
 
-    def decode_scored(
-        self, scorers: Dict[str, BM25Scorer], keep_term: bool = False
-    ) -> DataFrame:
-        """Decode + score postings of the given terms: (term?, doc_id, score)."""
-        schema = ("term string, " if keep_term else "") + MATCH_SCHEMA
-        scorer_map = scorers
-
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                outs = []
-                for row in pdf.itertuples(index=False):
-                    n = int(row.count)
-                    docs, freqs, norms = codec.decode_block_row(row)
-                    sc = scorer_map[row.term].score(freqs, norms).astype(np.float64)
-                    d = {"doc_id": docs, "score": sc}
-                    if keep_term:
-                        d = {"term": np.repeat(row.term, n), **d}
-                    outs.append(pd.DataFrame(d))
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
-
-        return self._postings_for(list(scorer_map)).mapInPandas(run, schema=schema)
-
     def _fused_bool_scored(
         self, must: list, should: list, needs_scores: bool
     ) -> Optional[DataFrame]:
@@ -1139,33 +1167,20 @@ class Searcher:
         scorers = {
             sq.term: self.scorer_for(sq.boost, stats[sq.term]) for sq in present
         }
+        # a term without a scorer scores 1.0 (bm25.score_postings)
+        scored = {t: sc for t, sc in scorers.items() if t not in const_terms}
 
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                outs = []
-                for row in pdf.itertuples(index=False):
-                    n = int(row.count)
-                    docs, freqs, norms = codec.decode_block_row(row)
-                    if row.term in const_terms:
-                        sc = np.ones(n, dtype=np.float64)
-                    else:
-                        sc = scorers[row.term].score(freqs, norms).astype(np.float64)
-                    outs.append(
-                        pd.DataFrame(
-                            {
-                                "doc_id": docs,
-                                "score": sc,
-                                "is_must": np.repeat(
-                                    np.int32(1 if row.term in must_terms else 0), n
-                                ),
-                            }
-                        )
-                    )
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
+        def frame(pdf: pd.DataFrame, d: codec.Decoded) -> pd.DataFrame:
+            is_must = pdf["term"].isin(must_terms).to_numpy(dtype=np.int32)
+            return pd.DataFrame({
+                "doc_id": d.docs,
+                "score": score_postings(pdf["term"], d, scored),
+                "is_must": is_must[d.row],
+            })
 
-        return self._postings_for(list(scorers)).mapInPandas(
-            run, schema="doc_id long, score double, is_must int"
+        return _map_blocks(
+            self._postings_for(list(scorers)),
+            "doc_id long, score double, is_must int", frame,
         )
 
     def decode_raw(
@@ -1178,48 +1193,7 @@ class Searcher:
             raise ValueError(
                 "positional query on an index built with with_positions=False"
             )
-        schema = "term string, doc_id long, freq int, norm int"
-        if with_positions:
-            schema += ", positions array<int>"
-
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                outs = []
-                for row in pdf.itertuples(index=False):
-                    n = int(row.count)
-                    docs, freqs, norms = codec.decode_block_row(row)
-                    d = {
-                        "term": np.repeat(row.term, n),
-                        "doc_id": docs,
-                        "freq": freqs.astype(np.int32),
-                        "norm": norms.astype(np.int32),
-                    }
-                    if with_positions:
-                        pos = codec.decode_positions(bytes(row.pos_enc), freqs)
-                        bounds = np.cumsum(freqs)[:-1]
-                        d["positions"] = [a.astype(np.int32) for a in np.split(pos, bounds)]
-                    outs.append(pd.DataFrame(d))
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
-
-        return self._postings_for(terms).mapInPandas(run, schema=schema)
-
-    def decode_docs_only(self, terms: Sequence[str]) -> DataFrame:
-        """Just matching doc_ids (distinct) — FILTER / constant-score path."""
-
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                outs = [
-                    codec.decode_block_docs(r) for r in pdf.itertuples(index=False)
-                ]
-                if outs:
-                    yield pd.DataFrame({"doc_id": np.concatenate(outs)})
-
-        return (
-            self._postings_for(terms)
-            .mapInPandas(run, schema="doc_id long")
-            .distinct()
-        )
+        return decoded_postings(self._postings_for(terms), with_positions)
 
     # ---------------- evaluation ----------------
 
@@ -1341,7 +1315,8 @@ class Searcher:
         if st is None:
             return self._empty()
         if not needs_scores:
-            return self.decode_docs_only([q.term]).withColumn("score", F.lit(1.0))
+            docs = matching_docs(self._postings_for([q.term]))
+            return docs.withColumn("score", F.lit(1.0))
         scorer = self.scorer_for(q.boost, st)
         if st.doc_freq == 1:
             # singleton pulsing fast path: posting inlined in the terms table
@@ -1351,7 +1326,7 @@ class Searcher:
             return self.spark.createDataFrame(
                 [(st.singleton_doc_id, score)], MATCH_SCHEMA
             )
-        return self.decode_scored({q.term: scorer})
+        return scored_postings(self._postings_for([q.term]), {q.term: scorer})
 
     def _eval_blended(self, q: BlendedTermQuery) -> DataFrame:
         """BlendedTermQuery (core/search/BlendedTermQuery.java:271-300):
@@ -3228,23 +3203,9 @@ class Searcher:
         cap; the 1024 cap applies only to scoring boolean rewrites, where
         the reference throws TooManyClauses (see expand_terms)."""
         matching = self._terms_scan(q).filter(self._multi_term_cond(q)).select("term")
-        docs = self._decode_docs_for(matching)
+        # no driver round-trip; AQE picks broadcast vs shuffle join
+        docs = matching_docs(self.index.postings.join(matching, "term", "left_semi"))
         return docs.withColumn("score", F.lit(float(np.float32(q.boost))))
-
-    def _decode_docs_for(self, terms_df: DataFrame) -> DataFrame:
-        """Distinct matching doc_ids for a (possibly large) DataFrame of
-        terms — no driver round-trip; AQE picks broadcast vs shuffle join."""
-
-        def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                outs = [
-                    codec.decode_block_docs(r) for r in pdf.itertuples(index=False)
-                ]
-                if outs:
-                    yield pd.DataFrame({"doc_id": np.concatenate(outs)})
-
-        blocks = self.index.postings.join(terms_df, "term", "left_semi")
-        return blocks.mapInPandas(run, schema="doc_id long").distinct()
 
     def _regexp_derivative_cond(self, pattern: str):
         """Terms-dictionary predicate for Lucene RegExp patterns with

@@ -94,3 +94,39 @@ def test_duplicate_doc_id_rejected(spark, eager):
         build_index(df, IndexConfig(seg_size=8), content_col="text",
                     doc_id_col="doc_id", num_partitions=3,
                     auto_seg_size=False, eager=eager)
+
+
+def test_unpersist_releases_everything_an_index_pins(spark):
+    # eager builds pin their fused output as a local checkpoint, which
+    # DataFrame.unpersist cannot release, and an appended index is a union
+    # over the delta's tables: unpersist() must reach all of them
+    from pyspark.sql import functions as F
+
+    from lucene_spark.merge import append_documents
+
+    sc = spark.sparkContext
+    corpus = generate_corpus(spark, 300, num_partitions=4).persist()
+    batch = generate_corpus(spark, 60, seed=5, num_partitions=2).withColumn(
+        "did", F.regexp_extract("path", r"file(\d+)", 1).cast("long")
+    ).persist()
+    corpus.count(), batch.count()
+
+    def pinned():
+        return sc._jsc.getPersistentRDDs().size()
+
+    start = pinned()
+    cfg = IndexConfig(chain="code", with_positions=True)
+    for eager in (True, True, False):
+        build_index(corpus, cfg, order_cols=["repo", "path"], eager=eager).unpersist()
+        assert pinned() == start
+    base = build_index(corpus, cfg, order_cols=["repo", "path"], eager=True)
+    base_pins = pinned()
+    for kw in ({"doc_id_col": "did"}, {"order_cols": ["repo", "path"]}):
+        grown = append_documents(base, batch, **kw)
+        assert grown.stats.doc_count == 360
+        grown.unpersist()
+        assert pinned() == base_pins
+    base.unpersist()
+    assert pinned() == start
+    corpus.unpersist()
+    batch.unpersist()

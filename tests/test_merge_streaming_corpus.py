@@ -68,6 +68,69 @@ def test_merge_preserves_results(spark, built, corpus):
     merged.postings.unpersist()
 
 
+def _reference_postings(pdf, with_positions):
+    """Every posting of a postings block frame as (term, doc, freq, norm,
+    positions), decoded row by row with the per-row codec reference."""
+    from lucene_spark import codec
+
+    out = []
+    for row in pdf.itertuples(index=False):
+        docs, freqs, norms = codec.decode_block_row(row)
+        if with_positions:
+            pos = codec.decode_positions(bytes(row.pos_enc), freqs)
+            lists = [tuple(p.tolist()) for p in np.split(pos, np.cumsum(freqs)[:-1])]
+        else:
+            lists = [None] * len(docs)
+        out += [(row.term, int(d), int(f), int(n), p)
+                for d, f, n, p in zip(docs, freqs, norms, lists)]
+    return sorted(out)
+
+
+@pytest.fixture(scope="module", params=[False, True], ids=["freqs", "positions"])
+def to_merge(request, spark):
+    texts = make_corpus(400, VOCAB, seed=5, min_len=2, max_len=30)
+    df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, content string")
+    cfg = IndexConfig(seg_size=64, with_positions=request.param)
+    idx = build_index(df, cfg, doc_id_col="doc_id", auto_seg_size=False, eager=True)
+    yield idx
+    idx.unpersist()
+
+
+@pytest.mark.parametrize("drop_deletes", [False, True])
+def test_merge_segments_keeps_every_posting(spark, to_merge, drop_deletes):
+    """A merge re-blocks the input's postings, minus the deleted docs when
+    it drops deletes, into whole 128-posting blocks inside the new
+    segments."""
+    positions = to_merge.config.with_positions
+    deleted = set(range(3, 400, 7))
+    target = 256
+    merged = merge_segments(to_merge.delete_docs(sorted(deleted)),
+                            target_seg_size=target, drop_deletes=drop_deletes)
+    want = _reference_postings(to_merge.postings.toPandas(), positions)
+    if drop_deletes:
+        want = [p for p in want if p[1] not in deleted]
+        assert merged.deletes is None
+    else:
+        assert merged.deletes is not None
+    pdf = merged.postings.toPandas()
+    assert _reference_postings(pdf, positions) == want
+
+    from lucene_spark import codec
+
+    size = to_merge.config.block_size
+    assert size == codec.BLOCK_SIZE
+    for (term, seg), g in pdf.groupby(["term", "segment_id"]):
+        g = g.sort_values("block_id")
+        assert g["block_id"].tolist() == list(range(len(g)))
+        counts = g["count"].tolist()
+        assert all(c == size for c in counts[:-1]) and 1 <= counts[-1] <= size
+        # blocks chain: each starts past the previous one's last doc
+        assert g["base_doc"].tolist() == [-1] + g["last_doc"].tolist()[:-1]
+        for row in g.itertuples(index=False):
+            docs = codec.decode_block_row(row)[0]
+            assert (docs // target == seg).all()
+
+
 def test_merge_keeps_analysis_config(spark):
     """merge_segments keeps every analysis option, so docs appended after a
     merge are analyzed like the base ones (synonyms included)."""

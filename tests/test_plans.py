@@ -66,12 +66,13 @@ def test_block_key_join_is_broadcast(written, monkeypatch):
     monkeypatch.setenv("LUCENE_SPARK_DRIVER_META_MAX", "0")  # distributed path
     s = Searcher(written, dtype=np.float32)
     from lucene_spark import prune
+    from lucene_spark.search import scored_postings
 
     scorers = {
         "def": s.scorer_for(1.0, s.term_stats(["def"])["def"]),
     }
     meta = prune._block_bounds(s, scorers)
-    joined = prune._decode_blocks_scored(s, meta, scorers)
+    joined = scored_postings(prune._blocks_for_keys(s, meta, scorers), scorers)
     plan = _plan(joined)
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
 

@@ -117,15 +117,18 @@ def main() -> None:
         queries[name] = round(statistics.median(times), 4)
 
     # ---- 3b. distributed-tier latency (hot driver cache OFF) ----
-    # the 100-TB serving story rests on the distributed WAND tier; time it
-    # explicitly so the round-over-round bench tracks the path a 1000-executor
-    # cluster would actually run (driver caches can't hold a 100-TB index)
+    # the 100-TB serving story rests on the WAND tier: per-term metadata on
+    # the driver, the blocks distributed, the WAND test inline in the decode
+    # scanner. Time it explicitly so the round-over-round bench tracks the
+    # path a 1000-executor cluster would actually run (driver caches can't
+    # hold a 100-TB index). Until the driver-bounds WAND tier was deleted,
+    # bm25_or3_distributed timed that tier instead.
     prev_hot = os.environ.get("LUCENE_SPARK_HOT_CACHE_POSTINGS")
     os.environ["LUCENE_SPARK_HOT_CACHE_POSTINGS"] = "0"
     try:
         dsearcher = Searcher(idx, dtype=np.float32, preload_stats=True)
         dq = qset["bm25_or3"]
-        dsearcher.top_docs(dq, 10)  # warm: bounds fetch + codegen
+        dsearcher.top_docs(dq, 10)  # warm: per-term metadata fetch + codegen
         times = []
         for _ in range(reps):
             t0 = time.time()

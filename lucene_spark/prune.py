@@ -2,10 +2,14 @@
 the reference's impact machinery (SURVEY.md §4.3):
 
 - per-block upper bound ub(t, block) = max score over the block's competitive
-  impacts — MaxScoreCache.computeMaxScore (search/MaxScoreCache.java:58-64)
-- θ = a valid lower bound on the k-th best score, from exactly scoring the
-  most promising block per term — plays setMinCompetitiveScore
-  (search/TopScoreDocCollector.java:320-339)
+  impacts — MaxScoreCache.computeMaxScore (search/MaxScoreCache.java:58-64),
+  computed by one kernel (_block_bound_fn) for the block test and the
+  per-term metadata alike
+- θ = a valid lower bound on the k-th best score — plays
+  setMinCompetitiveScore (search/TopScoreDocCollector.java:320-339). It
+  comes from the previous exact k-th score of the same query (θ cache),
+  else from the top achieved block scores of one term (no job), else from
+  exactly scoring the most promising block per term (the probe)
 - prune rule: keep block b of term t iff
       ub(t, b) + Σ_{t' ≠ t} global_max(t') ≥ θ
   (the WAND condition, search/WANDScorer.java:30-53); every block containing
@@ -13,6 +17,11 @@ the reference's impact machinery (SURVEY.md §4.3):
   term, so all true top-k docs are scored exactly; pruned-away docs can only
   be under-scored and their exact score is < θ ≤ k-th — soundness does not
   depend on θ quality, only speed does.
+
+The per-term metadata (global max, top achieved scores, probe block key)
+is a few hundred bytes per term, fetched in one job and cached on the
+driver; the blocks stay distributed and the WAND test runs inline in the
+decode scanner, before any posting is decoded.
 
 Applies to: single terms, flat OR-of-terms (WANDScorer case), flat
 AND-of-terms (BlockMaxConjunctionScorer case, Boolean2ScorerSupplier.java:202-207).
@@ -107,63 +116,38 @@ def try_pruned_topk_rows(searcher, q: Query, k: int):
         scorers[tq.term] = searcher.scorer_for(tq.boost, st)
         boosts[tq.term] = float(tq.boost)
 
-    driver = _topk_driver_wand(searcher, scorers, boosts, k, mode, terms)
-    if driver is not _TOO_BIG:
-        return driver
-
-    return _topk_distributed_wand(searcher, scorers, boosts, k, mode, terms)
+    return _topk_wand(searcher, scorers, boosts, k, mode, terms)
 
 
 _DIST_ACH_TOPK = 128          # achieved scores kept per term in the meta cache
 _DIST_META_CACHE_MAX = 65536  # cached per-(term, boost) metadata entries
+_THETA_CACHE_MAX = 512        # cached per-query exact k-th scores per searcher
 
 
 def _dist_term_meta(searcher, scorers: Dict[str, BM25Scorer], boosts) -> dict:
     """Per-term WAND metadata — gmax, the top achieved block scores, the
-    probe block key, the block count — fetched in ONE aggregation job for all
-    missing terms and cached on the driver. A few hundred bytes per term
-    regardless of index size: the distributed tier keeps the BLOCKS
-    distributed but the per-term summary driver-resident, exactly like
-    Lucene's memory-resident term dictionary fronting on-disk postings."""
+    probe block key, the block count — fetched in ONE job for all missing
+    terms and cached on the driver. A few hundred bytes per term regardless
+    of index size: the blocks stay distributed but the per-term summary is
+    driver-resident, exactly like Lucene's memory-resident term dictionary
+    fronting on-disk postings."""
     cache = searcher._dist_meta_cache
     missing = [t for t in scorers if (t, boosts[t]) not in cache]
     if missing:
-        from pyspark.sql.window import Window
-
-        mb = _block_bounds(searcher, {t: scorers[t] for t in missing})
-        w = Window.partitionBy("term").orderBy(
-            F.desc("ach"), F.asc("segment_id"), F.asc("block_id")
-        )
-        fetched = (
-            mb.withColumn("rn", F.row_number().over(w))
-            .groupBy("term")
-            .agg(
-                F.max("ub").alias("gmax"),
-                F.count("*").alias("nblocks"),
-                # top achieved scores, bounded per group (collect_list skips
-                # the NULLs the `when` leaves on rows past the cutoff)
-                F.reverse(
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(F.col("rn") <= _DIST_ACH_TOPK, F.col("ach"))
-                        )
-                    )
-                ).alias("top_ach"),
-                F.max_by(
-                    F.struct("segment_id", "block_id"),
-                    F.struct(F.col("ub"), -F.col("segment_id"), -F.col("block_id")),
-                ).alias("probe"),
-            )
-            .collect()
-        )
-        for r in fetched:
+        parts: Dict[str, list] = {}
+        for r in _block_summaries(searcher, {t: scorers[t] for t in missing}).collect():
+            parts.setdefault(r["term"], []).append(r)
+        for t, rs in parts.items():
+            best = max(rs, key=lambda r: (r["gmax"], -r["segment_id"], -r["block_id"]))
             if len(cache) >= _DIST_META_CACHE_MAX:
                 cache.pop(next(iter(cache)))
-            cache[(r["term"], boosts[r["term"]])] = {
-                "gmax": float(r["gmax"]),
-                "nblocks": int(r["nblocks"]),
-                "top_ach": [float(x) for x in r["top_ach"]],
-                "probe": (int(r["probe"]["segment_id"]), int(r["probe"]["block_id"])),
+            cache[(t, boosts[t])] = {
+                "gmax": float(best["gmax"]),
+                "nblocks": sum(int(r["nblocks"]) for r in rs),
+                "top_ach": sorted(
+                    (float(a) for r in rs for a in r["top_ach"]), reverse=True
+                )[:_DIST_ACH_TOPK],
+                "probe": (int(best["segment_id"]), int(best["block_id"])),
             }
         for t in missing:  # terms with no blocks (defensive)
             cache.setdefault(
@@ -173,14 +157,14 @@ def _dist_term_meta(searcher, scorers: Dict[str, BM25Scorer], boosts) -> dict:
     return {t: cache[(t, boosts[t])] for t in scorers}
 
 
-def _topk_distributed_wand(
+def _topk_wand(
     searcher, scorers: Dict[str, BM25Scorer], boosts, k: int, mode: str,
     terms: List[str],
 ) -> list:
-    """Distributed block-max WAND: per-term driver metadata (one cached job)
-    + a single decode pass whose scanner applies the WAND condition INLINE
-    from the impacts riding on each postings row — bounds are read where the
-    block is, never joined (the skip-data-adjacent layout of
+    """Block-max WAND: per-term driver metadata (one cached job) + a single
+    decode pass whose scanner applies the WAND condition INLINE from the
+    impacts riding on each postings row — bounds are read where the block
+    is, never joined (the skip-data-adjacent layout of
     codecs/lucene912/Lucene912PostingsWriter). A warm repeated query is ONE
     Spark action; a cold one adds only the metadata job (plus, for
     conjunctions, the probe decode)."""
@@ -189,10 +173,16 @@ def _topk_distributed_wand(
     sum_gmax = sum(gmax.values())
     tkey = (mode, k, tuple(sorted(boosts.items())))
 
+    # a repeated identical query reuses its previous exact k-th score
+    # (scores are immutable given the index — still a valid lower bound)
     theta = searcher._theta_cache.get(tkey)
     if theta is None and mode == "or" and _no_deletes(searcher):
-        # impact-achieved θ (see _impact_theta_pandas): k-th best achieved
-        # score among one term's doc-disjoint blocks — no probe decode
+        # impact-achieved θ: every `ach` is at most a score a real doc of the
+        # block achieves, and one term's blocks cover disjoint doc ranges, so
+        # its k-th best `ach` certifies k DISTINCT docs whose OR score is at
+        # least that much (partial scores are non-negative). Not for
+        # conjunctions (the doc may miss another required term) or with
+        # deletes (the doc may be deleted).
         best = 0.0
         for m in meta.values():
             if m["nblocks"] >= k and len(m["top_ach"]) >= k:
@@ -200,19 +190,7 @@ def _topk_distributed_wand(
         if best > 0.0:
             theta = best
     if theta is None:
-        # probe: exactly score the single highest-ub block per term
-        probe = pd.DataFrame(
-            [
-                {"term": t, "segment_id": m["probe"][0], "block_id": m["probe"][1]}
-                for t, m in meta.items()
-                if m["probe"] is not None
-            ]
-        )
-        if len(probe):
-            probe_rows = _agg_block_keys(searcher, probe, scorers, mode, terms, k)
-            theta = float(probe_rows[-1]["score"]) if len(probe_rows) >= k else 0.0
-        else:
-            theta = 0.0
+        theta = _probe_theta(searcher, meta, scorers, mode, terms, k)
 
     rest = {t: sum_gmax - gmax[t] for t in gmax}
     scored = scored_postings(
@@ -222,26 +200,109 @@ def _topk_distributed_wand(
     rows = _topk_collect(searcher, scored, mode, terms, k)
     if len(rows) >= k:
         # exact k-th score carries over to a repeated identical query
-        # (setMinCompetitiveScore persistence across the tiers)
-        if len(searcher._theta_cache) >= _BOUNDS_CACHE_MAX:
+        # (setMinCompetitiveScore persistence across queries)
+        if len(searcher._theta_cache) >= _THETA_CACHE_MAX:
             searcher._theta_cache.pop(next(iter(searcher._theta_cache)))
         searcher._theta_cache[tkey] = float(rows[-1]["score"])
     return [(int(r["doc_id"]), float(r["score"])) for r in rows]
+
+
+def _probe_theta(
+    searcher, meta: dict, scorers: Dict[str, BM25Scorer], mode: str,
+    terms: List[str], k: int,
+) -> float:
+    """θ from exactly scoring the highest-ub block of every term: the k-th
+    best aggregated score of those docs, or 0.0 when they are fewer than k.
+    One job: the block keys become a LITERAL scan predicate (term isin +
+    composite block-key isin) — no broadcast-exchange job, and the term
+    filter still reaches the Parquet row-group stats. A key may also admit
+    another term's block with the same (segment, block) id; its docs are
+    scored exactly too, so every aggregate stays at most the doc's true
+    score and θ stays a lower bound."""
+    keys = [(t, m["probe"]) for t, m in meta.items() if m["probe"] is not None]
+    if not keys:
+        return 0.0
+    composite = (
+        F.col("segment_id").cast("long") * F.lit(1 << 32)
+        + F.col("block_id").cast("long")
+    )
+    blocks = searcher.index.postings.filter(
+        F.col("term").isin(sorted(t for t, _ in keys))
+        & composite.isin(sorted({s * (1 << 32) + b for _, (s, b) in keys}))
+    )
+    rows = _topk_collect(searcher, scored_postings(blocks, scorers), mode, terms, k)
+    return float(rows[-1]["score"]) if len(rows) >= k else 0.0
+
+
+_BOUND_SLACK = 1e-6  # of the term weight; see _block_bound_fn
+
+
+def _block_bound_fn(scorers: Dict[str, BM25Scorer]):
+    """The one block-bound kernel, shared by the WAND block test and the
+    per-term metadata: ``fn(pdf, achieved=False)`` maps a batch of postings
+    block rows (``term``, ``imp_freqs``, ``imp_norms``) to float64 ``ub``,
+    or to ``(ub, ach)`` when ``achieved``. ``ub`` bounds every score in the
+    block from above; ``ach`` is at most the score of some doc of the block
+    (impacts are ACTUAL (freq, norm) pairs of its docs —
+    codec.pareto_impacts keeps real pairs).
+
+    BM25 scorers of one similarity share the SAME inverse-norm cache; only
+    the scalar weight differs per term. Then a whole batch is one
+    vectorized float64 expression over the flattened impacts. The query
+    path scores in float32, whose result is off by at most a few float32
+    ulps of the weight, so ub is padded up and ach down by 1e-6 of the
+    weight: a larger ub only keeps more blocks, a smaller ach only weakens
+    θ. Any other scorer takes its own ``max_score`` (and the exact max of
+    its ``score``) one block row at a time."""
+    scs = list(scorers.values())
+    if scs and all(isinstance(s, BM25Scorer) for s in scs) and all(
+        s.cache is scs[0].cache or np.array_equal(s.cache, scs[0].cache)
+        for s in scs[1:]
+    ):
+        cache = np.asarray(scs[0].cache, dtype=np.float64)
+        weights = {t: float(s.weight) for t, s in scorers.items()}
+
+        def shared(pdf: pd.DataFrame, achieved: bool = False):
+            impf, impn = pdf["imp_freqs"], pdf["imp_norms"]
+            lens = np.fromiter((len(x) for x in impf), dtype=np.int64,
+                               count=len(pdf))
+            flat_f = np.concatenate(list(impf)).astype(np.float64)
+            flat_n = np.concatenate(list(impn)).astype(np.int64)
+            w = pdf["term"].map(weights).to_numpy(dtype=np.float64)
+            w_flat = np.repeat(w, lens)
+            scores = w_flat - w_flat / (1.0 + flat_f * cache[flat_n & 0xFF])
+            starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
+            mx = np.maximum.reduceat(scores, starts)
+            pad = _BOUND_SLACK * np.abs(w) + 1e-12
+            return (mx + pad, mx - pad) if achieved else mx + pad
+
+        return shared
+
+    def each(pdf: pd.DataFrame, achieved: bool = False):
+        rows = [
+            (scorers[t], np.asarray(f, dtype=np.int64), np.asarray(n, dtype=np.int64))
+            for t, f, n in zip(pdf["term"], pdf["imp_freqs"], pdf["imp_norms"])
+        ]
+        ub = np.array([sc.max_score(f, n) for sc, f, n in rows], dtype=np.float64)
+        if not achieved:
+            return ub
+        ach = np.array(
+            [float(sc.score(f, n).max()) for sc, f, n in rows], dtype=np.float64
+        )
+        return ub, ach
+
+    return each
 
 
 def _wand_block_test(
     scorers: Dict[str, BM25Scorer], rest: Dict[str, float], theta: float
 ):
     """The WAND block test, applied at the scanner before any posting
-    decode: a block row is kept unless ub + Σ_{t'≠t} gmax(t') < θ. ub(t, b)
-    comes from the block's own impact columns (same dtype as doc scoring, so
-    monotonicity makes it a true bound with no epsilon)."""
-    return lambda pdf: np.array([
-        not scorers[t].max_score(
-            np.asarray(f, dtype=np.int64), np.asarray(n, dtype=np.int64)
-        ) + rest[t] < theta
-        for t, f, n in zip(pdf["term"], pdf["imp_freqs"], pdf["imp_norms"])
-    ], dtype=bool)
+    decode: a block row is kept unless ub + Σ_{t'≠t} gmax(t') < θ."""
+    bound = _block_bound_fn(scorers)
+    return lambda pdf: (
+        bound(pdf) + pdf["term"].map(rest).to_numpy(dtype=np.float64) >= theta
+    )
 
 
 def _topk_collect(searcher, scored: DataFrame, mode: str, terms: List[str], k: int) -> list:
@@ -261,125 +322,15 @@ def _topk_collect(searcher, scored: DataFrame, mode: str, terms: List[str], k: i
     )
 
 
-_DRIVER_META_MAX = 2_000_000  # block rows; above this keep the bounds distributed
-_BOUNDS_CACHE_MAX = 512       # cached (term, boost) bound tables per searcher
-_TOO_BIG = object()  # sentinel: bounds exceed the driver cap — go distributed
-_LITERAL_KEYS_MAX = 4096  # block keys inlined as a scan predicate; above: join
+_DRIVER_META_MAX = 2_000_000  # rows a driver-side snapshot may hold
 
 
 def _driver_meta_max() -> int:
+    """Capacity of the driver-side snapshots (the tombstone set,
+    FreeTextSuggester's n-gram cache): above it they stay distributed."""
     import os
 
     return int(os.environ.get("LUCENE_SPARK_DRIVER_META_MAX", _DRIVER_META_MAX))
-
-
-def _topk_driver_wand(
-    searcher, scorers: Dict[str, BM25Scorer], boosts: Dict[str, float],
-    k: int, mode: str, terms: List[str],
-):
-    """Driver-resident WAND: the per-block upper bounds for the queried terms
-    are small (one row per 128-posting block), so — exactly like Lucene keeps
-    skip/impact data memory-resident — we pull them to the driver once
-    (cached per term), run the WAND block selection locally, and spend Spark
-    jobs only on decoding the surviving blocks: ONE job per query once
-    bounds are cached and θ comes from the impact metadata / θ-cache.
-    Returns [(doc_id, score)] rows, or _TOO_BIG if the bounds are too large
-    to collect — the distributed tier in try_pruned_topk_rows then handles
-    it."""
-    cap = _driver_meta_max()
-    if cap <= 0:
-        return _TOO_BIG
-    cache = searcher._bounds_cache
-    missing = [t for t in scorers if (t, boosts[t]) not in cache]
-    bulk = getattr(searcher, "_bounds_bulk", None)
-    if bulk is not None and missing:
-        # serve boost-1.0 lookups from the preloaded term-sorted bulk frame
-        terms_arr, frame = bulk
-        still = []
-        for t in missing:
-            if boosts[t] != 1.0:
-                still.append(t)
-                continue
-            lo = np.searchsorted(terms_arr, t, side="left")
-            hi = np.searchsorted(terms_arr, t, side="right")
-            if len(cache) >= _BOUNDS_CACHE_MAX:
-                cache.pop(next(iter(cache)))
-            cache[(t, 1.0)] = frame.iloc[lo:hi].reset_index(drop=True)
-        missing = still
-    if missing:
-        fetched = _block_bounds(searcher, {t: scorers[t] for t in missing}).toPandas()
-        if len(fetched) > cap:
-            return _TOO_BIG
-        for t, grp in fetched.groupby("term"):
-            if len(cache) >= _BOUNDS_CACHE_MAX:
-                cache.pop(next(iter(cache)))
-            cache[(t, boosts[t])] = grp.reset_index(drop=True)
-        for t in missing:  # terms with no blocks (shouldn't happen, but pin)
-            cache.setdefault((t, boosts[t]), fetched.iloc[0:0])
-    meta = pd.concat(
-        [cache[(t, boosts[t])] for t in scorers], ignore_index=True
-    )
-    if len(meta) == 0:
-        return []
-    if len(meta) > cap:
-        return _TOO_BIG
-
-    gmax = meta.groupby("term")["ub"].max().to_dict()
-    sum_gmax = sum(gmax.values())
-
-    if mode == "and" and len(scorers) > 1:
-        # BlockMaxConjunctionScorer analog: a block of t can only contribute
-        # if its doc range overlaps a block of EVERY other term. Block doc
-        # ranges are (base_doc, last_doc], disjoint and sorted within a term.
-        metas = {t: g for t, g in meta.groupby("term")}
-        keep_parts = []
-        for t, g in metas.items():
-            lo = g["base_doc"].to_numpy() + 1
-            hi = g["last_doc"].to_numpy()
-            keep = np.ones(len(g), dtype=bool)
-            for t2, g2 in metas.items():
-                if t2 == t:
-                    continue
-                order2 = np.argsort(g2["last_doc"].to_numpy())
-                hi2 = g2["last_doc"].to_numpy()[order2]
-                lo2 = (g2["base_doc"].to_numpy() + 1)[order2]
-                idx = np.searchsorted(hi2, lo, side="left")
-                ok = idx < len(hi2)
-                ok[ok] = lo2[idx[ok]] <= hi[ok]
-                keep &= ok
-            keep_parts.append(g[keep])
-        meta = pd.concat(keep_parts, ignore_index=True)
-        if len(meta) == 0:
-            return []
-
-    # theta: a repeated identical query reuses its previous exact k-th score
-    # (scores are immutable given the index — still a valid lower bound),
-    # skipping the probe job entirely.
-    tkey = (mode, k, tuple(sorted(boosts.items())))
-    theta = searcher._theta_cache.get(tkey)
-    if theta is None:
-        theta = _impact_theta_pandas(searcher, meta, k, mode)
-    if theta is None:
-        # probe: exactly score the single highest-ub block per term
-        probe_idx = (
-            meta.sort_values(["ub", "segment_id", "block_id"],
-                             ascending=[False, True, True])
-            .groupby("term", sort=False)
-            .head(1)
-        )
-        probe_rows = _agg_block_keys(searcher, probe_idx, scorers, mode, terms, k)
-        theta = float(probe_rows[-1]["score"]) if len(probe_rows) >= k else 0.0
-
-    rest = {t: sum_gmax - gmax[t] for t in gmax}
-    surviving = meta[
-        meta["ub"].to_numpy() + np.array([rest[t] for t in meta["term"]]) >= theta
-    ]
-    rows = _agg_block_keys(searcher, surviving, scorers, mode, terms, k)
-    if len(rows) >= k:
-        if len(searcher._theta_cache) >= _BOUNDS_CACHE_MAX:
-            searcher._theta_cache.pop(next(iter(searcher._theta_cache)))
-        searcher._theta_cache[tkey] = float(rows[-1]["score"])
-    return [(int(r["doc_id"]), float(r["score"])) for r in rows]
 
 
 def _no_deletes(searcher) -> bool:
@@ -389,146 +340,37 @@ def _no_deletes(searcher) -> bool:
     )
 
 
-def _impact_theta_pandas(searcher, meta: pd.DataFrame, k: int, mode: str):
-    """Probe-free θ from impact metadata alone (driver-resident frame).
-
-    Every per-block `ach` is a score ACHIEVED by a real doc (impacts are
-    actual (freq, norm) pairs). Blocks of one term cover disjoint doc-id
-    ranges, so the k-th largest `ach` among one term's blocks certifies k
-    DISTINCT docs whose full OR score is at least that value (per-term
-    score ≤ summed score; BM25 partials are non-negative) — a valid lower
-    bound on the true k-th score, with zero Spark jobs. Invalid when the
-    achieving doc might be deleted, or for conjunctions (the achieving doc
-    may not match the other required terms). Returns None when inapplicable
-    (caller falls back to the probe decode)."""
-    if mode != "or" or "ach" not in meta.columns or not _no_deletes(searcher):
-        return None
-    best = 0.0
-    for _, g in meta.groupby("term", sort=False):
-        a = g["ach"].to_numpy()
-        if len(a) >= k:
-            kth = float(np.partition(a, len(a) - k)[len(a) - k])
-            if kth > best:
-                best = kth
-    return best if best > 0.0 else None
-
-
-def _agg_block_keys(
-    searcher, keys: pd.DataFrame, scorers: Dict[str, BM25Scorer],
-    mode: str, terms: List[str], k: int,
-) -> list:
-    """Decode + score the blocks named by a (term, segment_id, block_id)
-    pandas key set, aggregate per doc IN SPARK, and collect only the top-k
-    (ties by ascending doc_id, TopScoreDocCollector.java:27-29). One job:
-    the driver-resident keys become a LITERAL scan predicate (term isin +
-    composite block-key isin) — no broadcast-exchange job, and the term
-    filter still reaches the Parquet row-group stats."""
-    if len(keys) <= _LITERAL_KEYS_MAX:
-        composite = (
-            F.col("segment_id").cast("long") * F.lit(1 << 32)
-            + F.col("block_id").cast("long")
-        )
-        key_vals = [
-            int(s) * (1 << 32) + int(b)
-            for s, b in zip(keys["segment_id"], keys["block_id"])
-        ]
-        blocks = searcher.index.postings.filter(
-            F.col("term").isin(sorted(set(keys["term"])))
-            & composite.isin(key_vals)
-        )
-    else:
-        keys_df = searcher.spark.createDataFrame(
-            keys[["term", "segment_id", "block_id"]]
-        )
-        blocks = _blocks_for_keys(searcher, keys_df, scorers)
-    scored = scored_postings(blocks, scorers)
-    return _topk_collect(searcher, scored, mode, terms, k)
-
-
-def _block_bounds(
-    searcher, scorers: Dict[str, BM25Scorer], filter_terms: bool = True
-) -> DataFrame:
-    """Postings block metadata + ub column (one vectorized pass over impacts)."""
-    scorer_map = scorers
-
-    # every BM25Scorer of one similarity shares the SAME inverse-norm cache;
-    # only the scalar weight differs per term. When that holds (the default
-    # BM25 case), a whole batch of bounds is one vectorized expression.
-    from .bm25 import BM25Scorer
-
-    shared_cache = None
-    weights = None
-    scs = list(scorer_map.values())
-    if scs and all(isinstance(s, BM25Scorer) for s in scs) and all(
-        s.cache is scs[0].cache or np.array_equal(s.cache, scs[0].cache)
-        for s in scs[1:]
-    ):
-        shared_cache = np.asarray(scs[0].cache, dtype=np.float64)
-        weights = {t: float(s.weight) for t, s in scorer_map.items()}
+def _block_summaries(searcher, scorers: Dict[str, BM25Scorer]) -> DataFrame:
+    """Per Arrow batch and queried term, a partial summary of the term's
+    postings blocks (one _block_bound_fn pass): the max ub (gmax), the block
+    count, the top achieved scores, and the key of the max-ub block (lowest
+    (segment, block) on ties). No shuffle — postings are term-major, so a
+    term has a few partials, which the driver merges."""
+    bound = _block_bound_fn(scorers)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            ubs = np.empty(len(pdf), dtype=np.float64)
-            achs = np.empty(len(pdf), dtype=np.float64)
-            impf_col = pdf["imp_freqs"]
-            impn_col = pdf["imp_norms"]
-            if shared_cache is not None:
-                lens = np.fromiter((len(x) for x in impf_col), dtype=np.int64,
-                                   count=len(pdf))
-                flat_f = np.concatenate(list(impf_col)).astype(np.float64)
-                flat_n = np.concatenate(list(impn_col)).astype(np.int64)
-                w = pdf["term"].map(weights).to_numpy(dtype=np.float64)
-                w_flat = np.repeat(w, lens)
-                inv = shared_cache[flat_n & 0xFF]
-                scores = w_flat - w_flat / (1.0 + flat_f * inv)
-                starts = np.concatenate(([0], np.cumsum(lens)[:-1]))
-                mx = np.maximum.reduceat(scores, starts)
-                # f64 formula vs the query path's f32 scores: inflate a hair
-                # so the bound stays an upper bound across rounding modes
-                ubs = mx * (1.0 + 1e-6) + 1e-12
-                # impacts are ACTUAL (freq, norm) pairs of docs in the block
-                # (pareto_impacts keeps real pairs), so the block max is an
-                # ACHIEVED score: deflated a hair, it is a sound per-doc
-                # LOWER bound usable as θ without any probe decode
-                achs = mx * (1.0 - 1e-6) - 1e-12
-            else:
-                for i, (term, impf, impn) in enumerate(
-                    zip(pdf["term"], impf_col, impn_col)
-                ):
-                    impf = np.asarray(impf, dtype=np.int64)
-                    impn = np.asarray(impn, dtype=np.int64)
-                    ubs[i] = scorer_map[term].max_score(impf, impn)
-                    # exact query-path score of the best achieved pair
-                    achs[i] = float(scorer_map[term].score(impf, impn).max())
-            out = pdf[["term", "segment_id", "block_id", "base_doc", "last_doc"]].copy()
-            out["ub"] = ubs
-            out["ach"] = achs
-            yield out
+            ub, ach = bound(pdf, achieved=True)
+            seg = pdf["segment_id"].to_numpy()
+            blk = pdf["block_id"].to_numpy()
+            rows = []
+            for t, at in pdf.groupby("term", sort=False).indices.items():
+                best = at[np.lexsort((blk[at], seg[at], -ub[at]))[0]]
+                rows.append((t, ub[best], len(at),
+                             np.sort(ach[at])[::-1][:_DIST_ACH_TOPK],
+                             seg[best], blk[best]))
+            yield pd.DataFrame(rows, columns=[
+                "term", "gmax", "nblocks", "top_ach", "segment_id", "block_id"
+            ])
 
-    src = searcher.index.postings
-    if filter_terms:
-        src = src.filter(F.col("term").isin(list(scorers)))
     return (
-        src
-        .select("term", "segment_id", "block_id", "base_doc", "last_doc",
-                "imp_freqs", "imp_norms")
+        searcher.index.postings.filter(F.col("term").isin(list(scorers)))
+        .select("term", "segment_id", "block_id", "imp_freqs", "imp_norms")
         .mapInPandas(
             run,
-            schema="term string, segment_id int, block_id int, "
-                   "base_doc long, last_doc long, ub double, ach double",
+            schema="term string, gmax double, nblocks long, "
+                   "top_ach array<double>, segment_id int, block_id int",
         )
-    )
-
-
-def _blocks_for_keys(
-    searcher, block_keys: DataFrame, scorers: Dict[str, BM25Scorer]
-) -> DataFrame:
-    """The postings block rows named by a (term, segment_id, block_id) key
-    frame: a semi join against the broadcast keys."""
-    return searcher.index.postings.filter(F.col("term").isin(list(scorers))).join(
-        F.broadcast(block_keys.select("term", "segment_id", "block_id")),
-        ["term", "segment_id", "block_id"],
-        "left_semi",
     )

@@ -92,7 +92,7 @@ def _map_blocks(blocks: DataFrame, schema: str, frame, positions=False, keep=Non
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if keep is not None:
+            if keep is not None and len(pdf):
                 pdf = pdf[keep(pdf)]
             if len(pdf):
                 yield frame(pdf, codec.decode_blocks(pdf, positions))
@@ -398,16 +398,12 @@ class Searcher:
                 )
                 for r in self.index.terms.collect()
             }
-        # per-(term, boost) block-bounds cache for the pruned path (the
-        # MaxScoreCache analog, search/MaxScoreCache.java:58-115); optionally
-        # backed by a bulk preloaded frame (preload_bounds)
-        self._bounds_cache: Dict[Tuple[str, float], "pd.DataFrame"] = {}
-        self._bounds_bulk: Optional[tuple] = None
-        # per-query exact k-th-score cache (minCompetitiveScore carry-over)
+        # WAND (prune.py) driver caches: the per-query exact k-th score
+        # (minCompetitiveScore carry-over), and per-(term, boost) metadata
+        # (gmax / top achieved block scores / probe block key), a few hundred
+        # bytes per term whatever the index size — the MaxScoreCache analog
+        # (search/MaxScoreCache.java:58-115) without the per-block bounds
         self._theta_cache: Dict[tuple, float] = {}
-        # distributed-tier per-(term, boost) WAND metadata (gmax / top
-        # achieved scores / probe block key) — tiny per entry, so it stays
-        # driver-resident even when the block bounds themselves don't
         self._dist_meta_cache: Dict[tuple, dict] = {}
         # transient block-metadata predicate for sorted early termination
         self._block_pred = None
@@ -476,39 +472,6 @@ class Searcher:
                 )
             else:
                 self._tombs_over_cap = True
-
-    def preload_bounds(self, terms: Optional[Sequence[str]] = None) -> int:
-        """Bulk-warm the driver block-bounds cache (boost 1.0) — the analog
-        of Lucene opening/mmapping skip+impact data up front. One Spark job
-        for the whole term set; afterwards first-time WAND queries need a
-        single decode job. Returns the number of block rows cached.
-        Requires preloaded stats when ``terms`` is None."""
-        from .prune import _block_bounds, _driver_meta_max
-
-        if terms is None:
-            if self._stats_cache is None:
-                raise ValueError("preload_bounds() without terms needs preload_stats=True")
-            terms = list(self._stats_cache)
-        stats = self.term_stats(list(terms))
-        scorers = {t: self.scorer_for(1.0, st) for t, st in stats.items()}
-        if not scorers:
-            return 0
-        all_terms = self._stats_cache is not None and len(scorers) == len(
-            self._stats_cache
-        )
-        fetched = _block_bounds(
-            self, scorers, filter_terms=not all_terms
-        ).toPandas()
-        if len(fetched) > _driver_meta_max():
-            raise ValueError(
-                f"bounds ({len(fetched)} blocks) exceed LUCENE_SPARK_DRIVER_META_MAX"
-            )
-        # one term-sorted bulk frame; per-term views are sliced lazily at
-        # query time (materializing 10^5 tiny frames up front is the slow
-        # part, not the Spark job)
-        fetched = fetched.sort_values("term", kind="mergesort").reset_index(drop=True)
-        self._bounds_bulk = (fetched["term"].to_numpy(), fetched)
-        return len(fetched)
 
     def _apply_deletes(self, df: DataFrame) -> DataFrame:
         for tomb in (self.index.deletes, getattr(self.index, "soft_deletes", None)):
@@ -1357,28 +1320,7 @@ class Searcher:
             )
             for t, b in present
         }
-        raw = self.decode_raw(sorted(scorers))
-
-        @F.pandas_udf("double")
-        def blended_score(
-            term: pd.Series, freq: pd.Series, norm: pd.Series
-        ) -> pd.Series:
-            tarr = term.to_numpy(dtype=object)
-            f = freq.to_numpy(np.float64)
-            nb = norm.to_numpy(np.int64)
-            out = np.zeros(len(tarr), dtype=np.float64)
-            for t, sc in scorers.items():
-                mask = tarr == t
-                if mask.any():
-                    out[mask] = sc.score(f[mask], nb[mask]).astype(np.float64)
-            return pd.Series(out)
-
-        u = raw.select(
-            "doc_id",
-            blended_score(F.col("term"), F.col("freq"), F.col("norm")).alias(
-                "score"
-            ),
-        )
+        u = scored_postings(self._postings_for(sorted(scorers)), scorers)
         if q.rewrite == "boolean":
             agg = u.groupBy("doc_id").agg(F.sum("score").alias("score"))
             score = F.col("score")

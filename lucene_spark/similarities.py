@@ -247,7 +247,9 @@ class _ConstScorer:
         return np.full(len(np.asarray(freq)), self.dtype(self.weight), dtype=self.dtype)
 
     def max_score(self, impact_freqs, impact_norms):
-        return float(self.weight)
+        # the weight as score() returns it: float32(0.3) rounds UP, so the
+        # raw float would sit below every score and WAND would prune all
+        return float(self.dtype(self.weight))
 
 
 class Boolean(Similarity):

@@ -253,8 +253,8 @@ def test_hot_cache_never_evicts_current_query_terms(searcher, oracle, monkeypatc
 
 
 def test_pruned_distributed_fallback(searcher, oracle, monkeypatch):
-    # force the distributed WAND path (driver bounds cap = 0 disables the
-    # driver-resident fast path) and assert identical top-k
+    # WAND with every driver snapshot capped at 0 rows: the per-term
+    # metadata is the only driver state it needs; identical top-k
     monkeypatch.setenv("LUCENE_SPARK_DRIVER_META_MAX", "0")
     q = bool_query(should=[TermQuery(term=t) for t in ["the", "spark", "merge"]])
     exp = BruteForceIndex.topk(oracle.score_bool(should=["the", "spark", "merge"]), 10)
@@ -266,12 +266,13 @@ def test_pruned_distributed_fallback(searcher, oracle, monkeypatch):
 
 @pytest.mark.parametrize("driver_cap", ["2000000", "0"])
 def test_warm_wand_job_count(built, oracle, spark, monkeypatch, driver_cap):
-    """A warm repeated top-k on the WAND tiers spends at most 2 Spark jobs
+    """A warm repeated top-k on the WAND tier spends at most 2 Spark jobs
     (one action; AQE materializes the shuffle stage as its own job). This is
     the 100-TB serving contract: per query, one decode+agg pass over the
-    postings — bounds, θ, and term stats all come from driver caches.
-    driver_cap="0" forces the fully distributed tier (bounds never
-    collected; the WAND test runs inline in the decode scanner)."""
+    postings, with the WAND test inline in the decode scanner — per-term
+    metadata, θ, and term stats all come from driver caches.
+    driver_cap="0" caps every driver-side snapshot at 0 rows; the job count
+    must not depend on it."""
     monkeypatch.setenv("LUCENE_SPARK_DRIVER_META_MAX", driver_cap)
     s = Searcher(built, dtype=np.float32, preload_stats=True)
     q = bool_query(should=[TermQuery(term=t) for t in ["the", "spark", "merge"]])
@@ -281,7 +282,7 @@ def test_warm_wand_job_count(built, oracle, spark, monkeypatch, driver_cap):
         st = spark.sparkContext.statusTracker()
         return set(st.getJobIdsForGroup(None) or [])
 
-    s.top_docs(q, 10)  # cold: bounds/meta fetch + θ
+    s.top_docs(q, 10)  # cold: metadata fetch + θ
     s.top_docs(q, 10)
     before = job_ids()
     got = s.top_docs(q, 10)
@@ -560,27 +561,6 @@ def test_check_index_tool(built):
 
     with _pytest.raises(ValueError, match="CollectionStats"):
         check_index(broken, deep=False)
-
-
-def test_preload_bounds_first_query_identical(spark, corpus, oracle, monkeypatch):
-    from lucene_spark.build import IndexConfig, build_index
-
-    cfg = IndexConfig(seg_size=64, block_size=16, with_positions=True)
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(corpus)], "doc_id long, content string"
-    )
-    idx = build_index(df, cfg, doc_id_col="doc_id", eager=True)
-    s = Searcher(idx, dtype=np.float32, preload_stats=True)
-    n = s.preload_bounds()
-    assert n > 0 and s._bounds_bulk is not None and len(s._bounds_bulk[1]) == n
-    # first-ever query uses only preloaded bounds; results identical
-    for term in ("the", "spark", "rarez"):
-        exp = BruteForceIndex.topk(oracle.score_term(term), 10)
-        assert_topk_equal(s.search(TermQuery(term=term), 10, prune=True), exp)
-    q = bool_query(should=[TermQuery(term=t) for t in ("the", "spark", "merge")])
-    exp = BruteForceIndex.topk(oracle.score_bool(should=["the", "spark", "merge"]), 10)
-    assert_topk_equal(s.search(q, 10, prune=True), exp)
-    idx.unpersist()
 
 
 def test_search_after_pages_are_contiguous(searcher, oracle):

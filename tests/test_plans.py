@@ -61,22 +61,6 @@ def test_matchall_count_has_no_python(written):
     assert "codegen id" in plan  # inside a whole-stage codegen span
 
 
-def test_block_key_join_is_broadcast(written, monkeypatch):
-    # the surviving-blocks join of the pruned path must broadcast the keys
-    monkeypatch.setenv("LUCENE_SPARK_DRIVER_META_MAX", "0")  # distributed path
-    s = Searcher(written, dtype=np.float32)
-    from lucene_spark import prune
-    from lucene_spark.search import scored_postings
-
-    scorers = {
-        "def": s.scorer_for(1.0, s.term_stats(["def"])["def"]),
-    }
-    meta = prune._block_bounds(s, scorers)
-    joined = scored_postings(prune._blocks_for_keys(s, meta, scorers), scorers)
-    plan = _plan(joined)
-    assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
-
-
 def test_boolean_agg_is_partial_aggregated(written):
     # MUST-of-terms evaluates as groupBy(doc).sum — partial (map-side)
     # aggregation must appear before the exchange

@@ -492,7 +492,7 @@ def _segment_writer_fn(config: IndexConfig):
                 d = docs_s[b0:b1]
                 f = freqs_s[b0:b1]
                 n = norms_s[b0:b1]
-                base = int(docs_s[b0 - 1]) if b0 > b0g else -1
+                base = int(docs_s[b0 - 1] if b0 > b0g else d[0] - 1)
                 imp_f, imp_n = codec.pareto_impacts(f, n)
                 if with_pos:
                     pos_enc = codec.encode_positions(np.concatenate(pos_s[b0:b1]), f)

@@ -121,6 +121,8 @@ def delta_encode_docs(doc_ids: np.ndarray, base_doc: int) -> bytes:
     deltas = np.diff(np.concatenate(([base_doc], doc_ids.astype(np.int64))))
     if np.any(deltas <= 0):
         raise ValueError("doc_ids must be strictly increasing past base_doc")
+    if np.any(deltas > 1 << 32):
+        raise ValueError("doc_id gap does not fit a uint32 delta")
     return for_encode((deltas - 1).astype(np.uint32))
 
 

@@ -23,99 +23,117 @@ is a few hundred bytes per term, fetched in one job and cached on the
 driver; the blocks stay distributed and the WAND test runs inline in the
 decode scanner, before any posting is decoded.
 
-Applies to: single terms, flat OR-of-terms (WANDScorer case), flat
-AND-of-terms (BlockMaxConjunctionScorer case, Boolean2ScorerSupplier.java:202-207).
-Equivalence with the unpruned path is asserted by tests on every query shape
-(SearchEquivalenceTestBase style).
+The tier choice is Searcher.plan's: it rewrites the query once and runs
+the one hot → WAND → _eval fall-through that search, top_docs and
+search_after share. This module holds the shape table both fast tiers read
+(_flat_term_clauses: term, flat OR, flat AND, dismax, blended, synonym and
+phrase). WAND serves single terms, flat OR-of-terms (WANDScorer case) and
+flat AND-of-terms (BlockMaxConjunctionScorer case,
+Boolean2ScorerSupplier.java:202-207); the planner does not call it for the
+other shapes. Equivalence with the unpruned path is asserted by tests on
+every query shape (SearchEquivalenceTestBase style).
 """
 
 from __future__ import annotations
 
-from typing import Dict, Iterator, List, Optional, Tuple
+import os
+from typing import Dict, Iterator, List, NamedTuple, Optional, Tuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .bm25 import BM25Scorer
-from .query import BooleanQuery, Occur, Query, TermQuery
+from .query import (
+    BlendedTermQuery,
+    BooleanQuery,
+    DisjunctionMaxQuery,
+    Occur,
+    PhraseQuery,
+    Query,
+    SynonymQuery,
+    TermQuery,
+)
 from .search import scored_postings
 
 
-def _flat_term_clauses(q: Query) -> Optional[Tuple[str, List[TermQuery], int]]:
-    """Recognize shapes the pruned executor handles:
-    ('or', terms, msm) | ('and', terms, 0) | single term."""
+class Shape(NamedTuple):
+    """A query the hot and WAND tiers serve, reduced to its flat term clauses
+    and the way their per-term scores combine (see _flat_term_clauses)."""
+
+    kind: str  # or | and | dismax | blended | synonym | phrase
+    terms: Tuple[str, ...]
+    boosts: Tuple[float, ...]  # each term's own boost
+    query: Query
+    tie: Optional[float] = None  # max + tie × (sum − max); None = plain sum
+    boost: float = 1.0  # the outer boost, applied after the combine
+
+
+def _flat_term_clauses(q: Query) -> Optional[Shape]:
+    """The one query-shape table of the hot and WAND tiers: each shape they
+    serve is recognized here, once, as flat term clauses plus a combine —
+    ``or`` / ``and`` (sum over the union / the intersection; a single term
+    is a one-clause ``or``), ``dismax`` and ``blended`` (max + tie ×
+    (sum − max), or sum for a boolean-rewrite blend, then the outer boost),
+    ``synonym`` (tf summed per doc before it scores) and ``phrase``
+    (positional). WAND prunes ``or`` and ``and`` only. None = any other
+    shape, which only the exhaustive _eval serves."""
     if isinstance(q, TermQuery):
-        return ("or", [q], 1)
+        return Shape("or", (q.term,), (q.boost,), q)
     if isinstance(q, BooleanQuery):
-        occurs = {c.occur for c in q.clauses}
-        if q.boost != 1.0:
+        tqs = [c.query for c in q.clauses]
+        if q.boost != 1.0 or not all(isinstance(tq, TermQuery) for tq in tqs):
             return None
-        if not all(isinstance(c.query, TermQuery) for c in q.clauses):
+        terms = tuple(tq.term for tq in tqs)
+        occurs = {c.occur for c in q.clauses}
+        if len(set(terms)) < len(terms):  # a repeated term
             return None
         if occurs == {Occur.SHOULD} and q.minimum_should_match <= 1:
-            return ("or", [c.query for c in q.clauses], 1)
+            return Shape("or", terms, tuple(tq.boost for tq in tqs), q)
         if occurs == {Occur.MUST} and q.minimum_should_match == 0:
-            return ("and", [c.query for c in q.clauses], 0)
+            return Shape("and", terms, tuple(tq.boost for tq in tqs), q)
+        return None
+    if isinstance(q, DisjunctionMaxQuery):
+        if not q.disjuncts or not all(isinstance(d, TermQuery) for d in q.disjuncts):
+            return None
+        return Shape("dismax", tuple(d.term for d in q.disjuncts),
+                     tuple(d.boost for d in q.disjuncts), q,
+                     float(q.tie_breaker), float(q.boost))
+    if isinstance(q, BlendedTermQuery):
+        tie = float(q.tie_breaker) if q.rewrite == "dismax" else None
+        boosts = tuple(q.boosts) or (1.0,) * len(q.terms)
+        return Shape("blended", tuple(q.terms), boosts, q, tie, float(q.boost))
+    if isinstance(q, SynonymQuery):
+        terms = tuple(dict.fromkeys(q.terms))
+        return Shape("synonym", terms, (q.boost,) * len(terms), q)
+    if isinstance(q, PhraseQuery) and len(q.terms) > 1:
+        return Shape("phrase", tuple(q.terms), (q.boost,) * len(q.terms), q)
     return None
 
 
 _MIN_PRUNABLE = 100_000
 
 
-def min_prunable_postings() -> int:
-    import os
-
-    return int(os.environ.get("LUCENE_SPARK_MIN_PRUNABLE", _MIN_PRUNABLE))
-
-
-def try_pruned_topk(searcher, q: Query, k: int) -> Optional[DataFrame]:
-    """DataFrame wrapper over try_pruned_topk_rows (the Searcher.search API
-    returns DataFrames; top_docs consumes the rows directly and skips the
-    local-relation round-trip job)."""
-    rows = try_pruned_topk_rows(searcher, q, k)
-    if rows is None:
-        return None
-    if not rows:
-        return searcher._empty()
-    return searcher.spark.createDataFrame(
-        [(int(d), float(s)) for d, s in rows], "doc_id long, score double"
-    )
-
-
 def try_pruned_topk_rows(searcher, q: Query, k: int):
-    """Top-k [(doc_id, score)] via block-max pruning, or None when the query
-    shape / postings volume isn't handled here (caller falls back to the
-    exhaustive path). An empty LIST means handled-and-no-hits."""
+    """Top-k [(doc_id, score)] via block-max pruning of an ``or`` / ``and``
+    shape, or None when WAND does not serve the query: any other shape, or
+    too few postings to prune (the planner then falls back to _eval). An
+    empty LIST means handled-and-no-hits."""
     shape = _flat_term_clauses(q)
-    if shape is None:
+    if shape is None or shape.kind not in ("or", "and"):
         return None
-    mode, term_qs, _ = shape
-    terms = [tq.term for tq in term_qs]
-    if len(set(terms)) != len(terms):
-        return None
+    mode, terms = shape.kind, list(shape.terms)
     stats = searcher.term_stats(terms)
-    present = {t: s for t, s in stats.items() if t in stats}
-    if mode == "and" and len(present) < len(terms):
-        return []
-    if not present:
+    if not stats or (mode == "and" and len(stats) < len(terms)):
         return []
     # pruning pays only when there is enough postings volume to skip; below
     # ~64 blocks per term the extra theta/bounds jobs cost more than decoding
     # everything (ImpactsDISI has the same "too small to bother" shape)
-    total_df = sum(s.doc_freq for s in present.values())
-    if total_df < min_prunable_postings():
+    min_prunable = int(os.environ.get("LUCENE_SPARK_MIN_PRUNABLE", _MIN_PRUNABLE))
+    if sum(s.doc_freq for s in stats.values()) < min_prunable:
         return None
-
-    scorers: Dict[str, BM25Scorer] = {}
-    boosts: Dict[str, float] = {}
-    for tq in term_qs:
-        st = stats.get(tq.term)
-        if st is None:
-            continue
-        scorers[tq.term] = searcher.scorer_for(tq.boost, st)
-        boosts[tq.term] = float(tq.boost)
-
+    boosts = {t: float(b) for t, b in zip(terms, shape.boosts) if t in stats}
+    scorers = {t: searcher.scorer_for(b, stats[t]) for t, b in boosts.items()}
     return _topk_wand(searcher, scorers, boosts, k, mode, terms)
 
 
@@ -328,8 +346,6 @@ _DRIVER_META_MAX = 2_000_000  # rows a driver-side snapshot may hold
 def _driver_meta_max() -> int:
     """Capacity of the driver-side snapshots (the tombstone set,
     FreeTextSuggester's n-gram cache): above it they stay distributed."""
-    import os
-
     return int(os.environ.get("LUCENE_SPARK_DRIVER_META_MAX", _DRIVER_META_MAX))
 
 

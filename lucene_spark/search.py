@@ -14,9 +14,10 @@ Pipeline per query (SURVEY.md §3.2 mapping):
    == per-partition heap + TopDocs.merge (TakeOrderedAndProject), ties by
    ascending doc_id (TopScoreDocCollector.java:27-29)
 
-Block-max pruning (WAND analog) lives in prune.py and is used by
-``Searcher.search`` for term/disjunction/conjunction-of-terms tops-k when
-``prune=True``; correctness never depends on it (equivalence-tested).
+Top-k entry points (``search``, ``top_docs``, ``search_after``) go through
+one planner, ``Searcher.plan``: the hot driver cache, then block-max
+pruning (WAND analog, prune.py), then the exhaustive ``_eval`` above;
+correctness never depends on the tier (equivalence-tested).
 """
 
 from __future__ import annotations
@@ -365,6 +366,34 @@ class TermStats:
     singleton_norm: int
 
 
+def _term_stats_of(r) -> TermStats:
+    """TermStats of one terms-table row."""
+    return TermStats(*(int(r[f]) for f in TermStats.__dataclass_fields__))
+
+
+def _synonym_stats(stats: Dict[str, TermStats]) -> TermStats:
+    """A SynonymQuery's pseudo-term stats: max docFreq and max
+    totalTermFreq over its present terms (search/SynonymQuery.java)."""
+    return TermStats(
+        max(s.doc_freq for s in stats.values()),
+        max(s.total_term_freq for s in stats.values()),
+        -1, 0, 0,
+    )
+
+
+@dataclass
+class Plan:
+    """How Searcher.plan serves one top-k query: the ``tier`` that answered
+    (``hot``, ``wand`` or ``eval``), each faster tier that ``declined`` with
+    its reason, and the result — ``rows`` from the hot and WAND tiers, the
+    lazy top-k ``frame`` from _eval."""
+
+    tier: str
+    declined: List[Tuple[str, str]]
+    rows: Optional[List[Tuple[int, float]]] = None
+    frame: Optional[DataFrame] = None
+
+
 class Searcher:
     def __init__(
         self,
@@ -381,22 +410,18 @@ class Searcher:
         self.dtype = dtype
         self.spark = index.docs.sparkSession
         self.sim = similarity or BM25(k1=index.config.k1, b=index.config.b)
-        # Lucene keeps the term dictionary memory-resident (FST in .tip);
-        # preloading the (tiny) terms table into the driver is the analog and
-        # removes one Spark job from every query. Off by default: at true
-        # scale the terms table may exceed driver memory — there the
-        # per-query filtered lookup stays.
-        self._stats_cache: Optional[Dict[str, TermStats]] = None
+        # term stats fetched so far, absent terms included (None): a
+        # Searcher is a point-in-time reader, so they never change. Lucene
+        # keeps the whole term dictionary memory-resident (FST in .tip);
+        # preload_stats is the analog and fills this dict at open. Off by
+        # default: at true scale the terms table may exceed driver memory —
+        # there term_stats fetches what a query needs, once, and keeps at
+        # most _DIST_META_CACHE_MAX terms.
+        self._stats_cache: Dict[str, Optional[TermStats]] = {}
+        self._stats_complete = preload_stats
         if preload_stats:
             self._stats_cache = {
-                r["term"]: TermStats(
-                    int(r["doc_freq"]),
-                    int(r["total_term_freq"]),
-                    int(r["singleton_doc_id"]),
-                    int(r["singleton_freq"]),
-                    int(r["singleton_norm"]),
-                )
-                for r in self.index.terms.collect()
+                r["term"]: _term_stats_of(r) for r in self.index.terms.collect()
             }
         # WAND (prune.py) driver caches: the per-query exact k-th score
         # (minCompetitiveScore carry-over), and per-(term, boost) metadata
@@ -485,112 +510,105 @@ class Searcher:
     # ---------------- public API ----------------
 
     def search(self, q: Query, k: int = 10, prune: bool = True) -> DataFrame:
-        """Top-k (doc_id, score), ordered by score desc then doc_id asc."""
-        q = rewrite(q)
-        if prune:
-            hot = self._try_hot_topk(q, k)
-            if hot is not None:
-                return hot
-            from .prune import try_pruned_topk
+        """Top-k (doc_id, score), ordered by score desc then doc_id asc;
+        ``prune=False`` skips the fast tiers (exhaustive evaluation)."""
+        if not prune:
+            return self._topk(self.matches(q), k)
+        p = self.plan(q, k)
+        if p.rows is None:
+            return p.frame
+        return self.spark.createDataFrame(p.rows, MATCH_SCHEMA)
 
-            pruned = try_pruned_topk(self, q, k)
-            if pruned is not None:
-                return pruned
-        return self._topk(self.matches(q), k)
+    def plan(self, q: Query, k: int = 10) -> Plan:
+        """The query planner: rewrite ``q`` once, then the one hot → WAND →
+        _eval fall-through every top-k entry point runs. A tier that cannot
+        serve the query is recorded in ``declined`` with its reason and the
+        next one is tried; _eval serves everything."""
+        from . import prune
+
+        q = rewrite(q)
+        shape = prune._flat_term_clauses(q)
+        declined: List[Tuple[str, str]] = []
+        for tier in ("hot", "wand"):
+            why = self._decline(tier, shape)
+            if why is None:
+                out = (self._hot_rows(shape, k) if tier == "hot"
+                       else prune.try_pruned_topk_rows(self, q, k))
+                if isinstance(out, list):
+                    return Plan(tier, declined, rows=out)
+                why = out if tier == "hot" else "below min prunable"
+            declined.append((tier, why))
+        frame = self._topk(self._apply_deletes(self._eval(q, needs_scores=True)), k)
+        return Plan("eval", declined, frame=frame)
+
+    def _decline(self, tier: str, shape) -> Optional[str]:
+        """The tier rule: why ``tier`` cannot serve a query of ``shape``
+        (a prune.Shape, or None), or None to try it."""
+        if shape is None:
+            return "shape"
+        if tier == "hot":
+            # no driver tombstone snapshot: _rank_rows could not filter the
+            # deleted docs (the Spark tiers' anti-join stays cluster-side)
+            return "tombstones over driver cap" if self._tombs_over_cap else None
+        return None if shape.kind in ("or", "and") else "shape"
 
     # ---------------- hot-term driver cache ----------------
 
-    def _hot_cache_limit(self) -> int:
-        import os
-
-        return int(os.environ.get("LUCENE_SPARK_HOT_CACHE_POSTINGS", "20000000"))
-
     def _ensure_hot(self, terms: Sequence[str], stats: Dict[str, TermStats]) -> bool:
-        limit = self._hot_cache_limit()
-        if limit <= 0:
-            return False
-        need = [t for t in terms if t not in self._postings_cache]
-        add = sum(stats[t].doc_freq for t in need)
-        if add > limit:
-            return False
-        # evict FIFO, but never a term of the CURRENT query: 'need' was
-        # computed above, so evicting a current term would leave it absent
-        # from the cache after the bulk fetch (KeyError in the hot paths)
-        term_set = set(terms)
-        evictable = [t for t in self._postings_cache if t not in term_set]
-        while need and self._hot_cached + add > limit and evictable:
-            t_old = evictable.pop(0)
-            self._hot_cached -= len(self._postings_cache.pop(t_old)[0])
-        if self._hot_cached + add > limit:
-            return False
-        if need:
-            pdf = self.decode_raw(need).toPandas()  # ONE job for all terms
-            for t, g in pdf.groupby("term"):
-                g = g.sort_values("doc_id")
-                self._postings_cache[t] = (
-                    g["doc_id"].to_numpy(np.int64),
-                    g["freq"].to_numpy(np.int64),
-                    g["norm"].to_numpy(np.int64),
-                )
-                self._hot_cached += len(g)
-            for t in need:  # terms absent from postings (defensive)
-                self._postings_cache.setdefault(
-                    t,
-                    (np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0, np.int64)),
-                )
-        return True
+        """Postings of every term of ``terms`` in the hot cache (_hot_fill)."""
+        return self._hot_fill(terms, stats, positions=False)
 
     def _ensure_hot_positions(
         self, terms: Sequence[str], stats: Dict[str, TermStats]
     ) -> bool:
-        if not self.index.config.with_positions:
+        """Postings with positions in the hot cache (_hot_fill), laid out
+        FLAT: one concatenated positions array + per-doc start offsets, so
+        per-query gathers stay fully vectorized (matchers.gather_slices)."""
+        return self.index.config.with_positions and self._hot_fill(
+            terms, stats, positions=True
+        )
+
+    def _hot_fill(self, terms: Sequence[str], stats: Dict[str, TermStats],
+                  positions: bool) -> bool:
+        """Fetch the uncached terms of ``terms`` into a hot cache in ONE job,
+        within LUCENE_SPARK_HOT_CACHE_POSTINGS postings (positions count
+        each position); False when they cannot fit. Evicts FIFO, but never
+        a term of the CURRENT query: 'need' is computed first, so evicting a
+        current term would leave it absent after the fetch."""
+        cache = self._positions_cache if positions else self._postings_cache
+        used_attr = "_hot_pos_cached" if positions else "_hot_cached"
+        size = (lambda e: int(e[1].sum())) if positions else (lambda e: len(e[0]))
+        limit = int(os.environ.get("LUCENE_SPARK_HOT_CACHE_POSTINGS", "20000000"))
+        need = [t for t in terms if t not in cache]
+        add = sum(stats[t].total_term_freq if positions else stats[t].doc_freq
+                  for t in need)
+        if limit <= 0 or add > limit:
             return False
-        limit = self._hot_cache_limit()
-        if limit <= 0:
-            return False
-        need = [t for t in terms if t not in self._positions_cache]
-        add = sum(stats[t].total_term_freq for t in need)
-        if add > limit:
-            return False
-        term_set = set(terms)  # same never-evict-current rule as _ensure_hot
-        evictable = [t for t in self._positions_cache if t not in term_set]
-        while need and self._hot_pos_cached + add > limit and evictable:
-            t_old = evictable.pop(0)
-            old = self._positions_cache.pop(t_old)
-            self._hot_pos_cached -= int(old[1].sum())
-        if self._hot_pos_cached + add > limit:
-            return False
+        used = getattr(self, used_attr)
         if need:
-            pdf = self.decode_raw(need, with_positions=True).toPandas()
+            current = set(terms)
+            for t_old in [t for t in cache if t not in current]:
+                if used + add <= limit:
+                    break
+                used -= size(cache.pop(t_old))
+        fits = used + add <= limit
+        if fits and need:
+            pdf = self.decode_raw(need, with_positions=positions).toPandas()
             for t, g in pdf.groupby("term"):
                 g = g.sort_values("doc_id")
-                freqs = g["freq"].to_numpy(np.int64)
-                # FLAT layout: one concatenated positions array + per-doc
-                # start offsets — per-query gathers stay fully vectorized
-                # (matchers.gather_slices), no per-doc list handling
-                if len(g):
+                e = tuple(g[c].to_numpy(np.int64) for c in ("doc_id", "freq", "norm"))
+                if positions:
                     flat = np.concatenate(
                         [np.asarray(p, dtype=np.int64) for p in g["positions"]]
                     )
-                else:
-                    flat = np.empty(0, np.int64)
-                starts = np.concatenate(([0], np.cumsum(freqs)[:-1])).astype(np.int64)
-                self._positions_cache[t] = (
-                    g["doc_id"].to_numpy(np.int64),
-                    freqs,
-                    g["norm"].to_numpy(np.int64),
-                    flat,
-                    starts,
-                )
-                self._hot_pos_cached += int(freqs.sum())
-            for t in need:
-                self._positions_cache.setdefault(
-                    t,
-                    (np.empty(0, np.int64), np.empty(0, np.int64),
-                     np.empty(0, np.int64), np.empty(0, np.int64),
-                     np.empty(0, np.int64)),
-                )
-        return True
+                    e += (flat, np.cumsum(e[1]) - e[1])
+                cache[t] = e
+                used += size(e)
+            empty = np.empty(0, np.int64)
+            for t in need:  # terms absent from postings (defensive)
+                cache.setdefault(t, (empty,) * (5 if positions else 3))
+        setattr(self, used_attr, used)
+        return fits
 
     def diversified_topk(
         self,
@@ -652,22 +670,13 @@ class Searcher:
     def top_docs(self, q: Query, k: int = 10) -> List[Tuple[int, float]]:
         """TopDocs-style result: [(doc_id, score)] ordered by score desc,
         doc_id asc — no DataFrame round-trip (the latency-measuring API;
-        IndexSearcher.search returns TopDocs, not a cursor). The pruned tiers
-        hand their rows back directly, so no job is spent re-collecting a
-        driver-local result frame."""
-        q = rewrite(q)
-        rows = self._hot_topk_rows(q, k)
-        if rows is not None:
-            return rows
-        from .prune import try_pruned_topk_rows
-
-        pruned = try_pruned_topk_rows(self, q, k)
-        if pruned is not None:
-            return [(int(d), float(s)) for d, s in pruned]
-        df = self._topk(
-            self._apply_deletes(self._eval(q, needs_scores=True)), k
-        )
-        return [(int(r["doc_id"]), float(r["score"])) for r in df.collect()]
+        IndexSearcher.search returns TopDocs, not a cursor). The hot and WAND
+        tiers hand their rows back directly, so no job is spent
+        re-collecting a driver-local result frame."""
+        p = self.plan(q, k)
+        if p.rows is not None:
+            return p.rows
+        return [(int(r["doc_id"]), float(r["score"])) for r in p.frame.collect()]
 
     def search_sorted(
         self, q: Query, k: int = 10, ascending: bool = True
@@ -728,17 +737,6 @@ class Searcher:
                 )
             bound *= 8
 
-    def _try_hot_topk(self, q: Query, k: int) -> Optional[DataFrame]:
-        if self._tombs_over_cap:
-            # no driver tombstone snapshot: _rank_rows cannot filter deleted
-            # docs, so hot top-k must fall back to the distributed path
-            # (whose _apply_deletes anti-join stays cluster-side)
-            return None
-        rows = self._hot_topk_rows(q, k)
-        if rows is None:
-            return None
-        return self.spark.createDataFrame(rows, MATCH_SCHEMA)
-
     def _rank_rows(self, u: np.ndarray, tot: np.ndarray, k: int) -> List[Tuple[int, float]]:
         """Top-k of (doc u, score tot) by score desc, doc asc — like
         TopScoreDocCollector, only k-sized work beyond one linear pass:
@@ -757,71 +755,76 @@ class Searcher:
         order = np.lexsort((u, -tot))[:k]
         return list(zip(u[order].tolist(), tot[order].tolist()))
 
-    def _hot_topk_rows(self, q: Query, k: int) -> Optional[List[Tuple[int, float]]]:
-        """Fully driver-side top-k for flat term/AND/OR shapes — plus phrase,
-        synonym and dismax-of-terms — whose decoded postings fit the hot
-        cache. Exact scoring (no pruning needed: numpy over in-memory
-        arrays), identical tie rules."""
-        from .prune import _flat_term_clauses
-
-        if isinstance(q, PhraseQuery) and len(q.terms) > 1:
+    def _hot_rows(self, shape, k: int):
+        """The hot tier's one kernel: exact top-k of a prune.Shape from the
+        driver postings cache, scored like the Spark tier (same tie rules),
+        or the reason it declines. Per-term (docs, scores) runs come from
+        the cache — a synonym's tf is summed per doc into one pseudo-term
+        run before it scores — and combine by sum (or, boolean blend),
+        intersection (and) or max + tie × (sum − max) (dismax, dismax
+        blend); then the outer boost, and _rank_rows."""
+        q = shape.query
+        if shape.kind == "phrase":
             return self._hot_phrase_rows(q, k)
-        if isinstance(q, SynonymQuery):
-            return self._hot_synonym_rows(q, k)
-        if isinstance(q, DisjunctionMaxQuery) and q.disjuncts and all(
-            isinstance(d, TermQuery) for d in q.disjuncts
-        ):
-            return self._hot_dismax_rows(q, k)
-        if isinstance(q, BlendedTermQuery):
-            return self._hot_blended_rows(q, k)
-
-        shape = _flat_term_clauses(q)
-        if shape is None:
-            return None
-        mode, term_qs, _ = shape
-        terms = [tq.term for tq in term_qs]
-        if len(set(terms)) != len(terms):
-            return None
-        stats = self.term_stats(terms)
-        if mode == "and" and any(t not in stats for t in terms):
+        stats = self.term_stats(shape.terms)
+        if shape.kind == "and" and len(stats) < len(shape.terms):
             return []
-        present = [tq for tq in term_qs if tq.term in stats]
-        if not present:
-            return []
-        if not self._ensure_hot([tq.term for tq in present], stats):
-            return None
-        per_term = []
-        for tq in present:
-            docs, freqs, norms = self._postings_cache[tq.term]
-            sc = (
-                self.scorer_for(tq.boost, stats[tq.term])
-                .score(freqs, norms)
-                .astype(np.float64)
-            )
-            per_term.append((docs, sc))
-        if len(per_term) == 1:
-            u, tot = per_term[0]
-        elif mode == "or":
-            u, inv, _o, _s = matchers.merge_sorted_runs([a[0] for a in per_term])
-            tot = np.bincount(inv, weights=np.concatenate([a[1] for a in per_term]))
+        if shape.kind == "blended":
+            scorers = self._blended_scorers(q, stats)
+        elif shape.kind == "synonym":  # one pseudo-term, scored below
+            scorers = [(t, None) for t in stats]
         else:
-            cur_docs, cur_sc = per_term[0]
-            for docs_i, sc_i in per_term[1:]:
-                cur_docs, ia, ib = matchers.intersect_sorted(cur_docs, docs_i)
-                cur_sc = cur_sc[ia] + sc_i[ib]
-            u, tot = cur_docs, cur_sc
+            scorers = [
+                (t, self.scorer_for(b, stats[t]))
+                for t, b in zip(shape.terms, shape.boosts) if t in stats
+            ]
+        if not scorers:
+            return []
+        if not self._ensure_hot([t for t, _ in scorers], stats):
+            return "postings exceed hot cache"
+        runs = [self._postings_cache[t] for t, _ in scorers]
+        if shape.kind == "synonym":
+            u, inv, _o, _s = matchers.merge_sorted_runs([r[0] for r in runs])
+            freqs = np.concatenate([r[1] for r in runs]).astype(np.float64)
+            tf = np.bincount(inv, weights=freqs)
+            nrm = np.zeros(len(u), dtype=np.int64)
+            nrm[inv] = np.concatenate([r[2] for r in runs])  # norms are per doc
+            runs = [(u, tf, nrm)]
+            scorers = [(None, self.scorer_for(q.boost, _synonym_stats(stats)))]
+        docs = [r[0] for r in runs]
+        scores = [
+            sc.score(f, n).astype(np.float64)
+            for (_t, sc), (_d, f, n) in zip(scorers, runs)
+        ]
+        if len(runs) == 1:
+            u, tot = docs[0], scores[0]
+        elif shape.kind == "and":
+            u, tot = docs[0], scores[0]
+            for d, sc in zip(docs[1:], scores[1:]):
+                u, ia, ib = matchers.intersect_sorted(u, d)
+                tot = tot[ia] + sc[ib]
+        else:
+            u, inv, order, starts = matchers.merge_sorted_runs(docs)
+            cat = np.concatenate(scores)
+            tot = np.bincount(inv, weights=cat)
+            if shape.tie is not None:
+                mx = np.maximum.reduceat(cat[order], starts)
+                tot = mx + shape.tie * (tot - mx)
+        if shape.boost != 1.0:
+            tot = tot * shape.boost
         return self._rank_rows(u, tot, k)
 
-    def _hot_phrase_rows(self, q: PhraseQuery, k: int) -> Optional[List[Tuple[int, float]]]:
-        """Driver-side PhraseQuery: identical semantics to _eval_phrase —
-        vectorized batch matching via matchers.py (no per-doc Python loop)."""
+    def _hot_phrase_rows(self, q: PhraseQuery, k: int):
+        """Driver-side PhraseQuery, the hot tier's one positional shape:
+        identical semantics to _eval_phrase — vectorized batch matching via
+        matchers.py (no per-doc Python loop). Rows, or the decline reason."""
         terms = list(q.terms)
         stats = self.term_stats(terms)
         if any(t not in stats for t in terms):
             return []
         uniq = list(dict.fromkeys(terms))
         if not self._ensure_hot_positions(uniq, stats):
-            return None
+            return "positions exceed hot cache"
         scorer = self.multi_scorer_for(q.boost, [stats[t] for t in terms])
         slop = int(q.slop)
 
@@ -864,95 +867,6 @@ class Searcher:
         sc = scorer.score(freqs[keep], norms).astype(np.float64)
         return self._rank_rows(cur[keep], sc, k)
 
-    def _hot_synonym_rows(self, q: SynonymQuery, k: int) -> Optional[List[Tuple[int, float]]]:
-        """Driver-side SynonymQuery: summed tf per doc, blended stats —
-        mirrors _eval_synonym."""
-        stats = self.term_stats(q.terms)
-        if not stats:
-            return []
-        if not self._ensure_hot(list(stats), stats):
-            return None
-        df_blend = max(s.doc_freq for s in stats.values())
-        ttf_blend = max(s.total_term_freq for s in stats.values())
-        scorer = self.scorer_for(q.boost, TermStats(df_blend, ttf_blend, -1, 0, 0))
-        u, inv, _o, _s = matchers.merge_sorted_runs(
-            [self._postings_cache[t][0] for t in stats]
-        )
-        freqs = np.concatenate([self._postings_cache[t][1] for t in stats])
-        norms = np.concatenate([self._postings_cache[t][2] for t in stats])
-        tf = np.bincount(inv, weights=freqs.astype(np.float64))
-        nrm = np.zeros(len(u), dtype=np.int64)
-        nrm[inv] = norms  # norm is per-doc, identical across terms
-        sc = scorer.score(tf, nrm).astype(np.float64)
-        return self._rank_rows(u, sc, k)
-
-    def _hot_dismax_rows(self, q: DisjunctionMaxQuery, k: int) -> Optional[List[Tuple[int, float]]]:
-        """Driver-side DisjunctionMaxQuery over term disjuncts: max + tie *
-        (sum - max) — mirrors _eval_dismax."""
-        term_qs = list(q.disjuncts)
-        stats = self.term_stats([tq.term for tq in term_qs])
-        present = [tq for tq in term_qs if tq.term in stats]
-        if not present:
-            return []
-        if not self._ensure_hot([tq.term for tq in present], stats):
-            return None
-        docs_all, sc_all = [], []
-        for tq in present:
-            docs, freqs, norms = self._postings_cache[tq.term]
-            docs_all.append(docs)
-            sc_all.append(
-                self.scorer_for(tq.boost, stats[tq.term])
-                .score(freqs, norms)
-                .astype(np.float64)
-            )
-        u, inv, order, starts = matchers.merge_sorted_runs(docs_all)
-        cat_sc = np.concatenate(sc_all)
-        tot = np.bincount(inv, weights=cat_sc)
-        mx = np.maximum.reduceat(cat_sc[order], starts)
-        score = mx + float(q.tie_breaker) * (tot - mx)
-        if q.boost != 1.0:
-            score = score * float(q.boost)
-        return self._rank_rows(u, score, k)
-
-    def _hot_blended_rows(self, q: BlendedTermQuery, k: int) -> Optional[List[Tuple[int, float]]]:
-        """Driver-side BlendedTermQuery: same artificial-stats scoring as
-        _eval_blended, numpy over the hot postings cache."""
-        from .similarities import TermStatsIn
-
-        terms = list(q.terms)
-        boosts = list(q.boosts) if q.boosts else [1.0] * len(terms)
-        if len(boosts) != len(terms):
-            raise ValueError("boosts must match terms")
-        if q.rewrite not in ("dismax", "boolean"):
-            raise ValueError(f"unknown rewrite {q.rewrite!r}")
-        stats = self.term_stats(sorted(set(terms)))
-        present = [(t, b) for t, b in zip(terms, boosts) if t in stats]
-        if not present:
-            return []
-        if not self._ensure_hot([t for t, _b in present], stats):
-            return None
-        df_art = max(stats[t].doc_freq for t, _b in present)
-        ttf_art = sum(stats[t].total_term_freq for t, _b in present)
-        docs_all, sc_all = [], []
-        for t, b in present:
-            docs, freqs, norms = self._postings_cache[t]
-            sc = self.sim.multi_scorer(
-                b, [TermStatsIn(df_art, ttf_art)], self.index.stats, self.dtype
-            )
-            docs_all.append(docs)
-            sc_all.append(sc.score(freqs, norms).astype(np.float64))
-        u, inv, order, starts = matchers.merge_sorted_runs(docs_all)
-        cat_sc = np.concatenate(sc_all)
-        tot = np.bincount(inv, weights=cat_sc)
-        if q.rewrite == "boolean":
-            score = tot
-        else:
-            mx = np.maximum.reduceat(cat_sc[order], starts)
-            score = mx + float(q.tie_breaker) * (tot - mx)
-        if q.boost != 1.0:
-            score = score * float(q.boost)
-        return self._rank_rows(u, score, k)
-
     def search_after(
         self, q: Query, k: int = 10, after: Optional[Tuple[float, int]] = None
     ) -> DataFrame:
@@ -994,7 +908,7 @@ class Searcher:
     def _driver_cost(self, q: Query) -> Optional[int]:
         """Driver-side cost estimate (DocIdSetIterator.cost analog) from
         the preloaded term stats — zero Spark jobs; None when unknown."""
-        if self._stats_cache is None:
+        if not self._stats_complete:
             return None
         if isinstance(q, TermQuery):
             st = self._stats_cache.get(q.term)
@@ -1041,22 +955,24 @@ class Searcher:
     # ---------------- stats / scorers ----------------
 
     def term_stats(self, terms: Sequence[str]) -> Dict[str, TermStats]:
-        terms = list(dict.fromkeys(terms))
-        if not terms:
-            return {}
-        if self._stats_cache is not None:
-            return {t: self._stats_cache[t] for t in terms if t in self._stats_cache}
-        rows = self.index.terms.filter(F.col("term").isin(terms)).collect()
-        return {
-            r["term"]: TermStats(
-                int(r["doc_freq"]),
-                int(r["total_term_freq"]),
-                int(r["singleton_doc_id"]),
-                int(r["singleton_freq"]),
-                int(r["singleton_norm"]),
-            )
-            for r in rows
-        }
+        """Stats of the present terms among ``terms``, in query order: one
+        terms-table lookup for those not fetched before, none once every
+        term is known (see __init__)."""
+        cache = self._stats_cache
+        found = {t: cache.get(t) for t in terms if t in cache}
+        missing = [] if self._stats_complete else [
+            t for t in dict.fromkeys(terms) if t not in found
+        ]
+        if missing:
+            from .prune import _DIST_META_CACHE_MAX
+
+            rows = self.index.terms.filter(F.col("term").isin(missing)).collect()
+            got = {r["term"]: _term_stats_of(r) for r in rows}
+            for t in missing:
+                if len(cache) >= _DIST_META_CACHE_MAX:
+                    cache.pop(next(iter(cache)))
+                cache[t] = found[t] = got.get(t)
+        return {t: found[t] for t in terms if found.get(t) is not None}
 
     def scorer_for(self, boost: float, st: TermStats):
         from .similarities import TermStatsIn
@@ -1291,48 +1207,51 @@ class Searcher:
             )
         return scored_postings(self._postings_for([q.term]), {q.term: scorer})
 
-    def _eval_blended(self, q: BlendedTermQuery) -> DataFrame:
-        """BlendedTermQuery (core/search/BlendedTermQuery.java:271-300):
-        score every term with the ARTIFICIAL stats df = max(df_i),
-        ttf = sum(ttf_i) (one decode job for all terms), then combine
-        per the rewrite method (dismax with tie, or SHOULD sum)."""
+    def _blended_scorers(self, q: BlendedTermQuery, stats: Dict[str, TermStats]):
+        """BlendedTermQuery's [(term, scorer)] over its present terms, shared
+        by the hot kernel and _eval_blended: each term scores with the
+        ARTIFICIAL stats df = max(df_i), ttf = sum(ttf_i) and its own boost
+        (core/search/BlendedTermQuery.java:271-300)."""
         from .similarities import TermStatsIn
 
-        terms = list(q.terms)
-        boosts = list(q.boosts) if q.boosts else [1.0] * len(terms)
-        if len(boosts) != len(terms):
+        boosts = list(q.boosts) if q.boosts else [1.0] * len(q.terms)
+        if len(boosts) != len(q.terms):
             raise ValueError("boosts must match terms")
-        stats = self.term_stats(sorted(set(terms)))
-        present = [(t, b) for t, b in zip(terms, boosts) if t in stats]
+        if q.rewrite not in ("dismax", "boolean"):
+            raise ValueError(f"unknown rewrite {q.rewrite!r}")
+        present = [(t, b) for t, b in zip(q.terms, boosts) if t in stats]
         if not present:
-            return self._empty()
-        df_art = max(stats[t].doc_freq for t, _b in present)
-        ttf_art = sum(stats[t].total_term_freq for t, _b in present)
-        # one decode pass + one scoring kernel for ALL terms: each term's
-        # scorer (same artificial stats, its own boost) runs on its slice
-        # of the batch — per-row op order identical to per-term evaluation
-        scorers = {
-            t: self.sim.multi_scorer(
-                b,
-                [TermStatsIn(df_art, ttf_art)],
-                self.index.stats,
-                self.dtype,
-            )
+            return []
+        art = TermStatsIn(
+            max(stats[t].doc_freq for t, _b in present),
+            sum(stats[t].total_term_freq for t, _b in present),
+        )
+        return [
+            (t, self.sim.multi_scorer(b, [art], self.index.stats, self.dtype))
             for t, b in present
-        }
+        ]
+
+    def _eval_blended(self, q: BlendedTermQuery) -> DataFrame:
+        """BlendedTermQuery: every term scored with the blended stats (one
+        decode job for all terms), then combined per the rewrite method
+        (dismax with tie, or SHOULD sum)."""
+        scorers = dict(self._blended_scorers(q, self.term_stats(q.terms)))
+        if not scorers:
+            return self._empty()
+        # one decode pass + one scoring kernel for ALL terms: each term's
+        # scorer runs on its slice of the batch — per-row op order identical
+        # to per-term evaluation
         u = scored_postings(self._postings_for(sorted(scorers)), scorers)
         if q.rewrite == "boolean":
             agg = u.groupBy("doc_id").agg(F.sum("score").alias("score"))
             score = F.col("score")
-        elif q.rewrite == "dismax":
+        else:
             agg = u.groupBy("doc_id").agg(
                 F.max("score").alias("mx"), F.sum("score").alias("sm")
             )
             score = F.col("mx") + F.lit(float(q.tie_breaker)) * (
                 F.col("sm") - F.col("mx")
             )
-        else:
-            raise ValueError(f"unknown rewrite {q.rewrite!r}")
         if q.boost != 1.0:
             score = score * F.lit(float(q.boost))
         return agg.select("doc_id", score.alias("score"))
@@ -1343,12 +1262,7 @@ class Searcher:
         stats = self.term_stats(q.terms)
         if not stats:
             return self._empty()
-        df_blend = max(s.doc_freq for s in stats.values())
-        ttf_blend = max(s.total_term_freq for s in stats.values())
-        scorer = self.scorer_for(
-            q.boost,
-            TermStats(df_blend, ttf_blend, -1, 0, 0),
-        )
+        scorer = self.scorer_for(q.boost, _synonym_stats(stats))
         raw = self.decode_raw(list(stats))
         agg = raw.groupBy("doc_id").agg(
             F.sum("freq").alias("freq"), F.first("norm").alias("norm")
@@ -3238,7 +3152,7 @@ class Searcher:
     def _vocab_size(self) -> int:
         """Distinct-term count, cached per Searcher (free when stats are
         preloaded; one metadata-cheap count job otherwise)."""
-        if self._stats_cache is not None:
+        if self._stats_complete:
             return len(self._stats_cache)
         if self._vocab_count is None:
             self._vocab_count = self.index.terms.count()
@@ -3376,8 +3290,10 @@ class MultiFieldSearcher(Searcher):
     to their field's Searcher; boolean/dismax algebra is inherited and
     combines per-field scores on the shared global doc_id.
 
-    Field-qualified queries bypass the single-index prune/hot fast paths
-    (they stay available on the per-field Searchers themselves).
+    Every top-k query is served by _eval: the planner's hot and WAND tiers
+    read the default field's postings only, so this searcher's tier rule
+    declines them (they stay available on the per-field Searchers
+    themselves).
     """
 
     def __init__(
@@ -3393,8 +3309,8 @@ class MultiFieldSearcher(Searcher):
         base = searchers[default_field]
         super().__init__(base.index, dtype=dtype, similarity=base.sim)
 
-    def search(self, q: Query, k: int = 10, prune: bool = False) -> DataFrame:
-        return self._topk(self.matches(q), k)
+    def _decline(self, tier: str, shape) -> Optional[str]:
+        return "multi-field"
 
     def _eval(self, q: Query, needs_scores: bool) -> DataFrame:
         import dataclasses

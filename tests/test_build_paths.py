@@ -4,11 +4,15 @@ non-dense ids keep exact per-doc stats, and repeated ids are rejected."""
 
 import numpy as np
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 
 from lucene_spark import codec
 from lucene_spark.build import IndexConfig, assign_doc_ids, build_index
 from lucene_spark.corpus import generate_corpus
 from lucene_spark.smallfloat import int_to_byte4
+
+from oracle import make_corpus
 
 
 def _postings(idx):
@@ -130,3 +134,96 @@ def test_unpersist_releases_everything_an_index_pins(spark):
     assert pinned() == start
     corpus.unpersist()
     batch.unpersist()
+
+
+# ---- doc ids far past 2^31: the first block of a term in a segment
+# delta-encodes from its own first doc, so any id range round-trips
+
+_RT_TEXTS = make_corpus(48, ["red", "green", "blue", "cyan"], seed=3,
+                        min_len=1, max_len=12)
+
+
+def _rt_build(spark, df, **kw):
+    cfg = IndexConfig(seg_size=1024, block_size=8, with_positions=True)
+    return build_index(df, cfg, doc_id_col="doc_id", num_partitions=2,
+                       auto_seg_size=False, eager=True, **kw)
+
+
+@pytest.fixture(scope="module")
+def dense_postings(spark):
+    idx = _rt_build(spark, spark.createDataFrame(
+        list(enumerate(_RT_TEXTS)), "doc_id long, content string"))
+    yield _postings(idx)
+    idx.unpersist()
+
+
+def _remapped(dense, ids):
+    """The dense build's postings with doc i renumbered to ids[i]."""
+    return sorted((t, int(ids[d]), f, n, p) for t, d, f, n, p in dense)
+
+
+_near = lambda b: st.integers(b - 40, b + 40)
+
+
+@settings(max_examples=6, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@example(shift=2**31 - 20, split=20, gap=1)
+@example(shift=2**32 - 20, split=20, gap=1)
+@example(shift=2**40, split=0, gap=3)
+@given(
+    shift=st.sampled_from([2**31, 2**32, 2**40]).flatmap(_near),
+    split=st.integers(0, 48),
+    gap=st.integers(1, 3),
+)
+def test_high_doc_ids_round_trip(spark, dense_postings, shift, split, gap):
+    """Docs from ``split`` on are shifted by ~2^31, ~2^32 or ~2^40:
+    decoded_postings of the build equals the dense build, renumbered."""
+    from lucene_spark.search import decoded_postings
+
+    ids = [i * gap + (shift if i >= split else 0) for i in range(len(_RT_TEXTS))]
+    idx = _rt_build(spark, spark.createDataFrame(
+        list(zip(ids, _RT_TEXTS)), "doc_id long, content string"))
+    try:
+        got = sorted(
+            (r["term"], r["doc_id"], r["freq"], r["norm"], tuple(r["positions"]))
+            for r in decoded_postings(idx.postings, True).collect()
+        )
+        assert got == _remapped(dense_postings, ids)
+    finally:
+        idx.unpersist()
+
+
+def test_monotonic_ids_append_and_merge_round_trip(spark, dense_postings):
+    """Gapped monotonically_increasing_id ids (2^33 apart per partition),
+    two append_documents of such batches, then merge_segments: every
+    posting decodes to its doc."""
+    from pyspark.sql import functions as F
+
+    from lucene_spark.merge import append_documents, merge_segments
+
+    texts = _RT_TEXTS
+    thirds = [list(range(j, len(texts), 3)) for j in range(3)]
+    frames, ids = [], {}
+    base_n = 0
+    for part in thirds:
+        df = (spark.createDataFrame([(i, texts[i]) for i in part],
+                                    "i long, content string")
+              .repartition(3).withColumn("doc_id", F.monotonically_increasing_id())
+              .persist())
+        mono = {r["i"]: r["doc_id"] for r in df.collect()}
+        ids.update({i: d + base_n for i, d in mono.items()})
+        base_n = max(ids.values()) + 1
+        frames.append(df)
+    assert max(ids.values()) > 2**33
+    idx = _rt_build(spark, frames[0])
+    for df in frames[1:]:
+        idx = append_documents(idx, df, content_col="content", doc_id_col="doc_id")
+    want = _remapped(dense_postings, [ids[i] for i in range(len(texts))])
+    try:
+        assert _postings(idx) == want
+        merged = merge_segments(idx)
+        assert _postings(merged) == want
+    finally:
+        idx.unpersist()
+        for df in frames:
+            df.unpersist()

@@ -225,8 +225,10 @@ def test_tombstone_snapshot_capacity_gated(spark, built, monkeypatch):
     monkeypatch.setenv("LUCENE_SPARK_DRIVER_META_MAX", "3")
     s = Searcher(deleted, dtype=np.float32)
     assert s._deleted is None and s._tombs_over_cap
-    # hot driver path disabled (it cannot filter deletes without a snapshot)
-    assert s._try_hot_topk(TermQuery(term="spark"), 5) is None
+    # hot driver tier declined (it cannot filter deletes without a snapshot)
+    p = s.plan(TermQuery(term="spark"), 5)
+    assert p.tier != "hot"
+    assert ("hot", "tombstones over driver cap") in p.declined
     # plan: the left-anti against the tombstones carries no broadcast hint
     df = s.matches(TermQuery(term="spark"))
     plan = df._jdf.queryExecution().analyzed().toString()
@@ -250,7 +252,9 @@ def test_tombstone_snapshot_capacity_gated(spark, built, monkeypatch):
 def test_hot_top_docs_with_tombstones_equal_spark_tier(spark, built, monkeypatch):
     """Every hot shape filters the sorted tombstone snapshot in _rank_rows:
     with the top hits of each shape deleted, driver-side top_docs must equal
-    the Spark tier's search().collect()."""
+    the Spark tier's search().collect(). Over the driver cap there is no
+    snapshot: the planner declines the hot tier, and top_docs still equals
+    search(prune=False) without a deleted doc."""
     t = lambda w: TermQuery(term=w)
     queries = [
         t("spark"),
@@ -271,15 +275,26 @@ def test_hot_top_docs_with_tombstones_equal_spark_tier(spark, built, monkeypatch
     })
     deleted = built.delete_docs(victims)
     monkeypatch.setenv("LUCENE_SPARK_HOT_CACHE_POSTINGS", "1000000")
-    s = Searcher(deleted, dtype=np.float32)
-    assert s._deleted.tolist() == victims
-    for q in queries:
-        hot = s._hot_topk_rows(q, 10)
-        assert hot is not None, q
-        want = [
-            (int(r["doc_id"]), float(r["score"]))
-            for r in s.search(q, 10, prune=False).collect()
-        ]
-        assert [d for d, _ in hot] == [d for d, _ in want], q
-        assert [np.float32(v) for _, v in hot] == [np.float32(v) for _, v in want], q
-        assert not set(victims) & {d for d, _ in hot}
+    for cap in (None, "3"):
+        if cap is not None:
+            monkeypatch.setenv("LUCENE_SPARK_DRIVER_META_MAX", cap)
+        s = Searcher(deleted, dtype=np.float32)
+        assert s._tombs_over_cap == (cap is not None)
+        if cap is None:
+            assert s._deleted.tolist() == victims
+        for q in queries:
+            p = s.plan(q, 10)
+            if cap is None:
+                assert p.tier == "hot" and p.declined == [], q
+            else:
+                assert p.declined[0] == ("hot", "tombstones over driver cap"), q
+            got = s.top_docs(q, 10)
+            want = [
+                (int(r["doc_id"]), float(r["score"]))
+                for r in s.search(q, 10, prune=False).collect()
+            ]
+            assert [d for d, _ in got] == [d for d, _ in want], (cap, q)
+            assert [np.float32(v) for _, v in got] == [
+                np.float32(v) for _, v in want
+            ], (cap, q)
+            assert not set(victims) & {d for d, _ in got}, (cap, q)

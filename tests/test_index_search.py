@@ -293,6 +293,71 @@ def test_warm_wand_job_count(built, oracle, spark, monkeypatch, driver_cap):
     assert n_jobs <= 2, f"warm WAND query ran {n_jobs} jobs (cap 2)"
 
 
+def _perfbench_shapes():
+    """One query of every shape the perfbench query stream runs."""
+    from lucene_spark.query import BlendedTermQuery, DisjunctionMaxQuery
+
+    t = lambda w: TermQuery(term=w)
+    return {
+        "term": t("spark"),
+        "or2": bool_query(should=[t("spark"), t("merge")]),
+        "or3": bool_query(should=[t("spark"), t("merge"), t("index")]),
+        "and2": bool_query(must=[t("spark"), t("index")]),
+        "dismax": DisjunctionMaxQuery(disjuncts=(t("spark"), t("index")),
+                                      tie_breaker=0.1),
+        "synonym": SynonymQuery(terms=("spark", "merge")),
+        "blended": BlendedTermQuery(terms=("merge", "index"), boosts=(1.0, 2.0),
+                                    tie_breaker=0.1),
+        "phrase": PhraseQuery(terms=("the", "spark")),
+        "sloppy": PhraseQuery(terms=("the", "spark", "merge"), slop=3),
+        "sloppy_rpts": PhraseQuery(terms=("the", "spark", "the"), slop=4),
+        "filter": bool_query(must=[t("index")], filter=[PrefixQuery(prefix="th")]),
+    }
+
+
+def test_plan_tier_of_every_perfbench_shape(built, monkeypatch):
+    """The tier each perfbench shape is served by: hot for every shape but
+    the filter with the hot cache on; without it WAND for the flat shapes
+    and _eval for the rest, each naming the faster tiers it passed."""
+    shapes = _perfbench_shapes()
+    monkeypatch.setenv("LUCENE_SPARK_MIN_PRUNABLE", "0")
+    monkeypatch.setenv("LUCENE_SPARK_HOT_CACHE_POSTINGS", "10000000")
+    s = Searcher(built, dtype=np.float32)
+    for name, q in shapes.items():
+        p = s.plan(q, 10)
+        assert p.tier == ("eval" if name == "filter" else "hot"), name
+    monkeypatch.setenv("LUCENE_SPARK_HOT_CACHE_POSTINGS", "0")
+    s = Searcher(built, dtype=np.float32)
+    for name, q in shapes.items():
+        p = s.plan(q, 10)
+        flat = name in ("term", "or2", "or3", "and2")
+        assert p.tier == ("wand" if flat else "eval"), name
+        assert [t for t, _ in p.declined] == (["hot"] if flat else ["hot", "wand"])
+        assert (p.rows is None) == (p.tier == "eval"), name
+
+
+def test_warm_job_count_same_with_and_without_preload(built, spark, monkeypatch):
+    """A Searcher fetches a term's stats once, absent terms included, so a
+    warm top_docs runs as many Spark jobs as with the whole terms table
+    preloaded."""
+    monkeypatch.setenv("LUCENE_SPARK_HOT_CACHE_POSTINGS", "0")
+    shapes = _perfbench_shapes()
+
+    def warm_jobs(s, q):
+        st = spark.sparkContext.statusTracker()
+        s.top_docs(q, 10)
+        s.top_docs(q, 10)
+        before = set(st.getJobIdsForGroup(None) or [])
+        s.top_docs(q, 10)
+        return len(set(st.getJobIdsForGroup(None) or []) - before)
+
+    for name in ("term", "or2", "and2", "phrase", "synonym", "dismax", "blended"):
+        q = shapes[name]
+        plain = warm_jobs(Searcher(built, dtype=np.float32), q)
+        preloaded = warm_jobs(Searcher(built, dtype=np.float32, preload_stats=True), q)
+        assert plain == preloaded, (name, plain, preloaded)
+
+
 def test_multi_phrase_query(searcher, oracle, corpus):
     w = corpus[0].split()[:2]
     slots = ((w[0], "zzznope"), (w[1],))

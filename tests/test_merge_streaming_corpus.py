@@ -124,8 +124,12 @@ def test_merge_segments_keeps_every_posting(spark, to_merge, drop_deletes):
         assert g["block_id"].tolist() == list(range(len(g)))
         counts = g["count"].tolist()
         assert all(c == size for c in counts[:-1]) and 1 <= counts[-1] <= size
-        # blocks chain: each starts past the previous one's last doc
-        assert g["base_doc"].tolist() == [-1] + g["last_doc"].tolist()[:-1]
+        # blocks chain: each starts past the previous one's last doc, and a
+        # segment's first block from just before its own first doc (a
+        # singleton carries no encoded docs and keeps -1)
+        first = codec.decode_block_row(next(g.itertuples(index=False)))[0][0]
+        head = -1 if counts[0] == 1 else first - 1
+        assert g["base_doc"].tolist() == [head] + g["last_doc"].tolist()[:-1]
         for row in g.itertuples(index=False):
             docs = codec.decode_block_row(row)[0]
             assert (docs // target == seg).all()

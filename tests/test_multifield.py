@@ -44,7 +44,7 @@ def _got(df):
     return [(int(r["doc_id"]), np.float32(r["score"])) for r in df.collect()]
 
 
-def test_fielded_term_routes_to_field_index(fields):
+def test_fielded_term_routes_to_field_index(fields, monkeypatch):
     s, o_tag = fields["s"], fields["o_tag"]
     exp = BruteForceIndex.topk(o_tag.score_term("red"), 10)
     got = _got(s.search(TermQuery(term="red", field="tag"), 10))
@@ -54,6 +54,15 @@ def test_fielded_term_routes_to_field_index(fields):
     assert _got(s.search(TermQuery(term="spark"), 10)) == [
         (d, np.float32(v)) for d, v in exp_b
     ]
+    # top_docs routes the same way, with the hot cache off (WAND would
+    # otherwise serve) and on (the hot tier would)
+    for hot in ("0", "1000000"):
+        monkeypatch.setenv("LUCENE_SPARK_HOT_CACHE_POSTINGS", hot)
+        got = s.top_docs(TermQuery(term="red", field="tag"), 5)
+        assert [(d, np.float32(v)) for d, v in got] == [
+            (d, np.float32(v)) for d, v in exp[:5]
+        ], hot
+        assert s.plan(TermQuery(term="red", field="tag"), 5).tier == "eval"
 
 
 def test_cross_field_boolean(fields):

@@ -174,6 +174,20 @@ def _slices(values: np.ndarray, bounds: np.ndarray) -> List[np.ndarray]:
     return [values[a:z] for a, z in zip(b[:-1], b[1:])]
 
 
+def _segment_ids(doc_ids: np.ndarray, seg_size: int) -> np.ndarray:
+    """The int32 segment_id column, doc_id // seg_size: ValueError for an id
+    whose segment does not fit int32, instead of a silent wrap that files
+    far-apart segments under one id."""
+    seg = doc_ids // seg_size
+    lo, hi = np.iinfo(np.int32).min, np.iinfo(np.int32).max
+    if len(seg) and (seg.min() < lo or seg.max() > hi):
+        raise ValueError(
+            f"segment_id overflow: doc_id {int(doc_ids.max())} // seg_size "
+            f"{seg_size} exceeds int32; raise seg_size or compact the doc ids"
+        )
+    return seg.astype(np.int32)
+
+
 def _invert_batches(config: IndexConfig, pairs):
     """Invert a stream of (doc_id int64 array, content Series) pairs. Yields
     per batch (doc_ids, lengths, discounted lengths, tf DataFrame or None
@@ -362,7 +376,7 @@ def _invert_batches(config: IndexConfig, pairs):
             pos_sorted = pos[order]
             out = {
                 "doc_id": doc_ids,
-                "segment_id": (doc_ids // seg_size).astype(np.int32),
+                "segment_id": _segment_ids(doc_ids, seg_size),
                 "term": flat[first],
                 "freq": freqs,
                 "norm": norms,

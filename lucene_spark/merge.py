@@ -172,8 +172,18 @@ def merge_segments(
     cfg = index.config
     new_seg = target_seg_size or cfg.seg_size * 8
     new_cfg = replace(cfg, seg_size=new_seg)
+    # the int32 segment_id, checked in the same projection (no extra job):
+    # an id past 2^31 segments fails the query instead of wrapping
+    seg = F.expr(f"doc_id div {new_seg}")
     tf = decoded_postings(index.postings, cfg.with_positions).withColumn(
-        "segment_id", F.expr(f"CAST(doc_id div {new_seg} AS INT)")
+        "segment_id",
+        F.when(
+            (seg > 2**31 - 1) | (seg < -(2**31)),
+            F.raise_error(F.concat(
+                F.lit("segment_id overflow: doc_id "), F.col("doc_id").cast("string"),
+                F.lit(f" div target_seg_size {new_seg} exceeds int32"),
+            )),
+        ).otherwise(seg.cast("int")),
     )
     if drop_deletes and index.deletes is not None:
         tf = tf.join(F.broadcast(index.deletes), "doc_id", "left_anti")

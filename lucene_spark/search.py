@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import os
 import re
+from collections import OrderedDict
 from dataclasses import dataclass
 from typing import Dict, Iterator, List, Optional, Sequence, Tuple
 
@@ -381,6 +382,20 @@ def _synonym_stats(stats: Dict[str, TermStats]) -> TermStats:
     )
 
 
+def _hot_size(entry: tuple, positions: bool) -> int:
+    """Budget elements of a hot-cache entry: its positions, or its postings
+    plus one per score of every (docs, scores) run it keeps."""
+    if positions:
+        return len(entry[3])
+    return len(entry[0]) + sum(len(d) for d, _s in entry[3].values())
+
+
+def _scorer_key(multi: bool, boost: float, sts: Sequence[TermStats]) -> tuple:
+    """Searcher._scorer's memo key: a (multi-)scorer is a function of its
+    boost and the (doc_freq, total_term_freq) of its terms."""
+    return (multi, boost, tuple((s.doc_freq, s.total_term_freq) for s in sts))
+
+
 @dataclass
 class Plan:
     """How Searcher.plan serves one top-k query: the ``tier`` that answered
@@ -432,13 +447,24 @@ class Searcher:
         self._dist_meta_cache: Dict[tuple, dict] = {}
         # transient block-metadata predicate for sorted early termination
         self._block_pred = None
+        # scorers by (multi, boost, ((doc_freq, total_term_freq), ...)):
+        # similarity, collection stats and dtype are fixed per Searcher, so
+        # the key names one scorer, built once (a Lucene Weight per term)
+        self._scorers: Dict[tuple, object] = {}
         # driver-resident decoded postings for hot terms — the analog of
-        # Lucene serving postings from the OS page cache. Bounded by
-        # LUCENE_SPARK_HOT_CACHE_POSTINGS total postings (0 disables).
-        self._postings_cache: Dict[str, tuple] = {}
+        # Lucene serving postings from the OS page cache. An entry is
+        # term -> (docs, freqs, norms, runs): ``runs`` maps each scorer key
+        # the term was scored under to its (docs, float64 scores) run (and
+        # a synonym's (term set, scorer key) to its merged pseudo-term run),
+        # so a warm query re-scores nothing. LRU order; bounded by
+        # LUCENE_SPARK_HOT_CACHE_POSTINGS elements, one per posting and one
+        # per score (0 disables); a term's runs go when the term is evicted,
+        # or sooner when postings a query needs would not fit otherwise.
+        self._postings_cache: "OrderedDict[str, tuple]" = OrderedDict()
         self._hot_cached = 0
-        # positional variant: term -> (docs, freqs, norms, positions list)
-        self._positions_cache: Dict[str, tuple] = {}
+        # positional variant: term -> (docs, freqs, norms, flat positions,
+        # per-doc starts), one element per position
+        self._positions_cache: "OrderedDict[str, tuple]" = OrderedDict()
         self._hot_pos_cached = 0
         # block-join parent maps: parents-filter repr -> persisted
         # (doc_id, parent_id) frame (the cached BitSetProducer role)
@@ -571,28 +597,23 @@ class Searcher:
     def _hot_fill(self, terms: Sequence[str], stats: Dict[str, TermStats],
                   positions: bool) -> bool:
         """Fetch the uncached terms of ``terms`` into a hot cache in ONE job,
-        within LUCENE_SPARK_HOT_CACHE_POSTINGS postings (positions count
-        each position); False when they cannot fit. Evicts FIFO, but never
-        a term of the CURRENT query: 'need' is computed first, so evicting a
-        current term would leave it absent after the fetch."""
+        within LUCENE_SPARK_HOT_CACHE_POSTINGS elements (positions count
+        each position); False when they cannot fit. LRU: the query's cached
+        terms move to the back and _hot_room evicts from the front, never a
+        term of the CURRENT query — evicting one after 'need' was computed
+        would leave it absent after the fetch."""
         cache = self._positions_cache if positions else self._postings_cache
-        used_attr = "_hot_pos_cached" if positions else "_hot_cached"
-        size = (lambda e: int(e[1].sum())) if positions else (lambda e: len(e[0]))
-        limit = int(os.environ.get("LUCENE_SPARK_HOT_CACHE_POSTINGS", "20000000"))
-        need = [t for t in terms if t not in cache]
+        need = []
+        for t in dict.fromkeys(terms):
+            if t in cache:
+                cache.move_to_end(t)
+            else:
+                need.append(t)
         add = sum(stats[t].total_term_freq if positions else stats[t].doc_freq
                   for t in need)
-        if limit <= 0 or add > limit:
+        if not self._hot_room(positions, add, terms, drop_runs=not positions):
             return False
-        used = getattr(self, used_attr)
         if need:
-            current = set(terms)
-            for t_old in [t for t in cache if t not in current]:
-                if used + add <= limit:
-                    break
-                used -= size(cache.pop(t_old))
-        fits = used + add <= limit
-        if fits and need:
             pdf = self.decode_raw(need, with_positions=positions).toPandas()
             for t, g in pdf.groupby("term"):
                 g = g.sort_values("doc_id")
@@ -602,13 +623,39 @@ class Searcher:
                         [np.asarray(p, dtype=np.int64) for p in g["positions"]]
                     )
                     e += (flat, np.cumsum(e[1]) - e[1])
-                cache[t] = e
-                used += size(e)
+                cache[t] = e if positions else e + ({},)
             empty = np.empty(0, np.int64)
             for t in need:  # terms absent from postings (defensive)
-                cache.setdefault(t, (empty,) * (5 if positions else 3))
-        setattr(self, used_attr, used)
-        return fits
+                cache.setdefault(t, (empty,) * 5 if positions else (empty,) * 3 + ({},))
+            n = sum(_hot_size(cache[t], positions) for t in need)
+            if positions:
+                self._hot_pos_cached += n
+            else:
+                self._hot_cached += n
+        return True
+
+    def _hot_room(self, positions: bool, add: int, current: Sequence[str],
+                  drop_runs: bool = False) -> bool:
+        """Whether ``add`` more elements fit a hot cache, evicting least
+        recently used terms (with their score runs) from the front until
+        they do. The current query's terms sit at the back, so eviction
+        stops at the first of them; then, with ``drop_runs`` (room for
+        postings), the score runs of the terms left go too: a run can be
+        scored again, postings the query needs cannot be skipped."""
+        limit = int(os.environ.get("LUCENE_SPARK_HOT_CACHE_POSTINGS", "20000000"))
+        if limit <= 0 or add > limit:
+            return False
+        cache = self._positions_cache if positions else self._postings_cache
+        attr = "_hot_pos_cached" if positions else "_hot_cached"
+        used = getattr(self, attr)
+        while used + add > limit and cache and next(iter(cache)) not in current:
+            used -= _hot_size(cache.popitem(last=False)[1], positions)
+        if used + add > limit and drop_runs:
+            for e in cache.values():
+                used -= sum(len(d) for d, _s in e[3].values())
+                e[3].clear()
+        setattr(self, attr, used)
+        return used + add <= limit
 
     def diversified_topk(
         self,
@@ -759,53 +806,41 @@ class Searcher:
         """The hot tier's one kernel: exact top-k of a prune.Shape from the
         driver postings cache, scored like the Spark tier (same tie rules),
         or the reason it declines. Per-term (docs, scores) runs come from
-        the cache — a synonym's tf is summed per doc into one pseudo-term
-        run before it scores — and combine by sum (or, boolean blend),
-        intersection (and) or max + tie × (sum − max) (dismax, dismax
-        blend); then the outer boost, and _rank_rows."""
+        the cache, scored once per scorer key (_hot_run) — a synonym's tf is
+        summed per doc into one pseudo-term run before it scores — and
+        combine by sum (or, boolean blend), intersection (and) or
+        max + tie × (sum − max) (dismax, dismax blend); then the outer
+        boost, and _rank_rows."""
         q = shape.query
         if shape.kind == "phrase":
             return self._hot_phrase_rows(q, k)
         stats = self.term_stats(shape.terms)
-        if shape.kind == "and" and len(stats) < len(shape.terms):
+        if not stats or (shape.kind == "and" and len(stats) < len(shape.terms)):
             return []
         if shape.kind == "blended":
-            scorers = self._blended_scorers(q, stats)
-        elif shape.kind == "synonym":  # one pseudo-term, scored below
-            scorers = [(t, None) for t in stats]
+            keys = self._blended_keys(q, stats)
+        elif shape.kind == "synonym":  # one pseudo-term run, kept on its first term
+            syn = _scorer_key(False, q.boost, [_synonym_stats(stats)])
+            keys = [(next(iter(stats)), (tuple(stats), syn))]
         else:
-            scorers = [
-                (t, self.scorer_for(b, stats[t]))
+            keys = [
+                (t, _scorer_key(False, b, [stats[t]]))
                 for t, b in zip(shape.terms, shape.boosts) if t in stats
             ]
-        if not scorers:
-            return []
-        if not self._ensure_hot([t for t, _ in scorers], stats):
+        terms = list(stats)
+        if not self._ensure_hot(terms, stats):
             return "postings exceed hot cache"
-        runs = [self._postings_cache[t] for t, _ in scorers]
-        if shape.kind == "synonym":
-            u, inv, _o, _s = matchers.merge_sorted_runs([r[0] for r in runs])
-            freqs = np.concatenate([r[1] for r in runs]).astype(np.float64)
-            tf = np.bincount(inv, weights=freqs)
-            nrm = np.zeros(len(u), dtype=np.int64)
-            nrm[inv] = np.concatenate([r[2] for r in runs])  # norms are per doc
-            runs = [(u, tf, nrm)]
-            scorers = [(None, self.scorer_for(q.boost, _synonym_stats(stats)))]
-        docs = [r[0] for r in runs]
-        scores = [
-            sc.score(f, n).astype(np.float64)
-            for (_t, sc), (_d, f, n) in zip(scorers, runs)
-        ]
+        runs = [self._hot_run(t, key, terms) for t, key in keys]
         if len(runs) == 1:
-            u, tot = docs[0], scores[0]
+            u, tot = runs[0]
         elif shape.kind == "and":
-            u, tot = docs[0], scores[0]
-            for d, sc in zip(docs[1:], scores[1:]):
+            u, tot = runs[0]
+            for d, sc in runs[1:]:
                 u, ia, ib = matchers.intersect_sorted(u, d)
                 tot = tot[ia] + sc[ib]
         else:
-            u, inv, order, starts = matchers.merge_sorted_runs(docs)
-            cat = np.concatenate(scores)
+            u, inv, order, starts = matchers.merge_sorted_runs([r[0] for r in runs])
+            cat = np.concatenate([r[1] for r in runs])
             tot = np.bincount(inv, weights=cat)
             if shape.tie is not None:
                 mx = np.maximum.reduceat(cat[order], starts)
@@ -813,6 +848,34 @@ class Searcher:
         if shape.boost != 1.0:
             tot = tot * shape.boost
         return self._rank_rows(u, tot, k)
+
+    def _hot_run(self, t: str, key: tuple, current: Sequence[str]):
+        """Hot term ``t``'s (docs, float64 scores) under scorer ``key``,
+        scored on first use and kept in its cache entry while the budget
+        allows (_hot_room). A synonym key (term set, scorer key) is kept on
+        its first term: the terms' runs merged, tf summed per doc, scored
+        as one pseudo-term."""
+        docs, freqs, norms, runs = self._postings_cache[t]
+        run = runs.get(key)
+        if run is not None:
+            return run
+        if isinstance(key[0], tuple):
+            parts = [self._postings_cache[m] for m in key[0]]
+            docs, inv, _o, _s = matchers.merge_sorted_runs([p[0] for p in parts])
+            freqs = np.concatenate([p[1] for p in parts]).astype(np.float64)
+            freqs = np.bincount(inv, weights=freqs)
+            norms = np.zeros(len(docs), dtype=np.int64)
+            norms[inv] = np.concatenate([p[2] for p in parts])  # norms are per doc
+            sc = self._scorer(key[1])
+        else:
+            sc = self._scorer(key)
+        scores = sc.score(freqs, norms).astype(np.float64)
+        scores.flags.writeable = False
+        run = (docs, scores)
+        if self._hot_room(False, len(docs), current):
+            runs[key] = run
+            self._hot_cached += len(docs)
+        return run
 
     def _hot_phrase_rows(self, q: PhraseQuery, k: int):
         """Driver-side PhraseQuery, the hot tier's one positional shape:
@@ -975,24 +1038,29 @@ class Searcher:
         return {t: found[t] for t in terms if found.get(t) is not None}
 
     def scorer_for(self, boost: float, st: TermStats):
-        from .similarities import TermStatsIn
-
-        return self.sim.scorer(
-            boost,
-            TermStatsIn(st.doc_freq, st.total_term_freq),
-            self.index.stats,
-            self.dtype,
-        )
+        return self._scorer(_scorer_key(False, boost, [st]))
 
     def multi_scorer_for(self, boost: float, sts: Sequence[TermStats]):
-        from .similarities import TermStatsIn
+        return self._scorer(_scorer_key(True, boost, sts))
 
-        return self.sim.multi_scorer(
-            boost,
-            [TermStatsIn(s.doc_freq, s.total_term_freq) for s in sts],
-            self.index.stats,
-            self.dtype,
-        )
+    def _scorer(self, key: tuple):
+        """The memoized scorer of a _scorer_key: built on first use, at most
+        _DIST_META_CACHE_MAX kept (oldest dropped first)."""
+        sc = self._scorers.get(key)
+        if sc is None:
+            from .prune import _DIST_META_CACHE_MAX
+            from .similarities import TermStatsIn
+
+            multi, boost, pairs = key
+            ts = [TermStatsIn(df, ttf) for df, ttf in pairs]
+            if multi:
+                sc = self.sim.multi_scorer(boost, ts, self.index.stats, self.dtype)
+            else:
+                sc = self.sim.scorer(boost, ts[0], self.index.stats, self.dtype)
+            if len(self._scorers) >= _DIST_META_CACHE_MAX:
+                self._scorers.pop(next(iter(self._scorers)))
+            self._scorers[key] = sc
+        return sc
 
     def _empty(self) -> DataFrame:
         return self.spark.createDataFrame([], MATCH_SCHEMA)
@@ -1207,13 +1275,11 @@ class Searcher:
             )
         return scored_postings(self._postings_for([q.term]), {q.term: scorer})
 
-    def _blended_scorers(self, q: BlendedTermQuery, stats: Dict[str, TermStats]):
-        """BlendedTermQuery's [(term, scorer)] over its present terms, shared
-        by the hot kernel and _eval_blended: each term scores with the
-        ARTIFICIAL stats df = max(df_i), ttf = sum(ttf_i) and its own boost
-        (core/search/BlendedTermQuery.java:271-300)."""
-        from .similarities import TermStatsIn
-
+    def _blended_keys(self, q: BlendedTermQuery, stats: Dict[str, TermStats]):
+        """BlendedTermQuery's [(term, scorer key)] over its present terms,
+        shared by the hot kernel and _eval_blended: each term scores with
+        the ARTIFICIAL stats df = max(df_i), ttf = sum(ttf_i) and its own
+        boost (core/search/BlendedTermQuery.java:271-300)."""
         boosts = list(q.boosts) if q.boosts else [1.0] * len(q.terms)
         if len(boosts) != len(q.terms):
             raise ValueError("boosts must match terms")
@@ -1222,20 +1288,21 @@ class Searcher:
         present = [(t, b) for t, b in zip(q.terms, boosts) if t in stats]
         if not present:
             return []
-        art = TermStatsIn(
+        art = TermStats(
             max(stats[t].doc_freq for t, _b in present),
             sum(stats[t].total_term_freq for t, _b in present),
+            -1, 0, 0,
         )
-        return [
-            (t, self.sim.multi_scorer(b, [art], self.index.stats, self.dtype))
-            for t, b in present
-        ]
+        return [(t, _scorer_key(True, b, [art])) for t, b in present]
 
     def _eval_blended(self, q: BlendedTermQuery) -> DataFrame:
         """BlendedTermQuery: every term scored with the blended stats (one
         decode job for all terms), then combined per the rewrite method
         (dismax with tie, or SHOULD sum)."""
-        scorers = dict(self._blended_scorers(q, self.term_stats(q.terms)))
+        scorers = {
+            t: self._scorer(key)
+            for t, key in self._blended_keys(q, self.term_stats(q.terms))
+        }
         if not scorers:
             return self._empty()
         # one decode pass + one scoring kernel for ALL terms: each term's

@@ -227,3 +227,25 @@ def test_monotonic_ids_append_and_merge_round_trip(spark, dense_postings):
         idx.unpersist()
         for df in frames:
             df.unpersist()
+
+
+def test_segment_id_overflow_raises(spark, dense_postings):
+    """segment_id is an int32: ids shifted by 2^42 at seg_size 1024 sit in
+    segment 2^32, which the cast used to file under segment 0 with the
+    unshifted docs. The build raises instead, and so does a merge down to
+    a target segment size whose segment ids would wrap."""
+    from lucene_spark.merge import merge_segments
+
+    ids = [i + (2**42 if i >= 24 else 0) for i in range(len(_RT_TEXTS))]
+    df = spark.createDataFrame(list(zip(ids, _RT_TEXTS)), "doc_id long, content string")
+    with pytest.raises(Exception, match="segment_id overflow"):
+        _rt_build(spark, df)
+    cfg = IndexConfig(seg_size=2**20, block_size=8, with_positions=True)
+    idx = build_index(df, cfg, doc_id_col="doc_id", num_partitions=2,
+                      auto_seg_size=False, eager=True)
+    try:
+        assert _postings(idx) == _remapped(dense_postings, ids)
+        with pytest.raises(Exception, match="segment_id overflow"):
+            merge_segments(idx, target_seg_size=1024).postings.collect()
+    finally:
+        idx.unpersist()

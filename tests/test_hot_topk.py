@@ -1,14 +1,31 @@
-"""Spark-free checks of the hot tier's linear and k-sized helpers: top-k by
+"""The hot tier. Spark-free: its linear and k-sized helpers — top-k by
 partition (Searcher._rank_rows) and the sort-free merges of sorted doc-id
-runs (matchers.intersect_sorted / merge_sorted_runs) equal the full sorts
-they replace."""
+runs (matchers.intersect_sorted / merge_sorted_runs) — equal the full
+sorts they replace. On a real index: a
+warm query builds no scorer and re-scores no term, the memoized answers
+equal the exhaustive tier bit for bit, score runs count against the
+cache budget, and eviction is LRU."""
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from lucene_spark import matchers
-from lucene_spark.search import Searcher
+from lucene_spark.bm25 import BM25Scorer
+from lucene_spark.build import IndexConfig, build_index
+from lucene_spark.query import (
+    BlendedTermQuery,
+    DisjunctionMaxQuery,
+    PhraseQuery,
+    SynonymQuery,
+    TermQuery,
+    bool_query,
+)
+from lucene_spark.search import Searcher, _hot_size
+from lucene_spark.similarities import BM25, Boolean, Classic, LMDirichlet
+
+from oracle import make_corpus
 
 doc_ids = st.lists(st.integers(0, 80), max_size=40, unique=True).map(
     lambda xs: np.asarray(sorted(xs), dtype=np.int64)
@@ -93,3 +110,179 @@ def test_merge_sorted_runs_equals_unique(runs, data):
     mx = np.full(len(want_u), -np.inf)
     np.maximum.at(mx, want_inv, w)
     np.testing.assert_array_equal(np.maximum.reduceat(w[order], starts), mx)
+
+
+# ---- the hot tier on a real index: memoized scorers, kept score runs, LRU
+
+VOCAB = ["the", "spark", "merge", "red", "blue"]
+
+
+def _texts():
+    # "xa" and "xb" share doc_freq 12 but not total_term_freq (12 vs 36):
+    # LMDirichlet reads ttf, so a scorer memo keyed on doc_freq alone
+    # would score xb with xa's scorer
+    base = make_corpus(300, VOCAB, seed=7)
+    extra = [f"xa {w}" for w in VOCAB * 2 + VOCAB[:2]]
+    extra += [f"xb xb xb {w}" for w in VOCAB * 2 + VOCAB[:2]]
+    return base + extra
+
+
+@pytest.fixture(scope="module")
+def built(spark):
+    df = spark.createDataFrame(list(enumerate(_texts())), "doc_id long, text string")
+    idx = build_index(
+        df, IndexConfig(seg_size=64, with_positions=True),
+        content_col="text", doc_id_col="doc_id", auto_seg_size=False, eager=True,
+    )
+    yield idx
+    idx.unpersist()
+
+
+@pytest.fixture
+def hot(monkeypatch):
+    monkeypatch.setenv("LUCENE_SPARK_HOT_CACHE_POSTINGS", "1000000")
+
+
+def _shapes(b=1.0):
+    """The nine hot shapes (perfbench's pool), every weight under boost b."""
+    t = lambda w: TermQuery(term=w, boost=b)
+    return {
+        "term": t("spark"),
+        "or": bool_query(should=[t("spark"), t("merge"), t("red")]),
+        "and": bool_query(must=[t("spark"), t("merge")]),
+        "synonym": SynonymQuery(terms=("red", "blue"), boost=b),
+        "dismax": DisjunctionMaxQuery(disjuncts=(t("spark"), t("blue")), tie_breaker=0.1),
+        "blended": BlendedTermQuery(terms=("merge", "red"), boosts=(b, 2.0),
+                                    tie_breaker=0.1),
+        "phrase": PhraseQuery(terms=("the", "spark"), boost=b),
+        "sloppy": PhraseQuery(terms=("the", "spark", "merge"), slop=3, boost=b),
+        "sloppy_rpts": PhraseQuery(terms=("the", "spark", "the"), slop=4, boost=b),
+    }
+
+
+def _f32(rows):
+    return [(int(d), np.float32(s)) for d, s in rows]
+
+
+def _exhaustive(idx, q, **kw):
+    # a fresh Searcher: its scorers are built anew, not read from the memo
+    # under test
+    rows = Searcher(idx, **kw).search(q, 10, prune=False).collect()
+    return [(int(r["doc_id"]), float(r["score"])) for r in rows]
+
+
+def _hot_top(s, q):
+    p = s.plan(q, 10)
+    assert p.tier == "hot", (q, p.declined)
+    return p.rows
+
+
+def test_warm_hot_queries_build_no_scorer_and_rescore_nothing(built, hot, monkeypatch):
+    s = Searcher(built, dtype=np.float32)
+    shapes = _shapes()
+    first = {name: _hot_top(s, q) for name, q in shapes.items()}
+    built_scorers, scored = [], []
+    for name in ("scorer", "multi_scorer"):
+        orig = getattr(s.sim, name)
+        monkeypatch.setattr(s.sim, name, lambda *a, _o=orig, **kw: (
+            built_scorers.append(a), _o(*a, **kw))[1])
+    orig_score = BM25Scorer.score
+    monkeypatch.setattr(BM25Scorer, "score", lambda self, f, n: (
+        scored.append(len(f)), orig_score(self, f, n))[1])
+    for name, q in shapes.items():
+        del scored[:]
+        assert _hot_top(s, q) == first[name], name
+        # a phrase still scores its phrase freqs; every other shape reads
+        # its kept score runs
+        assert (len(scored) == 1) if name.startswith(("phrase", "sloppy")) else not scored, name
+    assert built_scorers == []
+
+
+@pytest.mark.parametrize("boost", [0.3, 1.0, 2.5])
+@pytest.mark.parametrize("sim", [BM25, Classic, Boolean])
+def test_hot_equals_exhaustive_bit_for_bit(built, hot, sim, boost):
+    s = Searcher(built, dtype=np.float32, similarity=sim())
+    for name, q in _shapes(boost).items():
+        want = _exhaustive(built, q, dtype=np.float32, similarity=sim())
+        assert len(want) == 10, name
+        for _ in range(2):  # cold, then from the kept runs
+            assert _f32(_hot_top(s, q)) == _f32(want), (name, sim, boost)
+
+
+def test_hot_memo_key_covers_every_scorer_stat(built, hot):
+    s = Searcher(built, dtype=np.float32, similarity=LMDirichlet())
+    t = lambda w: TermQuery(term=w)
+    st = s.term_stats(["xa", "xb"])
+    assert st["xa"].doc_freq == st["xb"].doc_freq
+    assert st["xa"].total_term_freq != st["xb"].total_term_freq
+    for q in (t("xa"), t("xb"), bool_query(should=[t("xa"), t("xb"), t("red")]),
+              bool_query(must=[t("xb"), t("red")])):
+        want = _exhaustive(built, q, dtype=np.float32, similarity=LMDirichlet())
+        assert _f32(_hot_top(s, q)) == _f32(want), q
+
+
+def test_hot_same_term_under_two_boosts_blended_and_float64(built, hot):
+    s = Searcher(built, dtype=np.float32)
+    for q in (TermQuery(term="spark", boost=2.5), TermQuery(term="spark"),
+              BlendedTermQuery(terms=("merge", "red"), boosts=(1.0, 2.0))):
+        assert _f32(_hot_top(s, q)) == _f32(_exhaustive(built, q, dtype=np.float32)), q
+    s64 = Searcher(built, dtype=np.float64)
+    for name, q in _shapes().items():
+        want = _exhaustive(built, q, dtype=np.float64)
+        for _ in range(2):
+            assert _f32(_hot_top(s64, q)) == _f32(want), name
+
+
+def test_hot_budget_counts_score_runs(built, hot, monkeypatch):
+    s = Searcher(built, dtype=np.float32)
+    df = {t: st.doc_freq for t, st in s.term_stats(["spark", "red", "blue"]).items()}
+    s.top_docs(TermQuery(term="spark"), 10)
+    assert s._hot_cached == 2 * df["spark"]  # postings + one score run
+    s.top_docs(TermQuery(term="spark", boost=2.5), 10)
+    assert s._hot_cached == 3 * df["spark"]  # a second scorer key, a second run
+    s.top_docs(SynonymQuery(terms=("red", "blue")), 10)
+    union = len(np.union1d(s._postings_cache["red"][0], s._postings_cache["blue"][0]))
+    assert s._hot_cached == 3 * df["spark"] + df["red"] + df["blue"] + union
+    # room for red alone with the synonym run it hosts and a term run:
+    # spark goes with both its runs, then blue
+    monkeypatch.setenv("LUCENE_SPARK_HOT_CACHE_POSTINGS", str(2 * df["red"] + union))
+    s.top_docs(TermQuery(term="red"), 10)
+    assert list(s._postings_cache) == ["red"]
+    assert s._hot_cached == 2 * df["red"] + union
+    assert s._hot_cached == sum(_hot_size(e, False) for e in s._postings_cache.values())
+
+
+def test_hot_cache_evicts_least_recently_used(built, hot, monkeypatch):
+    s = Searcher(built, dtype=np.float32)
+    a, b, c = "spark", "merge", "red"
+    df = {t: st.doc_freq for t, st in s.term_stats([a, b, c]).items()}
+    assert df[c] <= df[b]
+    cost = {}
+    for t in (a, b, c):  # what one term query keeps: postings + score run
+        before = s._hot_cached
+        s.top_docs(TermQuery(term=t), 10)
+        cost[t] = s._hot_cached - before
+    monkeypatch.setenv("LUCENE_SPARK_HOT_CACHE_POSTINGS", str(cost[a] + cost[b]))
+    s = Searcher(built, dtype=np.float32)
+    for t in (a, b, a, c):
+        q = TermQuery(term=t)
+        assert _hot_top(s, q) == _hot_top(Searcher(built, dtype=np.float32), q)
+    assert list(s._postings_cache) == [a, c]  # b was least recently used
+    assert s._hot_cached == cost[a] + cost[c]
+
+
+def test_score_runs_give_way_to_the_postings_a_query_needs(built, hot, monkeypatch):
+    # "spark" under two boosts keeps its postings and two score runs (3a);
+    # at a cap of a + b, or(spark, merge) must drop those runs to fetch
+    # merge's postings, not turn the query away from the hot tier
+    s = Searcher(built, dtype=np.float32)
+    df = {t: st.doc_freq for t, st in s.term_stats(["spark", "merge"]).items()}
+    for b in (1.0, 2.5):
+        s.top_docs(TermQuery(term="spark", boost=b), 10)
+    assert s._hot_cached == 3 * df["spark"]
+    monkeypatch.setenv("LUCENE_SPARK_HOT_CACHE_POSTINGS", str(df["spark"] + df["merge"]))
+    q = bool_query(should=[TermQuery(term="spark"), TermQuery(term="merge")])
+    assert _f32(_hot_top(s, q)) == _f32(_exhaustive(built, q, dtype=np.float32))
+    assert list(s._postings_cache) == ["spark", "merge"]
+    assert s._hot_cached == df["spark"] + df["merge"]
+    assert s._hot_cached == sum(_hot_size(e, False) for e in s._postings_cache.values())

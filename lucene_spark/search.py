@@ -14,6 +14,12 @@ Pipeline per query (SURVEY.md §3.2 mapping):
    == per-partition heap + TopDocs.merge (TakeOrderedAndProject), ties by
    ascending doc_id (TopScoreDocCollector.java:27-29)
 
+Positional queries (phrase, multi-phrase, span, interval, term automaton)
+replace step 4 with: decode_raw(terms, with_positions=True) → position_freqs
+(group by doc, one pandas_udf per Arrow batch) → the evaluator's freq
+kernel (matchers.py) → one scoring tail: _score_freq_norm (similarity over
+freq and norm) or _interval_saturation (similarity-free).
+
 Top-k entry points (``search``, ``top_docs``, ``search_after``) go through
 one planner, ``Searcher.plan``: the hot driver cache, then block-max
 pruning (WAND analog, prune.py), then the exhaustive ``_eval`` above;
@@ -137,22 +143,49 @@ def matching_docs(blocks: DataFrame) -> DataFrame:
     ).distinct()
 
 
-def _slot_position_lists(plist: pd.Series, slots_t, all_terms):
-    """Arrow-batch (term, positions) structs → per-SLOT per-doc position
-    lists: a slot with several alternatives (Intervals.or / multi-term
-    expansion) gets the sorted union of its alternatives' positions — the
-    minimal intervals of a point-term disjunction are just the union of
-    points (DisjunctionIntervalsSource over TermIntervalsSource)."""
-    n_docs = len(plist)
-    by_term = {t: [None] * n_docs for t in all_terms}
-    for i, entries in enumerate(plist):
-        for e in entries:
-            by_term[e["term"]][i] = np.asarray(e["positions"], dtype=np.int64)
+def position_freqs(raw: DataFrame, keys, min_keys: int, freq) -> DataFrame:
+    """The Spark tier's one positional step: (doc_id, freq, norm) of the
+    docs of ``raw`` (term, doc_id, norm, positions) that hold at least
+    ``min_keys`` distinct keys and whose ``freq(by_key, n_docs)`` is > 0.
+    ``freq`` is the evaluator's kernel: per Arrow batch of grouped docs,
+    ``by_key`` maps each of ``keys`` to the docs' int64 position arrays
+    (None where a doc lacks the key), and it returns one freq per doc."""
+    keys = tuple(keys)
+
+    @F.pandas_udf("double")
+    def freqs(plist: pd.Series) -> pd.Series:
+        n_docs = len(plist)
+        by_key = {k: [None] * n_docs for k in keys}
+        for i, entries in enumerate(plist):
+            for e in entries:
+                by_key[e["term"]][i] = np.asarray(e["positions"], dtype=np.int64)
+        return pd.Series(np.asarray(freq(by_key, n_docs), dtype=np.float64))
+
+    grouped = raw.groupBy("doc_id").agg(
+        F.count("*").alias("nt"),
+        F.first("norm").alias("norm"),
+        F.collect_list(F.struct("term", "positions")).alias("plist"),
+    )
+    if min_keys > 1:
+        grouped = grouped.filter(F.col("nt") >= min_keys)
+    return (
+        grouped.withColumn("freq", freqs(F.col("plist")))
+        .filter(F.col("freq") > 0)
+        .select("doc_id", "freq", "norm")
+    )
+
+
+def _slot_position_lists(by_key, slots, n_docs):
+    """position_freqs' per-key lists → per-SLOT per-doc position lists: a
+    slot with several alternatives (Intervals.or / multi-term expansion)
+    gets the sorted union of its alternatives' positions — the minimal
+    intervals of a point-term disjunction are just the union of points
+    (DisjunctionIntervalsSource over TermIntervalsSource)."""
     by_slot = []
-    for s in slots_t:
+    for s in slots:
         col = []
         for i in range(n_docs):
-            parts = [by_term[t][i] for t in s if by_term[t][i] is not None]
+            parts = [by_key[k][i] for k in s if by_key[k][i] is not None]
             if not parts:
                 col.append(None)
             elif len(parts) == 1:
@@ -160,7 +193,56 @@ def _slot_position_lists(plist: pd.Series, slots_t, all_terms):
             else:
                 col.append(np.unique(np.concatenate(parts)))
         by_slot.append(col)
-    return by_slot, n_docs
+    return by_slot
+
+
+def _slot_min_keys(slots) -> int:
+    """The distinct keys a doc needs to fill every slot: one per slot when
+    no two slots share an alternative, else 1 (decided in the kernel)."""
+    disjoint = all(
+        not (set(slots[i]) & set(slots[j]))
+        for i in range(len(slots))
+        for j in range(i + 1, len(slots))
+    )
+    return len(slots) if disjoint else 1
+
+
+def _span_near_freqs(lists, slop: int, in_order: bool, n_docs: int, distinct: bool):
+    """SpanNearQuery freq per doc over per-clause position lists
+    (NearSpansOrdered greedy chains / NearSpansUnordered walk, matchers.py)."""
+    if in_order:
+        return matchers.span_ordered_freqs(lists, slop, n_docs)
+    return matchers.span_unordered_freqs(lists, slop, n_docs, distinct=distinct)
+
+
+def _span_spec(op, what: str):
+    """A span operand as (mode, terms, slop, in_order): a term's point
+    spans or a SpanNearQuery's match windows."""
+    if isinstance(op, str):
+        return ("term", (op,), 0, True)
+    if isinstance(op, SpanNearQuery):
+        return ("near", tuple(op.terms), int(op.slop), bool(op.in_order))
+    raise NotImplementedError(f"{what} operand {type(op).__name__}")
+
+
+def _doc_spans(spec, by_key, d: int):
+    """(starts, ends) of a _span_spec's span stream in doc ``d`` (term
+    points, NearSpansOrdered chains, NearSpansUnordered states — matchers.py);
+    empty when one of its terms is absent from the doc."""
+    mode, terms, slop, in_order = spec
+    lists = [by_key[t][d] for t in terms]
+    if any(p is None for p in lists):
+        return np.empty(0, np.int64), np.empty(0, np.int64)
+    if mode == "term":
+        return lists[0], lists[0] + 1
+    if in_order:
+        return matchers.ordered_chain_spans(lists, slop)
+    return matchers.unordered_state_spans(lists, slop)
+
+
+def _span_weight(starts: np.ndarray, ends: np.ndarray) -> float:
+    """Σ 1/(1 + (end - start)) over spans (SpanScorer.setFreqCurrentDoc)."""
+    return np.sum(1.0 / (1.0 + (ends - starts).astype(np.float64)))
 
 
 class TooManyClauses(RuntimeError):
@@ -1178,7 +1260,9 @@ class Searcher:
         if isinstance(q, SpanNotQuery):
             return self._eval_span_not(q)
         if isinstance(q, SpanFirstQuery):
-            return self._eval_span_first(q)
+            return self._eval_span_position_range(SpanPositionRangeQuery(
+                match=q.term, start=0, end=q.end, boost=q.boost
+            ))
         if isinstance(q, SpanPositionRangeQuery):
             return self._eval_span_position_range(q)
         if isinstance(q, IntervalQuery):
@@ -1299,16 +1383,25 @@ class Searcher:
         """BlendedTermQuery: every term scored with the blended stats (one
         decode job for all terms), then combined per the rewrite method
         (dismax with tie, or SHOULD sum)."""
-        scorers = {
-            t: self._scorer(key)
-            for t, key in self._blended_keys(q, self.term_stats(q.terms))
-        }
-        if not scorers:
+        keys = self._blended_keys(q, self.term_stats(q.terms))
+        if not keys:
             return self._empty()
-        # one decode pass + one scoring kernel for ALL terms: each term's
-        # scorer runs on its slice of the batch — per-row op order identical
-        # to per-term evaluation
-        u = scored_postings(self._postings_for(sorted(scorers)), scorers)
+        # every occurrence of a term scores, like the hot kernel: layer j
+        # holds the j-th occurrence of each term (no repeat: one layer). One
+        # decode pass + one scoring kernel per layer: each term's scorer
+        # runs on its slice of the batch — per-row op order identical to
+        # per-term evaluation
+        layers: List[Dict[str, BM25Scorer]] = []
+        seen: Dict[str, int] = {}
+        for t, key in keys:
+            j = seen[t] = seen.get(t, -1) + 1
+            if j == len(layers):
+                layers.append({})
+            layers[j][t] = self._scorer(key)
+        u = None
+        for scorers in layers:
+            part = scored_postings(self._postings_for(sorted(scorers)), scorers)
+            u = part if u is None else u.unionByName(part)
         if q.rewrite == "boolean":
             agg = u.groupBy("doc_id").agg(F.sum("score").alias("score"))
             score = F.col("score")
@@ -1445,38 +1538,13 @@ class Searcher:
         slop = int(q.slop)
         terms_t = tuple(terms)
 
-        @F.pandas_udf("double")
-        def phrase_freq(plist: pd.Series) -> pd.Series:
-            from . import matchers
-
-            n_docs = len(plist)
-            pos_by_term = {t: [None] * n_docs for t in set(terms_t)}
-            for i, entries in enumerate(plist):
-                for e in entries:
-                    pos_by_term[e["term"]][i] = np.asarray(
-                        e["positions"], dtype=np.int64
-                    )
+        def phrase_freq(by_term, n_docs):
             if slop == 0:
-                out = matchers.exact_phrase_freqs(
-                    pos_by_term, terms_t, n_docs
-                ).astype(np.float64)
-            else:
-                out = matchers.sloppy_phrase_freqs(pos_by_term, terms_t, slop, n_docs)
-            return pd.Series(out)
+                return matchers.exact_phrase_freqs(by_term, terms_t, n_docs)
+            return matchers.sloppy_phrase_freqs(by_term, terms_t, slop, n_docs)
 
-        grouped = (
-            raw.groupBy("doc_id")
-            .agg(
-                F.count("*").alias("nt"),
-                F.first("norm").alias("norm"),
-                F.collect_list(F.struct("term", "positions")).alias("plist"),
-            )
-            .filter(F.col("nt") == len(set(terms)))
-        )
-        scored = grouped.withColumn("freq", phrase_freq(F.col("plist"))).filter(
-            F.col("freq") > 0
-        )
-        return self._score_freq_norm(scored.select("doc_id", "freq", "norm"), scorer)
+        scored = position_freqs(raw, terms, len(set(terms)), phrase_freq)
+        return self._score_freq_norm(scored, scorer)
 
     def _eval_term_automaton(self, q) -> DataFrame:
         """TermAutomatonQuery (sandbox/search/TermAutomatonScorer.java:
@@ -1503,16 +1571,14 @@ class Searcher:
         dfa, accepts = dict(q.dfa), set(q.dfa_accepts)
         has_any = any(t is None for _s, t in dfa.keys())
 
-        @F.pandas_udf("double")
-        def ta_freq(plist: pd.Series) -> pd.Series:
-            out = np.zeros(len(plist), dtype=np.float64)
-            for i, entries in enumerate(plist):
-                events = []
-                for e in entries:
-                    t = e["term"]
-                    for p in e["positions"]:
-                        events.append((int(p), t))
-                events.sort()
+        def ta_freq(by_term, n_docs):
+            out = np.zeros(n_docs, dtype=np.float64)
+            for i in range(n_docs):
+                events = sorted(
+                    (int(p), t)
+                    for t, col in by_term.items() if col[i] is not None
+                    for p in col[i]
+                )
                 freq = 0
                 positions: dict = {}
                 last_pos = -1
@@ -1545,16 +1611,9 @@ class Searcher:
                             freq += 1
                     last_pos = pos
                 out[i] = float(freq)
-            return pd.Series(out)
+            return out
 
-        grouped = raw.groupBy("doc_id").agg(
-            F.first("norm").alias("norm"),
-            F.collect_list(F.struct("term", "positions")).alias("plist"),
-        )
-        scored = grouped.withColumn("freq", ta_freq(F.col("plist"))).filter(
-            F.col("freq") > 0
-        )
-        return self._score_freq_norm(scored.select("doc_id", "freq", "norm"), scorer)
+        return self._score_freq_norm(position_freqs(raw, present, 1, ta_freq), scorer)
 
     # ---------------- explain (IndexSearcher.explain analog) ----------------
 
@@ -1825,35 +1884,17 @@ class Searcher:
             clauses = [TermQuery(term=t) for _s, t in chosen]
         return bool_query(should=clauses, boost=boost)
 
-    def _grouped_positions(self, terms: Sequence[str], min_terms: int) -> DataFrame:
-        """(doc_id, norm, plist=[{term, positions}]) for docs containing at
-        least min_terms distinct of the given terms."""
-        if not self.index.config.with_positions:
-            # IndexOptions mismatch — same failure Lucene raises when a
-            # PhraseQuery hits a field indexed without positions
-            raise ValueError(
-                "positional query on an index built with with_positions=False"
-            )
-        raw = self.decode_raw(sorted(set(terms)), with_positions=True)
-        return (
-            raw.groupBy("doc_id")
-            .agg(
-                F.count("*").alias("nt"),
-                F.first("norm").alias("norm"),
-                F.collect_list(F.struct("term", "positions")).alias("plist"),
-            )
-            .filter(F.col("nt") >= min_terms)
-        )
-
     def _eval_multi_phrase(self, q: MultiPhraseQuery) -> DataFrame:
         """MultiPhraseQuery: slot i matches any alternative at start+i; freq =
         number of distinct start positions (search/MultiPhraseQuery.java —
         UnionPostingsEnum per slot + exact phrase matcher); idf summed over
         every term in every slot, like the Weight's allTermStats. slop > 0
-        runs SloppyPhraseMatcher over the per-slot unions — including the
-        hasMultiTermRpts repeat machinery
-        (matchers.sloppy_multi_phrase_freqs)."""
-        slots = [tuple(s) for s in q.slots]
+        (MultiPhraseQuery.setSlop → SloppyPhraseMatcher over
+        UnionPostingsEnum streams) feeds the per-slot unions to the
+        repeat-aware walk — alternatives shared between slots take the
+        reference's hasMultiTermRpts path (tpPos collisions, collide-chase
+        init; see matchers.sloppy_multi_phrase_freqs)."""
+        slots = tuple(tuple(s) for s in q.slots)
         all_terms = [t for s in slots for t in s]
         stats = self.term_stats(all_terms)
         # a slot with no indexed alternative can never match
@@ -1864,68 +1905,27 @@ class Searcher:
             q.boost, [stats[t] for t in all_terms if t in stats]
         )
         present = [t for t in dict.fromkeys(all_terms) if t in stats]
-        if int(q.slop) > 0:
-            return self._eval_multi_phrase_sloppy(q, slots, present, scorer)
-
-        @F.pandas_udf("int")
-        def mp_freq(plist: pd.Series) -> pd.Series:
-            out = np.zeros(len(plist), dtype=np.int32)
-            for i, entries in enumerate(plist):
-                pos_by_term = {e["term"]: np.asarray(e["positions"]) for e in entries}
-                cands: Optional[np.ndarray] = None
-                ok = True
-                for off, alts in enumerate(slots):
-                    ps = [pos_by_term[t] for t in alts if t in pos_by_term]
-                    if not ps:
-                        ok = False
-                        break
-                    slot_pos = np.unique(np.concatenate(ps)) - off
-                    cands = slot_pos if cands is None else np.intersect1d(cands, slot_pos)
-                if ok and cands is not None:
-                    out[i] = int((cands >= 0).sum())
-            return pd.Series(out)
-
-        grouped = self._grouped_positions(present, min_terms=1)
-        scored = grouped.withColumn("freq", mp_freq(F.col("plist"))).filter(
-            F.col("freq") > 0
-        )
-        return self._score_freq_norm(scored.select("doc_id", "freq", "norm"), scorer)
-
-    def _eval_multi_phrase_sloppy(
-        self, q: MultiPhraseQuery, slots, present, scorer
-    ) -> DataFrame:
-        """Sloppy MultiPhraseQuery (MultiPhraseQuery.setSlop →
-        SloppyPhraseMatcher over UnionPostingsEnum streams): the per-slot
-        union position lists feed the repeat-aware walk — alternatives
-        shared between slots take the reference's hasMultiTermRpts path
-        (tpPos collisions, collide-chase init; see
-        matchers.sloppy_multi_phrase_freqs)."""
-        slots_t = tuple(tuple(s) for s in slots)
         slop = int(q.slop)
-        present_t = tuple(present)
 
-        @F.pandas_udf("double")
-        def mps_freq(plist: pd.Series) -> pd.Series:
-            from . import matchers
-
-            n_docs = len(plist)
-            by_term = {t: [None] * n_docs for t in present_t}
-            for i, entries in enumerate(plist):
-                for e in entries:
-                    by_term[e["term"]][i] = np.asarray(
-                        e["positions"], dtype=np.int64
-                    )
+        def mp_freq(by_term, n_docs):
             # absent-in-index alternatives never contribute positions
-            full = {t: by_term.get(t, [None] * n_docs) for s in slots_t for t in s}
-            return pd.Series(
-                matchers.sloppy_multi_phrase_freqs(full, slots_t, slop, n_docs)
-            )
+            if slop > 0:
+                return matchers.sloppy_multi_phrase_freqs(by_term, slots, slop, n_docs)
+            by_slot = _slot_position_lists(by_term, slots, n_docs)
+            out = np.zeros(n_docs, dtype=np.int32)
+            for i in range(n_docs):
+                lists = [col[i] for col in by_slot]
+                if any(p is None for p in lists):
+                    continue
+                cands = lists[0]
+                for off, p in enumerate(lists[1:], 1):
+                    cands = np.intersect1d(cands, p - off)
+                out[i] = int((cands >= 0).sum())
+            return out
 
-        grouped = self._grouped_positions(present, min_terms=1)
-        scored = grouped.withColumn("freq", mps_freq(F.col("plist"))).filter(
-            F.col("freq") > 0
-        )
-        return self._score_freq_norm(scored.select("doc_id", "freq", "norm"), scorer)
+        raw = self.decode_raw(sorted(present), with_positions=True)
+        scored = position_freqs(raw, all_terms, 1, mp_freq)
+        return self._score_freq_norm(scored, scorer)
 
     def _eval_span_near(self, q: SpanNearQuery) -> DataFrame:
         """SpanNearQuery parity (search/spans/NearSpansOrdered.java greedy
@@ -1956,29 +1956,14 @@ class Searcher:
         terms_t = tuple(terms)
         scorer = self.multi_scorer_for(q.boost, [stats[t] for t in terms])
 
-        @F.pandas_udf("double")
-        def span_freq(plist: pd.Series) -> pd.Series:
-            from . import matchers
+        def span_freq(by_term, n_docs):
+            return _span_near_freqs(
+                [by_term[t] for t in terms_t], slop, in_order, n_docs, distinct
+            )
 
-            n_docs = len(plist)
-            by_term = {t: [None] * n_docs for t in set(terms_t)}
-            for i, entries in enumerate(plist):
-                for e in entries:
-                    by_term[e["term"]][i] = np.asarray(e["positions"], dtype=np.int64)
-            pos_by_clause = [by_term[t] for t in terms_t]
-            if in_order:
-                out = matchers.span_ordered_freqs(pos_by_clause, slop, n_docs)
-            else:
-                out = matchers.span_unordered_freqs(
-                    pos_by_clause, slop, n_docs, distinct=distinct
-                )
-            return pd.Series(out)
-
-        grouped = self._grouped_positions(terms, min_terms=len(set(terms)))
-        scored = grouped.withColumn("freq", span_freq(F.col("plist"))).filter(
-            F.col("freq") > 0
-        )
-        return self._score_freq_norm(scored.select("doc_id", "freq", "norm"), scorer)
+        raw = self.decode_raw(sorted(set(terms)), with_positions=True)
+        scored = position_freqs(raw, terms, len(set(terms)), span_freq)
+        return self._score_freq_norm(scored, scorer)
 
     def _eval_span_near_slots(self, q: SpanNearQuery) -> DataFrame:
         """SpanNearQuery with multi-term / alternation clauses
@@ -2007,30 +1992,13 @@ class Searcher:
         # df=0 contributes no spans); slots stay non-empty per the check
         slots_t = tuple(tuple(t for t in s if t in stats) for s in slots)
 
-        @F.pandas_udf("double")
-        def span_freq(plist: pd.Series) -> pd.Series:
-            from . import matchers
+        def span_freq(by_term, n_docs):
+            by_slot = _slot_position_lists(by_term, slots_t, n_docs)
+            return _span_near_freqs(by_slot, slop, in_order, n_docs, False)
 
-            by_slot, n_docs = _slot_position_lists(plist, slots_t, present)
-            if in_order:
-                out = matchers.span_ordered_freqs(by_slot, slop, n_docs)
-            else:
-                out = matchers.span_unordered_freqs(
-                    by_slot, slop, n_docs, distinct=False
-                )
-            return pd.Series(out)
-
-        disjoint = all(
-            not (set(slots_t[i]) & set(slots_t[j]))
-            for i in range(len(slots_t))
-            for j in range(i + 1, len(slots_t))
-        )
-        min_terms = len(slots_t) if disjoint else 1
-        grouped = self._grouped_positions(present, min_terms=min_terms)
-        scored = grouped.withColumn("freq", span_freq(F.col("plist"))).filter(
-            F.col("freq") > 0
-        )
-        return self._score_freq_norm(scored.select("doc_id", "freq", "norm"), scorer)
+        raw = self.decode_raw(present, with_positions=True)
+        scored = position_freqs(raw, present, _slot_min_keys(slots_t), span_freq)
+        return self._score_freq_norm(scored, scorer)
 
     def _eval_intervals(self, q: IntervalQuery) -> DataFrame:
         """IntervalQuery (queries/intervals): minimal ordered/unordered
@@ -2073,17 +2041,9 @@ class Searcher:
             counts[t] = counts.get(t, 0) + 1
         has_dups = len(set(terms)) != len(terms)
 
-        @F.pandas_udf("double")
-        def iv_freq(plist: pd.Series) -> pd.Series:
-            from . import matchers
-
-            n_docs = len(plist)
-            by_term = {t: [None] * n_docs for t in set(terms_t)}
-            for i, entries in enumerate(plist):
-                for e in entries:
-                    by_term[e["term"]][i] = np.asarray(e["positions"], dtype=np.int64)
+        def iv_freq(by_term, n_docs):
             if ordered:
-                out = matchers.interval_freqs(
+                return matchers.interval_freqs(
                     [by_term[t] for t in terms_t],
                     True,
                     max_gaps,
@@ -2091,29 +2051,18 @@ class Searcher:
                     min_extent=min_extent,
                     max_width=max_width,
                 )
-            elif has_dups:
-                out = matchers.unordered_intervals_dups_freqs(
+            if has_dups:
+                return matchers.unordered_intervals_dups_freqs(
                     by_term, counts, max_gaps, n_docs, max_width=max_width
                 )
-            else:
-                out = matchers.interval_freqs(
-                    [by_term[t] for t in terms_t], False, max_gaps, n_docs,
-                    max_width=max_width,
-                )
-            return pd.Series(out)
+            return matchers.interval_freqs(
+                [by_term[t] for t in terms_t], False, max_gaps, n_docs,
+                max_width=max_width,
+            )
 
-        grouped = self._grouped_positions(terms, min_terms=len(set(terms)))
-        scored = grouped.withColumn("freq", iv_freq(F.col("plist"))).filter(
-            F.col("freq") > 0
-        )
-        pivot = float(q.pivot)
-        return scored.select(
-            "doc_id",
-            (
-                F.lit(float(q.boost))
-                * (F.lit(1.0) - F.lit(pivot) / (F.col("freq") + F.lit(pivot)))
-            ).alias("score"),
-        )
+        raw = self.decode_raw(sorted(set(terms)), with_positions=True)
+        scored = position_freqs(raw, terms, len(set(terms)), iv_freq)
+        return self._interval_saturation(scored, q.boost, q.pivot)
 
     def _eval_span_contain(self, q: "SpanContainQuery") -> DataFrame:
         """SpanContainingQuery / SpanWithinQuery: per doc, enumerate each
@@ -2124,15 +2073,8 @@ class Searcher:
         Σ 1/(1+(end-start)) over the emitted source spans; idf summed over
         the distinct operand terms in sorted order (SpanWeight builds its
         scorer from the term-sorted states map)."""
-
-        def spec(op):
-            if isinstance(op, str):
-                return ("term", (op,), 0, True)
-            if isinstance(op, SpanNearQuery):
-                return ("near", tuple(op.terms), int(op.slop), bool(op.in_order))
-            raise NotImplementedError(f"span contain operand {type(op).__name__}")
-
-        big_spec, little_spec = spec(q.big), spec(q.little)
+        big_spec = _span_spec(q.big, "span contain")
+        little_spec = _span_spec(q.little, "span contain")
         all_terms = sorted({t for s in (big_spec, little_spec) for t in s[1]})
         stats = self.term_stats(all_terms)
         if any(t not in stats for t in all_terms):
@@ -2140,44 +2082,21 @@ class Searcher:
         scorer = self.multi_scorer_for(q.boost, [stats[t] for t in all_terms])
         kind = "containing" if q.kind == "containing" else "within"
 
-        @F.pandas_udf("double")
-        def contain_freq(plist: pd.Series) -> pd.Series:
-            from . import matchers
-
-            n_docs = len(plist)
-            by_term = {t: [None] * n_docs for t in all_terms}
-            for i, entries in enumerate(plist):
-                for e in entries:
-                    by_term[e["term"]][i] = np.asarray(e["positions"], dtype=np.int64)
-
-            def doc_spans(sp, d):
-                mode, terms, slop, in_order = sp
-                lists = [by_term[t][d] for t in terms]
-                if mode == "term":
-                    p = lists[0]
-                    if p is None:
-                        return np.empty(0, np.int64), np.empty(0, np.int64)
-                    return p, p + 1
-                if in_order:
-                    return matchers.ordered_chain_spans(lists, slop)
-                return matchers.unordered_state_spans(lists, slop)
-
+        def contain_freq(by_term, n_docs):
             out = np.zeros(n_docs, dtype=np.float64)
             for d in range(n_docs):
-                bs, be = doc_spans(big_spec, d)
-                ls, le = doc_spans(little_spec, d)
+                bs, be = _doc_spans(big_spec, by_term, d)
+                ls, le = _doc_spans(little_spec, by_term, d)
                 if len(bs) == 0 or len(ls) == 0:
                     continue
                 es, ee = matchers.span_contain_filter(kind, bs, be, ls, le)
                 if len(es):
-                    out[d] = np.sum(1.0 / (1.0 + (ee - es).astype(np.float64)))
-            return pd.Series(out)
+                    out[d] = _span_weight(es, ee)
+            return out
 
-        grouped = self._grouped_positions(all_terms, min_terms=len(all_terms))
-        scored = grouped.withColumn("freq", contain_freq(F.col("plist"))).filter(
-            F.col("freq") > 0
-        )
-        return self._score_freq_norm(scored.select("doc_id", "freq", "norm"), scorer)
+        raw = self.decode_raw(all_terms, with_positions=True)
+        scored = position_freqs(raw, all_terms, len(all_terms), contain_freq)
+        return self._score_freq_norm(scored, scorer)
 
     def _eval_intervals_slots(self, q: IntervalQuery, slots) -> DataFrame:
         """IntervalQuery with OR-alternation slots: per slot, the minimal
@@ -2189,30 +2108,15 @@ class Searcher:
         slots_t = tuple(tuple(s) for s in slots)
         all_terms = sorted({t for s in slots_t for t in s})
 
-        @F.pandas_udf("double")
-        def ivs_freq(plist: pd.Series) -> pd.Series:
-            from . import matchers
-
-            by_slot, n_docs = _slot_position_lists(plist, slots_t, all_terms)
-            return pd.Series(
-                matchers.interval_freqs(
-                    by_slot, ordered, max_gaps, n_docs,
-                    min_extent=len(slots_t), max_width=max_width,
-                )
+        def ivs_freq(by_term, n_docs):
+            return matchers.interval_freqs(
+                _slot_position_lists(by_term, slots_t, n_docs), ordered,
+                max_gaps, n_docs, min_extent=len(slots_t), max_width=max_width,
             )
 
-        grouped = self._grouped_positions(all_terms, min_terms=1)
-        scored = grouped.withColumn("freq", ivs_freq(F.col("plist"))).filter(
-            F.col("freq") > 0
-        )
-        pivot = float(q.pivot)
-        return scored.select(
-            "doc_id",
-            (
-                F.lit(float(q.boost))
-                * (F.lit(1.0) - F.lit(pivot) / (F.col("freq") + F.lit(pivot)))
-            ).alias("score"),
-        )
+        raw = self.decode_raw(all_terms, with_positions=True)
+        scored = position_freqs(raw, all_terms, 1, ivs_freq)
+        return self._interval_saturation(scored, q.boost, q.pivot)
 
     def _resolve_interval_slots(self, terms) -> list:
         """Normalize IntervalQuery/AtLeastIntervalQuery term entries to
@@ -2300,27 +2204,19 @@ class Searcher:
         slots_t = tuple(tuple(s) for s in slots)
         all_terms = sorted({t for s in slots_t for t in s})
 
-        @F.pandas_udf("double")
-        def ext_freq(plist: pd.Series) -> pd.Series:
-            from . import matchers
-
-            by_slot, n_docs = _slot_position_lists(plist, slots_t, all_terms)
-            return pd.Series(
-                matchers.extended_interval_freqs(
-                    by_slot,
-                    ordered,
-                    max_gaps,
-                    n_docs,
-                    before,
-                    after,
-                    min_extent=len(slots_t),
-                )
+        def ext_freq(by_term, n_docs):
+            return matchers.extended_interval_freqs(
+                _slot_position_lists(by_term, slots_t, n_docs),
+                ordered,
+                max_gaps,
+                n_docs,
+                before,
+                after,
+                min_extent=len(slots_t),
             )
 
-        grouped = self._grouped_positions(all_terms, min_terms=1)
-        scored = grouped.withColumn("freq", ext_freq(F.col("plist"))).filter(
-            F.col("freq") > 0
-        )
+        raw = self.decode_raw(all_terms, with_positions=True)
+        scored = position_freqs(raw, all_terms, 1, ext_freq)
         return self._interval_saturation(scored, q.boost, q.pivot)
 
     def _eval_intervals_atleast(self, q: AtLeastIntervalQuery) -> DataFrame:
@@ -2329,7 +2225,7 @@ class Searcher:
         windows covering at least m of the point slots
         (matchers.atleast_interval_freqs). A doc is a candidate once it
         holds m distinct slots, so the positions pre-group prunes on
-        min_terms = m when every slot is a single term."""
+        min_keys = m when every slot is a single term."""
         m = int(q.min_should_match)
         slots = self._resolve_interval_slots(q.terms)
         if not (1 <= m <= len(slots)):
@@ -2350,19 +2246,13 @@ class Searcher:
         all_terms = sorted({t for s in slots_t for t in s})
         single = all(len(s) == 1 for s in slots_t)
 
-        @F.pandas_udf("double")
-        def al_freq(plist: pd.Series) -> pd.Series:
-            from . import matchers
-
-            by_slot, n_docs = _slot_position_lists(plist, slots_t, all_terms)
-            return pd.Series(
-                matchers.atleast_interval_freqs(by_slot, m, max_gaps, n_docs)
+        def al_freq(by_term, n_docs):
+            return matchers.atleast_interval_freqs(
+                _slot_position_lists(by_term, slots_t, n_docs), m, max_gaps, n_docs
             )
 
-        grouped = self._grouped_positions(all_terms, min_terms=m if single else 1)
-        scored = grouped.withColumn("freq", al_freq(F.col("plist"))).filter(
-            F.col("freq") > 0
-        )
+        raw = self.decode_raw(all_terms, with_positions=True)
+        scored = position_freqs(raw, all_terms, m if single else 1, al_freq)
         return self._interval_saturation(scored, q.boost, q.pivot)
 
     def _interval_saturation(self, scored: DataFrame, boost, pivot) -> DataFrame:
@@ -2409,11 +2299,11 @@ class Searcher:
         all_terms = sorted({t for t in src_terms + ref_terms})
         singles = all(len(s) == 1 for s in src_slots + ref_slots)
         if singles:
-            min_terms = (
+            min_keys = (
                 len(all_terms) if conj else len({s[0] for s in src_slots})
             )
         else:
-            min_terms = 1  # alternation slots: membership decided in-kernel
+            min_keys = 1  # alternation slots: membership decided in-kernel
         kind = q.kind
         b_ext = int(q.positions) if kind in ("within", "not_within") else 0
         sslots_t = tuple(tuple(s) for s in src_slots)
@@ -2423,41 +2313,25 @@ class Searcher:
         s_mw = int(getattr(src, "max_width", -1))
         r_mw = int(getattr(ref, "max_width", -1))
 
-        @F.pandas_udf("double")
-        def ivf_freq(plist: pd.Series) -> pd.Series:
-            from . import matchers
-
-            by_slot, n_docs = _slot_position_lists(
-                plist, sslots_t + rslots_t, all_terms
-            )
-            return pd.Series(
-                matchers.interval_filter_freqs(
-                    kind,
-                    by_slot[: len(sslots_t)],
-                    s_ord,
-                    s_mg,
-                    by_slot[len(sslots_t):],
-                    r_ord,
-                    r_mg,
-                    n_docs,
-                    b_ext=b_ext,
-                    a_max_width=s_mw,
-                    b_max_width=r_mw,
-                )
+        def ivf_freq(by_term, n_docs):
+            by_slot = _slot_position_lists(by_term, sslots_t + rslots_t, n_docs)
+            return matchers.interval_filter_freqs(
+                kind,
+                by_slot[: len(sslots_t)],
+                s_ord,
+                s_mg,
+                by_slot[len(sslots_t):],
+                r_ord,
+                r_mg,
+                n_docs,
+                b_ext=b_ext,
+                a_max_width=s_mw,
+                b_max_width=r_mw,
             )
 
-        grouped = self._grouped_positions(all_terms, min_terms=min_terms)
-        scored = grouped.withColumn("freq", ivf_freq(F.col("plist"))).filter(
-            F.col("freq") > 0
-        )
-        pivot = float(q.pivot)
-        return scored.select(
-            "doc_id",
-            (
-                F.lit(float(q.boost))
-                * (F.lit(1.0) - F.lit(pivot) / (F.col("freq") + F.lit(pivot)))
-            ).alias("score"),
-        )
+        raw = self.decode_raw(all_terms, with_positions=True)
+        scored = position_freqs(raw, all_terms, min_keys, ivf_freq)
+        return self._interval_saturation(scored, q.boost, q.pivot)
 
     def _expression_scores(
         self, df: DataFrame, expression: str, bindings, boost: float = 1.0,
@@ -2854,31 +2728,14 @@ class Searcher:
         if any(all(t not in stats for t in s) for s in slots):
             return self._empty()
 
-        @F.pandas_udf("double")
-        def nov_freq(plist: pd.Series) -> pd.Series:
-            from . import matchers
+        def nov_freq(by_term, n_docs):
+            by_slot = _slot_position_lists(by_term, slots_t, n_docs)
+            return matchers.no_overlaps_interval_freqs(by_slot[0], by_slot[1], n_docs)
 
-            by_slot, n_docs = _slot_position_lists(plist, slots_t, all_terms)
-            return pd.Series(
-                matchers.no_overlaps_interval_freqs(
-                    by_slot[0], by_slot[1], n_docs
-                )
-            )
-
-        # both operands must appear: disjoint slots need >= 2 distinct terms
-        min_terms = 2 if not (set(slots_t[0]) & set(slots_t[1])) else 1
-        grouped = self._grouped_positions(all_terms, min_terms=min_terms)
-        scored = grouped.withColumn("freq", nov_freq(F.col("plist"))).filter(
-            F.col("freq") > 0
-        )
-        pivot = float(q.pivot)
-        return scored.select(
-            "doc_id",
-            (
-                F.lit(float(q.boost))
-                * (F.lit(1.0) - F.lit(pivot) / (F.col("freq") + F.lit(pivot)))
-            ).alias("score"),
-        )
+        # both operands must appear
+        raw = self.decode_raw(all_terms, with_positions=True)
+        scored = position_freqs(raw, all_terms, _slot_min_keys(slots_t), nov_freq)
+        return self._interval_saturation(scored, q.boost, q.pivot)
 
     def _eval_span_or(self, q: SpanOrQuery) -> DataFrame:
         """SpanOrQuery (search/spans/SpanOrQuery.java): docs matching ANY
@@ -2944,16 +2801,8 @@ class Searcher:
         (SpanNotQuery.java:199-215, vectorized as a prefix-max over the
         xs-sorted exclude ends). freq = Σ 1/(1+(ce-cs)) over the kept
         spans; idf from the include terms only."""
-
-        def spec(op):
-            if isinstance(op, str):
-                return ("term", (op,), 0, True)
-            if isinstance(op, SpanNearQuery):
-                return ("near", tuple(op.terms), int(op.slop), bool(op.in_order))
-            raise NotImplementedError(f"span not operand {type(op).__name__}")
-
-        inc_spec = spec(q.include)
-        exc_specs = tuple(spec(x) for x in q.exclude)
+        inc_spec = _span_spec(q.include, "span not")
+        exc_specs = tuple(_span_spec(x, "span not") for x in q.exclude)
         inc_terms = sorted(set(inc_spec[1]))
         every = sorted({t for s in (inc_spec,) + exc_specs for t in s[1]})
         stats = self.term_stats(every)
@@ -2963,38 +2812,15 @@ class Searcher:
         all_terms = [t for t in every if t in stats]
         pre, post = int(q.pre), int(q.post)
 
-        @F.pandas_udf("double")
-        def span_not_freq(plist: pd.Series) -> pd.Series:
-            from . import matchers
-
-            n_docs = len(plist)
-            by_term = {t: [None] * n_docs for t in all_terms}
-            for i, entries in enumerate(plist):
-                for e in entries:
-                    by_term[e["term"]][i] = np.asarray(
-                        e["positions"], dtype=np.int64
-                    )
-
-            def doc_spans(sp, d):
-                mode, terms, slop, in_order = sp
-                lists = [by_term.get(t, [None] * n_docs)[d] for t in terms]
-                if any(p is None for p in lists):
-                    return np.empty(0, np.int64), np.empty(0, np.int64)
-                if mode == "term":
-                    p = lists[0]
-                    return p, p + 1
-                if in_order:
-                    return matchers.ordered_chain_spans(lists, slop)
-                return matchers.unordered_state_spans(lists, slop)
-
+        def span_not_freq(by_term, n_docs):
             out = np.zeros(n_docs, dtype=np.float64)
             for d in range(n_docs):
-                cs, ce = doc_spans(inc_spec, d)
+                cs, ce = _doc_spans(inc_spec, by_term, d)
                 if len(cs) == 0:
                     continue
                 xs_all, xe_all = [], []
                 for sp in exc_specs:
-                    xs, xe = doc_spans(sp, d)
+                    xs, xe = _doc_spans(sp, by_term, d)
                     if len(xs):
                         xs_all.append(xs)
                         xe_all.append(xe)
@@ -3012,42 +2838,22 @@ class Searcher:
                     keep = ~reject
                     cs, ce = cs[keep], ce[keep]
                 if len(cs):
-                    out[d] = np.sum(1.0 / (1.0 + (ce - cs).astype(np.float64)))
-            return pd.Series(out)
+                    out[d] = _span_weight(cs, ce)
+            return out
 
-        grouped = self._grouped_positions(all_terms, min_terms=1)
-        scored = grouped.withColumn(
-            "freq", span_not_freq(F.col("plist"))
-        ).filter(F.col("freq") > 0)
-        return self._score_freq_norm(scored.select("doc_id", "freq", "norm"), scorer)
-
-    def _eval_span_first(self, q: SpanFirstQuery) -> DataFrame:
-        """SpanFirstQuery (search/spans/SpanFirstQuery.java): spans ending
-        within the first ``end`` positions — point span p matches iff
-        p + 1 <= end. JVM array filter over the decoded positions."""
-        st = self.term_stats([q.term]).get(q.term)
-        if st is None:
-            return self._empty()
-        scorer = self.multi_scorer_for(q.boost, [st])
-        raw = self.decode_raw([q.term], with_positions=True)
-        end = int(q.end)
-        scored = raw.select(
-            "doc_id",
-            "norm",
-            (
-                F.size(F.filter(F.col("positions"), lambda p: p + 1 <= F.lit(end)))
-                * F.lit(0.5)
-            ).alias("freq"),
-        ).filter(F.col("freq") > 0)
-        return self._score_freq_norm(scored.select("doc_id", "freq", "norm"), scorer)
+        # absent exclude terms stay keys: their spans are empty
+        raw = self.decode_raw(all_terms, with_positions=True)
+        scored = position_freqs(raw, every, 1, span_not_freq)
+        return self._score_freq_norm(scored, scorer)
 
     def _eval_span_position_range(self, q: SpanPositionRangeQuery) -> DataFrame:
         """SpanPositionRangeQuery (search/spans/SpanPositionRangeQuery.java):
         keep spans with spanStart >= start and spanEnd <= end. A term
-        operand is a pure JVM array filter over the decoded positions (the
-        SpanFirst shape plus the lower edge); a SpanNearQuery operand runs
-        the near walk (matchers.py span streams) and filters the emitted
-        match windows."""
+        operand is a pure JVM array filter over the decoded positions;
+        SpanFirstQuery (search/spans/SpanFirstQuery.java: point span p
+        matches iff p + 1 <= end) is that branch with start 0. A
+        SpanNearQuery operand runs the near walk (matchers.py span streams)
+        and filters the emitted match windows."""
         lo, hi = int(q.start), int(q.end)
         if isinstance(q.match, str):
             st = self.term_stats([q.match]).get(q.match)
@@ -3068,54 +2874,26 @@ class Searcher:
                     * F.lit(0.5)
                 ).alias("freq"),
             ).filter(F.col("freq") > 0)
-            return self._score_freq_norm(
-                scored.select("doc_id", "freq", "norm"), scorer
-            )
-        if not isinstance(q.match, SpanNearQuery):
-            raise NotImplementedError(
-                f"span position-range operand {type(q.match).__name__}"
-            )
-        sub = q.match
-        terms = list(sub.terms)
+            return self._score_freq_norm(scored, scorer)
+        spec = _span_spec(q.match, "span position-range")
+        terms = list(spec[1])
         stats = self.term_stats(terms)
         if any(t not in stats for t in terms):
             return self._empty()
         scorer = self.multi_scorer_for(q.boost, [stats[t] for t in terms])
-        slop, in_order = int(sub.slop), bool(sub.in_order)
-        terms_t = tuple(terms)
 
-        @F.pandas_udf("double")
-        def pr_freq(plist: pd.Series) -> pd.Series:
-            from . import matchers
-
-            n_docs = len(plist)
-            by_term = {t: [None] * n_docs for t in set(terms_t)}
-            for i, entries in enumerate(plist):
-                for e in entries:
-                    by_term[e["term"]][i] = np.asarray(
-                        e["positions"], dtype=np.int64
-                    )
+        def pr_freq(by_term, n_docs):
             out = np.zeros(n_docs, dtype=np.float64)
             for d in range(n_docs):
-                lists = [by_term[t][d] for t in terms_t]
-                if any(p is None for p in lists):
-                    continue
-                if in_order:
-                    ss, ee = matchers.ordered_chain_spans(lists, slop)
-                else:
-                    ss, ee = matchers.unordered_state_spans(lists, slop)
+                ss, ee = _doc_spans(spec, by_term, d)
                 keep = (ss >= lo) & (ee <= hi)
                 if keep.any():
-                    out[d] = np.sum(
-                        1.0 / (1.0 + (ee[keep] - ss[keep]).astype(np.float64))
-                    )
-            return pd.Series(out)
+                    out[d] = _span_weight(ss[keep], ee[keep])
+            return out
 
-        grouped = self._grouped_positions(terms, min_terms=len(set(terms)))
-        scored = grouped.withColumn("freq", pr_freq(F.col("plist"))).filter(
-            F.col("freq") > 0
-        )
-        return self._score_freq_norm(scored.select("doc_id", "freq", "norm"), scorer)
+        raw = self.decode_raw(sorted(set(terms)), with_positions=True)
+        scored = position_freqs(raw, terms, len(set(terms)), pr_freq)
+        return self._score_freq_norm(scored, scorer)
 
     def _eval_multi_term(self, q: Query) -> DataFrame:
         """MultiTermQuery family, CONSTANT_SCORE_REWRITE
@@ -3509,6 +3287,41 @@ class MultiFieldSearcher(Searcher):
             cf_score(F.col("freq"), norm_arr).alias("score"),
         )
 
+    def _field_positions(self, slots):
+        """The positional sources of a cross-field query: ``slots`` hold
+        (field, term) alternatives. Returns each field's term stats and the
+        union of every field's positional decode, its term column tagged
+        "field\\x00term" so equal term text in different fields stays
+        distinct — or None when a field has no searcher or a slot has no
+        indexed alternative (the conjunction cannot match)."""
+        by_field: Dict[str, List[str]] = {}
+        for s in slots:
+            for f, t in s:
+                by_field.setdefault(f, []).append(t)
+        stats_by_field = {}
+        for f, ts in by_field.items():
+            sub = self.searchers.get(f)
+            if sub is None:
+                return None
+            stats_by_field[f] = sub.term_stats(ts)
+        if any(all(t not in stats_by_field[f] for f, t in s) for s in slots):
+            return None
+        raws = [
+            self.searchers[f]
+            .decode_raw(sorted(set(ts)), with_positions=True)
+            .select(
+                F.concat(F.lit(f + "\x00"), F.col("term")).alias("term"),
+                "doc_id",
+                "norm",
+                "positions",
+            )
+            for f, ts in by_field.items()
+        ]
+        raw = raws[0]
+        for r in raws[1:]:
+            raw = raw.unionByName(r)
+        return stats_by_field, raw
+
     def _eval_intervals_fixfield(self, q: IntervalQuery) -> DataFrame:
         """IntervalQuery with Intervals.fixField slots
         (queries/intervals/FixedFieldIntervalsSource.java, factory at
@@ -3543,35 +3356,11 @@ class MultiFieldSearcher(Searcher):
                 slots.append((alt(t),))
         if len(set(slots)) != len(slots):
             raise NotImplementedError("duplicate fixField interval slots")
-        clauses = [ft for s in slots for ft in s]
-        by_field: Dict[str, List[str]] = {}
-        for f, t in clauses:
-            by_field.setdefault(f, []).append(t)
-        stats_by_field = {}
-        for f, ts in by_field.items():
-            sub = self.searchers.get(f)
-            if sub is None:
-                return self._empty()
-            stats_by_field[f] = sub.term_stats(ts)
         # conjunction: every slot needs at least one present alternative
-        if any(
-            all(t not in stats_by_field[f] for f, t in s) for s in slots
-        ):
+        src = self._field_positions(slots)
+        if src is None:
             return self._empty()
-        raws = []
-        for f, ts in by_field.items():
-            raws.append(
-                self.searchers[f]
-                .decode_raw(sorted(set(ts)), with_positions=True)
-                .select(
-                    F.concat(F.lit(f + "\x00"), F.col("term")).alias("term"),
-                    "doc_id",
-                    "positions",
-                )
-            )
-        raw = raws[0]
-        for r in raws[1:]:
-            raw = raw.unionByName(r)
+        stats_by_field, raw = src
         # per-slot alternative keys, absent alternatives dropped
         slot_keys = tuple(
             tuple(
@@ -3579,47 +3368,18 @@ class MultiFieldSearcher(Searcher):
             )
             for s in slots
         )
-        disjoint = all(
-            not (set(slot_keys[i]) & set(slot_keys[j]))
-            for i in range(len(slot_keys))
-            for j in range(i + 1, len(slot_keys))
-        )
-        min_keys = len(slot_keys) if disjoint else 1
-        grouped = (
-            raw.groupBy("doc_id")
-            .agg(
-                F.count("*").alias("nt"),
-                F.collect_list(F.struct("term", "positions")).alias("plist"),
-            )
-            .filter(F.col("nt") >= min_keys)
-        )
         ordered, max_gaps = bool(q.ordered), int(q.max_gaps)
         max_width = int(getattr(q, "max_width", -1))
-        all_keys = tuple(sorted({k for s in slot_keys for k in s}))
+        all_keys = sorted({k for s in slot_keys for k in s})
 
-        @F.pandas_udf("double")
-        def ff_freq(plist: pd.Series) -> pd.Series:
-            from . import matchers
-
-            by_slot, n_docs = _slot_position_lists(plist, slot_keys, all_keys)
-            return pd.Series(
-                matchers.interval_freqs(
-                    by_slot, ordered, max_gaps, n_docs,
-                    min_extent=len(slot_keys), max_width=max_width,
-                )
+        def ff_freq(by_key, n_docs):
+            return matchers.interval_freqs(
+                _slot_position_lists(by_key, slot_keys, n_docs), ordered,
+                max_gaps, n_docs, min_extent=len(slot_keys), max_width=max_width,
             )
 
-        scored = grouped.withColumn("freq", ff_freq(F.col("plist"))).filter(
-            F.col("freq") > 0
-        )
-        pivot = float(q.pivot)
-        return scored.select(
-            "doc_id",
-            (
-                F.lit(float(q.boost))
-                * (F.lit(1.0) - F.lit(pivot) / (F.col("freq") + F.lit(pivot)))
-            ).alias("score"),
-        )
+        scored = position_freqs(raw, all_keys, _slot_min_keys(slot_keys), ff_freq)
+        return self._interval_saturation(scored, q.boost, q.pivot)
 
     def _eval_span_near_masked(self, q: SpanNearQuery) -> DataFrame:
         """SpanNearQuery with FieldMaskingSpanQuery clauses
@@ -3643,86 +3403,36 @@ class MultiFieldSearcher(Searcher):
                 clauses.append((t.field, t.term))
             else:
                 clauses.append((mask_field, t))
-        by_field: Dict[str, List[str]] = {}
-        for f, t in clauses:
-            by_field.setdefault(f, []).append(t)
-        stats_by_field = {}
-        for f, ts in by_field.items():
-            sub = self.searchers.get(f)
-            if sub is None:
-                return self._empty()
-            stats_by_field[f] = sub.term_stats(ts)
-        sts = []
-        for f, t in clauses:
-            st = stats_by_field[f].get(t)
-            if st is None:
-                return self._empty()
-            sts.append(st)
+        src = self._field_positions([(c,) for c in clauses])
+        if src is None:
+            return self._empty()
+        stats_by_field, raw = src
         # term stats keep their source field; collection stats + norms
         # come from the mask field's index
-        scorer = mask.multi_scorer_for(q.boost, sts)
-        raws = []
-        for f, ts in by_field.items():
-            raws.append(
-                self.searchers[f]
-                .decode_raw(sorted(set(ts)), with_positions=True)
-                .select(
-                    F.concat(F.lit(f + "\x00"), F.col("term")).alias("term"),
-                    "doc_id",
-                    "positions",
-                )
-            )
-        raw = raws[0]
-        for r in raws[1:]:
-            raw = raw.unionByName(r)
+        scorer = mask.multi_scorer_for(
+            q.boost, [stats_by_field[f][t] for f, t in clauses]
+        )
         keys = [f + "\x00" + t for f, t in clauses]
         n_distinct = len(set(keys))
-        grouped = (
-            raw.groupBy("doc_id")
-            .agg(
-                F.count("*").alias("nt"),
-                F.collect_list(F.struct("term", "positions")).alias("plist"),
-            )
-            .filter(F.col("nt") >= n_distinct)
-        )
         slop, in_order = int(q.slop), bool(q.in_order)
         # the 2-clause closed form assumes distinct-term positions never
         # tie — valid inside one field, NOT across parallel fields (equal
         # ordinals are the masked query's whole point), so any cross-field
         # clause set takes the general merge walk whose (position, clause)
         # tie order transcribes the reference heap's
-        distinct = n_distinct == len(keys) and len(by_field) == 1
+        distinct = n_distinct == len(keys) and len(stats_by_field) == 1
         keys_t = tuple(keys)
 
-        @F.pandas_udf("double")
-        def span_freq(plist: pd.Series) -> pd.Series:
-            from . import matchers
+        def span_freq(by_key, n_docs):
+            return _span_near_freqs(
+                [by_key[k] for k in keys_t], slop, in_order, n_docs, distinct
+            )
 
-            n_docs = len(plist)
-            by_key = {k: [None] * n_docs for k in set(keys_t)}
-            for i, entries in enumerate(plist):
-                for e in entries:
-                    by_key[e["term"]][i] = np.asarray(
-                        e["positions"], dtype=np.int64
-                    )
-            pos = [by_key[k] for k in keys_t]
-            if in_order:
-                out = matchers.span_ordered_freqs(pos, slop, n_docs)
-            else:
-                out = matchers.span_unordered_freqs(
-                    pos, slop, n_docs, distinct=distinct
-                )
-            return pd.Series(out)
-
-        scored = grouped.withColumn("freq", span_freq(F.col("plist"))).filter(
-            F.col("freq") > 0
-        )
+        scored = position_freqs(raw, keys, n_distinct, span_freq)
         # norms are the MASK field's (getNormValues(getField())); a doc
         # whose clauses are all masked still scores with the mask field's
         # doc length, so join the per-doc norms table rather than ride a
         # clause posting's norm
         norms = mask.index.docs.select("doc_id", "norm")
-        scored = scored.join(norms, "doc_id", "left").fillna({"norm": 0})
-        return mask._score_freq_norm(
-            scored.select("doc_id", "freq", "norm"), scorer
-        )
+        scored = scored.select("doc_id", "freq").join(norms, "doc_id", "left")
+        return mask._score_freq_norm(scored.fillna({"norm": 0}), scorer)

@@ -61,19 +61,38 @@ def _got(df):
     return [(int(r["doc_id"]), np.float32(r["score"])) for r in df.collect()]
 
 
-@pytest.mark.parametrize("rewrite,tie", [("dismax", 0.01), ("dismax", 0.35),
-                                         ("boolean", 0.0)])
-def test_blended_matches_brute_force(bl, rewrite, tie):
+def _brute_force_cases():
+    """rewrite × tie × terms × prune; the base terms under prune=True keep
+    the bare rewrite-tie id."""
+    terms = {
+        "": (("rare", "red"), (1.0, 2.0)),
+        # a repeated term scores every occurrence, on every tier
+        "-repeat": (("red", "red", "blue"), (1.0, 2.0, 1.0)),
+    }
+    return [
+        pytest.param(rewrite, tie, ts, bs, prune,
+                     id=f"{rewrite}-{tie}{sfx}{'' if prune else '-noprune'}")
+        for rewrite, tie in [("dismax", 0.01), ("dismax", 0.35), ("boolean", 0.0)]
+        for sfx, (ts, bs) in terms.items()
+        for prune in (True, False)
+    ]
+
+
+@pytest.mark.parametrize("rewrite,tie,terms,boosts,prune", _brute_force_cases())
+def test_blended_matches_brute_force(bl, monkeypatch, rewrite, tie, terms,
+                                     boosts, prune):
+    """prune=True runs the planner with the hot cache on (the hot tier
+    serves blended); prune=False the exhaustive Spark evaluation."""
     s, o = bl["s"], bl["o"]
-    terms, boosts = ("rare", "red"), (1.0, 2.0)
+    monkeypatch.setenv("LUCENE_SPARK_HOT_CACHE_POSTINGS",
+                       "10000000" if prune else "0")
+    q = BlendedTermQuery(terms=terms, boosts=boosts, tie_breaker=tie,
+                         rewrite=rewrite)
     exp = BruteForceIndex.topk(
         brute_blended(o, terms, boosts, tie, rewrite), 10
     )
-    got = _got(s.search(
-        BlendedTermQuery(terms=terms, boosts=boosts, tie_breaker=tie,
-                         rewrite=rewrite),
-        10,
-    ))
+    assert s.plan(q, 10).tier == ("hot" if prune else "eval")
+    got = _got(s.search(q, 10, prune=prune))
     assert got == [(d, np.float32(v)) for d, v in exp]
 
 

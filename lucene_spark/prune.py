@@ -25,19 +25,23 @@ decode scanner, before any posting is decoded.
 
 The tier choice is Searcher.plan's: it rewrites the query once and runs
 the one hot → WAND → _eval fall-through that search, top_docs and
-search_after share. This module holds the shape table both fast tiers read
-(_flat_term_clauses: term, flat OR, flat AND, dismax, blended, synonym and
-phrase). WAND serves single terms, flat OR-of-terms (WANDScorer case) and
-flat AND-of-terms (BlockMaxConjunctionScorer case,
-Boolean2ScorerSupplier.java:202-207); the planner does not call it for the
-other shapes. Equivalence with the unpruned path is asserted by tests on
-every query shape (SearchEquivalenceTestBase style).
+search_after share. This module holds the shape table every tier reads
+(_flat_term_clauses: term, flat OR / AND / mixed bool, dismax, blended,
+synonym and phrase, repeated terms included, field-qualified terms never);
+Searcher._shape_keys maps a shape to its per-term scorers for all three
+tiers, and WAND's scan is the Spark tier's flat evaluator
+(Searcher._eval_flat) with the block test in its scanner. WAND serves
+single terms, flat OR-of-terms (WANDScorer case) and flat AND-of-terms
+(BlockMaxConjunctionScorer case, Boolean2ScorerSupplier.java:202-207),
+each term once; the planner does not call it for the other shapes.
+Equivalence with the unpruned path is asserted by tests on every query
+shape (SearchEquivalenceTestBase style).
 """
 
 from __future__ import annotations
 
 import os
-from typing import Dict, Iterator, List, NamedTuple, Optional, Tuple
+from typing import Dict, Iterator, NamedTuple, Optional, Tuple
 
 import numpy as np
 import pandas as pd
@@ -54,54 +58,63 @@ from .query import (
     SynonymQuery,
     TermQuery,
 )
-from .search import scored_postings
 
 
 class Shape(NamedTuple):
-    """A query the hot and WAND tiers serve, reduced to its flat term clauses
-    and the way their per-term scores combine (see _flat_term_clauses)."""
+    """A flat term query, reduced to its term clauses and the way their
+    per-term scores combine (see _flat_term_clauses)."""
 
-    kind: str  # or | and | dismax | blended | synonym | phrase
-    terms: Tuple[str, ...]
+    kind: str  # or | and | bool | dismax | blended | synonym | phrase
+    terms: Tuple[str, ...]  # every occurrence, in query order (MUST first)
     boosts: Tuple[float, ...]  # each term's own boost
     query: Query
     tie: Optional[float] = None  # max + tie × (sum − max); None = plain sum
     boost: float = 1.0  # the outer boost, applied after the combine
+    must: int = 0  # the leading ``must`` terms are required clauses
+    msm: int = 0  # minimum_should_match over the other clauses
+
+
+def _plain_term(q: Query) -> bool:
+    return isinstance(q, TermQuery) and q.field is None
 
 
 def _flat_term_clauses(q: Query) -> Optional[Shape]:
-    """The one query-shape table of the hot and WAND tiers: each shape they
-    serve is recognized here, once, as flat term clauses plus a combine —
-    ``or`` / ``and`` (sum over the union / the intersection; a single term
-    is a one-clause ``or``), ``dismax`` and ``blended`` (max + tie ×
-    (sum − max), or sum for a boolean-rewrite blend, then the outer boost),
-    ``synonym`` (tf summed per doc before it scores) and ``phrase``
-    (positional). WAND prunes ``or`` and ``and`` only. None = any other
-    shape, which only the exhaustive _eval serves."""
+    """The one table of flat term queries: each shape the hot tier, WAND and
+    the Spark tier's flat evaluator (Searcher._eval_flat) serve is
+    recognized here, once, as term clauses plus a combine — ``or`` /
+    ``and`` / ``bool`` (sum over the docs that match every MUST clause and
+    minimum_should_match SHOULD clauses; a single term is a one-clause
+    ``or``), ``dismax`` and ``blended`` (max + tie × (sum − max), or sum for
+    a boolean-rewrite blend, then the outer boost), ``synonym`` (tf summed
+    per doc before it scores) and ``phrase`` (positional). A term may
+    repeat. A field-qualified term is never flat: it routes to its field's
+    index (MultiFieldSearcher). None = any other shape."""
     if isinstance(q, TermQuery):
-        return Shape("or", (q.term,), (q.boost,), q)
+        return Shape("or", (q.term,), (q.boost,), q) if _plain_term(q) else None
     if isinstance(q, BooleanQuery):
-        tqs = [c.query for c in q.clauses]
-        if q.boost != 1.0 or not all(isinstance(tq, TermQuery) for tq in tqs):
+        must = [c.query for c in q.clauses if c.occur == Occur.MUST]
+        should = [c.query for c in q.clauses if c.occur == Occur.SHOULD]
+        tqs, msm = must + should, q.minimum_should_match
+        if (q.boost != 1.0 or not tqs or len(tqs) < len(q.clauses)
+                or not all(_plain_term(tq) for tq in tqs)):
             return None
-        terms = tuple(tq.term for tq in tqs)
-        occurs = {c.occur for c in q.clauses}
-        if len(set(terms)) < len(terms):  # a repeated term
-            return None
-        if occurs == {Occur.SHOULD} and q.minimum_should_match <= 1:
-            return Shape("or", terms, tuple(tq.boost for tq in tqs), q)
-        if occurs == {Occur.MUST} and q.minimum_should_match == 0:
-            return Shape("and", terms, tuple(tq.boost for tq in tqs), q)
-        return None
+        kind = ("and" if not should and msm == 0 else
+                "or" if not must and msm <= 1 else "bool")
+        return Shape(kind, tuple(tq.term for tq in tqs), tuple(tq.boost for tq in tqs),
+                     q, must=len(must), msm=msm)
     if isinstance(q, DisjunctionMaxQuery):
-        if not q.disjuncts or not all(isinstance(d, TermQuery) for d in q.disjuncts):
+        if not q.disjuncts or not all(_plain_term(d) for d in q.disjuncts):
             return None
         return Shape("dismax", tuple(d.term for d in q.disjuncts),
                      tuple(d.boost for d in q.disjuncts), q,
                      float(q.tie_breaker), float(q.boost))
     if isinstance(q, BlendedTermQuery):
-        tie = float(q.tie_breaker) if q.rewrite == "dismax" else None
         boosts = tuple(q.boosts) or (1.0,) * len(q.terms)
+        if len(boosts) != len(q.terms):
+            raise ValueError("boosts must match terms")
+        if q.rewrite not in ("dismax", "boolean"):
+            raise ValueError(f"unknown rewrite {q.rewrite!r}")
+        tie = float(q.tie_breaker) if q.rewrite == "dismax" else None
         return Shape("blended", tuple(q.terms), boosts, q, tie, float(q.boost))
     if isinstance(q, SynonymQuery):
         terms = tuple(dict.fromkeys(q.terms))
@@ -109,6 +122,15 @@ def _flat_term_clauses(q: Query) -> Optional[Shape]:
     if isinstance(q, PhraseQuery) and len(q.terms) > 1:
         return Shape("phrase", tuple(q.terms), (q.boost,) * len(q.terms), q)
     return None
+
+
+def _wand_declines(shape: Optional[Shape]) -> Optional[str]:
+    """Why WAND cannot prune ``shape``, or None: it serves ``or`` and
+    ``and`` only, each term once (its per-term bounds and metadata are
+    keyed by term)."""
+    if shape is None or shape.kind not in ("or", "and"):
+        return "shape"
+    return "repeated term" if len(set(shape.terms)) < len(shape.terms) else None
 
 
 _MIN_PRUNABLE = 100_000
@@ -120,11 +142,10 @@ def try_pruned_topk_rows(searcher, q: Query, k: int):
     too few postings to prune (the planner then falls back to _eval). An
     empty LIST means handled-and-no-hits."""
     shape = _flat_term_clauses(q)
-    if shape is None or shape.kind not in ("or", "and"):
+    if _wand_declines(shape):
         return None
-    mode, terms = shape.kind, list(shape.terms)
-    stats = searcher.term_stats(terms)
-    if not stats or (mode == "and" and len(stats) < len(terms)):
+    stats = searcher.term_stats(shape.terms)
+    if not stats or any(t not in stats for t in shape.terms[:shape.must]):
         return []
     # pruning pays only when there is enough postings volume to skip; below
     # ~64 blocks per term the extra theta/bounds jobs cost more than decoding
@@ -132,9 +153,8 @@ def try_pruned_topk_rows(searcher, q: Query, k: int):
     min_prunable = int(os.environ.get("LUCENE_SPARK_MIN_PRUNABLE", _MIN_PRUNABLE))
     if sum(s.doc_freq for s in stats.values()) < min_prunable:
         return None
-    boosts = {t: float(b) for t, b in zip(terms, shape.boosts) if t in stats}
-    scorers = {t: searcher.scorer_for(b, stats[t]) for t, b in boosts.items()}
-    return _topk_wand(searcher, scorers, boosts, k, mode, terms)
+    scorers = {t: searcher._scorer(key) for t, key in searcher._shape_keys(shape, stats)}
+    return _topk_wand(searcher, shape, scorers, k)
 
 
 _DIST_ACH_TOPK = 128          # achieved scores kept per term in the meta cache
@@ -175,26 +195,24 @@ def _dist_term_meta(searcher, scorers: Dict[str, BM25Scorer], boosts) -> dict:
     return {t: cache[(t, boosts[t])] for t in scorers}
 
 
-def _topk_wand(
-    searcher, scorers: Dict[str, BM25Scorer], boosts, k: int, mode: str,
-    terms: List[str],
-) -> list:
+def _topk_wand(searcher, shape: Shape, scorers: Dict[str, BM25Scorer], k: int) -> list:
     """Block-max WAND: per-term driver metadata (one cached job) + a single
-    decode pass whose scanner applies the WAND condition INLINE from the
-    impacts riding on each postings row — bounds are read where the block
-    is, never joined (the skip-data-adjacent layout of
+    pass of the flat evaluator whose scanner applies the WAND condition
+    INLINE from the impacts riding on each postings row — bounds are read
+    where the block is, never joined (the skip-data-adjacent layout of
     codecs/lucene912/Lucene912PostingsWriter). A warm repeated query is ONE
     Spark action; a cold one adds only the metadata job (plus, for
     conjunctions, the probe decode)."""
+    boosts = {t: float(b) for t, b in zip(shape.terms, shape.boosts) if t in scorers}
     meta = _dist_term_meta(searcher, scorers, boosts)
     gmax = {t: meta[t]["gmax"] for t in scorers}
     sum_gmax = sum(gmax.values())
-    tkey = (mode, k, tuple(sorted(boosts.items())))
+    tkey = (shape.kind, k, tuple(sorted(boosts.items())))
 
     # a repeated identical query reuses its previous exact k-th score
     # (scores are immutable given the index — still a valid lower bound)
     theta = searcher._theta_cache.get(tkey)
-    if theta is None and mode == "or" and _no_deletes(searcher):
+    if theta is None and shape.kind == "or" and _no_deletes(searcher):
         # impact-achieved θ: every `ach` is at most a score a real doc of the
         # block achieves, and one term's blocks cover disjoint doc ranges, so
         # its k-th best `ach` certifies k DISTINCT docs whose OR score is at
@@ -208,27 +226,22 @@ def _topk_wand(
         if best > 0.0:
             theta = best
     if theta is None:
-        theta = _probe_theta(searcher, meta, scorers, mode, terms, k)
+        theta = _probe_theta(searcher, shape, meta, k)
 
     rest = {t: sum_gmax - gmax[t] for t in gmax}
-    scored = scored_postings(
-        searcher._postings_for(list(scorers)), scorers,
-        keep=_wand_block_test(scorers, rest, float(theta)),
-    )
-    rows = _topk_collect(searcher, scored, mode, terms, k)
+    keep = _wand_block_test(scorers, rest, float(theta))
+    top = searcher._topk(searcher._apply_deletes(searcher._eval_flat(shape, keep=keep)), k)
+    rows = [(int(r["doc_id"]), float(r["score"])) for r in top.collect()]
     if len(rows) >= k:
         # exact k-th score carries over to a repeated identical query
         # (setMinCompetitiveScore persistence across queries)
         if len(searcher._theta_cache) >= _THETA_CACHE_MAX:
             searcher._theta_cache.pop(next(iter(searcher._theta_cache)))
-        searcher._theta_cache[tkey] = float(rows[-1]["score"])
-    return [(int(r["doc_id"]), float(r["score"])) for r in rows]
+        searcher._theta_cache[tkey] = rows[-1][1]
+    return rows
 
 
-def _probe_theta(
-    searcher, meta: dict, scorers: Dict[str, BM25Scorer], mode: str,
-    terms: List[str], k: int,
-) -> float:
+def _probe_theta(searcher, shape: Shape, meta: dict, k: int) -> float:
     """θ from exactly scoring the highest-ub block of every term: the k-th
     best aggregated score of those docs, or 0.0 when they are fewer than k.
     One job: the block keys become a LITERAL scan predicate (term isin +
@@ -237,18 +250,16 @@ def _probe_theta(
     another term's block with the same (segment, block) id; its docs are
     scored exactly too, so every aggregate stays at most the doc's true
     score and θ stays a lower bound."""
-    keys = [(t, m["probe"]) for t, m in meta.items() if m["probe"] is not None]
+    keys = [m["probe"] for m in meta.values() if m["probe"] is not None]
     if not keys:
         return 0.0
     composite = (
         F.col("segment_id").cast("long") * F.lit(1 << 32)
         + F.col("block_id").cast("long")
     )
-    blocks = searcher.index.postings.filter(
-        F.col("term").isin(sorted(t for t, _ in keys))
-        & composite.isin(sorted({s * (1 << 32) + b for _, (s, b) in keys}))
-    )
-    rows = _topk_collect(searcher, scored_postings(blocks, scorers), mode, terms, k)
+    where = composite.isin(sorted({s * (1 << 32) + b for s, b in keys}))
+    scored = searcher._eval_flat(shape, where=where)
+    rows = searcher._topk(searcher._apply_deletes(scored), k).collect()
     return float(rows[-1]["score"]) if len(rows) >= k else 0.0
 
 
@@ -320,23 +331,6 @@ def _wand_block_test(
     bound = _block_bound_fn(scorers)
     return lambda pdf: (
         bound(pdf) + pdf["term"].map(rest).to_numpy(dtype=np.float64) >= theta
-    )
-
-
-def _topk_collect(searcher, scored: DataFrame, mode: str, terms: List[str], k: int) -> list:
-    """Aggregate per-doc scores in Spark, apply deletes, collect the top-k
-    (ties by ascending doc_id, TopScoreDocCollector.java:27-29)."""
-    agg = scored.groupBy("doc_id").agg(
-        F.sum("score").alias("score"), F.count("*").alias("nt")
-    )
-    if mode == "and":
-        agg = agg.filter(F.col("nt") == len(terms))
-    agg = searcher._apply_deletes(agg)  # deleted docs never match (or set θ)
-    return (
-        agg.select("doc_id", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-        .collect()
     )
 
 

@@ -6,10 +6,16 @@ Pipeline per query (SURVEY.md §3.2 mapping):
 2. stats lookup (terms table, tiny)    — global stats like IndexSearcher.java:938-957
 3. per-term scorer (idf + norm cache)  — BM25Similarity.scorer
 4. postings decode + vectorized score  — mapInPandas over block rows
-   (PostingsEnum bulk decode; Spark's batch model replaces the iterator)
+   (PostingsEnum bulk decode; Spark's batch model replaces the iterator).
+   A flat term query (a row of prune._flat_term_clauses: term, flat bool,
+   dismax of terms, blended) is one scored_postings pass over all its
+   terms (_eval_flat), each term scored under the key _shape_keys picks —
+   the mapping the hot tier and WAND read too
 5. boolean algebra as joins/groupBy    — Boolean2ScorerSupplier analogs:
    MUST=intersection via grouped counts, SHOULD=sum, FILTER=semi join,
-   MUST_NOT=anti join, minimumShouldMatch=HAVING count
+   MUST_NOT=anti join, minimumShouldMatch=HAVING count, dismax = max +
+   tie × (sum − max). A flat shape's clauses combine in one groupBy
+   (_eval_flat); any other clause is evaluated on its own and unioned in
 6. top-k: orderBy(score desc, doc_id asc).limit(k)
    == per-partition heap + TopDocs.merge (TakeOrderedAndProject), ties by
    ascending doc_id (TopScoreDocCollector.java:27-29)
@@ -28,6 +34,7 @@ correctness never depends on the tier (equivalence-tested).
 
 from __future__ import annotations
 
+import dataclasses
 import os
 import re
 from collections import OrderedDict
@@ -55,7 +62,6 @@ from .query import (
     PointInSetQuery,
     PointRangeQuery,
     AtLeastIntervalQuery,
-    BlendedTermQuery,
     ExtendedIntervalQuery,
     IntervalFilterQuery,
     CombinedFieldQuery,
@@ -90,6 +96,8 @@ from .query import (
 
 MATCH_SCHEMA = "doc_id long, score double"
 MAX_CLAUSE_COUNT = 1024  # BooleanQuery.maxClauseCount default
+_BLOCKJOIN_BUCKET = 1 << 20  # doc_ids per bucket of the block-join parent map
+_FUZZY_NGRAM_AUTO = 100_000  # vocabulary size that auto-builds the fuzzy q-gram index
 
 
 def _map_blocks(blocks: DataFrame, schema: str, frame, positions=False, keep=None):
@@ -108,11 +116,19 @@ def _map_blocks(blocks: DataFrame, schema: str, frame, positions=False, keep=Non
     return blocks.mapInPandas(run, schema=schema)
 
 
-def scored_postings(blocks: DataFrame, scorers, keep=None) -> DataFrame:
-    """(doc_id, score) of every posting of the block rows in ``blocks``."""
-    return _map_blocks(blocks, MATCH_SCHEMA, lambda pdf, d: pd.DataFrame(
-        {"doc_id": d.docs, "score": score_postings(pdf["term"], d, scorers)}
-    ), keep=keep)
+def scored_postings(blocks: DataFrame, scorers, keep=None, must=None) -> DataFrame:
+    """(doc_id, score) of every posting of the block rows in ``blocks`` (a
+    term without a scorer scores 1.0), plus ``is_must`` (1 on the postings
+    of a term in ``must``) when ``must`` is given."""
+
+    def frame(pdf: pd.DataFrame, d: codec.Decoded) -> pd.DataFrame:
+        out = {"doc_id": d.docs, "score": score_postings(pdf["term"], d, scorers)}
+        if must is not None:
+            out["is_must"] = pdf["term"].isin(must).to_numpy(np.int32)[d.row]
+        return pd.DataFrame(out)
+
+    schema = MATCH_SCHEMA if must is None else MATCH_SCHEMA + ", is_must int"
+    return _map_blocks(blocks, schema, frame, keep=keep)
 
 
 def decoded_postings(blocks: DataFrame, with_positions: bool = False) -> DataFrame:
@@ -564,7 +580,7 @@ class Searcher:
         # q-gram terms index for fuzzy candidate pruning
         # (enable_fuzzy_ngram_index) — the automaton-intersection analog.
         # Auto-built on the first fuzzy query when the vocabulary exceeds
-        # LUCENE_SPARK_FUZZY_NGRAM_AUTO terms (the reference's Levenshtein
+        # _FUZZY_NGRAM_AUTO terms (the reference's Levenshtein
         # automaton intersection is always on, search/FuzzyTermsEnum.java:409
         # — below the threshold the banded scan is already cheaper than
         # maintaining the gram table).
@@ -652,13 +668,15 @@ class Searcher:
     def _decline(self, tier: str, shape) -> Optional[str]:
         """The tier rule: why ``tier`` cannot serve a query of ``shape``
         (a prune.Shape, or None), or None to try it."""
-        if shape is None:
+        if tier == "wand":
+            from .prune import _wand_declines
+
+            return _wand_declines(shape)
+        if shape is None or shape.kind == "bool":
             return "shape"
-        if tier == "hot":
-            # no driver tombstone snapshot: _rank_rows could not filter the
-            # deleted docs (the Spark tiers' anti-join stays cluster-side)
-            return "tombstones over driver cap" if self._tombs_over_cap else None
-        return None if shape.kind in ("or", "and") else "shape"
+        # no driver tombstone snapshot: _rank_rows could not filter the
+        # deleted docs (the Spark tiers' anti-join stays cluster-side)
+        return "tombstones over driver cap" if self._tombs_over_cap else None
 
     # ---------------- hot-term driver cache ----------------
 
@@ -888,27 +906,17 @@ class Searcher:
         """The hot tier's one kernel: exact top-k of a prune.Shape from the
         driver postings cache, scored like the Spark tier (same tie rules),
         or the reason it declines. Per-term (docs, scores) runs come from
-        the cache, scored once per scorer key (_hot_run) — a synonym's tf is
+        the cache, scored once per _shape_keys key (_hot_run) — a synonym's tf is
         summed per doc into one pseudo-term run before it scores — and
         combine by sum (or, boolean blend), intersection (and) or
         max + tie × (sum − max) (dismax, dismax blend); then the outer
         boost, and _rank_rows."""
-        q = shape.query
         if shape.kind == "phrase":
-            return self._hot_phrase_rows(q, k)
+            return self._hot_phrase_rows(shape.query, k)
         stats = self.term_stats(shape.terms)
-        if not stats or (shape.kind == "and" and len(stats) < len(shape.terms)):
+        if not stats or any(t not in stats for t in shape.terms[:shape.must]):
             return []
-        if shape.kind == "blended":
-            keys = self._blended_keys(q, stats)
-        elif shape.kind == "synonym":  # one pseudo-term run, kept on its first term
-            syn = _scorer_key(False, q.boost, [_synonym_stats(stats)])
-            keys = [(next(iter(stats)), (tuple(stats), syn))]
-        else:
-            keys = [
-                (t, _scorer_key(False, b, [stats[t]]))
-                for t, b in zip(shape.terms, shape.boosts) if t in stats
-            ]
+        keys = self._shape_keys(shape, stats)
         terms = list(stats)
         if not self._ensure_hot(terms, stats):
             return "postings exceed hot cache"
@@ -1159,59 +1167,6 @@ class Searcher:
             df = df.filter(self._block_pred)
         return df
 
-    def _fused_bool_scored(
-        self, must: list, should: list, needs_scores: bool
-    ) -> Optional[DataFrame]:
-        """Single-scan decode for a flat boolean over distinct TermQuery
-        clauses: ONE postings scan + ONE Arrow stage emitting
-        (doc_id, score, is_must) for every clause match, instead of a union
-        of per-term scans. This is the distributed serving shape: Lucene's
-        BooleanScorer walks all clause postings in one pass
-        (search/BooleanScorer.java:262-285); a union of N scans re-reads the
-        postings source N times and schedules N Python stages. Falls back
-        (returns None) for non-term clauses or repeated terms."""
-        clauses = must + should
-        if len(clauses) < 2:
-            return None
-        if not all(isinstance(sq, TermQuery) for sq in clauses):
-            return None
-        if any(sq.field is not None for sq in clauses):
-            # field-qualified clauses route to per-field indexes
-            # (MultiFieldSearcher._eval) — they can't share one scan
-            return None
-        terms_all = [sq.term for sq in clauses]
-        if len(set(terms_all)) != len(terms_all):
-            return None
-        stats = self.term_stats(terms_all)
-        present = [sq for sq in clauses if sq.term in stats]
-        if not present:
-            return self._empty().withColumn("is_must", F.lit(0))
-        must_terms = {sq.term for sq in must}
-        # MUST clauses are always scored (the reference scores required
-        # clauses even under a non-scoring collector); SHOULD clauses score
-        # 1.0 when scores aren't needed — identical to the per-clause path.
-        const_terms = (
-            set() if needs_scores else {sq.term for sq in should if sq.term in stats}
-        )
-        scorers = {
-            sq.term: self.scorer_for(sq.boost, stats[sq.term]) for sq in present
-        }
-        # a term without a scorer scores 1.0 (bm25.score_postings)
-        scored = {t: sc for t, sc in scorers.items() if t not in const_terms}
-
-        def frame(pdf: pd.DataFrame, d: codec.Decoded) -> pd.DataFrame:
-            is_must = pdf["term"].isin(must_terms).to_numpy(dtype=np.int32)
-            return pd.DataFrame({
-                "doc_id": d.docs,
-                "score": score_postings(pdf["term"], d, scored),
-                "is_must": is_must[d.row],
-            })
-
-        return _map_blocks(
-            self._postings_for(list(scorers)),
-            "doc_id long, score double, is_must int", frame,
-        )
-
     def decode_raw(
         self, terms: Sequence[str], with_positions: bool = False
     ) -> DataFrame:
@@ -1227,8 +1182,14 @@ class Searcher:
     # ---------------- evaluation ----------------
 
     def _eval(self, q: Query, needs_scores: bool) -> DataFrame:
+        from .prune import _flat_term_clauses
         from .query import TermAutomatonQuery
 
+        shape = _flat_term_clauses(q)
+        if shape is not None and shape.kind not in ("synonym", "phrase"):
+            return self._eval_flat(shape, needs_scores)
+        if isinstance(q, TermQuery):  # field-qualified; one field here
+            return self._eval(dataclasses.replace(q, field=None), needs_scores)
         if isinstance(q, TermAutomatonQuery):
             return self._eval_term_automaton(q)
         if isinstance(q, MatchNoDocsQuery):
@@ -1237,12 +1198,8 @@ class Searcher:
             return self.index.docs.select(
                 "doc_id", (F.lit(float(np.float32(q.boost)))).alias("score")
             )
-        if isinstance(q, TermQuery):
-            return self._eval_term(q, needs_scores)
         if isinstance(q, SynonymQuery):
             return self._eval_synonym(q)
-        if isinstance(q, BlendedTermQuery):
-            return self._eval_blended(q)
         if isinstance(q, BooleanQuery):
             return self._eval_bool(q, needs_scores)
         if isinstance(q, DisjunctionMaxQuery):
@@ -1341,80 +1298,97 @@ class Searcher:
             )
         raise NotImplementedError(type(q).__name__)
 
-    def _eval_term(self, q: TermQuery, needs_scores: bool) -> DataFrame:
-        st = self.term_stats([q.term]).get(q.term)
-        if st is None:
-            return self._empty()
-        if not needs_scores:
-            docs = matching_docs(self._postings_for([q.term]))
-            return docs.withColumn("score", F.lit(1.0))
-        scorer = self.scorer_for(q.boost, st)
-        if st.doc_freq == 1:
-            # singleton pulsing fast path: posting inlined in the terms table
-            score = float(
-                scorer.score(np.array([st.singleton_freq]), np.array([st.singleton_norm]))[0]
-            )
-            return self.spark.createDataFrame(
-                [(st.singleton_doc_id, score)], MATCH_SCHEMA
-            )
-        return scored_postings(self._postings_for([q.term]), {q.term: scorer})
-
-    def _blended_keys(self, q: BlendedTermQuery, stats: Dict[str, TermStats]):
-        """BlendedTermQuery's [(term, scorer key)] over its present terms,
-        shared by the hot kernel and _eval_blended: each term scores with
-        the ARTIFICIAL stats df = max(df_i), ttf = sum(ttf_i) and its own
-        boost (core/search/BlendedTermQuery.java:271-300)."""
-        boosts = list(q.boosts) if q.boosts else [1.0] * len(q.terms)
-        if len(boosts) != len(q.terms):
-            raise ValueError("boosts must match terms")
-        if q.rewrite not in ("dismax", "boolean"):
-            raise ValueError(f"unknown rewrite {q.rewrite!r}")
-        present = [(t, b) for t, b in zip(q.terms, boosts) if t in stats]
+    def _shape_keys(self, shape, stats: Dict[str, TermStats]) -> List[Tuple[str, tuple]]:
+        """[(term, scorer key)] of a prune.Shape's present terms, every
+        occurrence in query order: the one place a flat shape's scorers are
+        chosen, for the hot kernel, WAND and _eval_flat. A blended term
+        scores with the ARTIFICIAL stats df = max(df_i), ttf = sum(ttf_i)
+        and its own boost (core/search/BlendedTermQuery.java:271-300); a
+        synonym is one pseudo-term key (term set, scorer key) on its first
+        present term."""
+        present = [(t, b) for t, b in zip(shape.terms, shape.boosts) if t in stats]
         if not present:
             return []
-        art = TermStats(
-            max(stats[t].doc_freq for t, _b in present),
-            sum(stats[t].total_term_freq for t, _b in present),
-            -1, 0, 0,
-        )
-        return [(t, _scorer_key(True, b, [art])) for t, b in present]
+        if shape.kind == "synonym":
+            syn = _scorer_key(False, shape.boosts[0], [_synonym_stats(stats)])
+            return [(present[0][0], (tuple(stats), syn))]
+        if shape.kind == "blended":
+            art = TermStats(
+                max(stats[t].doc_freq for t, _b in present),
+                sum(stats[t].total_term_freq for t, _b in present),
+                -1, 0, 0,
+            )
+            return [(t, _scorer_key(True, b, [art])) for t, b in present]
+        return [(t, _scorer_key(False, b, [stats[t]])) for t, b in present]
 
-    def _eval_blended(self, q: BlendedTermQuery) -> DataFrame:
-        """BlendedTermQuery: every term scored with the blended stats (one
-        decode job for all terms), then combined per the rewrite method
-        (dismax with tie, or SHOULD sum)."""
-        keys = self._blended_keys(q, self.term_stats(q.terms))
-        if not keys:
+    def _eval_flat(self, shape, needs_scores: bool = True, keep=None,
+                   where=None) -> DataFrame:
+        """The Spark tier's one evaluator of a flat prune.Shape (``or``,
+        ``and``, ``bool``, ``dismax``, ``blended``), shared by _eval and
+        WAND, mirroring _hot_rows: ONE scored_postings pass per layer —
+        layer j scores the j-th occurrence of every term, so a query that
+        repeats no term is one pass (Lucene's BooleanScorer walks all clause
+        postings at once, search/BooleanScorer.java:262-285) — then one
+        combine per doc: the sum over docs matching every MUST clause and
+        minimum_should_match of the others, or max + tie × (sum − max);
+        then the outer boost. A single term needs no combine. Without
+        ``needs_scores`` a SHOULD clause scores 1.0 (MUST clauses always
+        score, as in the reference). ``keep`` is WAND's block test and
+        ``where`` a block predicate (its θ probe)."""
+        stats = self.term_stats(shape.terms)
+        keys = self._shape_keys(shape, stats)
+        if not keys or any(t not in stats for t in shape.terms[:shape.must]):
             return self._empty()
-        # every occurrence of a term scores, like the hot kernel: layer j
-        # holds the j-th occurrence of each term (no repeat: one layer). One
-        # decode pass + one scoring kernel per layer: each term's scorer
-        # runs on its slice of the batch — per-row op order identical to
-        # per-term evaluation
-        layers: List[Dict[str, BM25Scorer]] = []
+        layers: List[Dict[str, Tuple[Optional[BM25Scorer], bool]]] = []
         seen: Dict[str, int] = {}
-        for t, key in keys:
+        for i, (t, key) in enumerate(keys):
             j = seen[t] = seen.get(t, -1) + 1
             if j == len(layers):
                 layers.append({})
-            layers[j][t] = self._scorer(key)
-        u = None
-        for scorers in layers:
-            part = scored_postings(self._postings_for(sorted(scorers)), scorers)
-            u = part if u is None else u.unionByName(part)
-        if q.rewrite == "boolean":
-            agg = u.groupBy("doc_id").agg(F.sum("score").alias("score"))
-            score = F.col("score")
+            is_must = i < shape.must  # MUST terms lead, and all are present
+            sc = self._scorer(key) if needs_scores or is_must else None
+            layers[j][t] = (sc, is_must)
+
+        def scored(layer: dict, must=None) -> DataFrame:
+            blocks = self._postings_for(sorted(layer))
+            if where is not None:
+                blocks = blocks.filter(where)
+            scorers = {t: sc for t, (sc, _m) in layer.items() if sc is not None}
+            return scored_postings(blocks, scorers, keep, must)
+
+        score = F.col("score")
+        if len(keys) == 1 and shape.kind != "bool":
+            (t, (sc, _m)), = layers[0].items()
+            st = stats[t]
+            if st.doc_freq == 1:
+                # singleton pulsing fast path: posting inlined in the terms table
+                s1 = 1.0 if sc is None else float(sc.score(
+                    np.array([st.singleton_freq]), np.array([st.singleton_norm]))[0])
+                out = self.spark.createDataFrame([(st.singleton_doc_id, s1)], MATCH_SCHEMA)
+            else:
+                out = scored(layers[0])
         else:
-            agg = u.groupBy("doc_id").agg(
-                F.max("score").alias("mx"), F.sum("score").alias("sm")
-            )
-            score = F.col("mx") + F.lit(float(q.tie_breaker)) * (
-                F.col("sm") - F.col("mx")
-            )
-        if q.boost != 1.0:
-            score = score * F.lit(float(q.boost))
-        return agg.select("doc_id", score.alias("score"))
+            parts = [scored(lay, [t for t, (_s, m) in lay.items() if m]) for lay in layers]
+            u = parts[0]
+            for p in parts[1:]:
+                u = u.unionByName(p)
+            if shape.tie is None:
+                out = u.groupBy("doc_id").agg(
+                    F.sum("score").alias("score"),
+                    F.sum("is_must").alias("n_must"),
+                    F.count("*").alias("n"),
+                )
+                need = shape.msm if shape.must else max(shape.msm, 1)
+                out = out.filter((F.col("n_must") == shape.must)
+                                 & (F.col("n") - F.col("n_must") >= need))
+            else:
+                out = u.groupBy("doc_id").agg(
+                    F.max("score").alias("mx"), F.sum("score").alias("sm")
+                )
+                score = F.col("mx") + F.lit(shape.tie) * (F.col("sm") - F.col("mx"))
+        if shape.boost != 1.0:
+            score = score * F.lit(float(shape.boost))
+        return out.select("doc_id", score.alias("score"))
 
     def _eval_synonym(self, q: SynonymQuery) -> DataFrame:
         """SynonymQuery: terms scored as one pseudo-term — max docFreq for idf,
@@ -1441,6 +1415,8 @@ class Searcher:
         return df.select("doc_id", sc(F.col("freq"), F.col("norm")).alias("score"))
 
     def _eval_bool(self, q: BooleanQuery, needs_scores: bool) -> DataFrame:
+        from .prune import _flat_term_clauses
+
         must = [c.query for c in q.clauses if c.occur == Occur.MUST]
         should = [c.query for c in q.clauses if c.occur == Occur.SHOULD]
         filters = [c.query for c in q.clauses if c.occur == Occur.FILTER]
@@ -1448,8 +1424,13 @@ class Searcher:
         msm = q.minimum_should_match
 
         base: Optional[DataFrame] = None
-        u = self._fused_bool_scored(must, should, needs_scores)
-        if u is None:
+        # flat scoring clauses (FILTER / MUST_NOT and the boost aside) are
+        # one _eval_flat pass; any others are evaluated clause by clause
+        scoring = tuple(c for c in q.clauses if c.occur in (Occur.MUST, Occur.SHOULD))
+        flat = _flat_term_clauses(dataclasses.replace(q, clauses=scoring, boost=1.0))
+        if flat is not None:
+            base = self._eval_flat(flat, needs_scores)
+        elif scoring:
             parts = []
             for sq in must:
                 parts.append(
@@ -1463,9 +1444,6 @@ class Searcher:
                         "doc_id", "score", F.lit(0).alias("is_must")
                     )
                 )
-        else:
-            parts = [u]
-        if parts:
             u = parts[0]
             for p in parts[1:]:
                 u = u.unionByName(p)
@@ -1474,14 +1452,11 @@ class Searcher:
                 F.sum("is_must").alias("n_must"),
                 F.count("*").alias("n_clauses"),
             )
-            cond = F.col("n_must") == len(must)
-            n_should = F.col("n_clauses") - F.col("n_must")
-            if must:
-                if msm > 0:
-                    cond = cond & (n_should >= msm)
-            else:
-                cond = cond & (n_should >= max(msm, 1))
-            base = agg.filter(cond).select("doc_id", "score")
+            need = msm if must else max(msm, 1)
+            base = agg.filter(
+                (F.col("n_must") == len(must))
+                & (F.col("n_clauses") - F.col("n_must") >= need)
+            ).select("doc_id", "score")
         elif filters:
             base = self._docset(filters[0]).withColumn("score", F.lit(1.0))
             filters = filters[1:]
@@ -2469,11 +2444,9 @@ class Searcher:
         key = repr(parents)
         if key in self._blockjoin_maps:
             return self._blockjoin_maps[key]
-        import os
-
         from pyspark.sql import Window
 
-        bsz = int(os.environ.get("LUCENE_SPARK_BLOCKJOIN_BUCKET", 1 << 20))
+        bsz = _BLOCKJOIN_BUCKET
         if isinstance(parents, str):
             flags = self.index.docs.select(
                 "doc_id", F.expr(parents).alias("__isp")
@@ -3006,15 +2979,11 @@ class Searcher:
     def _terms_scan(self, q: Query) -> DataFrame:
         """The terms-dictionary frame a MultiTermQuery filters — q-gram
         pruned for fuzzy when the index is enabled (auto-enabled above the
-        LUCENE_SPARK_FUZZY_NGRAM_AUTO vocabulary threshold, default 100k;
-        <=0 disables auto)."""
+        _FUZZY_NGRAM_AUTO vocabulary threshold, 100k; <=0 disables auto)."""
         if isinstance(q, FuzzyQuery):
             if self._ngram_terms is None and not self._fuzzy_auto_checked:
                 self._fuzzy_auto_checked = True
-                auto = int(
-                    os.environ.get("LUCENE_SPARK_FUZZY_NGRAM_AUTO", 100_000)
-                )
-                if auto > 0 and self._vocab_size() >= auto:
+                if 0 < _FUZZY_NGRAM_AUTO <= self._vocab_size():
                     self.enable_fuzzy_ngram_index()
             cand = self._fuzzy_ngram_candidates(q)
             if cand is not None:
@@ -3158,8 +3127,6 @@ class MultiFieldSearcher(Searcher):
         return "multi-field"
 
     def _eval(self, q: Query, needs_scores: bool) -> DataFrame:
-        import dataclasses
-
         if isinstance(q, SpanNearQuery) and any(
             isinstance(t, FieldMaskedTerm) for t in q.terms
         ):

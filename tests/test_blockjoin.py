@@ -18,6 +18,7 @@ from lucene_spark.query import (
     ToChildBlockJoinQuery,
     ToParentBlockJoinQuery,
 )
+from lucene_spark import search
 from lucene_spark.search import Searcher
 
 import os, sys
@@ -102,7 +103,7 @@ def test_to_parent_matches_brute_force(bj, mode):
 def test_to_parent_tiny_buckets_cross_boundary(bj, monkeypatch):
     """Bucket fixup path: buckets smaller than a block force cross-bucket
     parent resolution through the driver suffix-min."""
-    monkeypatch.setenv("LUCENE_SPARK_BLOCKJOIN_BUCKET", "3")
+    monkeypatch.setattr(search, "_BLOCKJOIN_BUCKET", 3)
     s = Searcher(bj["s"].index, dtype=np.float32)  # fresh map cache
     exp = BruteForceIndex.topk(
         brute_to_parent(bj["o"], "red", "max", len(bj["texts"])), 10

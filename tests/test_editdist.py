@@ -107,12 +107,13 @@ def test_fuzzy_ngram_index_equivalence(spark):
 
 
 def test_fuzzy_ngram_index_auto_enables_above_vocab_threshold(spark, monkeypatch):
-    """Above LUCENE_SPARK_FUZZY_NGRAM_AUTO distinct terms the q-gram
+    """Above search._FUZZY_NGRAM_AUTO distinct terms the q-gram
     candidate index builds itself on the first fuzzy query (the always-on
     Levenshtein-automaton intersection analog, search/FuzzyTermsEnum.java:
     409); below it the banded scan stays (no gram table maintained)."""
     import numpy as np
 
+    from lucene_spark import search
     from lucene_spark.build import IndexConfig, build_index
     from lucene_spark.query import FuzzyQuery
     from lucene_spark.search import Searcher
@@ -127,7 +128,7 @@ def test_fuzzy_ngram_index_auto_enables_above_vocab_threshold(spark, monkeypatch
                       auto_seg_size=False, eager=True)
     q = FuzzyQuery(term="spark", max_edits=1)
 
-    monkeypatch.setenv("LUCENE_SPARK_FUZZY_NGRAM_AUTO", "5")
+    monkeypatch.setattr(search, "_FUZZY_NGRAM_AUTO", 5)
     auto = Searcher(idx, dtype=np.float32)
     got_auto = sorted(r["doc_id"] for r in auto.matches(q).collect())
     assert auto._ngram_terms is not None  # auto-built: vocab 11 >= 5
@@ -135,13 +136,13 @@ def test_fuzzy_ngram_index_auto_enables_above_vocab_threshold(spark, monkeypatch
     scan = auto._terms_scan(q)
     assert scan.count() < len(vocab)
 
-    monkeypatch.setenv("LUCENE_SPARK_FUZZY_NGRAM_AUTO", "1000000")
+    monkeypatch.setattr(search, "_FUZZY_NGRAM_AUTO", 1_000_000)
     banded = Searcher(idx, dtype=np.float32)
     got_banded = sorted(r["doc_id"] for r in banded.matches(q).collect())
     assert banded._ngram_terms is None  # below threshold: banded scan
     assert got_auto == got_banded
 
-    monkeypatch.setenv("LUCENE_SPARK_FUZZY_NGRAM_AUTO", "0")
+    monkeypatch.setattr(search, "_FUZZY_NGRAM_AUTO", 0)
     off = Searcher(idx, dtype=np.float32)
     off.matches(q).collect()
     assert off._ngram_terms is None  # <=0 disables auto entirely

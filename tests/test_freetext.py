@@ -139,7 +139,7 @@ def test_cached_suggester_runs_zero_jobs(model, spark):
         s.lookup("bar ", num=5)
         jobs = sc.statusTracker().getJobIdsForGroup("freetext_zero_jobs")
     finally:
-        sc.setJobGroup("", "")
+        sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(jobs) == []
 
 

@@ -4,7 +4,8 @@ runs (matchers.intersect_sorted / merge_sorted_runs) — equal the full
 sorts they replace. On a real index: a
 warm query builds no scorer and re-scores no term, the memoized answers
 equal the exhaustive tier bit for bit, score runs count against the
-cache budget, and eviction is LRU."""
+cache budget, eviction is LRU, and a flat OR / AND that repeats a term
+is a hot shape."""
 
 import numpy as np
 import pytest
@@ -25,7 +26,7 @@ from lucene_spark.query import (
 from lucene_spark.search import Searcher, _hot_size
 from lucene_spark.similarities import BM25, Boolean, Classic, LMDirichlet
 
-from oracle import make_corpus
+from oracle import BruteForceIndex, make_corpus
 
 doc_ids = st.lists(st.integers(0, 80), max_size=40, unique=True).map(
     lambda xs: np.asarray(sorted(xs), dtype=np.int64)
@@ -286,3 +287,31 @@ def test_score_runs_give_way_to_the_postings_a_query_needs(built, hot, monkeypat
     assert list(s._postings_cache) == ["spark", "merge"]
     assert s._hot_cached == df["spark"] + df["merge"]
     assert s._hot_cached == sum(_hot_size(e, False) for e in s._postings_cache.values())
+
+
+def test_repeated_term_or_and_are_hot_shapes(built, hot, monkeypatch):
+    # every occurrence of a repeated term scores (under its own boost), on
+    # the hot tier, in _eval and in the brute-force oracle alike; WAND
+    # declines the shape, its per-term bounds would collapse the repeat
+    o = BruteForceIndex(_texts())
+    t = lambda w, b=1.0: TermQuery(term=w, boost=b)
+    cases = {
+        "or": (False, [("spark", 0.3), ("spark", 1.0)]),
+        "and": (True, [("spark", 0.3), ("spark", 1.0), ("merge", 1.0)]),
+    }
+    s = Searcher(built, dtype=np.float32)
+    for name, (must, clauses) in cases.items():
+        tqs = [t(w, b) for w, b in clauses]
+        q = bool_query(must=tqs) if must else bool_query(should=tqs)
+        parts = [o.score_term(w, b) for w, b in clauses]
+        docs = set.intersection(*map(set, parts)) if must else set().union(*parts)
+        want = BruteForceIndex.topk(
+            {d: np.float32(sum(float(p[d]) for p in parts if d in p)) for d in docs}, 10
+        )
+        assert len(want) == 10, name
+        assert _f32(_hot_top(s, q)) == _f32(want), name
+        assert _f32(_exhaustive(built, q, dtype=np.float32)) == _f32(want), name
+    monkeypatch.setenv("LUCENE_SPARK_HOT_CACHE_POSTINGS", "0")
+    p = Searcher(built, dtype=np.float32).plan(q, 10)
+    assert p.tier == "eval" and ("wand", "repeated term") in p.declined
+    assert _f32((r["doc_id"], r["score"]) for r in p.frame.collect()) == _f32(want)

@@ -264,6 +264,18 @@ def test_pruned_distributed_fallback(searcher, oracle, monkeypatch):
     assert_topk_equal(searcher.search(q2, 10, prune=True), exp2)
 
 
+def _count_jobs(spark, group, fn) -> int:
+    """Spark jobs that fn() runs, counted under a job group of its own (a
+    job group another test left set cannot hide them)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.mark.parametrize("driver_cap", ["2000000", "0"])
 def test_warm_wand_job_count(built, oracle, spark, monkeypatch, driver_cap):
     """A warm repeated top-k on the WAND tier spends at most 2 Spark jobs
@@ -278,15 +290,11 @@ def test_warm_wand_job_count(built, oracle, spark, monkeypatch, driver_cap):
     q = bool_query(should=[TermQuery(term=t) for t in ["the", "spark", "merge"]])
     exp = BruteForceIndex.topk(oracle.score_bool(should=["the", "spark", "merge"]), 10)
 
-    def job_ids():
-        st = spark.sparkContext.statusTracker()
-        return set(st.getJobIdsForGroup(None) or [])
-
     s.top_docs(q, 10)  # cold: metadata fetch + θ
     s.top_docs(q, 10)
-    before = job_ids()
-    got = s.top_docs(q, 10)
-    n_jobs = len(job_ids() - before)
+    got = []
+    n_jobs = _count_jobs(spark, f"warm-wand-{driver_cap}",
+                         lambda: got.extend(s.top_docs(q, 10)))
     assert [(d, np.float32(sc)) for d, sc in got] == [
         (d, np.float32(sc)) for d, sc in exp[:10]
     ]
@@ -343,19 +351,59 @@ def test_warm_job_count_same_with_and_without_preload(built, spark, monkeypatch)
     monkeypatch.setenv("LUCENE_SPARK_HOT_CACHE_POSTINGS", "0")
     shapes = _perfbench_shapes()
 
-    def warm_jobs(s, q):
-        st = spark.sparkContext.statusTracker()
+    def warm_jobs(s, q, group):
         s.top_docs(q, 10)
         s.top_docs(q, 10)
-        before = set(st.getJobIdsForGroup(None) or [])
-        s.top_docs(q, 10)
-        return len(set(st.getJobIdsForGroup(None) or []) - before)
+        return _count_jobs(spark, group, lambda: s.top_docs(q, 10))
 
     for name in ("term", "or2", "and2", "phrase", "synonym", "dismax", "blended"):
         q = shapes[name]
-        plain = warm_jobs(Searcher(built, dtype=np.float32), q)
-        preloaded = warm_jobs(Searcher(built, dtype=np.float32, preload_stats=True), q)
+        plain = warm_jobs(Searcher(built, dtype=np.float32), q, f"warm-plain-{name}")
+        preloaded = warm_jobs(Searcher(built, dtype=np.float32, preload_stats=True), q,
+                              f"warm-preloaded-{name}")
+        assert plain > 0, name
         assert plain == preloaded, (name, plain, preloaded)
+
+
+# Warm Spark jobs of each flat shape: search(q, prune=False) runs _eval's
+# flat evaluator, top_docs (hot cache off) runs WAND on the or / and shapes.
+# A shape with a combine is one action plus its AQE shuffle stage; a single
+# term needs no combine, so no shuffle
+FLAT_EVAL_JOBS = {
+    "term": 1, "or2": 2, "or3": 2, "and2": 2, "dismax": 2, "mixed_msm": 2,
+    "blended_dismax": 2, "blended_boolean": 2, "repeated_or": 2,
+}
+FLAT_WAND_JOBS = {"term": 1, "or2": 2, "or3": 2, "and2": 2}
+
+
+def test_flat_shape_spark_job_counts(built, spark):
+    from lucene_spark.query import BlendedTermQuery
+
+    t = lambda w, b=1.0: TermQuery(term=w, boost=b)
+    shapes = _perfbench_shapes()
+    shapes = {name: shapes[name] for name in ("term", "or2", "or3", "and2", "dismax")}
+    shapes.update({
+        "mixed_msm": bool_query(must=[t("spark")],
+                                should=[t("merge"), t("index"), t("the")], msm=2),
+        "blended_dismax": BlendedTermQuery(terms=("merge", "index"), boosts=(1.0, 2.0),
+                                           tie_breaker=0.1),
+        "blended_boolean": BlendedTermQuery(terms=("merge", "index"), boosts=(1.0, 2.0),
+                                            rewrite="boolean"),
+        "repeated_or": bool_query(should=[t("spark", 0.3), t("spark")]),
+    })
+    s = Searcher(built, dtype=np.float32)
+    got_eval, got_wand = {}, {}
+    for name, q in shapes.items():
+        assert s.search(q, 10, prune=False).collect(), name  # warm: term stats
+        got_eval[name] = _count_jobs(spark, f"flat-eval-{name}",
+                                     lambda: s.search(q, 10, prune=False).collect())
+        if name in ("term", "or2", "or3", "and2"):
+            s.top_docs(q, 10)  # warm: WAND metadata and θ
+            got_wand[name] = _count_jobs(spark, f"flat-wand-{name}",
+                                         lambda: s.top_docs(q, 10))
+            assert s.plan(q, 10).tier == "wand", name
+    assert got_eval == FLAT_EVAL_JOBS
+    assert got_wand == FLAT_WAND_JOBS
 
 
 def test_multi_phrase_query(searcher, oracle, corpus):

@@ -121,7 +121,7 @@ def test_zero_spark_jobs(spark):
             mi.search(q)
         jobs = sc.statusTracker().getJobIdsForGroup("memoryindex_zero_jobs")
     finally:
-        sc.setJobGroup("", "")
+        sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(jobs) == []
 
 

@@ -5,7 +5,7 @@ import numpy as np
 import pytest
 
 from lucene_spark.build import IndexConfig, build_index
-from lucene_spark.query import TermQuery, bool_query, parse
+from lucene_spark.query import DisjunctionMaxQuery, TermQuery, bool_query, parse
 from lucene_spark.search import MultiFieldSearcher, Searcher
 
 import os, sys
@@ -63,6 +63,22 @@ def test_fielded_term_routes_to_field_index(fields, monkeypatch):
             (d, np.float32(v)) for d, v in exp[:5]
         ], hot
         assert s.plan(TermQuery(term="red", field="tag"), 5).tier == "eval"
+    # a flat bool and a dismax of field-qualified terms score each term on
+    # its field's index, not on the default field's postings
+    tag = lambda w: TermQuery(term=w, field="tag")
+    q = bool_query(should=[tag("red"), tag("hot"), tag("blue")])
+    exp = BruteForceIndex.topk(o_tag.score_bool(should=["red", "hot", "blue"]), 10)
+    assert _got(s.search(q, 10, prune=False)) == [(d, np.float32(v)) for d, v in exp]
+    runs = [o_tag.score_term(w) for w in ("red", "hot", "cold")]
+    dm = {}
+    for d in set().union(*runs):
+        sc = [float(r[d]) for r in runs if d in r]
+        dm[d] = np.float32(max(sc) + 0.5 * (sum(sc) - max(sc)))
+    q = DisjunctionMaxQuery(disjuncts=(tag("red"), tag("hot"), tag("cold")),
+                            tie_breaker=0.5)
+    assert _got(s.search(q, 10, prune=False)) == [
+        (d, np.float32(v)) for d, v in BruteForceIndex.topk(dm, 10)
+    ]
 
 
 def test_cross_field_boolean(fields):

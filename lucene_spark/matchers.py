@@ -17,9 +17,10 @@ equivalence checks):
   freq = Σ 1/(1+matchLength) over the priority-queue walk's matches
   (PhraseScorer sloppyWeight). Without repeated terms the walk's emissions
   are the same-slot runs of the merged adjusted-position sequence
-  (sloppy_freqs_batch); phrases with repeated terms take the doc-lockstep
-  hasRpts/advanceRpts walk (sloppy_phrase_freqs_rpts_global). Both run only
-  on the docs the match-window prefilter keeps (_sloppy_candidates).
+  (sloppy_freqs_batch); phrases with repeated terms take the
+  hasRpts/advanceRpts walk (sloppy_phrase_freqs_rpts_global: literal per
+  doc on a small batch, doc-lockstep above). Both run only on the docs the
+  match-window prefilter keeps (_sloppy_candidates).
 - ordered span near: NearSpansOrdered (search/spans/NearSpansOrdered.java) —
   for each position p0 of clause 0, the greedy monotone chain q_i =
   min{pos(clause_i) > q_{i-1}} (stretchToOrder with forward-only iterators);
@@ -115,8 +116,72 @@ def merge_sorted_runs(runs: Sequence[np.ndarray]):
     return merged[starts], inv, order, starts
 
 
+# A combine's doc-id span may be up to this many times its postings count
+# for the dense-bucket path (combine_runs). Its three span-sized buffers
+# (float64 sums, float64 maxima, a bool hit mask: 17 B a slot) then stay
+# within the merge path's own temporaries (about 50 B a posting). Time
+# agrees: two random runs with a tie, dense / merge was 0.74-0.84 at a span
+# of 3x the postings (300, 2k and 20k postings), 0.76-1.01 at 4x and up to
+# 3.1 at 6x (median of 51 timings; numpy 1.26, one 4-vCPU VM).
+_DENSE_SPAN = 3
+
+
+def combine_runs(runs: Sequence[tuple], tie=None):
+    """Per-doc combine of (sorted unique docs, float64 scores) runs: the sum
+    in run order, or with ``tie`` max + tie × (sum − max). Returns (docs,
+    combined) in doc order. A doc-id span of at most _DENSE_SPAN × the
+    postings count takes _dense_combine (BooleanScorer's bucket table);
+    wider spans (gapped ids, ids far apart) take _merged_combine."""
+    full = [d for d, _s in runs if len(d)]
+    if not full:
+        return runs[0]
+    lo = min(int(d[0]) for d in full)
+    hi = max(int(d[-1]) for d in full)
+    if hi - lo < _DENSE_SPAN * sum(len(d) for d in full):
+        return _dense_combine(runs, tie, lo, hi - lo + 1)
+    return _merged_combine(runs, tie)
+
+
+def _dense_combine(runs: Sequence[tuple], tie, lo: int, span: int):
+    """combine_runs over a span-sized bucket table: each run adds into
+    ``acc[doc - lo]`` in run order, the same additions from 0.0 that
+    bincount makes, so the sums are bit-identical to _merged_combine's."""
+    acc = np.zeros(span)
+    hit = np.zeros(span, dtype=bool)
+    mx = None if tie is None else np.full(span, -np.inf)
+    for d, s in runs:
+        i = d - lo
+        acc[i] += s
+        hit[i] = True
+        if mx is not None:
+            mx[i] = np.maximum(mx[i], s)
+    nz = np.flatnonzero(hit)
+    tot = acc[nz]
+    if mx is not None:
+        m = mx[nz]
+        tot = m + tie * (tot - m)
+    return nz + lo, tot
+
+
+def _merged_combine(runs: Sequence[tuple], tie):
+    """combine_runs by merge_sorted_runs: bincount sums the concatenated
+    scores in run order, maximum.reduceat takes the per-doc max."""
+    u, inv, order, starts = merge_sorted_runs([d for d, _s in runs])
+    cat = np.concatenate([s for _d, s in runs])
+    tot = np.bincount(inv, weights=cat)
+    if tie is not None:
+        mx = np.maximum.reduceat(cat[order], starts)
+        tot = mx + tie * (tot - mx)
+    return u, tot
+
+
 def _globals(pos_by_term: Dict[str, List], terms: Sequence[str]):
     return {t: _concat_global(pos_by_term[t]) for t in dict.fromkeys(terms)}
+
+
+# Doc ids below this fit the high half of a doc-keyed position
+# (doc << 32 | pos) as a non-negative int64.
+KEYED_DOCS = 1 << 31
 
 
 def exact_phrase_freqs(
@@ -131,25 +196,37 @@ def exact_phrase_freqs_global(
     g_by_term: Dict[str, np.ndarray], terms: Sequence[str], n_docs: int
 ) -> np.ndarray:
     """Same, but the caller already supplies the doc-offset global position
-    array per term (the driver hot cache gathers these with zero per-doc
-    Python — see Searcher._hot_phrase_rows)."""
-    offsets: Dict[str, List[int]] = {}
-    for i, t in enumerate(terms):
-        offsets.setdefault(t, []).append(i)
-    cand = None
-    for t, offs in offsets.items():
-        g = g_by_term[t]
-        for off in offs:
-            s = g - off
-            cand = s if cand is None else intersect_sorted(cand, s)[0]
-            if len(cand) == 0:
-                return np.zeros(n_docs, dtype=np.int64)
+    array per term (candidate index << 32 | pos): exact_phrase_starts
+    counted per candidate."""
+    starts = exact_phrase_starts(g_by_term, terms)
+    return np.bincount(starts >> _DOC_SHIFT, minlength=n_docs)
+
+
+def exact_phrase_starts(
+    g_by_term: Dict[str, np.ndarray], terms: Sequence[str]
+) -> np.ndarray:
+    """The sorted phrase start keys (doc << 32 | start position) where every
+    slot i's term occurs at start + i, over sorted unique doc-keyed position
+    arrays (candidate-keyed or the hot cache's doc-keyed layout). Like
+    ExactPhraseMatcher's conjunction, it leads with the rarest slot: its
+    keys shifted to the phrase start are the candidates, and each other
+    slot keeps those whose key + slot one searchsorted finds in its array."""
+    n = len(terms)
+    lens = [len(g_by_term[t]) for t in terms]
+    lead = int(np.argmin(lens))
+    if lens[lead] == 0:
+        return np.empty(0, dtype=np.int64)
+    cand = g_by_term[terms[lead]] - lead
+    for i in range(n):
+        if i == lead or not len(cand):
+            continue
+        g = g_by_term[terms[i]]
+        want = cand + i
+        j = np.minimum(np.searchsorted(g, want), len(g) - 1)
+        cand = cand[g[j] == want]
     # drop starts where pos < slot (the subtraction wrapped into the previous
     # doc's high range — never a real position, which are all < 2^31)
-    low = cand & _LOW_MASK
-    valid = low < (1 << 31)
-    didx = (cand[valid] >> _DOC_SHIFT).astype(np.int64)
-    return np.bincount(didx, minlength=n_docs)
+    return cand[(cand & _LOW_MASK) < (1 << 31)]
 
 
 # ---------------------------------------------------------------------------
@@ -286,6 +363,17 @@ def sloppy_phrase_freqs_global(
     return sloppy_freqs_batch(g, slop, n_docs)
 
 
+# Candidate docs up to which a repeated-term sloppy phrase takes the literal
+# per-doc walk: below it the batch walk's per-tick numpy calls (its ticks are
+# the batch's longest walk) cost more than the literal walk's per-doc Python.
+# Measured over the (a, b, a)~4 pool queries of the 2k-doc perfbench corpus,
+# seeds 1, 31 and 34 (89 queries, each on the docs _sloppy_candidates keeps,
+# median of 7 timings), literal / batch time was 0.26 at 1-16 docs, 0.41 at
+# 17-32, 0.65 at 33-48, 0.75 at 49-64 (0.70-0.84), 0.98-1.06 at 83-94 and
+# 2.5-4.3 past 160 (numpy 1.26, Python 3.11, one 4-vCPU VM).
+_RPTS_LITERAL_DOCS = 80
+
+
 def sloppy_phrase_freqs_rpts_global(
     g_by_term: Dict[str, np.ndarray], terms: Sequence[str], slop: int, n_docs: int
 ) -> np.ndarray:
@@ -305,12 +393,34 @@ def sloppy_phrase_freqs_rpts_global(
     colliding pair (advanceRpts/lesser/collide) — collision <=> equal index
     into the shared positions array.
 
-    Executes on the doc-lockstep batch walk (_sloppy_rpts_walk_batch) over
-    the docs _sloppy_candidates keeps; the literal per-doc transcription
-    survives as _sloppy_phrase_freqs_rpts_literal for the property suite."""
+    Runs on the docs _sloppy_candidates keeps: at most _RPTS_LITERAL_DOCS
+    of them take the literal per-doc walk (_sloppy_phrase_freqs_rpts_literal),
+    more take the doc-lockstep batch walk (_sloppy_phrase_freqs_rpts_batch)."""
+    rows = np.flatnonzero(_sloppy_candidates(g_by_term, terms, slop, n_docs))
+    if len(rows) > _RPTS_LITERAL_DOCS:
+        return _sloppy_phrase_freqs_rpts_batch(g_by_term, terms, slop, rows, n_docs)
+    out = np.zeros(n_docs, dtype=np.float64)
+    if len(rows):
+        lo, hi = rows << _DOC_SHIFT, (rows + 1) << _DOC_SHIFT
+        pbt = {}
+        for t in dict.fromkeys(terms):
+            g = g_by_term[t]
+            b, e = np.searchsorted(g, lo), np.searchsorted(g, hi)
+            pbt[t] = [g[i:j] - o for i, j, o in zip(b.tolist(), e.tolist(), lo.tolist())]
+        out[rows] = _sloppy_phrase_freqs_rpts_literal(pbt, terms, slop, len(rows))
+    return out
+
+
+def _sloppy_phrase_freqs_rpts_batch(
+    g_by_term: Dict[str, np.ndarray], terms: Sequence[str], slop: int,
+    rows: np.ndarray, n_docs: int,
+) -> np.ndarray:
+    """sloppy_phrase_freqs_rpts_global's doc-lockstep batch walk
+    (_sloppy_rpts_walk_batch) over the candidate docs ``rows``, each holding
+    every term: Python cost per tick, not per doc, so it pays once the
+    batch is large."""
     n = len(terms)
     _s, _m, _g, group_members, rank = _multi_phrase_shape([(t,) for t in terms])
-    rows = np.flatnonzero(_sloppy_candidates(g_by_term, terms, slop, n_docs))
     if len(rows) == 0:
         return np.zeros(n_docs, dtype=np.float64)
     G = [np.asarray(g_by_term[t], dtype=np.int64) for t in terms]
@@ -328,9 +438,9 @@ def sloppy_phrase_freqs_rpts_global(
 def _sloppy_phrase_freqs_rpts_literal(
     pos_by_term: Dict[str, List], terms: Sequence[str], slop: int, n_docs: int
 ) -> np.ndarray:
-    """Per-doc literal driver over _sloppy_walk_rpts — the property-test
-    reference for the batch walk above: a plain phrase is a multi-phrase of
-    singleton slots."""
+    """Per-doc literal driver over _sloppy_walk_rpts — the walk of a small
+    candidate batch and the property-test reference for the batch walk
+    above: a plain phrase is a multi-phrase of singleton slots."""
     return _sloppy_multi_phrase_freqs_literal(
         pos_by_term, [(t,) for t in terms], slop, n_docs
     )
@@ -468,7 +578,7 @@ def _sloppy_multi_phrase_freqs_literal(
             if not ps:
                 ok = False
                 break
-            arrs.append(ps[0] if len(ps) == 1 else np.unique(np.concatenate(ps)))
+            arrs.append((ps[0] if len(ps) == 1 else np.unique(np.concatenate(ps))).tolist())
         if not ok:
             continue
         if multi:
@@ -619,7 +729,7 @@ def _sloppy_walk_rpts(
 # one hand-advance of the literal walk for the whole batch, so Python
 # interpreter cost scales with the LONGEST walk in the batch instead of the
 # sum over docs. The literal one-doc transcriptions above stay as the
-# property-test reference.
+# property-test reference (and walk a small repeated-term batch).
 # ---------------------------------------------------------------------------
 
 _BIG = np.int64(1) << np.int64(62)

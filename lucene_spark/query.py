@@ -527,17 +527,22 @@ def bool_query(
 
 
 def rewrite(q: Query) -> Query:
-    prev = None
-    while prev != q:
-        prev, q = q, _rewrite_once(q)
-    return q
+    """The fixpoint of _rewrite_once, which returns its argument itself when
+    nothing changes: IndexSearcher.rewrite's reference-inequality loop, so a
+    query already in normal form costs one pass and no deep comparison."""
+    while True:
+        r = _rewrite_once(q)
+        if r is q:
+            return q
+        q = r
 
 
 def _rewrite_once(q: Query) -> Query:
     if isinstance(q, BooleanQuery):
-        clauses = tuple(
-            BooleanClause(_rewrite_once(c.query), c.occur) for c in q.clauses
-        )
+        clauses = []
+        for c in q.clauses:
+            r = _rewrite_once(c.query)
+            clauses.append(c if r is c.query else BooleanClause(r, c.occur))
         # drop MatchNoDocs SHOULD clauses; MatchNoDocs MUST/FILTER => no match
         kept = []
         for c in clauses:
@@ -571,6 +576,8 @@ def _rewrite_once(q: Query) -> Query:
             and q.boost == 1.0
         ):
             return kept[0].query
+        if len(kept) == len(q.clauses) and all(a is b for a, b in zip(kept, q.clauses)):
+            return q
         return BooleanQuery(
             boost=q.boost, clauses=tuple(kept), minimum_should_match=q.minimum_should_match
         )
@@ -583,6 +590,8 @@ def _rewrite_once(q: Query) -> Query:
             return MatchNoDocsQuery(reason="empty dismax")
         if len(djs) == 1 and q.boost == 1.0:
             return djs[0]
+        if len(djs) == len(q.disjuncts) and all(a is b for a, b in zip(djs, q.disjuncts)):
+            return q
         return DisjunctionMaxQuery(boost=q.boost, disjuncts=djs, tie_breaker=q.tie_breaker)
     if isinstance(q, PhraseQuery) and len(q.terms) == 1:
         return TermQuery(boost=q.boost, term=q.terms[0], field=q.field)

@@ -560,8 +560,10 @@ class Searcher:
         # or sooner when postings a query needs would not fit otherwise.
         self._postings_cache: "OrderedDict[str, tuple]" = OrderedDict()
         self._hot_cached = 0
-        # positional variant: term -> (docs, freqs, norms, flat positions,
-        # per-doc starts), one element per position
+        # positional variant: term -> (docs, freqs, norms, keys, per-doc
+        # starts): keys holds every position as doc << 32 | pos, sorted
+        # (plain positions for a term with a doc id past
+        # matchers.KEYED_DOCS), one element per position
         self._positions_cache: "OrderedDict[str, tuple]" = OrderedDict()
         self._hot_pos_cached = 0
         # block-join parent maps: parents-filter repr -> persisted
@@ -688,8 +690,10 @@ class Searcher:
         self, terms: Sequence[str], stats: Dict[str, TermStats]
     ) -> bool:
         """Postings with positions in the hot cache (_hot_fill), laid out
-        FLAT: one concatenated positions array + per-doc start offsets, so
-        per-query gathers stay fully vectorized (matchers.gather_slices)."""
+        FLAT: one sorted array of doc-keyed positions (doc << 32 | pos) +
+        per-doc start offsets, so an exact phrase probes it directly
+        (matchers.exact_phrase_starts) and per-query gathers stay fully
+        vectorized (matchers.gather_slices)."""
         return self.index.config.with_positions and self._hot_fill(
             terms, stats, positions=True
         )
@@ -698,10 +702,11 @@ class Searcher:
                   positions: bool) -> bool:
         """Fetch the uncached terms of ``terms`` into a hot cache in ONE job,
         within LUCENE_SPARK_HOT_CACHE_POSTINGS elements (positions count
-        each position); False when they cannot fit. LRU: the query's cached
-        terms move to the back and _hot_room evicts from the front, never a
-        term of the CURRENT query — evicting one after 'need' was computed
-        would leave it absent after the fetch."""
+        each position, kept doc-keyed: _ensure_hot_positions); False when
+        they cannot fit. LRU: the query's cached terms move to the back and
+        _hot_room evicts from the front, never a term of the CURRENT query —
+        evicting one after 'need' was computed would leave it absent after
+        the fetch."""
         cache = self._positions_cache if positions else self._postings_cache
         need = []
         for t in dict.fromkeys(terms):
@@ -719,10 +724,12 @@ class Searcher:
                 g = g.sort_values("doc_id")
                 e = tuple(g[c].to_numpy(np.int64) for c in ("doc_id", "freq", "norm"))
                 if positions:
-                    flat = np.concatenate(
+                    keys = np.concatenate(
                         [np.asarray(p, dtype=np.int64) for p in g["positions"]]
                     )
-                    e += (flat, np.cumsum(e[1]) - e[1])
+                    if len(e[0]) and e[0][-1] < matchers.KEYED_DOCS:
+                        keys |= np.repeat(e[0] << matchers._DOC_SHIFT, e[1])
+                    e += (keys, np.cumsum(e[1]) - e[1])
                 cache[t] = e if positions else e + ({},)
             empty = np.empty(0, np.int64)
             for t in need:  # terms absent from postings (defensive)
@@ -909,8 +916,9 @@ class Searcher:
         the cache, scored once per _shape_keys key (_hot_run) — a synonym's tf is
         summed per doc into one pseudo-term run before it scores — and
         combine by sum (or, boolean blend), intersection (and) or
-        max + tie × (sum − max) (dismax, dismax blend); then the outer
-        boost, and _rank_rows."""
+        max + tie × (sum − max) (dismax, dismax blend) — the sums and maxima
+        in a doc-span bucket table when the ids are dense enough
+        (matchers.combine_runs); then the outer boost, and _rank_rows."""
         if shape.kind == "phrase":
             return self._hot_phrase_rows(shape.query, k)
         stats = self.term_stats(shape.terms)
@@ -929,12 +937,7 @@ class Searcher:
                 u, ia, ib = matchers.intersect_sorted(u, d)
                 tot = tot[ia] + sc[ib]
         else:
-            u, inv, order, starts = matchers.merge_sorted_runs([r[0] for r in runs])
-            cat = np.concatenate([r[1] for r in runs])
-            tot = np.bincount(inv, weights=cat)
-            if shape.tie is not None:
-                mx = np.maximum.reduceat(cat[order], starts)
-                tot = mx + shape.tie * (tot - mx)
+            u, tot = matchers.combine_runs(runs, shape.tie)
         if shape.boost != 1.0:
             tot = tot * shape.boost
         return self._rank_rows(u, tot, k)
@@ -970,7 +973,14 @@ class Searcher:
     def _hot_phrase_rows(self, q: PhraseQuery, k: int):
         """Driver-side PhraseQuery, the hot tier's one positional shape:
         identical semantics to _eval_phrase — vectorized batch matching via
-        matchers.py (no per-doc Python loop). Rows, or the decline reason."""
+        matchers.py (no per-doc Python loop). Rows, or the decline reason.
+
+        An exact phrase over doc-keyed cache entries probes the cached keys
+        themselves, rarest slot first (matchers.exact_phrase_starts), and
+        counts the valid starts per doc by run length: no doc
+        intersection, no gather. A sloppy phrase, or a term with a doc id
+        past matchers.KEYED_DOCS, intersects the terms' docs and gathers the
+        candidates' positions (key & 0xFFFFFFFF) keyed by candidate index."""
         terms = list(q.terms)
         stats = self.term_stats(terms)
         if any(t not in stats for t in terms):
@@ -980,35 +990,52 @@ class Searcher:
             return "positions exceed hot cache"
         scorer = self.multi_scorer_for(q.boost, [stats[t] for t in terms])
         slop = int(q.slop)
+        cache = {t: self._positions_cache[t] for t in uniq}
+        if slop == 0 and all(
+            not len(e[0]) or e[0][-1] < matchers.KEYED_DOCS for e in cache.values()
+        ):
+            starts = matchers.exact_phrase_starts(
+                {t: e[3] for t, e in cache.items()}, terms
+            )
+            if not len(starts):
+                return []
+            d = starts >> matchers._DOC_SHIFT
+            first = np.flatnonzero(np.diff(d, prepend=-1))
+            u = d[first]
+            freqs = np.diff(first, append=len(d)).astype(np.float64)
+            docs, _f, norms = cache[uniq[0]][:3]
+            sc = scorer.score(freqs, norms[np.searchsorted(docs, u)])
+            return self._rank_rows(u, sc.astype(np.float64), k)
 
         # docs containing every term, with indices into each term's arrays
-        cur = self._positions_cache[uniq[0]][0]
+        cur = cache[uniq[0]][0]
         idxs = {uniq[0]: np.arange(len(cur))}
         for t in uniq[1:]:
-            cur, ia, ib = matchers.intersect_sorted(cur, self._positions_cache[t][0])
+            cur, ia, ib = matchers.intersect_sorted(cur, cache[t][0])
             idxs = {tt: v[ia] for tt, v in idxs.items()}
             idxs[t] = ib
         if len(cur) == 0:
             return []
         n_docs = len(cur)
-        # vectorized multi-slice gather from the flat positions cache: the
-        # candidate docs' positions arrive as one contiguous array per term
-        # with candidate-order doc offsets already applied
+        # vectorized multi-slice gather from the cached keys: the candidate
+        # docs' positions arrive as one contiguous array per term with
+        # candidate-order doc offsets applied
         g_by_term = {}
         for t in uniq:
-            _d, tfreqs, _n, flat, starts = self._positions_cache[t]
+            _d, tfreqs, _n, keys, kstarts = cache[t]
             sel = idxs[t]
             lens = tfreqs[sel]
-            local = matchers.gather_slices(flat, starts[sel], lens)
+            local = matchers.gather_slices(keys, kstarts[sel], lens)
+            local &= matchers._LOW_MASK
             g_by_term[t] = local + np.repeat(
-                np.arange(n_docs, dtype=np.int64) << 32, lens
+                np.arange(n_docs, dtype=np.int64) << matchers._DOC_SHIFT, lens
             )
         if slop == 0:
             freqs = matchers.exact_phrase_freqs_global(
                 g_by_term, terms, n_docs
             ).astype(np.float64)
         else:
-            # the cache layout IS the batch kernels' input (doc-offset
+            # the gathered layout IS the batch kernels' input (doc-offset
             # global arrays): no per-doc list round-trip
             freqs = matchers.sloppy_phrase_freqs_global(
                 g_by_term, terms, slop, n_docs
@@ -1016,7 +1043,7 @@ class Searcher:
         keep = freqs > 0
         if not keep.any():
             return []
-        norms = self._positions_cache[uniq[0]][2][idxs[uniq[0]]][keep]
+        norms = cache[uniq[0]][2][idxs[uniq[0]]][keep]
         sc = scorer.score(freqs[keep], norms).astype(np.float64)
         return self._rank_rows(cur[keep], sc, k)
 

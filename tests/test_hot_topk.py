@@ -315,3 +315,181 @@ def test_repeated_term_or_and_are_hot_shapes(built, hot, monkeypatch):
     p = Searcher(built, dtype=np.float32).plan(q, 10)
     assert p.tier == "eval" and ("wand", "repeated term") in p.declined
     assert _f32((r["doc_id"], r["score"]) for r in p.frame.collect()) == _f32(want)
+
+
+# ---- the dense-bucket combine (matchers.combine_runs)
+
+
+def _merge_reference(runs, tie):
+    """The merge path the bucket table replaces: merge_sorted_runs, bincount
+    sums in run order, maximum.reduceat for the max."""
+    u, inv, order, starts = matchers.merge_sorted_runs([d for d, _s in runs])
+    cat = np.concatenate([s for _d, s in runs])
+    tot = np.bincount(inv, weights=cat)
+    if tie is not None:
+        mx = np.maximum.reduceat(cat[order], starts)
+        tot = mx + tie * (tot - mx)
+    return u, tot
+
+
+@settings(max_examples=400, deadline=None)
+@given(
+    st.lists(st.tuples(doc_ids, st.floats(0.1, 4.0)), min_size=1, max_size=4),
+    st.data(),
+    st.sampled_from([None, 0.0, 0.1, 1.0]),
+    st.sampled_from(["dense", "gap", "high", "split"]),
+)
+def test_dense_combine_bit_identical_to_merge(runs, data, tie, ids):
+    # a run repeats an earlier one (a repeated term) under its own boost;
+    # "gap", "split" (some ids past 2^32) widen the span past _DENSE_SPAN
+    # times the postings, "high" moves a dense range past 2^32
+    if data.draw(st.booleans()):
+        d, b = data.draw(st.sampled_from(runs))
+        runs = runs + [(d, b * 1.7)]
+    shift = {"dense": lambda d: d, "gap": lambda d: d * 1000,
+             "high": lambda d: d + 2**32 + 5,
+             "split": lambda d: np.where(d > 40, d + 2**32, d)}[ids]
+    scored = []
+    for d, b in runs:
+        s = np.asarray(data.draw(st.lists(st.floats(0, 10), min_size=len(d),
+                                          max_size=len(d))), dtype=np.float64)
+        scored.append((shift(d).astype(np.int64), s * b))
+    want_u, want = _merge_reference(scored, tie)
+    got_u, got = matchers.combine_runs(scored, tie)
+    np.testing.assert_array_equal(got_u, want_u)
+    assert got.tobytes() == want.tobytes()
+    if len(want_u) and want_u[-1] - want_u[0] < 10**6:
+        # the bucket table itself, also where combine_runs would merge
+        lo, hi = int(want_u[0]), int(want_u[-1])
+        du, dt = matchers._dense_combine(scored, tie, lo, hi - lo + 1)
+        np.testing.assert_array_equal(du, want_u)
+        assert dt.tobytes() == want.tobytes()
+
+
+# ---- id layouts past the dense range: gapped ids, ids past 2^31 and 2^32
+
+_N = len(_texts())
+_ID_MAPS = {
+    "gap7": lambda i: i * 7,
+    "near31": lambda i: i + 2**31 - 150,
+    "split32": lambda i: i + (2**32 if i >= 150 else 0),
+}
+
+
+@pytest.fixture(scope="module", params=sorted(_ID_MAPS))
+def remapped(request, spark):
+    ids = [_ID_MAPS[request.param](i) for i in range(_N)]
+    df = spark.createDataFrame(list(zip(ids, _texts())), "doc_id long, text string")
+    idx = build_index(
+        df, IndexConfig(seg_size=64, with_positions=True),
+        content_col="text", doc_id_col="doc_id", auto_seg_size=False, eager=True,
+    )
+    yield request.param, ids, idx
+    idx.unpersist()
+
+
+def test_hot_combine_on_remapped_ids_equals_exhaustive(remapped, hot, monkeypatch):
+    name, _ids, idx = remapped
+    paths = []
+    for fn in ("_dense_combine", "_merged_combine"):
+        orig = getattr(matchers, fn)
+        monkeypatch.setattr(matchers, fn, lambda *a, _o=orig, _f=fn: (
+            paths.append(_f), _o(*a))[1])
+    s = Searcher(idx, dtype=np.float32)
+    t = lambda w, b=1.0: TermQuery(term=w, boost=b)
+    for b in (1.0, 2.5):
+        shapes = _shapes(b)
+        # term boosts b, a repeated term, and outer boosts after the combine
+        for q in (shapes["or"], shapes["dismax"], shapes["blended"],
+                  bool_query(should=[t("red", 0.3), t("red"), t("blue")]),
+                  DisjunctionMaxQuery(disjuncts=(t("merge"), t("red"), t("merge", b)),
+                                      tie_breaker=0.3, boost=0.7),
+                  BlendedTermQuery(terms=("spark", "blue"), boosts=(b, 1.0),
+                                   rewrite="boolean", boost=2.5)):
+            want = _exhaustive(idx, q, dtype=np.float32)
+            assert len(want) == 10, (name, q)
+            assert _f32(_hot_top(s, q)) == _f32(want), (name, q)
+    # ids split past 2^32 span more than _DENSE_SPAN times the postings, so
+    # do ids 7 apart unless the terms are frequent; ids straddling 2^31 are
+    # dense
+    assert set(paths) == {"near31": {"_dense_combine"}, "split32": {"_merged_combine"},
+                          "gap7": {"_dense_combine", "_merged_combine"}}[name]
+
+
+# ---- the hot exact phrase: rarest-first probe over doc-keyed positions
+
+_PHRASES = [
+    ("the", "spark"),
+    ("spark", "the", "spark"),  # repeated terms
+    ("the", "the"),
+    ("red", "blue", "red"),  # the rarest slot leads: not the first one
+    ("blue", "merge", "blue", "the"),
+]
+
+
+def _oracle_phrase(o, terms, ids, dead=()):
+    got = {ids[d]: s for d, s in o.score_phrase(terms).items() if ids[d] not in dead}
+    return BruteForceIndex.topk(got, 10)
+
+
+def _phrase_agrees(s, idx, o, ids, dead=()):
+    texts = _texts()
+    for terms in _PHRASES:
+        q = PhraseQuery(terms=terms)
+        want = _oracle_phrase(o, terms, ids, dead)
+        assert want, terms
+        hot = _hot_top(s, q)
+        assert _f32(hot) == _f32(want), terms
+        assert _f32(_exhaustive(idx, q, dtype=np.float32)) == _f32(want), terms
+    # the wrap guard: some hits start at position 0, where a slot > 0 shifted
+    # back to the phrase start borrows from the doc half of the key
+    first = [d for d, t in enumerate(texts) if t.split()[:2] == ["the", "spark"]]
+    assert first
+    assert {ids[d] for d in first} - set(dead) <= {
+        d for d, _s in s.top_docs(PhraseQuery(terms=("the", "spark")), len(texts))
+    }
+
+
+def _cached_positions_agree(s, keyed):
+    for t, e in s._positions_cache.items():
+        docs, freqs, _n, keys, starts = e
+        st_ = s.term_stats([t])[t]
+        assert _hot_size(e, True) == len(keys) == st_.total_term_freq == freqs.sum()
+        pos = keys & matchers._LOW_MASK
+        assert (pos < 2**31).all()
+        if keyed:
+            assert (keys >> 32).tolist() == np.repeat(docs, freqs).tolist()
+            assert (np.diff(keys) > 0).all()
+        else:
+            assert (keys == pos).all()
+        np.testing.assert_array_equal(starts, np.cumsum(freqs) - freqs)
+    assert s._hot_pos_cached == sum(len(e[3]) for e in s._positions_cache.values())
+
+
+@pytest.mark.parametrize("kind", ["hard", "soft"])
+def test_hot_exact_phrase_with_deletes(built, hot, kind):
+    o = BruteForceIndex(_texts())
+    ids = list(range(_N))
+    base = Searcher(built, dtype=np.float32)
+    dead = sorted({d for t in _PHRASES
+                   for d, _s in base.top_docs(PhraseQuery(terms=t), 2)} | {0})
+    idx = built.delete_docs(dead) if kind == "hard" else built.soft_delete_docs(dead)
+    s = Searcher(idx, dtype=np.float32)
+    assert s._deleted.tolist() == dead
+    _phrase_agrees(s, idx, o, ids, dead)
+
+
+def test_hot_exact_phrase_on_remapped_ids(remapped, hot, monkeypatch):
+    name, ids, idx = remapped
+    gathered = []
+    orig = matchers.exact_phrase_freqs_global
+    monkeypatch.setattr(matchers, "exact_phrase_freqs_global",
+                        lambda *a: (gathered.append(1), orig(*a))[1])
+    s = Searcher(idx, dtype=np.float32)
+    _phrase_agrees(s, idx, BruteForceIndex(_texts()), ids)
+    # ids below 2^31 keep doc-keyed positions and probe them directly; a
+    # term with a doc id past 2^31 keeps plain positions and its phrases
+    # gather candidate-keyed arrays
+    high = name != "gap7"
+    assert bool(gathered) == high
+    _cached_positions_agree(s, keyed=not high)

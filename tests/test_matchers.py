@@ -396,6 +396,14 @@ def test_multi_phrase_sloppy_singleton_slots_equals_plain_phrase():
         np.testing.assert_allclose(got, want, atol=1e-12)
 
 
+def _all_terms(pbt, n_docs):
+    """The docs that hold every term (the batch walks' candidate rows)."""
+    return np.flatnonzero([
+        all(ps[d] is not None and len(ps[d]) for ps in pbt.values())
+        for d in range(n_docs)
+    ])
+
+
 def test_sloppy_rpts_batch_equals_literal_walk():
     """The doc-lockstep SIMD walk must reproduce the literal per-doc
     transcription of SloppyPhraseMatcher's hasRpts path exactly, over
@@ -425,9 +433,16 @@ def test_sloppy_rpts_batch_equals_literal_walk():
             for t in dict.fromkeys(terms)
         }
         want = matchers._sloppy_phrase_freqs_rpts_literal(pbt, terms, slop, n_docs)
-        got = matchers.sloppy_phrase_freqs_rpts(pbt, terms, slop, n_docs)
+        # the batch walk itself, on every doc holding every term: these
+        # pools are small enough that the dispatcher takes the literal walk
+        got = matchers._sloppy_phrase_freqs_rpts_batch(
+            matchers._globals(pbt, terms), terms, slop, _all_terms(pbt, n_docs), n_docs
+        )
         np.testing.assert_allclose(got, want, atol=1e-12,
                                    err_msg=f"{terms} slop={slop} {docs}")
+        np.testing.assert_array_equal(
+            matchers.sloppy_phrase_freqs_rpts(pbt, terms, slop, n_docs), want
+        )
 
 
 def test_sloppy_multi_phrase_batch_equals_literal_walk():
@@ -906,6 +921,10 @@ def test_sloppy_rpts_global_bit_identical_to_literal_tie_heavy(batch, slop):
     terms, pbt, n_docs = batch
     g = matchers._globals(pbt, terms)
     want = matchers._sloppy_phrase_freqs_rpts_literal(pbt, terms, slop, n_docs)
+    keep = matchers._sloppy_candidates(g, terms, slop, n_docs)
+    for rows in (_all_terms(pbt, n_docs), np.flatnonzero(keep)):
+        got = matchers._sloppy_phrase_freqs_rpts_batch(g, terms, slop, rows, n_docs)
+        np.testing.assert_array_equal(got, want)
     got = matchers.sloppy_phrase_freqs_rpts_global(g, terms, slop, n_docs)
     np.testing.assert_array_equal(got, want)
     np.testing.assert_array_equal(
@@ -914,8 +933,42 @@ def test_sloppy_rpts_global_bit_identical_to_literal_tie_heavy(batch, slop):
     np.testing.assert_array_equal(
         matchers.sloppy_phrase_freqs_rpts(pbt, terms, slop, n_docs), want
     )
-    keep = matchers._sloppy_candidates(g, terms, slop, n_docs)
     assert keep[want > 0].all()
+
+
+@pytest.mark.parametrize("extra", [0, 1])
+def test_sloppy_rpts_dispatch_at_the_literal_walk_limit(monkeypatch, extra):
+    """_RPTS_LITERAL_DOCS kept docs take the literal walk, one more the
+    batch walk; both equal the literal walk on every doc. Each doc varies
+    its layout of "a b a" so the freqs differ; every doc passes the
+    prefilter (slop 2, "a" twice within W = 4)."""
+    import random
+
+    rng = random.Random(extra)
+    n = matchers._RPTS_LITERAL_DOCS + extra
+    docs = []
+    for _ in range(n):
+        d = [rng.choice("abc") for _ in range(rng.randint(3, 14))]
+        at = rng.randint(0, len(d) - 3)
+        d[at:at + 3] = list("aba")
+        docs.append(d)
+    terms, slop = ("a", "b", "a"), 2
+    pbt = {
+        t: [np.array([p for p, w in enumerate(d) if w == t], dtype=np.int64) for d in docs]
+        for t in "ab"
+    }
+    g = matchers._globals(pbt, terms)
+    assert matchers._sloppy_candidates(g, terms, slop, n).all()
+    batch = []
+    orig = matchers._sloppy_phrase_freqs_rpts_batch
+    monkeypatch.setattr(matchers, "_sloppy_phrase_freqs_rpts_batch",
+                        lambda *a: (batch.append(len(a[3])), orig(*a))[1])
+    want = matchers._sloppy_phrase_freqs_rpts_literal(pbt, terms, slop, n)
+    assert len(set(want.tolist())) > 2
+    np.testing.assert_array_equal(
+        matchers.sloppy_phrase_freqs_rpts_global(g, terms, slop, n), want
+    )
+    assert batch == ([n] if extra else [])
 
 
 def test_sloppy_prefilter_drops_docs_that_cannot_match():

@@ -2,15 +2,20 @@
 queryparser/.../classic/QueryParser.jj:313-372)."""
 
 from lucene_spark.query import (
+    BlendedTermQuery,
     BooleanQuery,
+    ConstantScoreQuery,
+    DisjunctionMaxQuery,
     FuzzyQuery,
     MatchNoDocsQuery,
     Occur,
     PhraseQuery,
     PrefixQuery,
+    SynonymQuery,
     TermQuery,
     TermRangeQuery,
     WildcardQuery,
+    _rewrite_once,
     bool_query,
     parse,
     rewrite,
@@ -122,6 +127,64 @@ def test_rewrite_dedups_filters():
 def test_rewrite_drops_matchnodocs_should():
     q = bool_query(should=[TermQuery(term="x"), MatchNoDocsQuery()])
     assert rewrite(q) == TermQuery(term="x")
+
+
+def _equality_fixpoint(q):
+    """The rewrite loop that stops on deep equality instead of identity."""
+    prev = None
+    while prev != q:
+        prev, q = q, _rewrite_once(q)
+    return q
+
+
+def _t(w, b=1.0):
+    return TermQuery(term=w, boost=b)
+
+
+def test_rewrite_returns_a_normal_form_itself():
+    # every query shape of the perfbench pool, already in normal form: one
+    # _rewrite_once pass, and the very same object back
+    shapes = [
+        _t("a"),
+        bool_query(should=[_t("a"), _t("b")]),
+        bool_query(should=[_t("a"), _t("b"), _t("c")]),
+        bool_query(must=[_t("b"), _t("c")]),
+        DisjunctionMaxQuery(disjuncts=(_t("a"), _t("c")), tie_breaker=0.1),
+        SynonymQuery(terms=("a", "b")),
+        BlendedTermQuery(terms=("b", "c"), boosts=(1.0, 2.0), tie_breaker=0.1),
+        PhraseQuery(terms=("a", "b")),
+        PhraseQuery(terms=("a", "b", "c"), slop=3),
+        PhraseQuery(terms=("a", "b", "a"), slop=4),
+        bool_query(must=[_t("c")], filter=[PrefixQuery(prefix="ab")]),
+    ]
+    for q in shapes:
+        assert rewrite(q) == q
+        assert rewrite(q) is q and _rewrite_once(q) is q, q
+
+
+def test_rewrite_reaches_the_equality_fixpoint():
+    x, y = _t("x"), _t("y")
+    cases = [
+        bool_query(must=[x]),
+        bool_query(must_not=[x]),
+        bool_query(must=[x], must_not=[x]),
+        bool_query(must=[y], filter=[x, x]),
+        bool_query(should=[x, MatchNoDocsQuery()]),
+        bool_query(must=[x, MatchNoDocsQuery()]),
+        # nested bools: the inner one unwraps, then the outer one
+        bool_query(must=[bool_query(must=[bool_query(should=[x])])]),
+        bool_query(should=[bool_query(must=[x]), bool_query(should=[y, MatchNoDocsQuery()])]),
+        bool_query(must=[bool_query(must=[x], must_not=[x]), y]),
+        bool_query(should=[x, y], boost=2.0),
+        DisjunctionMaxQuery(disjuncts=(bool_query(must=[x]), MatchNoDocsQuery())),
+        DisjunctionMaxQuery(disjuncts=(PhraseQuery(terms=("x",)), y), tie_breaker=0.3),
+        ConstantScoreQuery(query=ConstantScoreQuery(query=x)),
+        bool_query(should=[PhraseQuery(terms=("x",)), y]),
+    ]
+    for q in cases:
+        got = rewrite(q)
+        assert got == _equality_fixpoint(q), q
+        assert rewrite(got) is got, q
 
 
 # ---- escaping (QueryParser.jj <_ESCAPED_CHAR> / discardEscapeChar) ----

@@ -184,13 +184,6 @@ def analyze_series(texts: pd.Series, chain: str = "standard") -> pd.Series:
     return texts.map(fn)
 
 
-def terms_with_positions(tokens: List[str]) -> List[Tuple[str, int]]:
-    """(term, position) pairs; positions are consecutive (no stopword holes —
-    default stopset is empty; StopFilter hole semantics live in
-    :func:`stop_filter`)."""
-    return [(t, i) for i, t in enumerate(tokens)]
-
-
 def stop_filter(
     tokens: List[str], stopset: frozenset
 ) -> List[Tuple[str, int]]:
@@ -277,15 +270,6 @@ def flat_tokenize(
                 list(itertools.chain.from_iterable(rebuilt)), dtype=object
             )
     return flat, counts
-
-
-def analyze_to_tokens_udf(chain: str = "standard"):
-    """Factory for a pandas-UDF-compatible fn: Series[str] -> Series[list[str]]."""
-
-    def _fn(s: pd.Series) -> pd.Series:
-        return analyze_series(s, chain=chain)
-
-    return _fn
 
 
 def doc_lengths(token_lists: pd.Series) -> np.ndarray:

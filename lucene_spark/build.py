@@ -42,7 +42,7 @@ import json
 import os
 import time
 from dataclasses import dataclass
-from typing import Iterator, List, Optional, Tuple
+from typing import Callable, Iterator, List, Optional, Tuple
 
 import numpy as np
 import pandas as pd
@@ -188,6 +188,57 @@ def _segment_ids(doc_ids: np.ndarray, seg_size: int) -> np.ndarray:
     return seg.astype(np.int32)
 
 
+def _token_steps(config: IndexConfig) -> List[Callable]:
+    """The filters that run after the stop filter, in chain order: hunspell,
+    decompound, synonyms, phonetic. Each step is one TokenFilter's
+    incrementToken contract as a function ``token -> (replacement, tokens
+    injected at its position)`` (posIncr=0 overlaps: they count into
+    length/tf and the norm discounts them)."""
+    steps = []
+    hsp = config.hunspell
+    if hsp is not None and hsp.longest_only:
+        steps.append(lambda u: (hsp.map_token(u), ()))
+    elif hsp is not None:
+        # HunspellStemFilter incrementToken:93-101: the first stem in
+        # place, the remaining unique stems stacked on it
+        def dedup(u):
+            e = hsp.expand_token(u)
+            return (e[0], e[1:]) if e else (u, ())
+
+        steps.append(dedup)
+    if config.decompound is not None:
+        dec = config.decompound
+        steps.append(lambda u: (u, dec.decompose(u)))
+    if config.synonyms:
+        syn = {b: tuple(extras) for b, extras in config.synonyms}
+        steps.append(lambda u: (u, syn.get(u, ())))
+    if config.phonetic is not None:
+        steps.append(config.phonetic.transform)
+    return steps
+
+
+def _expand(flat: np.ndarray, row_idx: np.ndarray, pos: np.ndarray, step):
+    """Apply one token step to a batch's token stream: ``step`` runs once
+    per DISTINCT token (factorize dedup), replacements gather back, and the
+    injected tokens append at their source token's row and position.
+    Returns (flat, row_idx, pos, whether any token was injected)."""
+    codes, uniq = pd.factorize(pd.Series(flat), sort=False)
+    out = [step(u) for u in uniq]
+    flat = np.array([r for r, _ in out], dtype=object)[codes]
+    per_tok = np.fromiter((len(x) for _, x in out), np.int64, len(out))[codes]
+    if not per_tok.any():
+        return flat, row_idx, pos, False
+    src = np.nonzero(per_tok)[0]
+    add = np.array([w for i in src for w in out[codes[i]][1]], dtype=object)
+    rep = per_tok[src]
+    return (
+        np.concatenate([flat, add]),
+        np.concatenate([row_idx, np.repeat(row_idx[src], rep)]),
+        np.concatenate([pos, np.repeat(pos[src], rep)]),
+        True,
+    )
+
+
 def _invert_batches(config: IndexConfig, pairs):
     """Invert a stream of (doc_id int64 array, content Series) pairs. Yields
     per batch (doc_ids, lengths, discounted lengths, tf DataFrame or None
@@ -195,8 +246,9 @@ def _invert_batches(config: IndexConfig, pairs):
     zero-token docs included.
 
     This is PerField.invert (IndexingChain.java:1121-1260) re-expressed
-    batch-at-a-time: token stream -> positions -> per-doc term freqs + norm
-    (norm byte = intToByte4(length), IndexingChain.java:1096-1112)."""
+    batch-at-a-time: token stream -> stop filter -> :func:`_token_steps` ->
+    positions -> per-doc term freqs + norm (norm byte =
+    intToByte4(discounted length), IndexingChain.java:1096-1112)."""
     chain, stopwords = config.chain, config.stopwords
     from .analysis import LANG_CHAINS, _resolve_chain
 
@@ -209,184 +261,65 @@ def _invert_batches(config: IndexConfig, pairs):
 
         stopwords = frozenset(stopwords or ()) | {STOP_HOLE}
     seg_size, with_pos = config.seg_size, config.with_positions
-    syn_map = {b: list(extras) for b, extras in (config.synonyms or ())}
+    steps = _token_steps(config)
 
     for batch_docs, content in pairs:
-            flat, counts = flat_tokenize(content, chain=chain)
-            total = int(counts.sum())
-            if total == 0:
+        flat, counts = flat_tokenize(content, chain=chain)
+        total = int(counts.sum())
+        if total == 0:
+            yield batch_docs, counts, counts, None
+            continue
+        row_idx = np.repeat(np.arange(len(batch_docs)), counts)
+        starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
+        pos = np.arange(total, dtype=np.int64) - np.repeat(starts, counts)
+        if stopwords:
+            # per-DISTINCT-token membership (factorize dedup): object-safe
+            # (np.isin corrupts NUL-padded unicode, e.g. lang.STOP_HOLE)
+            # and O(vocab) instead of isin's sort over every token
+            codes, uniq = pd.factorize(pd.Series(flat), sort=False)
+            bad = np.fromiter((u in stopwords for u in uniq), bool, len(uniq))
+            keep = ~bad[codes]
+            flat, row_idx, pos = flat[keep], row_idx[keep], pos[keep]
+            # per-row effective lengths shrink; holes keep advancing pos
+            counts = np.bincount(row_idx, minlength=len(batch_docs)).astype(np.int64)
+            if len(flat) == 0:
                 yield batch_docs, counts, counts, None
                 continue
-            row_idx = np.repeat(np.arange(len(batch_docs)), counts)
-            starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-            pos = np.arange(total, dtype=np.int64) - np.repeat(starts, counts)
-            if stopwords:
-                # per-DISTINCT-token membership (factorize dedup): object-safe
-                # (np.isin corrupts NUL-padded unicode, e.g. lang.STOP_HOLE)
-                # and O(vocab) instead of isin's sort over every token
-                codes, uniq = pd.factorize(pd.Series(flat), sort=False)
-                bad = np.fromiter((u in stopwords for u in uniq), bool, len(uniq))
-                keep = ~bad[codes]
-                flat, row_idx, pos = flat[keep], row_idx[keep], pos[keep]
-                # per-row effective lengths shrink; holes keep advancing pos
-                counts = np.bincount(row_idx, minlength=len(batch_docs)).astype(np.int64)
-                total = len(flat)
-                if total == 0:
-                    yield batch_docs, counts, counts, None
-                    continue
-            base_counts = counts
-            if config.hunspell is not None:
-                # HunspellStemFilter right after the stop filter: map each
-                # DISTINCT token once (factorize dedup — the stemmer is
-                # O(vocab per batch)). longest_only replaces 1:1; dedup
-                # mode keeps the first stem in place and injects the rest
-                # at the SAME position (posIncr=0, HunspellStemFilter
-                # incrementToken:93-101)
-                hsp = config.hunspell
-                codes_h, uniq_h = pd.factorize(pd.Series(flat), sort=False)
-                if hsp.longest_only:
-                    mapped = np.array(
-                        [hsp.map_token(u) for u in uniq_h], dtype=object
-                    )
-                    flat = mapped[codes_h]
-                else:
-                    expansions = [hsp.expand_token(u) for u in uniq_h]
-                    heads = np.array(
-                        [e[0] if e else u for e, u in zip(expansions, uniq_h)],
-                        dtype=object,
-                    )
-                    extra_n = np.fromiter(
-                        (max(len(e) - 1, 0) for e in expansions),
-                        np.int64, len(expansions),
-                    )
-                    flat = heads[codes_h]
-                    per_tok = extra_n[codes_h]
-                    if per_tok.any():
-                        src = np.nonzero(per_tok)[0]
-                        add_t = np.array(
-                            [w for i in src for w in expansions[codes_h[i]][1:]],
-                            dtype=object,
-                        )
-                        rep = per_tok[src]
-                        flat = np.concatenate([flat, add_t])
-                        row_idx = np.concatenate(
-                            [row_idx, np.repeat(row_idx[src], rep)]
-                        )
-                        pos = np.concatenate([pos, np.repeat(pos[src], rep)])
-                        counts = np.bincount(
-                            row_idx, minlength=len(batch_docs)
-                        ).astype(np.int64)
-                        total = len(flat)
-            if config.decompound is not None:
-                # CompoundWordTokenFilterBase: each token's dictionary /
-                # hyphenation subwords join at the SAME position (posIncr=0
-                # overlaps, norm-discounted like synonyms). Decompose once
-                # per DISTINCT token (memoized across batches), then expand.
-                dec = config.decompound
-                codes_d, uniq_d = pd.factorize(pd.Series(flat), sort=False)
-                subs = [dec.decompose(u) for u in uniq_d]
-                n_subs = np.fromiter((len(s) for s in subs), np.int64, len(subs))
-                per_tok = n_subs[codes_d]
-                if per_tok.any():
-                    src = np.nonzero(per_tok)[0]
-                    add_t = np.array(
-                        [w for i in src for w in subs[codes_d[i]]], dtype=object
-                    )
-                    rep = per_tok[src]
-                    flat = np.concatenate([flat, add_t])
-                    row_idx = np.concatenate([row_idx, np.repeat(row_idx[src], rep)])
-                    pos = np.concatenate([pos, np.repeat(pos[src], rep)])
-                    counts = np.bincount(
-                        row_idx, minlength=len(batch_docs)
-                    ).astype(np.int64)
-                    total = len(flat)
-            if syn_map:
-                # SynonymFilter posIncr=0: inject extras at the SAME
-                # position; injected tokens are overlaps (count into
-                # length/tf, discounted from the norm below)
-                mask = np.isin(flat, list(syn_map))
-                if mask.any():
-                    add_t, add_r, add_p = [], [], []
-                    for i in np.nonzero(mask)[0]:
-                        for extra in syn_map[flat[i]]:
-                            add_t.append(extra)
-                            add_r.append(row_idx[i])
-                            add_p.append(pos[i])
-                    flat = np.concatenate([flat, np.array(add_t, dtype=object)])
-                    row_idx = np.concatenate(
-                        [row_idx, np.array(add_r, dtype=row_idx.dtype)]
-                    )
-                    pos = np.concatenate([pos, np.array(add_p, dtype=np.int64)])
-                    counts = np.bincount(
-                        row_idx, minlength=len(batch_docs)
-                    ).astype(np.int64)
-                    total = len(flat)
-            if config.phonetic is not None:
-                # PhoneticFilter runs LAST in the chain: replacements are a
-                # 1:1 map over the (possibly already expanded) stream;
-                # encoded overlaps join at the source token's position and
-                # are norm-discounted (captured base_counts unchanged)
-                pho = config.phonetic
-                codes_p, uniq_p = pd.factorize(pd.Series(flat), sort=False)
-                trans = [pho.transform(u) for u in uniq_p]
-                repl = np.array([t[0] for t in trans], dtype=object)
-                flat = repl[codes_p]
-                n_ext = np.fromiter(
-                    (len(t[1]) for t in trans), np.int64, len(trans)
-                )
-                per_tok = n_ext[codes_p]
-                if per_tok.any():
-                    src = np.nonzero(per_tok)[0]
-                    add_t = np.array(
-                        [w for i in src for w in trans[codes_p[i]][1]],
-                        dtype=object,
-                    )
-                    rep = per_tok[src]
-                    flat = np.concatenate([flat, add_t])
-                    row_idx = np.concatenate(
-                        [row_idx, np.repeat(row_idx[src], rep)]
-                    )
-                    pos = np.concatenate([pos, np.repeat(pos[src], rep)])
-                    counts = np.bincount(
-                        row_idx, minlength=len(batch_docs)
-                    ).astype(np.int64)
-                    total = len(flat)
-            # one vectorized (row, term) aggregation for the whole batch:
-            codes, _ = pd.factorize(pd.Series(flat), sort=False)
-            key = row_idx.astype(np.int64) * (codes.max() + 1) + codes
-            if (
-                syn_map
-                or config.decompound is not None
-                or config.phonetic is not None
-                or config.hunspell is not None
-            ):
-                # injected tokens break the pre-sorted pos invariant
-                order = np.lexsort((pos, key))
-            else:
-                order = np.argsort(key, kind="stable")  # pos stays ascending
-            key_s = key[order]
-            bounds = np.concatenate(
-                ([0], np.nonzero(np.diff(key_s))[0] + 1, [total])
-            )
-            first = order[bounds[:-1]]
-            freqs = np.diff(bounds).astype(np.int32)
-            g_rows = row_idx[order][bounds[:-1]]
-            doc_ids = batch_docs[g_rows]
-            norms = int_to_byte4(base_counts).astype(np.int32)[g_rows]
-            pos_sorted = pos[order]
-            out = {
-                "doc_id": doc_ids,
-                "segment_id": _segment_ids(doc_ids, seg_size),
-                "term": flat[first],
-                "freq": freqs,
-                "norm": norms,
-                "positions": (
-                    _slices(pos_sorted.astype(np.int32), bounds)
-                    if with_pos
-                    else [None] * len(first)
-                ),
-            }
-            yield batch_docs, counts, base_counts, pd.DataFrame(out)
+        base_counts = counts  # the norm's length: injected overlaps excluded
+        injected = False
+        for step in steps:
+            flat, row_idx, pos, inj = _expand(flat, row_idx, pos, step)
+            injected |= inj
+        if injected:
+            counts = np.bincount(row_idx, minlength=len(batch_docs)).astype(np.int64)
+        # one vectorized (row, term) aggregation for the whole batch:
+        codes, _ = pd.factorize(pd.Series(flat), sort=False)
+        key = row_idx.astype(np.int64) * (codes.max() + 1) + codes
+        if injected:
+            # injected tokens break the pre-sorted pos invariant
+            order = np.lexsort((pos, key))
+        else:
+            order = np.argsort(key, kind="stable")  # pos stays ascending
+        key_s = key[order]
+        bounds = np.concatenate(
+            ([0], np.nonzero(np.diff(key_s))[0] + 1, [len(flat)])
+        )
+        first = order[bounds[:-1]]
+        g_rows = row_idx[order][bounds[:-1]]
+        doc_ids = batch_docs[g_rows]
+        out = {
+            "doc_id": doc_ids,
+            "segment_id": _segment_ids(doc_ids, seg_size),
+            "term": flat[first],
+            "freq": np.diff(bounds).astype(np.int32),
+            "norm": int_to_byte4(base_counts).astype(np.int32)[g_rows],
+            "positions": (
+                _slices(pos[order].astype(np.int32), bounds)
+                if with_pos
+                else [None] * len(first)
+            ),
+        }
+        yield batch_docs, counts, base_counts, pd.DataFrame(out)
 
 
 def _invert_fn(config: IndexConfig, content_col: str):

@@ -20,10 +20,12 @@ overlaps that count into tf/sttf but are discounted from the length norm):
   (``hyphenate`` at :276-365, ``searchPatterns`` at :176-236) +
   ``PatternParser.java`` (FOP XML grammar files).
 
-Integration: ``IndexConfig(decompound=<decompounder>)`` — ``build._invert_batches``
-decomposes each DISTINCT token once per batch (memoized across batches on the
-decompounder instance) and injects the subwords exactly like the synonym
-path. At 100-TB scale this is a per-executor pure-Python function over
+Integration: ``IndexConfig(decompound=<decompounder>)`` — the decompounder is
+one step of the index-time filter chain (``build._token_steps``: hunspell,
+decompound, synonyms, phonetic), ``token -> (token, decompose(token))``.
+``build._expand`` runs each step once per DISTINCT token of a batch (memoized
+across batches on the decompounder instance) and injects the subwords at the
+token's position. At 100-TB scale this is a per-executor pure-Python function over
 factorized vocab inside the existing Arrow-batched invert UDF: no extra
 shuffle, no per-row Python, and the memo keeps per-token cost amortized
 O(1) across the corpus's Zipf-repeated vocabulary.

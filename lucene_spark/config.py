@@ -33,24 +33,29 @@ class IndexConfig:
     field: str = "content"
     # stopwords: empty by default, like 9.x StandardAnalyzer
     stopwords: frozenset = dc_field(default_factory=frozenset)
-    # index-time synonyms (SynonymFilter with posIncr=0): base term ->
-    # extra tokens injected at the SAME position after stop filtering.
-    # Injected tokens are overlaps: they count into length/tf/sttf but the
-    # norm discounts them (FieldInvertState.numOverlap,
-    # index/IndexingChain.java:1196; BM25Similarity discountOverlaps).
+    # The index-time filter chain. After the stop filter, each configured
+    # filter runs as one step of ``build._token_steps``, in this order:
+    # hunspell, decompound, synonyms, phonetic. A step maps a token to
+    # (replacement, tokens injected at its position): Lucene's
+    # incrementToken contract, where injected tokens carry posIncr=0. They
+    # are overlaps: they count into length/tf/sttf, but the norm discounts
+    # them (FieldInvertState.numOverlap, index/IndexingChain.java:1196;
+    # BM25Similarity discountOverlaps).
+    #
+    # synonyms (SynonymFilter): base term -> extra tokens; the step is
+    # (token, extras).
     synonyms: Tuple[Tuple[str, Tuple[str, ...]], ...] = ()
     # compound-word decompounding (CompoundWordTokenFilterBase subclasses):
-    # a compound.DictionaryDecompounder / HyphenationDecompounder whose
-    # subwords are injected at the original token's position (posIncr=0
-    # overlaps, same norm discount as synonyms) — SURVEY.md §2.2.
+    # a compound.DictionaryDecompounder / HyphenationDecompounder; the step
+    # is (token, subwords) — SURVEY.md §2.2.
     decompound: Optional[object] = None
     # phonetic token expansion (PhoneticFilter / DoubleMetaphoneFilter):
-    # a phonetic.PhoneticConfig; applied LAST in the chain (after stop /
-    # decompound / synonyms), encoded forms replace (inject=False) or
-    # overlap (inject=True, posIncr=0) their source token.
+    # a phonetic.PhoneticConfig whose ``transform`` is the step: the
+    # encoded form replaces (inject=False) or overlaps (inject=True) the
+    # token.
     phonetic: Optional[object] = None
     # hunspell dictionary stemming (HunspellStemFilter): a
-    # hunspell.HunspellFilter; applied right after the stop filter
-    # (longest_only replaces 1:1; otherwise first stem in place + the
-    # remaining unique stems as posIncr=0 overlaps, norm-discounted).
+    # hunspell.HunspellFilter. longest_only replaces the token with its
+    # longest stem; otherwise the first stem replaces it and the remaining
+    # unique stems are injected.
     hunspell: Optional[object] = None

@@ -231,9 +231,3 @@ def random_sampling_matches(
         for f in ranked.schema.fields if f.name != "__rank"
     )
     return ranked.mapInPandas(keep, schema), rate
-
-
-def amortize_count(count, sampling_rate: float) -> int:
-    """amortizeFacetCounts (:218-249): correctedCount =
-    (int)(count / samplingRate)."""
-    return int(count / sampling_rate)

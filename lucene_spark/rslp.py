@@ -1,8 +1,8 @@
 """RSLP stemmer engine — analysis/pt/RSLPStemmerBase.java re-expressed.
 
-Parses the published RSLP step-description resources (the reference's
-gl/galician.rslp and pt/portuguese.rslp rule tables, embedded verbatim as
-data under resources/) into Step objects, and implements the Galician and
+Builds Step objects from the published RSLP step-description tables (the
+reference's gl/galician.rslp and pt/portuguese.rslp, kept as Python data in
+rslpdata.py), and implements the Galician and
 Portuguese-RSLP stem drivers (analysis/gl/GalicianStemmer.java:44-76,
 analysis/pt/PortugueseStemmer.java:39-76).
 
@@ -11,16 +11,7 @@ exception matches; type-0 steps use suffix exceptions, type-1 whole-word
 exceptions; the first matching rule in a step wins.
 """
 
-import os
-import re
-from typing import Dict, List, Optional, Tuple
-
-_HEADER = re.compile(r'^\{\s*"([^"]*)",\s*([0-9]+),\s*(0|1),\s*\{(.*)\},\s*$')
-_STRIP = re.compile(r'^\{\s*"([^"]*)",\s*([0-9]+)\s*\}\s*(,|(\}\s*;))$')
-_REP = re.compile(r'^\{\s*"([^"]*)",\s*([0-9]+),\s*"([^"]*)"\}\s*(,|(\}\s*;))$')
-_EXC = re.compile(
-    r'^\{\s*"([^"]*)",\s*([0-9]+),\s*"([^"]*)",\s*\{(.*)\}\s*\}\s*(,|(\}\s*;))$'
-)
+from typing import Dict, List, Optional
 
 
 class Rule:
@@ -68,55 +59,6 @@ class Step:
             if r.matches(w):
                 return r.replace(w)
         return w
-
-
-def _parse_list(s: str) -> Optional[List[str]]:
-    if not s:
-        return None
-    return [p.strip()[1:-1] for p in s.split(",")]
-
-
-def parse_rslp(path: str) -> Dict[str, Step]:
-    steps: Dict[str, Step] = {}
-    lines = [
-        ln.strip() for ln in open(path, encoding="utf-8")
-        if ln.strip() and not ln.strip().startswith("#")
-    ]
-    i = 0
-    while i < len(lines):
-        m = _HEADER.match(lines[i])
-        if not m:
-            raise ValueError(f"bad step header at line {i}: {lines[i]}")
-        name, min_, typ = m.group(1), int(m.group(2)), int(m.group(3))
-        suffixes = _parse_list(m.group(4))
-        rules: List[Rule] = []
-        i += 1
-        while True:
-            ln = lines[i]
-            mm = _STRIP.match(ln)
-            if mm:
-                rules.append(Rule(mm.group(1), int(mm.group(2)), ""))
-            else:
-                mm = _REP.match(ln)
-                if mm:
-                    rules.append(Rule(mm.group(1), int(mm.group(2)),
-                                      mm.group(3)))
-                else:
-                    mm = _EXC.match(ln)
-                    if not mm:
-                        raise ValueError(f"bad rule at line {i}: {ln}")
-                    exc = _parse_list(mm.group(4))
-                    if typ == 0:
-                        rules.append(Rule(mm.group(1), int(mm.group(2)),
-                                          mm.group(3), exc_suffixes=exc))
-                    else:
-                        rules.append(Rule(mm.group(1), int(mm.group(2)),
-                                          mm.group(3), exc_words=exc))
-            i += 1
-            if ln.endswith(";"):
-                break
-        steps[name] = Step(name, rules, min_, suffixes)
-    return steps
 
 
 def _steps_from_data(rows) -> Dict[str, Step]:

@@ -162,10 +162,6 @@ class Segment:
             self.input_span > 1 or any(len(p) > 1 for p in self.paths)
         )
 
-    @property
-    def is_flat_synonym(self) -> bool:
-        return len(self.paths) > 1 and not self.is_graph
-
 
 def expand_graph(tokens: Sequence[str], synonyms: Optional[SynonymMap]) -> List[Segment]:
     """SynonymGraphFilter matching: greedy longest match at each position,

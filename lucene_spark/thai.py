@@ -65,11 +65,6 @@ def _get_trie() -> dict:
     return _trie
 
 
-def dict_chars() -> frozenset:
-    _get_trie()
-    return _dict_chars
-
-
 def _divide_range(run: str) -> List[int]:
     """divideUpDictionaryRange port: break positions for one run
     (returns positions after 0, ending with len(run))."""

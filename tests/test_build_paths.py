@@ -64,6 +64,39 @@ def test_doc_id_col_build_equals_order_cols_build(spark, positions):
     corpus.unpersist()
 
 
+def test_order_cols_build_same_at_any_partition_count(spark):
+    """Segments that straddle a partition encode once per side, so the block
+    boundaries follow num_partitions; stats, postings and float32 scores
+    must not."""
+    from lucene_spark.query import PhraseQuery, TermQuery, bool_query
+    from lucene_spark.search import Searcher
+
+    corpus = generate_corpus(spark, 400, seed=9, num_partitions=4).persist()
+    cfg = IndexConfig(chain="code", seg_size=64, block_size=16)
+    a, b = (build_index(corpus, cfg, order_cols=["repo", "path"], num_partitions=n,
+                        auto_seg_size=False, eager=True) for n in (2, 5))
+    assert a.stats == b.stats
+    stat_cols = ["term", "doc_freq", "total_term_freq"]
+    assert _rows(a.terms, stat_cols) == _rows(b.terms, stat_cols)
+    assert _rows(a.docs, a.docs.columns) == _rows(b.docs, b.docs.columns)
+    assert _postings(a) == _postings(b)
+    t = lambda w: TermQuery(term=w)
+    queries = [
+        t("def"),
+        bool_query(should=[t("def"), t("return"), t("import")]),
+        bool_query(must=[t("def"), t("import")]),
+        PhraseQuery(terms=("import", "def")),
+    ]
+    sa, sb = Searcher(a, dtype=np.float32), Searcher(b, dtype=np.float32)
+    for q in queries:
+        want = [(d, np.float32(s)) for d, s in sa.top_docs(q, 10)]
+        assert len(want) == 10, q
+        assert [(d, np.float32(s)) for d, s in sb.top_docs(q, 10)] == want, q
+    for idx in (a, b):
+        idx.unpersist()
+    corpus.unpersist()
+
+
 @pytest.mark.parametrize("eager", [False, True])
 def test_gapped_ids_with_zero_token_docs_exact_docs_table(spark, eager):
     texts, want = [], []

@@ -234,6 +234,33 @@ def test_hot_same_term_under_two_boosts_blended_and_float64(built, hot):
             assert _f32(_hot_top(s64, q)) == _f32(want), name
 
 
+@pytest.mark.parametrize("boost", [0.3, 2.5])
+def test_float64_flat_sums_within_one_ulp_across_tiers(built, hot, boost):
+    # the hot tier sums a doc's clause scores in clause order, a float64
+    # Spark-tier sum in postings scan order, so the two may differ in the
+    # last bit; float32 rounds both to one score. The hot tier declines the
+    # bool shape, so the bool is checked against that clause-order sum
+    t = lambda w, b=1.0: TermQuery(term=w, boost=b)
+    clauses = [t("spark"), t("spark", boost), t("red")]
+    mixed = bool_query(must=clauses[:1], should=clauses[1:])
+    for dtype in (np.float32, np.float64):
+        s = Searcher(built, dtype=dtype)
+        assert s.plan(mixed, 10).declined[0] == ("hot", "shape")
+        parts = [dict(s.top_docs(c, len(_texts()))) for c in clauses]
+        by_clause = BruteForceIndex.topk(
+            {d: dtype(sum(p[d] for p in parts if d in p)) for d in parts[0]}, 10
+        )
+        for q, want in ((mixed, by_clause), (bool_query(should=clauses), None)):
+            got = _exhaustive(built, q, dtype=dtype)
+            want = want or _hot_top(s, q)
+            assert len(got) == 10 and [d for d, _ in got] == [d for d, _ in want], q
+            g, w = np.array([x for _, x in got]), np.array([x for _, x in want])
+            if dtype is np.float32:
+                assert _f32(got) == _f32(want), q
+            else:
+                assert (np.abs(g - w) <= np.spacing(w)).all(), (q, g - w)
+
+
 def test_hot_budget_counts_score_runs(built, hot, monkeypatch):
     s = Searcher(built, dtype=np.float32)
     df = {t: st.doc_freq for t, st in s.term_stats(["spark", "red", "blue"]).items()}

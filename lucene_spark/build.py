@@ -675,19 +675,27 @@ class Index:
     # analog.
     index_sort: Optional[Tuple[str, ...]] = None
 
-    def soft_delete_docs(self, doc_ids) -> "Index":
-        """Mark docs soft-deleted (IndexWriter.softUpdateDocument's delete
-        side): excluded from matching, stats untouched, reversible."""
+    def _tombstone(self, field: str, doc_ids) -> "Index":
+        """A view with ``doc_ids`` (a DataFrame with a doc_id column, or an
+        iterable of ids) added to the tombstone set ``field`` (``deletes``
+        or ``soft_deletes``)."""
         import dataclasses
 
-        spark = self.docs.sparkSession
         if isinstance(doc_ids, DataFrame):
             new = doc_ids.select(F.col("doc_id").cast("long"))
         else:
-            new = spark.createDataFrame([(int(d),) for d in doc_ids], "doc_id long")
-        if self.soft_deletes is not None:
-            new = self.soft_deletes.unionByName(new).distinct()
-        return dataclasses.replace(self, soft_deletes=new)
+            new = self.docs.sparkSession.createDataFrame(
+                [(int(d),) for d in doc_ids], "doc_id long"
+            )
+        old = getattr(self, field)
+        if old is not None:
+            new = old.unionByName(new).distinct()
+        return dataclasses.replace(self, **{field: new})
+
+    def soft_delete_docs(self, doc_ids) -> "Index":
+        """Mark docs soft-deleted (IndexWriter.softUpdateDocument's delete
+        side): excluded from matching, stats untouched, reversible."""
+        return self._tombstone("soft_deletes", doc_ids)
 
     def undelete_all_soft(self) -> "Index":
         """Restore every soft-deleted doc (the retention story: the docs
@@ -730,18 +738,7 @@ class Index:
     def delete_docs(self, doc_ids) -> "Index":
         """Return a reader view with the given doc_ids tombstoned
         (IndexWriter.deleteDocuments analog; stats untouched per Lucene)."""
-        import dataclasses
-
-        spark = self.docs.sparkSession
-        if isinstance(doc_ids, DataFrame):
-            new = doc_ids.select(F.col("doc_id").cast("long"))
-        else:
-            new = spark.createDataFrame(
-                [(int(d),) for d in doc_ids], "doc_id long"
-            )
-        if self.deletes is not None:
-            new = self.deletes.unionByName(new).distinct()
-        return dataclasses.replace(self, deletes=new)
+        return self._tombstone("deletes", doc_ids)
 
     def expunge_deletes(self) -> "Index":
         """Physically drop tombstoned docs and recompute stats/terms — the
@@ -764,14 +761,8 @@ class Index:
         # re-block postings without the deleted docs (one decode+regroup)
         rebuilt = merge_segments(pruned, target_seg_size=self.config.seg_size,
                                  drop_deletes=True)
-        terms = rebuilt.postings.groupBy("term").agg(
-            F.sum("count").cast("long").alias("doc_freq"),
-            F.sum("sum_freq").alias("total_term_freq"),
-            F.min("last_doc").alias("singleton_doc_id"),
-            F.max(F.array_max("imp_freqs")).cast("int").alias("singleton_freq"),
-            F.max(F.array_max("imp_norms")).cast("int").alias("singleton_norm"),
-        )
-        return dataclasses.replace(rebuilt, terms=terms, deletes=None)
+        return dataclasses.replace(rebuilt, terms=terms_from_postings(rebuilt.postings),
+                                   deletes=None)
 
     def persist(self) -> "Index":
         self.docs.persist()
@@ -862,19 +853,9 @@ def build_index(
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
 
-    # term stats derived from the (much smaller) postings blocks — no second
-    # pass over tf. doc_freq = Σ block counts; total_term_freq = Σ block
-    # sum_freq. singleton_* columns (pulsing fast path) are only consulted
-    # when doc_freq == 1, where the term has exactly one block row whose
-    # impacts hold the exact (freq, norm) pair. On term-major postings the
-    # grouping reuses their range partitioning (no exchange).
-    terms = postings.groupBy("term").agg(
-        F.sum("count").cast("long").alias("doc_freq"),
-        F.sum("sum_freq").alias("total_term_freq"),
-        F.min("last_doc").alias("singleton_doc_id"),
-        F.max(F.array_max("imp_freqs")).cast("int").alias("singleton_freq"),
-        F.max(F.array_max("imp_norms")).cast("int").alias("singleton_norm"),
-    )
+    # on term-major postings the grouping reuses their range partitioning
+    # (no exchange)
+    terms = terms_from_postings(postings)
 
     if eager:
         terms = terms.persist(StorageLevel.MEMORY_AND_DISK)
@@ -893,6 +874,21 @@ def build_index(
         docs=docs, terms=terms, postings=postings, stats=stats, config=config,
         pinned=pinned,
         index_sort=tuple(order_cols) if order_cols else None,
+    )
+
+
+def terms_from_postings(postings: DataFrame) -> DataFrame:
+    """The terms table of a postings-blocks frame, derived from the (much
+    smaller) blocks — no pass over tf: doc_freq = Σ block counts,
+    total_term_freq = Σ block sum_freq. The singleton_* columns (pulsing
+    fast path) are only consulted when doc_freq == 1, where the term has
+    exactly one block row whose impacts hold the exact (freq, norm) pair."""
+    return postings.groupBy("term").agg(
+        F.sum("count").cast("long").alias("doc_freq"),
+        F.sum("sum_freq").alias("total_term_freq"),
+        F.min("last_doc").alias("singleton_doc_id"),
+        F.max(F.array_max("imp_freqs")).cast("int").alias("singleton_freq"),
+        F.max(F.array_max("imp_norms")).cast("int").alias("singleton_norm"),
     )
 
 

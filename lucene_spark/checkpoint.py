@@ -49,6 +49,7 @@ from .build import (
     _range_partition_with_offsets,
     config_from_dict,
     config_to_dict,
+    terms_from_postings,
 )
 from .config import IndexConfig
 
@@ -259,16 +260,9 @@ def read_checkpointed(spark: SparkSession, path: str) -> Index:
     docs = spark.read.parquet(
         *[os.path.join(path, f"shard_{i}", "docs") for i in range(n)]
     )
-    terms = postings.groupBy("term").agg(
-        F.sum("count").cast("long").alias("doc_freq"),
-        F.sum("sum_freq").alias("total_term_freq"),
-        F.min("last_doc").alias("singleton_doc_id"),
-        F.max(F.array_max("imp_freqs")).cast("int").alias("singleton_freq"),
-        F.max(F.array_max("imp_norms")).cast("int").alias("singleton_norm"),
-    )
     return Index(
         docs=docs,
-        terms=terms,
+        terms=terms_from_postings(postings),
         postings=postings,
         stats=CollectionStats(
             doc_count=manifest["doc_count"],

@@ -27,9 +27,11 @@ The tier choice is Searcher.plan's: it rewrites the query once and runs
 the one hot → WAND → _eval fall-through that search, top_docs and
 search_after share. This module holds the shape table every tier reads
 (_flat_term_clauses: term, flat OR / AND / mixed bool, dismax, blended,
-synonym and phrase, repeated terms included, field-qualified terms never);
-Searcher._shape_keys maps a shape to its per-term scorers for all three
-tiers, and WAND's scan is the Spark tier's flat evaluator
+synonym and phrase, repeated terms included, field-qualified terms never;
+every other unboosted MUST / SHOULD bool and every dismax is a shape too,
+its non-term clauses held as ``others``, which only the Spark tier
+serves); Searcher._shape_keys maps a shape to its per-term scorers for all
+three tiers, and WAND's scan is the Spark tier's one Boolean combine
 (Searcher._eval_flat) with the block test in its scanner. WAND serves
 single terms, flat OR-of-terms (WANDScorer case) and flat AND-of-terms
 (BlockMaxConjunctionScorer case, Boolean2ScorerSupplier.java:202-207),
@@ -61,8 +63,9 @@ from .query import (
 
 
 class Shape(NamedTuple):
-    """A flat term query, reduced to its term clauses and the way their
-    per-term scores combine (see _flat_term_clauses)."""
+    """A term-level query, reduced to its plain term clauses, its other
+    clauses and the way their per-clause scores combine (see
+    _flat_term_clauses)."""
 
     kind: str  # or | and | bool | dismax | blended | synonym | phrase
     terms: Tuple[str, ...]  # every occurrence, in query order (MUST first)
@@ -72,6 +75,8 @@ class Shape(NamedTuple):
     boost: float = 1.0  # the outer boost, applied after the combine
     must: int = 0  # the leading ``must`` terms are required clauses
     msm: int = 0  # minimum_should_match over the other clauses
+    # the clauses that are not plain terms, (query, required), in clause order
+    others: Tuple[Tuple[Query, bool], ...] = ()
 
 
 def _plain_term(q: Query) -> bool:
@@ -79,35 +84,46 @@ def _plain_term(q: Query) -> bool:
 
 
 def _flat_term_clauses(q: Query) -> Optional[Shape]:
-    """The one table of flat term queries: each shape the hot tier, WAND and
-    the Spark tier's flat evaluator (Searcher._eval_flat) serve is
-    recognized here, once, as term clauses plus a combine — ``or`` /
-    ``and`` / ``bool`` (sum over the docs that match every MUST clause and
+    """The one table of term-level queries: each shape the hot tier, WAND
+    and the Spark tier's combine (Searcher._eval_flat) serve is recognized
+    here, once, as term clauses plus a combine — ``or`` / ``and`` /
+    ``bool`` (sum over the docs that match every MUST clause and
     minimum_should_match SHOULD clauses; a single term is a one-clause
     ``or``), ``dismax`` and ``blended`` (max + tie × (sum − max), or sum for
     a boolean-rewrite blend, then the outer boost), ``synonym`` (tf summed
     per doc before it scores) and ``phrase`` (positional). A term may
-    repeat. A field-qualified term is never flat: it routes to its field's
-    index (MultiFieldSearcher). None = any other shape."""
+    repeat. Every unboosted BooleanQuery of MUST / SHOULD clauses and every
+    non-empty DisjunctionMaxQuery has a shape: a clause that is not a plain
+    term is one of its ``others`` (evaluated on its own, kind ``bool`` or
+    ``dismax``; the fast tiers decline it). A field-qualified term is never
+    a plain term: it routes to its field's index (MultiFieldSearcher).
+    None = any other query."""
     if isinstance(q, TermQuery):
         return Shape("or", (q.term,), (q.boost,), q) if _plain_term(q) else None
     if isinstance(q, BooleanQuery):
         must = [c.query for c in q.clauses if c.occur == Occur.MUST]
         should = [c.query for c in q.clauses if c.occur == Occur.SHOULD]
         tqs, msm = must + should, q.minimum_should_match
-        if (q.boost != 1.0 or not tqs or len(tqs) < len(q.clauses)
-                or not all(_plain_term(tq) for tq in tqs)):
+        if q.boost != 1.0 or not tqs or len(tqs) < len(q.clauses):
             return None
-        kind = ("and" if not should and msm == 0 else
-                "or" if not must and msm <= 1 else "bool")
-        return Shape(kind, tuple(tq.term for tq in tqs), tuple(tq.boost for tq in tqs),
-                     q, must=len(must), msm=msm)
+        if all(_plain_term(tq) for tq in tqs):
+            kind = ("and" if not should and msm == 0 else
+                    "or" if not must and msm <= 1 else "bool")
+            return Shape(kind, tuple(tq.term for tq in tqs),
+                         tuple(tq.boost for tq in tqs), q, must=len(must), msm=msm)
+        tqs = [tq for tq in tqs if _plain_term(tq)]
+        return Shape("bool", tuple(tq.term for tq in tqs), tuple(tq.boost for tq in tqs),
+                     q, must=sum(_plain_term(tq) for tq in must), msm=msm,
+                     others=tuple((c.query, c.occur == Occur.MUST) for c in q.clauses
+                                  if not _plain_term(c.query)))
     if isinstance(q, DisjunctionMaxQuery):
-        if not q.disjuncts or not all(_plain_term(d) for d in q.disjuncts):
+        if not q.disjuncts:
             return None
-        return Shape("dismax", tuple(d.term for d in q.disjuncts),
-                     tuple(d.boost for d in q.disjuncts), q,
-                     float(q.tie_breaker), float(q.boost))
+        tqs = [d for d in q.disjuncts if _plain_term(d)]
+        others = (() if len(tqs) == len(q.disjuncts) else
+                  tuple((d, False) for d in q.disjuncts if not _plain_term(d)))
+        return Shape("dismax", tuple(d.term for d in tqs), tuple(d.boost for d in tqs),
+                     q, float(q.tie_breaker), float(q.boost), others=others)
     if isinstance(q, BlendedTermQuery):
         boosts = tuple(q.boosts) or (1.0,) * len(q.terms)
         if len(boosts) != len(q.terms):

@@ -7,15 +7,16 @@ Pipeline per query (SURVEY.md §3.2 mapping):
 3. per-term scorer (idf + norm cache)  — BM25Similarity.scorer
 4. postings decode + vectorized score  — mapInPandas over block rows
    (PostingsEnum bulk decode; Spark's batch model replaces the iterator).
-   A flat term query (a row of prune._flat_term_clauses: term, flat bool,
-   dismax of terms, blended) is one scored_postings pass over all its
-   terms (_eval_flat), each term scored under the key _shape_keys picks —
-   the mapping the hot tier and WAND read too
+   Every MUST / SHOULD bool, dismax and blended query is a
+   prune._flat_term_clauses shape: its term clauses are one
+   scored_postings pass over all their terms (_eval_flat), each term
+   scored under the key _shape_keys picks — the mapping the hot tier and
+   WAND read too — and each other clause is evaluated on its own
 5. boolean algebra as joins/groupBy    — Boolean2ScorerSupplier analogs:
    MUST=intersection via grouped counts, SHOULD=sum, FILTER=semi join,
    MUST_NOT=anti join, minimumShouldMatch=HAVING count, dismax = max +
-   tie × (sum − max). A flat shape's clauses combine in one groupBy
-   (_eval_flat); any other clause is evaluated on its own and unioned in
+   tie × (sum − max). A shape's clauses combine in one groupBy, the one
+   Boolean combine (_combine); _eval_bool adds the FILTER / MUST_NOT joins
 6. top-k: orderBy(score desc, doc_id asc).limit(k)
    == per-partition heap + TopDocs.merge (TakeOrderedAndProject), ties by
    ascending doc_id (TopScoreDocCollector.java:27-29)
@@ -35,6 +36,7 @@ correctness never depends on the tier (equivalence-tested).
 from __future__ import annotations
 
 import dataclasses
+import functools
 import os
 import re
 from collections import OrderedDict
@@ -129,6 +131,28 @@ def scored_postings(blocks: DataFrame, scorers, keep=None, must=None) -> DataFra
 
     schema = MATCH_SCHEMA if must is None else MATCH_SCHEMA + ", is_must int"
     return _map_blocks(blocks, schema, frame, keep=keep)
+
+
+def _combine(parts: List[DataFrame], must: int, msm: int, tie: Optional[float]) -> DataFrame:
+    """The Spark tier's one Boolean combine of per-clause (doc_id, score,
+    is_must) frames, one row per clause match: with ``tie`` None, the sum
+    over the docs that match all ``must`` required clauses and at least
+    ``msm`` (one when nothing is required) of the others
+    (search/BooleanScorer.java); else max + tie × (sum − max)
+    (search/DisjunctionMaxScorer.java)."""
+    u = functools.reduce(DataFrame.unionByName, parts)
+    if tie is not None:
+        agg = u.groupBy("doc_id").agg(F.max("score").alias("mx"), F.sum("score").alias("sm"))
+        mx = F.col("mx")
+        return agg.select("doc_id", (mx + F.lit(tie) * (F.col("sm") - mx)).alias("score"))
+    agg = u.groupBy("doc_id").agg(
+        F.sum("score").alias("score"),
+        F.sum("is_must").alias("n_must"),
+        F.count("*").alias("n"),
+    )
+    need = msm if must else max(msm, 1)
+    return agg.filter((F.col("n_must") == must) & (F.col("n") - F.col("n_must") >= need)
+                      ).select("doc_id", "score")
 
 
 def decoded_postings(blocks: DataFrame, with_positions: bool = False) -> DataFrame:
@@ -674,7 +698,7 @@ class Searcher:
             from .prune import _wand_declines
 
             return _wand_declines(shape)
-        if shape is None or shape.kind == "bool":
+        if shape is None or shape.kind == "bool" or shape.others:
             return "shape"
         # no driver tombstone snapshot: _rank_rows could not filter the
         # deleted docs (the Spark tiers' anti-join stays cluster-side)
@@ -1229,8 +1253,6 @@ class Searcher:
             return self._eval_synonym(q)
         if isinstance(q, BooleanQuery):
             return self._eval_bool(q, needs_scores)
-        if isinstance(q, DisjunctionMaxQuery):
-            return self._eval_dismax(q)
         if isinstance(q, PhraseQuery):
             return self._eval_phrase(q)
         if isinstance(q, MultiPhraseQuery):
@@ -1350,21 +1372,22 @@ class Searcher:
 
     def _eval_flat(self, shape, needs_scores: bool = True, keep=None,
                    where=None) -> DataFrame:
-        """The Spark tier's one evaluator of a flat prune.Shape (``or``,
-        ``and``, ``bool``, ``dismax``, ``blended``), shared by _eval and
-        WAND, mirroring _hot_rows: ONE scored_postings pass per layer —
-        layer j scores the j-th occurrence of every term, so a query that
-        repeats no term is one pass (Lucene's BooleanScorer walks all clause
-        postings at once, search/BooleanScorer.java:262-285) — then one
-        combine per doc: the sum over docs matching every MUST clause and
-        minimum_should_match of the others, or max + tie × (sum − max);
-        then the outer boost. A single term needs no combine. Without
-        ``needs_scores`` a SHOULD clause scores 1.0 (MUST clauses always
-        score, as in the reference). ``keep`` is WAND's block test and
-        ``where`` a block predicate (its θ probe)."""
+        """The Spark tier's one evaluator of a prune.Shape other than
+        ``synonym`` / ``phrase`` — every MUST / SHOULD bool and every
+        dismax — shared by _eval, _eval_bool and WAND, mirroring _hot_rows:
+        ONE scored_postings pass per layer for the term clauses — layer j
+        scores the j-th occurrence of every term, so a query that repeats
+        no term is one pass (Lucene's BooleanScorer walks all clause
+        postings at once, search/BooleanScorer.java:262-285) — plus one
+        _eval per other clause, then one _combine per doc, then the outer
+        boost. A single term needs no combine. Without ``needs_scores`` a
+        SHOULD clause scores 1.0 (MUST clauses always score, as in the
+        reference). ``keep`` is WAND's block test and ``where`` a block
+        predicate (its θ probe)."""
         stats = self.term_stats(shape.terms)
         keys = self._shape_keys(shape, stats)
-        if not keys or any(t not in stats for t in shape.terms[:shape.must]):
+        if ((not keys and not shape.others)
+                or any(t not in stats for t in shape.terms[:shape.must])):
             return self._empty()
         layers: List[Dict[str, Tuple[Optional[BM25Scorer], bool]]] = []
         seen: Dict[str, int] = {}
@@ -1383,8 +1406,7 @@ class Searcher:
             scorers = {t: sc for t, (sc, _m) in layer.items() if sc is not None}
             return scored_postings(blocks, scorers, keep, must)
 
-        score = F.col("score")
-        if len(keys) == 1 and shape.kind != "bool":
+        if len(keys) == 1 and shape.kind != "bool" and not shape.others:
             (t, (sc, _m)), = layers[0].items()
             st = stats[t]
             if st.doc_freq == 1:
@@ -1396,26 +1418,14 @@ class Searcher:
                 out = scored(layers[0])
         else:
             parts = [scored(lay, [t for t, (_s, m) in lay.items() if m]) for lay in layers]
-            u = parts[0]
-            for p in parts[1:]:
-                u = u.unionByName(p)
-            if shape.tie is None:
-                out = u.groupBy("doc_id").agg(
-                    F.sum("score").alias("score"),
-                    F.sum("is_must").alias("n_must"),
-                    F.count("*").alias("n"),
-                )
-                need = shape.msm if shape.must else max(shape.msm, 1)
-                out = out.filter((F.col("n_must") == shape.must)
-                                 & (F.col("n") - F.col("n_must") >= need))
-            else:
-                out = u.groupBy("doc_id").agg(
-                    F.max("score").alias("mx"), F.sum("score").alias("sm")
-                )
-                score = F.col("mx") + F.lit(shape.tie) * (F.col("sm") - F.col("mx"))
+            parts += [self._eval(sq, needs_scores or req).select(
+                "doc_id", "score", F.lit(int(req)).alias("is_must"))
+                for sq, req in shape.others]
+            n_must = shape.must + sum(req for _q, req in shape.others)
+            out = _combine(parts, n_must, shape.msm, shape.tie)
         if shape.boost != 1.0:
-            score = score * F.lit(float(shape.boost))
-        return out.select("doc_id", score.alias("score"))
+            out = out.select("doc_id", (F.col("score") * F.lit(float(shape.boost))).alias("score"))
+        return out
 
     def _eval_synonym(self, q: SynonymQuery) -> DataFrame:
         """SynonymQuery: terms scored as one pseudo-term — max docFreq for idf,
@@ -1442,48 +1452,17 @@ class Searcher:
         return df.select("doc_id", sc(F.col("freq"), F.col("norm")).alias("score"))
 
     def _eval_bool(self, q: BooleanQuery, needs_scores: bool) -> DataFrame:
+        """The FILTER / MUST_NOT joins and the outer boost around the one
+        combine of the MUST / SHOULD clauses (_eval_flat); a bool of
+        FILTER clauses alone scores 1.0 per match."""
         from .prune import _flat_term_clauses
 
-        must = [c.query for c in q.clauses if c.occur == Occur.MUST]
-        should = [c.query for c in q.clauses if c.occur == Occur.SHOULD]
+        scoring = tuple(c for c in q.clauses if c.occur in (Occur.MUST, Occur.SHOULD))
         filters = [c.query for c in q.clauses if c.occur == Occur.FILTER]
         must_not = [c.query for c in q.clauses if c.occur == Occur.MUST_NOT]
-        msm = q.minimum_should_match
-
-        base: Optional[DataFrame] = None
-        # flat scoring clauses (FILTER / MUST_NOT and the boost aside) are
-        # one _eval_flat pass; any others are evaluated clause by clause
-        scoring = tuple(c for c in q.clauses if c.occur in (Occur.MUST, Occur.SHOULD))
-        flat = _flat_term_clauses(dataclasses.replace(q, clauses=scoring, boost=1.0))
-        if flat is not None:
-            base = self._eval_flat(flat, needs_scores)
-        elif scoring:
-            parts = []
-            for sq in must:
-                parts.append(
-                    self._eval(sq, True).select(
-                        "doc_id", "score", F.lit(1).alias("is_must")
-                    )
-                )
-            for sq in should:
-                parts.append(
-                    self._eval(sq, needs_scores).select(
-                        "doc_id", "score", F.lit(0).alias("is_must")
-                    )
-                )
-            u = parts[0]
-            for p in parts[1:]:
-                u = u.unionByName(p)
-            agg = u.groupBy("doc_id").agg(
-                F.sum("score").alias("score"),
-                F.sum("is_must").alias("n_must"),
-                F.count("*").alias("n_clauses"),
-            )
-            need = msm if must else max(msm, 1)
-            base = agg.filter(
-                (F.col("n_must") == len(must))
-                & (F.col("n_clauses") - F.col("n_must") >= need)
-            ).select("doc_id", "score")
+        if scoring:
+            shape = _flat_term_clauses(dataclasses.replace(q, clauses=scoring, boost=1.0))
+            base = self._eval_flat(shape, needs_scores)
         elif filters:
             base = self._docset(filters[0]).withColumn("score", F.lit(1.0))
             filters = filters[1:]
@@ -1492,7 +1471,7 @@ class Searcher:
 
         # lead cost for the cache's skip factor = the scoring side's
         # cheapest iterator (ScorerSupplier.get's leadCost role)
-        lead_costs = [self._driver_cost(sq) for sq in must + should]
+        lead_costs = [self._driver_cost(c.query) for c in scoring]
         lead_cost = (
             min(c for c in lead_costs if c is not None)
             if any(c is not None for c in lead_costs)
@@ -1509,20 +1488,6 @@ class Searcher:
         if q.boost != 1.0:
             base = base.withColumn("score", F.col("score") * F.lit(float(q.boost)))
         return base
-
-    def _eval_dismax(self, q: DisjunctionMaxQuery) -> DataFrame:
-        parts = [self._eval(d, True) for d in q.disjuncts]
-        u = parts[0]
-        for p in parts[1:]:
-            u = u.unionByName(p)
-        tie = float(q.tie_breaker)
-        agg = u.groupBy("doc_id").agg(
-            F.max("score").alias("mx"), F.sum("score").alias("sm")
-        )
-        score = F.col("mx") + F.lit(tie) * (F.col("sm") - F.col("mx"))
-        if q.boost != 1.0:
-            score = score * F.lit(float(q.boost))
-        return agg.select("doc_id", score.alias("score"))
 
     def _eval_phrase(self, q: PhraseQuery) -> DataFrame:
         """PhraseQuery with Lucene-parity scoring: idf summed over query

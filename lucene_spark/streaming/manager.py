@@ -24,10 +24,10 @@ parquet whenever the committed generation advances:
 Scale notes: a refresh reads only the manifest (tiny, driver-side) and
 re-plans lazy parquet scans — no data moves until a query runs. Term
 stats are re-derived from the postings blocks by the same aggregation
-the batch builder uses, so statistics are exact over all generations
-(terms_partial is never read back). Doc-id uniqueness across batches is
-the writer's contract, as in the reference (addDocument with your own
-keys).
+the batch builder uses (build.terms_from_postings), so statistics are
+exact over all generations; the writer stores no per-batch terms table.
+Doc-id uniqueness across batches is the writer's contract, as in the
+reference (addDocument with your own keys).
 """
 
 from __future__ import annotations
@@ -38,10 +38,10 @@ import time
 
 import numpy as np
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import SparkSession
 
 from ..bm25 import CollectionStats
-from ..build import Index, config_from_dict
+from ..build import Index, config_from_dict, terms_from_postings
 from ..search import Searcher
 
 
@@ -65,19 +65,12 @@ def open_streamed_index(spark: SparkSession, path: str) -> Index:
         cfg = config_from_dict(json.load(fh))
     postings = spark.read.parquet(os.path.join(path, "postings"))
     docs = spark.read.parquet(os.path.join(path, "docs"))
-    terms = postings.groupBy("term").agg(
-        F.sum("count").cast("long").alias("doc_freq"),
-        F.sum("sum_freq").alias("total_term_freq"),
-        F.min("last_doc").alias("singleton_doc_id"),
-        F.max(F.array_max("imp_freqs")).cast("int").alias("singleton_freq"),
-        F.max(F.array_max("imp_norms")).cast("int").alias("singleton_norm"),
-    )
     stats = CollectionStats(
         doc_count=sum(int(c["doc_count"]) for c in commits),
         sum_total_term_freq=sum(int(c["sum_total_term_freq"]) for c in commits),
     )
-    return Index(docs=docs, terms=terms, postings=postings, stats=stats,
-                 config=cfg)
+    return Index(docs=docs, terms=terms_from_postings(postings), postings=postings,
+                 stats=stats, config=cfg)
 
 
 class SearcherManager:

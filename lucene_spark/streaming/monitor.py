@@ -200,7 +200,6 @@ def stream_index_appends(
         idx = build_index(batch_df, cfg, content_col=content_col, doc_id_col=id_col)
         idx.postings.write.mode("append").parquet(os.path.join(path, "postings"))
         idx.docs.write.mode("append").parquet(os.path.join(path, "docs"))
-        idx.terms.write.mode("append").parquet(os.path.join(path, "terms_partial"))
         manifest_path = os.path.join(path, "stream_manifest.jsonl")
         with open(manifest_path, "a") as fh:
             fh.write(
